@@ -11,6 +11,14 @@ Scale notes:
 - Parquet is the primary format: multi-file folder scans parallelize one task
   per split, schema comes from footers (no data pass), and predicate/column
   pushdown reach the row groups.
+- A bare ``spark.read.parquet`` still launches one footer-merge Spark job
+  per call, even for a single file. ``load_table`` memoizes the inferred
+  schema per absolute path, checked against ``caching.path_fingerprint``
+  (a metadata-only stat of the file set) and the values of every SQL conf
+  the inference reads (``_SCHEMA_CONFS``). Only the first call per file set
+  and conf state pays that job; repeat calls read with the memoized schema
+  and launch none. A changed file or conf re-infers and replaces the entry.
+  Paths the local filesystem cannot stat (object-store URIs) are read bare.
 - CSV/JSON schema inference costs an extra pass; production callers pass an
   explicit ``schema`` (the reference's first-file-wins DDL inference is
   subsumed by Spark's footer/sampled inference).
@@ -21,11 +29,14 @@ Scale notes:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable, Mapping
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from core_telecoms_etl_spark.caching import path_fingerprint
 
 TESTDATA_TABLES = (
     "region",
@@ -355,8 +366,6 @@ def ensure_session_confs(
     lake. Only callers that know their data's provenance and rewrite the
     longs back (the harness-testdata loaders, via `normalize_timestamps`
     + `NANOS_BIGINT_COLS`) pass True."""
-    import os
-
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if nanos_as_long:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -426,16 +435,69 @@ def normalize_timestamps(
 # BIGINT under nanosAsLong) — the only sanctioned nanos-bigint rewrites
 NANOS_BIGINT_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
+# Every SQL conf the inferred parquet schema depends on: the flags
+# ParquetToSparkSchemaConverter reads, footer selection (mergeSchema,
+# summary files, corrupt-file skipping) and partition-column typing.
+# Part of the schema memo's key, so a conf flip re-infers.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+# abspath -> (path_fingerprint, conf values, inferred schema); one entry
+# per path, replaced when either part of the key moves. Process-global:
+# the schema depends on the file bytes and the confs, not the session.
+# Racing misses each infer and store a complete entry, so no lock.
+_SCHEMA_MEMO: dict[str, tuple[str, tuple[str | None, ...], T.StructType]] = {}
+
+
+def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """`spark.read.parquet(path)` with the inferred schema memoized.
+    A bare parquet read runs one footer-merge Spark job on every call;
+    a read with a declared schema runs none. Only successful inferences
+    are stored. A path the local filesystem cannot stat (missing, or a
+    URI such as s3a://) has no fingerprint to check, so it is read bare:
+    a missing table raises exactly as before."""
+    key = os.path.abspath(path)
+    if not os.path.exists(key):
+        return spark.read.parquet(path)
+    stamp = (
+        path_fingerprint(key),
+        tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMA_MEMO.get(key)
+    if hit is None or hit[:2] != stamp:
+        schema = spark.read.parquet(path).schema
+        _SCHEMA_MEMO[key] = (*stamp, schema)
+    else:
+        schema = hit[2]
+    return spark.read.schema(schema).parquet(path)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver test table (TESTDATA.md), with timestamp columns
     normalized to TimestampType (see `normalize_timestamps` for the
     on-disk encodings handled). The nanos opt-in is sanctioned here
     because this loader owns the testdata provenance (NANOS_BIGINT_COLS)
-    and rewrites the raw longs back to timestamps."""
+    and rewrites the raw longs back to timestamps.
+
+    The parquet schema is resolved once per file set and conf state
+    (`_read_parquet_memo`, keyed by absolute path and checked against
+    `caching.path_fingerprint` plus `_SCHEMA_CONFS`): the first call
+    pays the footer job, repeat calls launch no Spark job at all."""
     ensure_session_confs(spark, nanos_as_long=True)
     return normalize_timestamps(
-        spark.read.parquet(f"{sf_dir}/{name}.parquet"),
+        _read_parquet_memo(spark, f"{sf_dir}/{name}.parquet"),
         nanos_bigint_cols=NANOS_BIGINT_COLS.get(name, ()),
     )
 

@@ -84,7 +84,14 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
         "round-base commit (see tools/plan_fingerprints.py)"
     )
     with open(base_path) as f:
-        base = json.load(f)["fingerprints"]
+        snapshot = json.load(f)
+    base, meta = snapshot["fingerprints"], snapshot["_meta"]
+    # a base built under other settings hashes other plans: every query
+    # would read as "changed" or, worse, a real change could hash equal
+    # by accident — fail loudly instead of silently weakening the guard
+    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert meta["sf_dir"] == sf_dir, (meta["sf_dir"], sf_dir)
+    assert meta["shuffle_partitions"] == n_shuffle, (meta, n_shuffle)
 
     fp_path = os.path.join(
         os.path.dirname(__file__), "..", "tools", "plan_fingerprints.py"

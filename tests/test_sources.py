@@ -866,3 +866,124 @@ def test_avro_round_trip_with_jar(spark, tmp_path):
     write_avro(df, p)
     back = read_avro(spark, p)
     assert sorted(r.id for r in back.collect()) == list(range(10))
+
+
+def _jobs_started(spark, fn) -> int:
+    """Number of Spark jobs `fn()` starts, counted through a dedicated
+    job group on the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"schema-memo-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "schema memo test")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_arrow_parquet(path: str, **cols) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(cols), path)
+
+
+def test_load_table_schema_resolved_once(spark, tmp_path):
+    """The first load_table of a fresh path pays the footer-merge job;
+    a repeat call reads with the memoized schema and starts none."""
+    _write_arrow_parquet(str(tmp_path / "t.parquet"), id=[1, 2, 3])
+    d = str(tmp_path)
+    assert _jobs_started(spark, lambda: readers.load_table(spark, d, "t")) == 1
+    assert _jobs_started(spark, lambda: readers.load_table(spark, d, "t")) == 0
+    df = readers.load_table(spark, d, "t")
+    assert sorted(r.id for r in df.collect()) == [1, 2, 3]
+
+
+def test_load_table_schema_memo_sees_rewritten_file(spark, tmp_path):
+    """A file rewritten at the same path with an added column shows that
+    column on the next call (the memo is checked against the path
+    fingerprint, not keyed on the path alone)."""
+    p = str(tmp_path / "t.parquet")
+    _write_arrow_parquet(p, id=[1, 2])
+    assert readers.load_table(spark, str(tmp_path), "t").columns == ["id"]
+    _write_arrow_parquet(p, id=[1, 2], extra=["a", "b"])
+    df = readers.load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["id", "extra"]
+    assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+
+
+def test_load_table_schema_memo_follows_confs(spark, tmp_path):
+    """Flipping a conf the inference reads gives the schema a fresh
+    bare read gives: timestamp[us] with isAdjustedToUTC=false reads as
+    TIMESTAMP_NTZ only under inferTimestampNTZ."""
+    import datetime as dt
+
+    p = str(tmp_path / "ntz.parquet")
+    _write_arrow_parquet(p, ts=[dt.datetime(2024, 1, 1, 12, 0)])
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    try:
+        seen = set()
+        for flag in ("true", "false", "true"):
+            spark.conf.set(key, flag)
+            memo = readers._read_parquet_memo(spark, p).schema
+            assert memo == spark.read.parquet(p).schema, flag
+            seen.add(memo["ts"].dataType.typeName())
+        assert seen == {"timestamp_ntz", "timestamp"}
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_load_table_schema_memo_partitioned_dir_and_missing(spark, tmp_path):
+    """A partitioned directory keeps its partition column (type and
+    position) through the memoized read, and a missing table raises the
+    bare read's error without leaving a memo entry."""
+    import os
+
+    from pyspark.errors import AnalysisException
+
+    src = spark.createDataFrame([(1, "x", 10), (2, "y", 20)], "id INT, s STRING, k INT")
+    p = str(tmp_path / "part.parquet")
+    src.write.partitionBy("k").parquet(p)
+    for _ in range(2):
+        df = readers.load_table(spark, str(tmp_path), "part")
+        assert df.schema == spark.read.parquet(p).schema
+        assert sorted(df.collect()) == [(1, "x", 10), (2, "y", 20)]
+
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        readers.load_table(spark, str(tmp_path), "nope")
+    assert os.path.abspath(str(tmp_path / "nope.parquet")) not in readers._SCHEMA_MEMO
+
+
+def test_load_table_schema_memo_matches_inference_on_testdata(spark, sf_dir):
+    """For every driver test table the memoized schema equals a fresh
+    inference, also when threads race on cold entries (check_oracle
+    builds queries from several threads)."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    paths = {
+        n: os.path.abspath(f"{sf_dir}/{n}.parquet") for n in readers.TESTDATA_TABLES
+    }
+    for p in paths.values():
+        readers._SCHEMA_MEMO.pop(p, None)
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as ex:
+            futs = [
+                ex.submit(readers.load_table, spark, sf_dir, n)
+                for n in list(readers.TESTDATA_TABLES) * 3
+            ]
+            for f in futs:
+                f.result(timeout=300)
+    finally:
+        sys.setswitchinterval(prev)
+    for name, p in paths.items():
+        fresh = spark.read.parquet(p).schema
+        assert readers._SCHEMA_MEMO[p][2] == fresh, name
+        assert readers._read_parquet_memo(spark, p).schema == fresh, name
