@@ -8,8 +8,12 @@ What replaces what:
   got from sibling Airflow tasks and its 10-thread pool).
 - per-file pandas loops            → one multi-file DataFrame scan per
   source batch.
-- 3-layer skip logic               → one manifest anti-join
-  (sources/incremental.py).
+- 3-layer skip logic               → one file ledger
+  (sources/incremental.py): the folder listing is a driver-side list,
+  so the check is a driver-side set difference over the parquet ledger
+  and the append is one driver-written parquet file, no Spark job (a
+  broadcast anti-join would pull the whole ledger through the driver
+  anyway); distributed DataFrame listings keep the left_anti path.
 - per-source rename maps
   (pipeline.py:49-99)              → `SourceConfig.rename_map` applied in
   the cleaning chain.
@@ -94,7 +98,7 @@ def _read(spark: SparkSession, src: SourceConfig, files: list[str]):
 
 
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
-    """Incrementally land every source: discover raw files, anti-join the
+    """Incrementally land every source: discover raw files, subtract the
     manifest, read all new files as one batch, clean (normalize + rename +
     trim + empty⇒NULL + drop-all-null + dedup), and append to the staging
     folder. Idempotent: a second run with no new files writes nothing."""

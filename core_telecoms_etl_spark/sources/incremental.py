@@ -9,10 +9,22 @@ PROCESSED_FILES warehouse ledger probed per file
 semantic operation — an anti-join of candidate files against a manifest —
 done row-at-a-time over the network.
 
-Here it is ONE set-at-a-time operation: list source files → left_anti join
-against the manifest parquet → process only new files → append manifest
-entries. At 100 TB the manifest is thousands-to-millions of rows (one per
-file), always tiny relative to data, so the anti-join broadcasts.
+Here it is ONE set-at-a-time operation: list source files → subtract the
+manifest parquet → process only new files → append manifest entries. At
+100 TB the manifest is thousands-to-millions of rows (one per file), always
+tiny relative to data.
+
+For a listing that is already a Python list (the per-batch case:
+`pipeline.run_pipeline` lists each folder with `os.listdir`, and the new
+names must come back to the driver to build read paths) the subtraction
+is a driver-side set difference: `new_files` reads the ledger's two key
+columns with pyarrow and `record` appends one parquet file with pyarrow.
+A Spark anti-join would move no work off the driver — its broadcast side
+already pulls the whole ledger through the driver — and would add two
+jobs plus planning to every call. A distributed `DataFrame` listing keeps
+the Spark path: `new_files_df` left_anti-joins it against the broadcast
+manifest and `record_df` appends with a Spark write. Both paths read and
+write the same parquet ledger.
 
 Crash-safety without a transactional table format: data is written BEFORE the
 manifest entry, so a crash between the two re-processes that batch's files on
@@ -24,14 +36,45 @@ contract of the harness.
 
 from __future__ import annotations
 
+import datetime as dt
 import os
+import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.fs as pafs
+import pyarrow.parquet as pq
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MANIFEST_SCHEMA = "folder_name string, file_name string, loaded_at timestamp"
+# MANIFEST_SCHEMA as pyarrow writes it. A UTC-adjusted timestamp is
+# isAdjustedToUTC=true in the footer, so a reader that infers the schema
+# (Spark under inferTimestampNTZ) sees TimestampType, as in the files
+# Spark's `record_df` writes, not a conflicting TIMESTAMP_NTZ.
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("folder_name", pa.string()),
+        ("file_name", pa.string()),
+        ("loaded_at", pa.timestamp("us", tz="UTC")),
+    ]
+)
+# The key columns `new_files` reads. An explicit schema lets an empty or
+# new ledger directory resolve without a file to infer from.
+_KEY_SCHEMA = pa.schema([_ARROW_SCHEMA.field(0), _ARROW_SCHEMA.field(1)])
+
+
+def _ledger_fs(path: str) -> tuple[pafs.FileSystem, str]:
+    """pyarrow filesystem and in-filesystem path for a ledger location.
+    A bare path resolves against the working directory, as Spark
+    resolves it; an unknown URI scheme raises."""
+    if not urlparse(path).scheme:
+        path = os.path.abspath(path)
+    return pafs.FileSystem.from_uri(path)
 
 
 @dataclass
@@ -70,21 +113,28 @@ class IncrementalLoader:
         self.manifest_path = manifest_path
 
     def manifest(self) -> DataFrame:
+        """The whole ledger as a Spark DataFrame. A ledger path that does
+        not exist yet is an empty ledger; any other failure (unknown
+        filesystem, unreadable file) raises, because treating it as empty
+        would load every file again."""
         try:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
-        except Exception:
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             return self.spark.createDataFrame([], MANIFEST_SCHEMA)
 
     def new_files_df(
         self, folder: str, files: Sequence[str] | DataFrame
     ) -> DataFrame:
-        """PRIMARY interface — set-at-a-time discovery: candidates ∖
-        manifest via left_anti (replaces the reference's per-file COUNT(*)
-        ledger probe, plugins/snowflake_load.py:108-121). The manifest side
-        is broadcast — no shuffle of the candidate list. Returns a
-        DataFrame of (folder_name, file_name) that never touches the
-        driver: at the millions-of-files end, feed it straight to
-        `record_df` / downstream joins and collect only counts.
+        """Distributed discovery: candidates ∖ manifest via left_anti
+        (replaces the reference's per-file COUNT(*) ledger probe,
+        plugins/snowflake_load.py:108-121). The manifest side is
+        broadcast — no shuffle of the candidate list. Returns a DataFrame
+        of (folder_name, file_name) whose names never reach the driver:
+        at the millions-of-files end, feed it straight to `record_df` /
+        downstream joins and collect only counts. For a listing that is
+        already a driver-side list, `new_files` is the cheaper path.
 
         `files` may be a Sequence[str] of names (small case) or a
         DataFrame with a `file_name` column (e.g. a listing table), which
@@ -105,17 +155,33 @@ class IncrementalLoader:
         )
 
     def new_files(self, folder: str, files: Sequence[str]) -> list[str]:
-        """List helper over `new_files_df` for small candidate sets (the
-        common per-batch case, where the new-file names must reach the
-        driver anyway to build the read paths)."""
+        """The candidates of `folder` not in the ledger, in input order.
+
+        A driver-side set difference, no Spark job: pyarrow reads only the
+        (folder_name, file_name) columns of the ledger, filtered on
+        `folder`. The candidates and the answer live on the driver anyway
+        (the new names build the read paths), and the anti-join's
+        broadcast would pull the whole ledger through the driver too.
+        Files whose names start with `.` or `_` are not ledger files
+        (Spark's `_SUCCESS` and `.crc` files, `record`'s hidden temp
+        file), as in Spark's own listing. A ledger path that does not
+        exist is an empty ledger; any other read error raises."""
         if not files:
             return []
-        return [
-            r.file_name
-            for r in self.new_files_df(folder, files)
-            .select("file_name")
-            .collect()
-        ]
+        fs, root = _ledger_fs(self.manifest_path)
+        if fs.get_file_info(root).type == pafs.FileType.NotFound:
+            return list(files)
+        ledger = ds.dataset(
+            root, filesystem=fs, format="parquet", schema=_KEY_SCHEMA
+        )
+        seen = set(
+            ledger.to_table(
+                columns=["file_name"], filter=ds.field("folder_name") == folder
+            )
+            .column("file_name")
+            .to_pylist()
+        )
+        return [f for f in files if f not in seen]
 
     def record_df(self, new_df: DataFrame) -> None:
         """Append manifest entries straight from the (folder_name,
@@ -126,14 +192,26 @@ class IncrementalLoader:
         ).write.mode("append").parquet(self.manifest_path)
 
     def record(self, folder: str, files: Sequence[str]) -> None:
+        """Append ledger entries for `files` as one parquet file written
+        by pyarrow on the driver, no Spark job. The file is written under
+        a hidden name and then renamed, so a reader never sees a partial
+        file and a crash mid-write leaves only an ignored temp file."""
         if not files:
             return
-        self.record_df(
-            self.spark.createDataFrame(
-                [(folder, f) for f in files],
-                "folder_name string, file_name string",
-            )
+        fs, root = _ledger_fs(self.manifest_path)
+        fs.create_dir(root, recursive=True)
+        now = dt.datetime.now(dt.timezone.utc)
+        table = pa.table(
+            {
+                "folder_name": [folder] * len(files),
+                "file_name": list(files),
+                "loaded_at": [now] * len(files),
+            },
+            schema=_ARROW_SCHEMA,
         )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        pq.write_table(table, f"{root}/.{name}", filesystem=fs)
+        fs.move(f"{root}/.{name}", f"{root}/{name}")
 
     def run(
         self,
@@ -150,8 +228,8 @@ class IncrementalLoader:
         plugins/s3_copy.py:92-93), anti-join against the manifest, process
         all new files as ONE multi-file batch, then record them. The
         `process` callback takes the new-file list (it must build reader
-        paths on the driver regardless); the manifest bookkeeping itself
-        runs through the DataFrame path.
+        paths on the driver regardless); the manifest check and append
+        run on the driver (`new_files`, `record`) and start no Spark job.
 
         Orchestration hooks (VERDICT r11 ask #7 — the reference's one
         behavior with no engine analog, airflow/dags/pipeline.py:20-43,

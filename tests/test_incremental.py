@@ -4,18 +4,24 @@ the second run must process zero files."""
 
 from __future__ import annotations
 
-from core_telecoms_etl_spark.sources.incremental import IncrementalLoader
+from core_telecoms_etl_spark.sources.incremental import (
+    MANIFEST_SCHEMA,
+    IncrementalLoader,
+)
 
 
 def test_incremental_idempotent(spark, tmp_path):
     loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
     processed: list[list[str]] = []
 
-    files = ["a.parquet", "b.parquet", "notes.txt"]
+    files = ["b.parquet", "notes.txt", "a.parquet"]
     r1 = loader.run("call_logs", files, processed.append)
     assert r1.candidates == 2  # .txt filtered by the suffix predicate
-    assert sorted(r1.new_files) == ["a.parquet", "b.parquet"]
+    assert r1.new_files == ["b.parquet", "a.parquet"]  # input order
     assert processed == [r1.new_files]
+    assert loader.new_files(
+        "call_logs", ["d.csv", "a.parquet", "c.csv", "b.parquet"]
+    ) == ["d.csv", "c.csv"]
 
     r2 = loader.run("call_logs", files, processed.append)
     assert r2.new_files == [] and r2.skipped == 2
@@ -62,11 +68,103 @@ def test_new_files_df_end_to_end_without_collect(spark, tmp_path):
 
 
 def test_manifest_schema(spark, tmp_path):
+    import time
+
     loader = IncrementalLoader(spark, str(tmp_path / "manifest"))
+    before = time.time_ns() // 1000
     loader.run("f", ["a.parquet"], lambda fs: None)
+    after = time.time_ns() // 1000
     m = loader.manifest()
-    assert m.columns == ["folder_name", "file_name", "loaded_at"]
-    assert m.count() == 1
+    assert m.schema == spark.createDataFrame([], MANIFEST_SCHEMA).schema
+    [row] = m.selectExpr(
+        "folder_name", "file_name", "unix_micros(loaded_at) AS us"
+    ).collect()
+    assert (row.folder_name, row.file_name) == ("f", "a.parquet")
+    assert row.us is not None and before <= row.us <= after
+    # the driver-written file infers as TimestampType too, not NTZ
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        assert spark.read.parquet(str(tmp_path / "manifest")).schema == m.schema
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_ledger_paths_agree_on_mixed_ledger(spark, tmp_path):
+    """One ledger written by both paths: Spark `record_df` files with
+    their `_SUCCESS`/`.crc` side files, pyarrow `record` files, and a
+    truncated hidden temp file left by a crash mid-`record`. The driver
+    path (`new_files`) and the Spark path (`new_files_df`, `manifest`)
+    give the same answers, and the temp file's entry counts as not
+    recorded."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ledger = tmp_path / "manifest"
+    loader = IncrementalLoader(spark, str(ledger))
+    cand = ["t1.csv", "s2.csv", "p1.csv", "n1.csv", "s1.csv"]
+    os.makedirs(ledger)  # an empty ledger directory
+    assert loader.new_files("f", cand) == cand
+    assert loader.manifest().count() == 0
+
+    loader.record_df(
+        spark.createDataFrame(
+            [("f", "s1.csv"), ("f", "s2.csv")],
+            "folder_name string, file_name string",
+        )
+    )
+    loader.record("f", ["p1.csv"])
+    loader.record("g", ["t1.csv"])
+    tmp = ledger / ".part-crashed.parquet"
+    pq.write_table(
+        pa.table({"folder_name": ["f"], "file_name": ["t1.csv"]}), tmp
+    )
+    tmp.write_bytes(tmp.read_bytes()[:-20])  # footer cut off
+    names = os.listdir(ledger)
+    assert "_SUCCESS" in names and any(n.endswith(".crc") for n in names)
+
+    assert loader.new_files("f", cand) == ["t1.csv", "n1.csv"]
+    assert sorted(
+        r.file_name for r in loader.new_files_df("f", cand).collect()
+    ) == ["n1.csv", "t1.csv"]
+    m = loader.manifest()
+    assert sorted(
+        (r.folder_name, r.file_name, r.loaded_at is not None)
+        for r in m.collect()
+    ) == [
+        ("f", "p1.csv", True),
+        ("f", "s1.csv", True),
+        ("f", "s2.csv", True),
+        ("g", "t1.csv", True),
+    ]
+
+
+def test_unreadable_ledger_raises_instead_of_reloading(spark, tmp_path):
+    """Only a ledger path that does not exist reads as an empty ledger.
+    An unknown filesystem scheme raises from every path, a ledger file
+    with a bad footer raises from the driver path, and `run` never hands
+    the files to `process`."""
+    import pytest
+
+    loader = IncrementalLoader(spark, "nosuchfs://bucket/manifest")
+    processed: list[list[str]] = []
+    with pytest.raises(Exception, match="nosuchfs"):
+        loader.new_files("a", ["x.csv"])
+    with pytest.raises(Exception, match="nosuchfs"):
+        loader.new_files_df("a", ["x.csv"])
+    with pytest.raises(Exception, match="nosuchfs"):
+        loader.run("a", ["x.csv"], processed.append)
+
+    ledger = tmp_path / "manifest"
+    ledger.mkdir()
+    (ledger / "part-0.parquet").write_bytes(b"not a parquet file")
+    loader = IncrementalLoader(spark, str(ledger))
+    with pytest.raises(Exception, match="(?i)parquet"):
+        loader.run("a", ["x.csv"], processed.append)
+    assert processed == []
 
 
 def test_streaming_incremental_checkpoint_skips_processed(spark, tmp_path):

@@ -115,6 +115,41 @@ def test_pipeline_end_to_end(spark, tmp_path):
     )
 
 
+def test_pipeline_ledger_starts_no_spark_jobs(
+    spark, tmp_path, jobs_started, monkeypatch
+):
+    """The manifest check and append run on the driver: on a first run
+    the `new_files` and `record` calls start no Spark job, and a re-run
+    with no new files starts none at all."""
+    from core_telecoms_etl_spark.sources.incremental import IncrementalLoader
+
+    _write(tmp_path / "raw" / "call_logs" / "day1.csv", CSV_DAY1)
+    _write(
+        tmp_path / "raw" / "social" / "day1.json",
+        "\n".join(json.dumps(r) for r in SOCIAL_DAY1),
+    )
+    cfg = _config(tmp_path)
+
+    ledger_jobs: list[int] = []
+    for name in ("new_files", "record"):
+
+        def counted(self, *args, _orig=getattr(IncrementalLoader, name)):
+            out = []
+            ledger_jobs.append(
+                jobs_started(lambda: out.append(_orig(self, *args)))
+            )
+            return out[0]
+
+        monkeypatch.setattr(IncrementalLoader, name, counted)
+    assert run_pipeline(spark, cfg).total_new_files == 2
+    assert ledger_jobs == [0, 0, 0, 0]  # new_files + record per source
+
+    monkeypatch.undo()
+    reports = []
+    assert jobs_started(lambda: reports.append(run_pipeline(spark, cfg))) == 0
+    assert reports[0].total_new_files == 0
+
+
 def test_pipeline_inline_audits(spark, tmp_path):
     import os
 

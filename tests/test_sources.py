@@ -868,22 +868,6 @@ def test_avro_round_trip_with_jar(spark, tmp_path):
     assert sorted(r.id for r in back.collect()) == list(range(10))
 
 
-def _jobs_started(spark, fn) -> int:
-    """Number of Spark jobs `fn()` starts, counted through a dedicated
-    job group on the status tracker."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"schema-memo-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "schema memo test")
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _write_arrow_parquet(path: str, **cols) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -891,13 +875,13 @@ def _write_arrow_parquet(path: str, **cols) -> None:
     pq.write_table(pa.table(cols), path)
 
 
-def test_load_table_schema_resolved_once(spark, tmp_path):
+def test_load_table_schema_resolved_once(spark, tmp_path, jobs_started):
     """The first load_table of a fresh path pays the footer-merge job;
     a repeat call reads with the memoized schema and starts none."""
     _write_arrow_parquet(str(tmp_path / "t.parquet"), id=[1, 2, 3])
     d = str(tmp_path)
-    assert _jobs_started(spark, lambda: readers.load_table(spark, d, "t")) == 1
-    assert _jobs_started(spark, lambda: readers.load_table(spark, d, "t")) == 0
+    assert jobs_started(lambda: readers.load_table(spark, d, "t")) == 1
+    assert jobs_started(lambda: readers.load_table(spark, d, "t")) == 0
     df = readers.load_table(spark, d, "t")
     assert sorted(r.id for r in df.collect()) == [1, 2, 3]
 
