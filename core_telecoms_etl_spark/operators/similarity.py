@@ -3,19 +3,28 @@
 Embedding columns are `array<float>`; all math promotes to double with a
 fixed fold order so results are reproducible across runs and engines.
 
-Scale design:
-- Brute-force top-k: the query set is broadcast (it is small by
-  definition); the corpus never shuffles — each partition scores its rows
-  and a per-partition top-k heap (TakeOrderedAndProject after the window
-  filter; at extreme k use aggregation) feeds the final merge.
-- IVF: a coarse quantizer (deterministic sample as centroids) buckets the
-  corpus once (one narrow shuffle keyed by centroid id); queries probe
-  `n_probe` nearest buckets, cutting scored candidates by ~C/n_probe.
-- Random-hyperplane LSH: sign-bit sketches give Hamming pre-filtering with
-  the same banding trick as MinHash (operators/dedup.py).
+Scale design: every cosine scorer is ONE `mapInPandas` scan of the
+corpus. The small side (queries, centroids) is collected to the driver
+under an enforced row bound and ships in the task closure, so the
+corpus is never broadcast, joined or shuffled before scoring. The four
+top-k scorers share one kernel (`_topk`) and differ only in which
+corpus rows each query scores:
+- exact (`brute_force_topk`, `brute_force_topk_arrow_rounded6`): every
+  row;
+- IVF (`ivf_topk`): rows assigned in-batch to a centroid the query
+  probes (coarse quantizer: lowest-id vectors or `kmeans_centroids`);
+- random-hyperplane LSH (`lsh_topk`): rows whose sign-bit sketch lies
+  within `max_hamming` of the query's in any table.
+Each Arrow batch keeps an interval-sound partial top-k per query
+(map-side combine: only #batches × Q × k rows leave Python), and one
+final query_id window ranks globally. `cosine_pairs_arrow_rounded6`
+is the exact all-pairs baseline: the same helpers with a threshold in
+place of the top-k loop.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -23,10 +32,10 @@ from pyspark.sql import functions as F
 
 # Driver-memory bound on the eager-collected side of the Arrow scorers
 # (VERDICT r10 ask #5: "documented but unenforced" → enforced). 1M rows
-# of 64-dim double vectors ≈ 1 GB on the driver — the same order as the
-# broadcast the fold path ships, and far past the point where the
-# escalation paths (IVF/LSH top-k; LSH/IVF/SemDeDup for all-pairs) are
-# the right plan anyway. Overridable per call for deliberate probes.
+# of 64-dim double vectors ≈ 1 GB on the driver, far past the point
+# where the escalation paths (IVF/LSH top-k; LSH/IVF/SemDeDup for
+# all-pairs) are the right plan anyway. Overridable per call for
+# deliberate probes.
 MAX_COLLECT_ROWS_DEFAULT = 1_000_000
 
 # Query-chunk width for the BLAS selection matrix in the top-k scorers
@@ -40,6 +49,22 @@ MAX_COLLECT_ROWS_DEFAULT = 1_000_000
 # come from the exact dim-ascending rescore either way (bit-identity
 # is pinned by the equality pytests and the Q>chunk probe test).
 Q_CHUNK = 1024
+
+# Selection slack of the interval keep rule (see `_topk`), as
+# (per-unit-denominator dot slack, absolute cosine slack). Raw cosines:
+# the BLAS reordering bound ≤ dim·2⁻⁵² ≈ 1.4e-14 at dim 64, padded ~70×.
+# Rounded6 cosines: half a 6-dp rounding grid step of the dot, padded 2 %
+# for ulp slack, plus the BLAS bound padded to 1e-11.
+_RAW_EPS = (0.0, 1e-12)
+_ROUNDED6_EPS = (5.1e-7, 1e-11)
+
+# Candidate density past which one chunk-wide GEMM is cheaper than
+# per-query gathers (the r11 clustered LSH probe: whole clusters collide
+# into every query's candidate set and the gather route ran 321 s where
+# the exact GEMM took 120 s).
+_DENSE_ROUTE = 0.25
+
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine double, rank long"
 
 
 def _collect_bounded(proj: DataFrame, *, what: str, escalation: str,
@@ -125,247 +150,287 @@ def cosine_from_norms(dot: Column, n2_a: Column, n2_b: Column) -> Column:
     return dot / F.sqrt(n2_a * n2_b)
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per query vector — Arrow-batched scorer by
-    DEFAULT since r9: the interpreted HOF fold costs ~270 ns per
-    64-dim pair and the gap vs the Arrow path grows with corpus size
-    (tools/dot_scorer_probe.py: 1.2× at 0.2M pairs, 3.9× at 12.8M,
-    widening — the fold never codegens, so at 100 TB the scoring join
-    would be interpreter-bound). Output is BIT-IDENTICAL to the
-    declarative fold path (`brute_force_topk_fold`, kept as the
-    oracle/verification form; equality pytest in
-    tests/test_similarity.py). Returns (query_id, neighbor_id,
-    cosine, rank).
-
-    EAGER-COLLECT CONTRACT (since r9, documented per ADVICE r9):
-    constructing this plan runs a Spark job — the query side is
-    collect()ed to the driver at CALL time (bounded by definition:
-    queries are the small relation in any ANN readout; the same bound
-    as the broadcast the fold path ships — ENFORCED since r11: a query
-    side past the row bound raises naming ivf_topk/lsh_topk). Callers
-    that must stay fully lazy (plan inventories, deferred pipelines)
-    should use `brute_force_topk_fold`, which builds the identical
-    result declaratively without executing anything."""
-    return brute_force_topk_arrow(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k
-    )
+# --- the Arrow scoring kernel -------------------------------------------------
 
 
-def brute_force_topk_fold(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Exact cosine top-k per query vector — declarative HOF-fold form
-    (the oracle path; `brute_force_topk` delegates to the Arrow scorer).
+class _Side(NamedTuple):
+    """A collected vector side: ids, (n, D) float64 matrix, squared norms."""
 
-    Plan shape: broadcast(queries) × corpus → score → window top-k.
-    Returns (query_id, neighbor_id, cosine, rank)."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_expr(vec_col).alias("q_n2"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm2_expr(vec_col).alias("c_n2"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            cosine_from_norms(
-                dot_expr("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
-            ),
+    ids: object
+    m: object
+    n2: object
+
+
+def _decode(vectors):
+    """(n, D) float64 matrix from collected lists or an Arrow batch's
+    arrays; the float32 → float64 cast is exact (the fold's per-element
+    cast)."""
+    import numpy as np
+
+    return np.array([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _n2(m):
+    """Squared L2 norms accumulated dim-ascending — `norm2_expr`'s fold
+    order, vectorized across rows."""
+    import numpy as np
+
+    n2 = np.zeros(len(m))
+    for d in range(m.shape[1]):
+        n2 += m[:, d] * m[:, d]
+    return n2
+
+
+def _exact_dots(a, rows, b, cols):
+    """Σ_d a[rows, d]·b[cols, d] accumulated dim-ascending — `dot_expr`'s
+    fold order, vectorized across pairs (`cols` may be one index)."""
+    import numpy as np
+
+    dots = np.zeros(len(rows))
+    for d in range(a.shape[1]):
+        dots += a[rows, d] * b[cols, d]
+    return dots
+
+
+def _cos_matrix(a, a_n2, b, b_n2):
+    """(len(a), len(b)) cosines with dim-ascending dots (exact, so a
+    near-tie resolves as the fold's window would)."""
+    import numpy as np
+
+    acc = np.zeros((len(a), len(b)))
+    for d in range(a.shape[1]):
+        acc += a[:, d, None] * b[None, :, d]
+    return acc / np.sqrt(a_n2[:, None] * b_n2[None, :])
+
+
+def _check_nonzero(n2, ids, what: str) -> None:
+    """The zero-norm contract: a zero vector has no cosine (the ANSI
+    fold raises DIVIDE_BY_ZERO), so every scorer fails loudly instead
+    of emitting NaN."""
+    import numpy as np
+
+    if np.any(n2 == 0.0):
+        raise ValueError(
+            f"zero-norm {what}(s): {ids[n2 == 0.0][:5].tolist()} — cosine "
+            "is undefined (ANSI fold path raises DIVIDE_BY_ZERO); filter "
+            "them upstream"
         )
-        .select("query_id", "neighbor_id", "cosine")
+
+
+def _nan_encode(x, fill: float):
+    """NaN doubles cannot cross the pandas→Arrow boundary (the worker
+    reads them back as SQL NULL, which sorts LAST under DESC where
+    Spark puts NaN FIRST): they travel as `fill` plus an `__isnan` flag
+    and `_nan_decode` rebuilds them JVM-side."""
+    import numpy as np
+
+    return np.where(np.isnan(x), fill, x)
+
+
+def _nan_decode(value: Column) -> Column:
+    return F.when(F.col("__isnan"), F.lit(float("nan"))).otherwise(value)
+
+
+def _rounded_cos(n2_x: str, n2_y: str) -> Column:
+    """round(dot, 6) / sqrt(n²x · n²y) on JVM-rounded norms — the
+    queries/vector.py rounded-fold cosine, evaluated JVM-side."""
+    return F.round(F.col("__dot"), 6) / F.sqrt(F.col(n2_x) * F.col(n2_y))
+
+
+def _collect_side(df: DataFrame, *, id_col: str, vec_col: str,
+                  rounded: bool, what: str, escalation: str,
+                  max_rows: int) -> _Side | None:
+    """The bounded, id-ordered collect of a scorer's small side; None
+    when empty. Norms are dim-ascending (raw) or rounded by the JVM
+    (rounded6)."""
+    import numpy as np
+
+    cols = [F.col(id_col), F.col(vec_col)]
+    if rounded:
+        cols.append(F.round(norm2_expr(vec_col), 6).alias("__n2r"))
+    rows = _collect_bounded(
+        df.select(*cols).orderBy(id_col),
+        what=what, escalation=escalation, max_rows=max_rows,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    if not rows:
+        return None
+    m = _decode(r[1] for r in rows)
+    return _Side(
+        np.array([r[0] for r in rows], dtype=np.int64),
+        m,
+        np.array([r[2] for r in rows], dtype=np.float64) if rounded
+        else _n2(m),
     )
 
 
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    batch_topk: bool = True,
-    max_collect_rows: int = MAX_COLLECT_ROWS_DEFAULT,
-    q_chunk: int = Q_CHUNK,
-) -> DataFrame:
-    """Exact cosine top-k per query — Arrow-batched numpy scorer,
-    BIT-IDENTICAL to `brute_force_topk` (equality pytest in
-    tests/test_similarity.py).
+def _topk_rows(cm, ids, c_n2, q: _Side, js, k: int, q_chunk: int, eps,
+               near, check_candidates: bool):
+    """The one top-k scoring loop: for each query index in `js`, yield
+    (j, kept row indices, their exact dots) over the corpus rows
+    (cm, ids, c_n2). `near(jc)` optionally masks candidates per query
+    chunk; self-pairs are always excluded. See `_topk` for why the
+    emitted dots are the fold's doubles."""
+    import numpy as np
 
-    Why this exists: `dot_expr`/`norm2_expr` are `F.aggregate`/`zip_with`
+    dot_eps, abs_eps = eps
+    for j0 in range(0, len(js), q_chunk):
+        jc = js[j0 : j0 + q_chunk]
+        ok = None if near is None else near(jc)
+        # density route: one chunk-wide GEMM, or per-query gathers when
+        # the candidates are sparse; either only SELECTS
+        dense = ok is None or ok.mean() > _DENSE_ROUTE
+        if dense:
+            cos_full = (cm @ q.m[jc].T) / np.sqrt(
+                c_n2[:, None] * q.n2[None, jc]
+            )
+        for jj, j in enumerate(jc):
+            mask = ids != q.ids[j]
+            if ok is not None:
+                mask &= ok[:, jj]
+            cand = np.nonzero(mask)[0]
+            if not len(cand):
+                continue
+            if check_candidates:
+                _check_nonzero(c_n2[cand], ids[cand], "corpus vector")
+            if len(cand) > k:
+                if dense:
+                    cos_b = cos_full[cand, jj]
+                else:
+                    cos_b = (cm[cand] @ q.m[j]) / np.sqrt(c_n2[cand] * q.n2[j])
+                # interval-sound keep: a finite row's exact cosine lies
+                # within ±e of its BLAS cosine, a NaN row spans
+                # (−inf, +inf); drop a row only when ≥ k rows' LOWER
+                # edges beat its UPPER edge
+                e = abs_eps
+                if dot_eps:  # rounded6: per unit denominator
+                    e = dot_eps / np.sqrt(c_n2[cand] * q.n2[j]) + abs_eps
+                finite = np.isfinite(cos_b)
+                lo = np.where(finite, cos_b - e, -np.inf)
+                hi = np.where(finite, cos_b + e, np.inf)
+                thr = np.partition(lo, len(lo) - k)[len(lo) - k]
+                cand = cand[hi >= thr]
+            yield j, cand, _exact_dots(cm, cand, q.m, j)
+
+
+def _all_rows(q: _Side):
+    """Exact candidate selector: every corpus row, every query."""
+    import numpy as np
+
+    js = np.arange(len(q.ids))
+    return lambda cm, ids, c_n2: [(None, js, None)]
+
+
+def _topk(corpus: DataFrame, q: _Side, *, id_col: str, vec_col: str,
+          k: int, q_chunk: int, blocks, rounded: bool = False,
+          check_candidates: bool = False) -> DataFrame:
+    """The Arrow top-k kernel behind every top-k scorer. Returns
+    (query_id, neighbor_id, cosine, rank), bit-identical to the
+    declarative fold form of the same scorer (broadcast queries ×
+    corpus → `dot_expr`/`norm2_expr` cosine → row_number window; the
+    references and their equality pytests live in tests/).
+
+    Why Arrow: `dot_expr`/`norm2_expr` are `F.aggregate`/`zip_with`
     higher-order functions, which Spark evaluates on the INTERPRETED
     expression path (no whole-stage codegen — the r8 SCALING.md #3
-    measurement). In the N×Q scoring join the dot product is the inner
-    loop, so at corpus scale the interpreted fold dominates. This
-    variant runs the scoring in `mapInPandas`: one Arrow batch at a
-    time, numpy columnar math, and a per-batch partial top-k so only
-    (#batches × Q × k) rows ever leave Python — the map-side-combine
-    shape of a distributed top-k.
+    measurement), so in an N×Q scoring join the interpreted fold
+    dominates. Here one Arrow batch is scored at a time with numpy.
+
+    The caller supplies two things:
+    - `blocks(cm, ids, c_n2)`, the candidate selector: per batch, an
+      iterable of (rows or None for all, query indices, near or None)
+      — all rows (exact), one block per assigned centroid × the queries
+      probing it (IVF), or a Hamming mask per query chunk (LSH);
+    - the norm/emit mode: raw (norms dim-ascending in Python, emits
+      `__cos`) or `rounded` (norms pre-rounded by the JVM in `__cn2r`,
+      emits the raw `__dot` plus both norms; `F.round` and the divide
+      run JVM-side, so numpy-vs-BigDecimal half-point rounding never
+      touches the result).
 
     Bit-equality discipline (same doubles as the fold, not just close):
-    - float32 → float64 casts are exact (same as the fold's per-element
-      cast);
-    - EMITTED dot products and squared norms accumulate dim-ascending:
-      acc += C[:, d] * Q[:, d] for d = 0..D-1, the exact operation
-      order of the left-to-right fold, vectorized ACROSS pairs (each
-      pair's sum stays sequential);
-    - cosine = dot / sqrt(q_n2 * c_n2), the `cosine_from_norms` tree;
-    - SELECTION (which rows make the per-batch partial top-k) uses a
-      BLAS matmul instead (r10: the dim-ascending full-matrix loop is
-      memory-traffic-bound — one n×m temporary per dimension — and
-      measured 130 s on 8000² pairs where the matmul takes ~1 s).
-      BLAS reorders the summation, so its cosine differs from the
-      fold's by ≤ dim·2⁻⁵² (Cauchy–Schwarz bounds Σ|cᵢqᵢ| by the norm
-      product, so the relative dot error bound divides out to an
-      ABSOLUTE cosine bound); the interval keep-rule below absorbs it
-      (padded to 1e-12, ~70× slack), and every SURVIVING pair is
-      re-scored with the exact dim-ascending accumulation before
+    - float32 → float64 casts are exact;
+    - EMITTED dots and norms accumulate dim-ascending (`_exact_dots`,
+      `_n2`): acc += C[:, d]·Q[:, d] for d = 0..D-1, the left-to-right
+      fold's operation order vectorized ACROSS pairs;
+    - raw cosine = dot / sqrt(c_n2 · q_n2), the `cosine_from_norms`
+      tree;
+    - SELECTION (which rows make the per-batch partial top-k) uses BLAS
+      instead (r10: the dim-ascending full-matrix loop is
+      memory-traffic-bound and measured 130 s on 8000² pairs where the
+      matmul takes ~1 s). BLAS reorders the sum, so its cosine differs
+      from the fold's by ≤ dim·2⁻⁵² (Cauchy–Schwarz makes the relative
+      dot error an ABSOLUTE cosine bound); the interval keep rule
+      absorbs it (`_RAW_EPS`, plus half a rounding grid step for
+      rounded6), and every survivor is re-scored dim-ascending before
       emission — over-keeping a borderline row costs a few extra
-      emitted rows, never a wrong result.
+      emitted rows, never a wrong result. The rule is route- and
+      chunk-independent, so the GEMM and gather routes and any
+      `q_chunk` emit the same rows;
+    - NaN-component vectors give NaN cosines, which Spark's window
+      orders FIRST under DESC: the keep rule never drops them, and they
+      cross the Arrow boundary as a flag (`_nan_encode`).
 
-    The query side is collect()ed to the driver (bounded by definition —
-    same rationale as the fold path's broadcast) and shipped to
-    executors in the task closure. The bound is ENFORCED (r11, VERDICT
-    r10 ask #5): past `max_collect_rows` the collect raises naming the
-    escalation path instead of OOMing the driver.
-
-    Zero-norm contract (ADVICE r9): a zero-norm vector makes the
-    cosine denominator 0 — under ANSI mode (the session default) the
-    fold path raises DIVIDE_BY_ZERO, so this path raises ValueError on
-    any zero-norm query or corpus vector for the same loud failure
-    (filter them upstream). NaN-COMPONENT vectors are fine in both
-    paths: the cosine is NaN and sorts FIRST under DESC (Spark's
-    NaN-greatest order, mirrored by the per-batch partial top-k).
-    NaN doubles cannot cross the pandas→Arrow boundary directly (the
-    worker conversion reads float NaN as SQL NULL, which sorts LAST
-    under DESC — the opposite end), so NaN cosines travel as an
-    explicit flag and are reconstructed as true NaN JVM-side."""
+    Zero-norm contract: zero-norm corpus rows raise ValueError when
+    scored (every row, or only candidates with `check_candidates`);
+    callers check their query side on the driver."""
     import numpy as np
     import pandas as pd
 
-    q_rows = _collect_bounded(
-        queries.select(F.col(id_col), F.col(vec_col)).orderBy(id_col),
-        what="brute_force_topk_arrow",
-        escalation="ivf_topk / lsh_topk",
-        max_rows=max_collect_rows,
-    )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank long"
-        )
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)  # (Q, D)
-    dim = qm.shape[1]
-    q_n2 = np.zeros(len(q_ids))
-    for d in range(dim):
-        q_n2 += qm[:, d] * qm[:, d]
-    if np.any(q_n2 == 0.0):
-        raise ValueError(
-            "zero-norm query vector(s): "
-            f"{q_ids[q_n2 == 0.0][:5].tolist()} — cosine is undefined "
-            "(ANSI fold path raises DIVIDE_BY_ZERO); filter them upstream"
-        )
-
-    # absolute cosine-scale bound on BLAS-vs-sequential reordering
-    # error (≤ dim·2⁻⁵² ≈ 1.4e-14 at dim 64; padded ~70×)
-    blas_eps = 1e-12
+    eps = _ROUNDED6_EPS if rounded else _RAW_EPS
 
     def score(batches):
         for pdf in batches:
             if not len(pdf):
                 continue
-            n_ids = pdf["__nid"].to_numpy(np.int64)
-            cm = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )  # (n, D)
-            c_n2 = np.zeros(len(n_ids))
-            for d in range(dim):
-                c_n2 += cm[:, d] * cm[:, d]
-            if np.any(c_n2 == 0.0):
-                raise ValueError(
-                    "zero-norm corpus vector(s): "
-                    f"{n_ids[c_n2 == 0.0][:5].tolist()} — cosine is "
-                    "undefined (ANSI fold path raises DIVIDE_BY_ZERO); "
-                    "filter them upstream"
+            ids = pdf["__nid"].to_numpy(np.int64)
+            cm = _decode(pdf["__vec"])
+            c_n2 = pdf["__cn2r"].to_numpy(np.float64) if rounded else _n2(cm)
+            if not check_candidates:
+                _check_nonzero(c_n2, ids, "corpus vector")
+            out_j, out_i, out_dot = [], [], []
+            for rows, js, near in blocks(cm, ids, c_n2):
+                sub = (
+                    (cm, ids, c_n2) if rows is None
+                    else (cm[rows], ids[rows], c_n2[rows])
                 )
-            out_q, out_n, out_c = [], [], []
-            idx = np.arange(len(n_ids))
-            for j0 in range(0, len(q_ids), q_chunk):
-                j1 = min(j0 + q_chunk, len(q_ids))
-                # BLAS scoring for SELECTION only (docstring); chunked
-                # over the query axis to bound the matrix (Q_CHUNK note)
-                cos_b = (cm @ qm[j0:j1].T) / np.sqrt(
-                    c_n2[:, None] * q_n2[None, j0:j1]
+                for j, cand, dots in _topk_rows(
+                    *sub, q, js, k, q_chunk, eps, near, check_candidates
+                ):
+                    out_j.append(np.full(len(cand), j))
+                    out_i.append(cand if rows is None else rows[cand])
+                    out_dot.append(dots)
+            if not out_dot:
+                continue
+            j, i, dot = (np.concatenate(x) for x in (out_j, out_i, out_dot))
+            frame = {"query_id": q.ids[j], "neighbor_id": ids[i]}
+            if rounded:
+                frame.update({
+                    "__dot": _nan_encode(dot, 0.0),
+                    "__isnan": np.isnan(dot),
+                    # NaN norms only co-occur with NaN dots; 1.0 keeps
+                    # the never-taken divide branch safe
+                    "__cn2r": _nan_encode(c_n2[i], 1.0),
+                    "__qn2r": _nan_encode(q.n2[j], 1.0),
+                })
+            else:
+                cos = dot / np.sqrt(c_n2[i] * q.n2[j])
+                frame.update(
+                    {"__cos": _nan_encode(cos, 0.0), "__isnan": np.isnan(cos)}
                 )
-                for j in range(j0, j1):
-                    mask = n_ids != q_ids[j]
-                    cand_i, cand_c = idx[mask], cos_b[mask, j - j0]
-                    if batch_topk and len(cand_i) > k:
-                        # interval-sound partial top-k: NaN cosines
-                        # (NaN-component vectors) get (lo, hi) =
-                        # (−inf, +inf) so they are always kept, matching
-                        # Spark's NaN-greatest-under-DESC window order
-                        # (ADVICE r9); finite rows are dropped only when
-                        # ≥ k rows' lower edges provably beat them
-                        finite = np.isfinite(cand_c)
-                        lo = np.where(finite, cand_c - blas_eps, -np.inf)
-                        hi = np.where(finite, cand_c + blas_eps, np.inf)
-                        thr = np.partition(lo, len(lo) - k)[len(lo) - k]
-                        cand_i = cand_i[hi >= thr]
-                    # exact dim-ascending rescore of the survivors — the
-                    # emitted doubles are the fold's, bit for bit
-                    dots = np.zeros(len(cand_i))
-                    for d in range(dim):
-                        dots += cm[cand_i, d] * qm[j, d]
-                    cexact = dots / np.sqrt(c_n2[cand_i] * q_n2[j])
-                    out_q.append(np.full(len(cand_i), q_ids[j]))
-                    out_n.append(n_ids[cand_i])
-                    out_c.append(cexact)
-            all_c = np.concatenate(out_c)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "__cos": np.where(np.isnan(all_c), 0.0, all_c),
-                    "__isnan": np.isnan(all_c),
-                }
-            )
+            yield pd.DataFrame(frame)
 
-    partial = corpus.select(
-        F.col(id_col).alias("__nid"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(
-        score, "query_id long, neighbor_id long, __cos double, __isnan boolean"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        # reconstruct true NaN (docstring: Arrow reads pandas NaN as NULL)
-        F.when(F.col("__isnan"), F.lit(float("nan")))
-        .otherwise(F.col("__cos"))
-        .alias("cosine"),
+    cols = [F.col(id_col).alias("__nid"), F.col(vec_col).alias("__vec")]
+    if rounded:
+        cols.append(F.round(norm2_expr(vec_col), 6).alias("__cn2r"))
+        schema = (
+            "query_id long, neighbor_id long, __dot double, "
+            "__isnan boolean, __cn2r double, __qn2r double"
+        )
+        value = _rounded_cos("__qn2r", "__cn2r")
+    else:
+        schema = "query_id long, neighbor_id long, __cos double, __isnan boolean"
+        value = F.col("__cos")
+    partial = corpus.select(*cols).mapInPandas(score, schema).select(
+        "query_id", "neighbor_id", _nan_decode(value).alias("cosine")
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id")
@@ -374,6 +439,49 @@ def brute_force_topk_arrow(
         partial.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
+# --- scorers -------------------------------------------------------------------
+
+
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    *,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    max_collect_rows: int = MAX_COLLECT_ROWS_DEFAULT,
+    q_chunk: int = Q_CHUNK,
+) -> DataFrame:
+    """Exact cosine top-k per query vector through the Arrow kernel
+    (`_topk`, every corpus row a candidate). The interpreted HOF fold
+    costs ~270 ns per 64-dim pair and lost to the Arrow path by 1.2× at
+    0.2M pairs and 3.9× at 12.8M, widening (r9; recorded in SCALING.md
+    "r9 — the vector-family fold audit" and BASELINE.md "Vector
+    dot-fold audit"). Returns (query_id, neighbor_id, cosine, rank).
+
+    EAGER-COLLECT CONTRACT: constructing this plan runs a Spark job —
+    the query side is collect()ed to the driver at CALL time (queries
+    are the small relation in any ANN readout) and ships in the task
+    closure. Past `max_collect_rows` the collect raises naming
+    ivf_topk/lsh_topk instead of OOMing the driver.
+
+    Zero-norm contract: raises ValueError on any zero-norm query (at
+    call time) or corpus vector (when scored). NaN-component vectors
+    are fine: their cosine is NaN and sorts FIRST under DESC."""
+    q = _collect_side(
+        queries, id_col=id_col, vec_col=vec_col, rounded=False,
+        what="brute_force_topk", escalation="ivf_topk / lsh_topk",
+        max_rows=max_collect_rows,
+    )
+    if q is None:
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    _check_nonzero(q.n2, q.ids, "query vector")
+    return _topk(
+        corpus, q, id_col=id_col, vec_col=vec_col, k=k, q_chunk=q_chunk,
+        blocks=_all_rows(q),
     )
 
 
@@ -389,188 +497,32 @@ def brute_force_topk_arrow_rounded6(
 ) -> DataFrame:
     """Exact top-k under the ROUNDED-fold cosine discipline
     (queries/vector.py: cosine = round(dot,6) / sqrt(round(n²q,6) ·
-    round(n²c,6))) — Arrow-batched scorer, BIT-IDENTICAL to the
-    inline `_rounded_cosine_from_norms` fold form (equality pytest in
-    tests/test_similarity.py). This closes the last interpreted Q·N
-    fold path (VERDICT r9 ask #2: knn_classify's exact arm scored
-    ~19M pairs through the interpreted HOF fold at sf0.1, past the
-    12.8M-pair point where tools/dot_scorer_probe.py measured the
-    fold 3.9× slower than Arrow and widening).
+    round(n²c,6))) — the Arrow kernel in rounded6 mode: Spark rounds the
+    norms (corpus side as an input column, query side through the
+    collected rows), Python emits the raw dim-ascending dot, and
+    `F.round` plus the divide run JVM-side, so the cosine is the same
+    Spark expression tree on bit-identical inputs. This closed the last
+    interpreted Q·N fold path (VERDICT r9 ask #2: knn_classify's exact
+    arm scored ~19M pairs through the HOF fold at sf0.1).
 
-    Bit-equality discipline — the one new wrinkle vs
-    `brute_force_topk_arrow` is the 6-decimal ROUNDING, whose
-    half-point semantics differ between numpy (rint: half-even on a
-    scaled double) and Spark (BigDecimal HALF_UP on the shortest
-    decimal repr). The design keeps every rounding on the JVM so the
-    question never arises:
-    - squared norms: computed by SPARK (`F.round(norm2, 6)`) as
-      once-per-row projections and fed INTO the scorer (corpus side as
-      an input column, query side through the collected rows) — the
-      Python stage only consumes the already-rounded doubles;
-    - dot products: Python emits the RAW dim-ascending dot (the
-      proven bit-identical accumulation of `brute_force_topk_arrow`);
-      `F.round(dot, 6)` and the final divide run JVM-side on the
-      emitted doubles, so the cosine is literally the same Spark
-      expression tree on bit-identical inputs;
-    - per-batch partial top-k: selection inside Python scores with a
-      BLAS matmul on the UNROUNDED dot (r10 — the dim-ascending
-      full-matrix loop is memory-traffic-bound; see
-      brute_force_topk_arrow). The keep rule is interval-sound: each
-      finite row's true Spark cosine lies in [cᵢ−ε, cᵢ+ε] with
-      ε = 5.1e-7/denomᵢ + 1e-11 (half a rounding grid step plus the
-      BLAS reordering bound); let T = the kth-largest lower edge
-      across the batch — a row is dropped only if its UPPER edge is
-      below T, i.e. only when ≥ k rows provably beat it under Spark's
-      exact order. Surviving rows' dots are re-computed with the
-      exact dim-ascending accumulation before emission. NaN cosines
-      (NaN-component vectors) get (lo, hi) = (−inf, +inf): they are
-      always kept and never falsely justify dropping others; the
-      final JVM window applies the exact order
-      (NaN-greatest-under-DESC).
+    EAGER-COLLECT CONTRACT: same as `brute_force_topk`.
 
-    EAGER-COLLECT CONTRACT: same as `brute_force_topk` — the query
-    side is collect()ed at call time; the `max_collect_rows` bound is
-    ENFORCED (raises past it, naming the escalation path).
-
-    Zero-norm contract: raises ValueError on any zero-norm query or
-    corpus vector (same loud failure as the ANSI fold path's
-    DIVIDE_BY_ZERO — the JVM-side divide here would raise it anyway,
-    but only after the scoring work; the guard fails at the source).
+    Zero-norm contract: raises ValueError on any zero (rounded) norm
+    query or corpus vector — the JVM-side divide would raise anyway,
+    but only after the scoring work.
 
     Returns (query_id, neighbor_id, cosine, rank)."""
-    import numpy as np
-    import pandas as pd
-
-    q_rows = _collect_bounded(
-        queries.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.round(norm2_expr(vec_col), 6).alias("__qn2r"),
-        ).orderBy(id_col),
+    q = _collect_side(
+        queries, id_col=id_col, vec_col=vec_col, rounded=True,
         what="brute_force_topk_arrow_rounded6",
-        escalation="ivf_topk / lsh_topk",
-        max_rows=max_collect_rows,
+        escalation="ivf_topk / lsh_topk", max_rows=max_collect_rows,
     )
-    out_schema = "query_id long, neighbor_id long, cosine double, rank long"
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([r[1] for r in q_rows], dtype=np.float64)  # (Q, D)
-    q_n2r = np.array([r[2] for r in q_rows], dtype=np.float64)
-    dim = qm.shape[1]
-    if np.any(q_n2r == 0.0):
-        raise ValueError(
-            "zero-norm query vector(s): "
-            f"{q_ids[q_n2r == 0.0][:5].tolist()} — cosine is undefined "
-            "(ANSI divide raises); filter them upstream"
-        )
-
-    # selection slack per unit denominator: half a rounding grid step
-    # (the max |round(dot,6) − dot|) padded 2% for ulp slack; the BLAS
-    # reordering error (≤ dim·2⁻⁵² of the norm product — docstring of
-    # brute_force_topk_arrow) is absorbed by a 1e-11 absolute pad
-    dot_eps = 5.1e-7
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["__nid"].to_numpy(np.int64)
-            c_n2r = pdf["__cn2r"].to_numpy(np.float64)
-            if np.any(c_n2r == 0.0):
-                raise ValueError(
-                    "zero-norm corpus vector(s): "
-                    f"{n_ids[c_n2r == 0.0][:5].tolist()} — cosine is "
-                    "undefined (ANSI divide raises); filter them upstream"
-                )
-            cm = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )  # (n, D)
-            out_q, out_n, out_dot, out_cn2, out_qn2 = [], [], [], [], []
-            idx = np.arange(len(n_ids))
-            for j0 in range(0, len(q_ids), q_chunk):
-                j1 = min(j0 + q_chunk, len(q_ids))
-                # BLAS scoring for SELECTION only; survivors re-scored
-                # with the exact dim-ascending accumulation before
-                # emit; chunked over the query axis (Q_CHUNK note)
-                denom = np.sqrt(c_n2r[:, None] * q_n2r[None, j0:j1])
-                cos_b = (cm @ qm[j0:j1].T) / denom
-                for j in range(j0, j1):
-                    mask = n_ids != q_ids[j]
-                    cand_i = idx[mask]
-                    cand_c = cos_b[mask, j - j0]
-                    if len(cand_i) > k:
-                        # interval-sound partial top-k (docstring): the
-                        # true Spark cosine of finite rows lies within
-                        # ε = dot_eps/denom + 1e-11 of the BLAS cosine;
-                        # drop a row only when ≥ k rows' LOWER edges
-                        # beat its UPPER edge.
-                        finite = np.isfinite(cand_c)
-                        eps = dot_eps / denom[mask, j - j0] + 1e-11
-                        lo = np.where(finite, cand_c - eps, -np.inf)
-                        hi = np.where(finite, cand_c + eps, np.inf)
-                        thr = np.partition(lo, len(lo) - k)[len(lo) - k]
-                        cand_i = cand_i[hi >= thr]
-                    # exact dim-ascending rescore — the emitted raw
-                    # dots are the fold's doubles, bit for bit
-                    dots = np.zeros(len(cand_i))
-                    for d in range(dim):
-                        dots += cm[cand_i, d] * qm[j, d]
-                    out_q.append(np.full(len(cand_i), q_ids[j]))
-                    out_n.append(n_ids[cand_i])
-                    out_dot.append(dots)
-                    out_cn2.append(c_n2r[cand_i])
-                    out_qn2.append(np.full(len(cand_i), q_n2r[j]))
-            dot = np.concatenate(out_dot)
-            # a NaN dot (NaN-component vector on either side) would be
-            # read back as SQL NULL at the Arrow boundary; flag it and
-            # reconstruct true NaN JVM-side (same convention as
-            # brute_force_topk_arrow)
-            dot_nan = np.isnan(dot)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "__dot": np.where(dot_nan, 0.0, dot),
-                    "__isnan": dot_nan,
-                    # NaN norms only co-occur with NaN dots (a NaN
-                    # component poisons both); placeholder 1.0 keeps
-                    # the never-taken otherwise-branch division safe
-                    "__cn2r": np.where(
-                        np.isnan(cn2 := np.concatenate(out_cn2)), 1.0, cn2
-                    ),
-                    "__qn2r": np.where(
-                        np.isnan(qn2 := np.concatenate(out_qn2)), 1.0, qn2
-                    ),
-                }
-            )
-
-    partial = corpus.select(
-        F.col(id_col).alias("__nid"),
-        F.col(vec_col).alias("__vec"),
-        F.round(norm2_expr(vec_col), 6).alias("__cn2r"),
-    ).mapInPandas(
-        score,
-        "query_id long, neighbor_id long, __dot double, __isnan boolean, "
-        "__cn2r double, __qn2r double",
-    )
-    scored = partial.select(
-        "query_id",
-        "neighbor_id",
-        F.when(F.col("__isnan"), F.lit(float("nan")))
-        .otherwise(
-            F.round(F.col("__dot"), 6)
-            / F.sqrt(F.col("__qn2r") * F.col("__cn2r"))
-        )
-        .alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    if q is None:
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    _check_nonzero(q.n2, q.ids, "query vector")
+    return _topk(
+        corpus, q, id_col=id_col, vec_col=vec_col, k=k, q_chunk=q_chunk,
+        blocks=_all_rows(q), rounded=True,
     )
 
 
@@ -584,61 +536,42 @@ def cosine_pairs_arrow_rounded6(
 ) -> DataFrame:
     """All-pairs cosine ≥ threshold under the ROUNDED-fold discipline
     (cos_raw = round(dot,6)/sqrt(round(n²a,6)·round(n²b,6))) — the
-    Arrow-batched form of the exact O(n²) baseline. BIT-IDENTICAL rows
-    to the declarative join form (equality pytest): the same
-    JVM-rounding design as `brute_force_topk_arrow_rounded6` (norms
-    pre-rounded by Spark on both sides, Python emits the raw
-    dim-ascending dot, `F.round` + divide + the threshold filter all
-    run JVM-side), so numpy-vs-BigDecimal rounding semantics never
-    touch the result. The Python stage scores with a BLAS matmul and
-    pre-filters with an interval-sound margin (emit when the BLAS
-    cosine ≥ threshold − half a rounding grid step / denominator −
-    the BLAS reordering bound), a strict superset of the exact
-    filter; survivors are re-scored with the exact dim-ascending
-    accumulation before emission. NaN cosines (NaN-component vectors) are flagged through
-    the Arrow boundary and reconstructed JVM-side — under Spark's
-    NaN-greatest comparison semantics `NaN >= threshold` is TRUE, so
-    NaN pairs are kept, matching the fold form. Zero-norm vectors
-    raise (same contract as the top-k scorers).
+    Arrow form of the exact O(n²) baseline, with the kernel's
+    rounded6 design (`_topk`): JVM-rounded norms on both sides, the raw
+    dim-ascending dot from Python, `F.round` + divide + the threshold
+    filter JVM-side. The Python stage pre-filters a BLAS cosine with an
+    interval-sound margin (threshold − half a rounding grid step /
+    denominator − the BLAS bound), a strict superset of the exact
+    filter, and re-scores survivors dim-ascending. Under Spark's
+    NaN-greatest semantics `NaN >= threshold` is TRUE, so NaN pairs are
+    kept with a NaN cosine, as in the fold form.
 
-    Found live: the r10 sf1 sweep measured the fold form of
-    `cosine_pairs` at 719 s for 8k vectors (32M interpreted folds) —
-    squarely the interpreter-bound regime of the r9 probe.
+    Found live: the r10 sf1 sweep measured the fold form at 719 s for
+    8k vectors (32M interpreted folds).
 
-    Scale bound: one side is collect()ed at call time (EAGER-COLLECT,
-    same bound as the exact baseline's broadcast — all-pairs exact is
-    the declared correctness baseline; LSH/IVF/SemDeDup are the 100 TB
-    paths). The `max_collect_rows` bound is ENFORCED (r11): a caller
-    handing this 10⁸ rows gets a ValueError naming the escalation
-    paths, not a driver OOM. Each unordered pair is emitted once (streamed id < collected
-    id). Returns (id_a, id_b, cosine) with cosine rounded at 6dp."""
+    EAGER-COLLECT CONTRACT: one side is collect()ed at call time; past
+    `max_collect_rows` it raises naming the escalation paths. Each
+    unordered pair is emitted once (streamed id < collected id).
+
+    Zero-norm contract: raises ValueError at call time on any zero
+    (rounded) norm vector.
+
+    Returns (id_a, id_b, cosine) with cosine rounded at 6dp."""
     import numpy as np
     import pandas as pd
 
-    rows = _collect_bounded(
-        df.select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.round(norm2_expr(vec_col), 6).alias("__n2r"),
-        ).orderBy(id_col),
+    a = _collect_side(
+        df, id_col=id_col, vec_col=vec_col, rounded=True,
         what="cosine_pairs_arrow_rounded6",
         escalation="minhash-LSH / ivf_topk / semantic_dedup",
         max_rows=max_collect_rows,
     )
-    if not rows:
+    if a is None:
         return df.sparkSession.createDataFrame(
             [], "id_a long, id_b long, cosine double"
         )
-    all_ids = np.array([r[0] for r in rows], dtype=np.int64)
-    am = np.array([r[1] for r in rows], dtype=np.float64)  # (N, D)
-    a_n2r = np.array([r[2] for r in rows], dtype=np.float64)
-    dim = am.shape[1]
-    if np.any(a_n2r == 0.0):
-        raise ValueError(
-            "zero-norm vector(s): "
-            f"{all_ids[a_n2r == 0.0][:5].tolist()} — cosine is undefined "
-            "(ANSI divide raises); filter them upstream"
-        )
+    _check_nonzero(a.n2, a.ids, "vector")
+    dot_eps, abs_eps = _ROUNDED6_EPS
 
     def score(batches):
         for pdf in batches:
@@ -646,38 +579,25 @@ def cosine_pairs_arrow_rounded6(
                 continue
             b_ids = pdf["__bid"].to_numpy(np.int64)
             b_n2r = pdf["__bn2r"].to_numpy(np.float64)
-            bm = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )  # (n, D)
-            # BLAS scoring for SELECTION only (r10 — the dim-ascending
-            # full-matrix loop is memory-traffic-bound; see
-            # brute_force_topk_arrow); survivors re-scored exactly
-            den = np.sqrt(b_n2r[:, None] * a_n2r[None, :])
-            cos_b = (bm @ am.T) / den
-            # streamed id < collected id: each unordered pair once.
-            # Keep margin: half a rounding grid step over the
-            # denominator plus the BLAS reordering bound — a strict
-            # superset of the exact JVM filter downstream
-            once = b_ids[:, None] < all_ids[None, :]
-            nan = np.isnan(cos_b)
-            keep = once & (
-                nan | (cos_b >= threshold - 5.1e-7 / den - 1e-11)
+            bm = _decode(pdf["__vec"])
+            # BLAS selection with the threshold-side keep margin; each
+            # unordered pair once (streamed id < collected id)
+            den = np.sqrt(b_n2r[:, None] * a.n2[None, :])
+            cos_b = (bm @ a.m.T) / den
+            keep = (b_ids[:, None] < a.ids[None, :]) & (
+                np.isnan(cos_b)
+                | (cos_b >= threshold - dot_eps / den - abs_eps)
             )
             bi, aj = np.nonzero(keep)
-            # exact dim-ascending rescore of surviving pairs — the
-            # emitted raw dots are the fold's doubles, bit for bit
-            dots = np.zeros(len(bi))
-            for d in range(dim):
-                dots += bm[bi, d] * am[aj, d]
-            dnan = np.isnan(dots)
+            dots = _exact_dots(bm, bi, a.m, aj)
             yield pd.DataFrame(
                 {
                     "id_a": b_ids[bi],
-                    "id_b": all_ids[aj],
-                    "__dot": np.where(dnan, 0.0, dots),
-                    "__isnan": dnan,
+                    "id_b": a.ids[aj],
+                    "__dot": _nan_encode(dots, 0.0),
+                    "__isnan": np.isnan(dots),
                     "__n2a": b_n2r[bi],
-                    "__n2b": a_n2r[aj],
+                    "__n2b": a.n2[aj],
                 }
             )
 
@@ -690,50 +610,10 @@ def cosine_pairs_arrow_rounded6(
         "id_a long, id_b long, __dot double, __isnan boolean, "
         "__n2a double, __n2b double",
     )
-    cos_raw = F.when(F.col("__isnan"), F.lit(float("nan"))).otherwise(
-        F.round(F.col("__dot"), 6)
-        / F.sqrt(F.col("__n2a") * F.col("__n2b"))
-    )
     return (
-        partial.withColumn("__cos_raw", cos_raw)
+        partial.withColumn("__cos_raw", _nan_decode(_rounded_cos("__n2a", "__n2b")))
         .filter(F.col("__cos_raw") >= threshold)
         .select("id_a", "id_b", F.round("__cos_raw", 6).alias("cosine"))
-    )
-
-
-def cosine_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.3,
-) -> DataFrame:
-    """All-pairs cosine above a threshold (embedding near-dup detection).
-    Exact O(n²) scoring — the correctness baseline the LSH/IVF paths are
-    judged against; at 100 TB use `lsh_topk`/IVF instead."""
-    d = df.select(
-        F.col(id_col), F.col(vec_col), norm2_expr(vec_col).alias("_n2")
-    )
-    a = d.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("v_a"),
-        F.col("_n2").alias("n2_a"),
-    )
-    b = d.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("v_b"),
-        F.col("_n2").alias("n2_b"),
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            cosine_from_norms(
-                dot_expr("v_a", "v_b"), F.col("n2_a"), F.col("n2_b")
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -747,43 +627,6 @@ def _centroids(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
             F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("centroid")
         )
     )
-
-
-def ivf_assign(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_centroids: int = 16,
-    centroids: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Assign each vector to its nearest centroid (max cosine, id
-    tie-break). Returns (assignments(id, vec, centroid_id), centroids).
-    Pass `centroids` (e.g. from kmeans_centroids) to override the naive
-    lowest-id quantizer."""
-    cents = (
-        centroids
-        if centroids is not None
-        else _centroids(df, id_col, vec_col, n_centroids)
-    )
-    cents_n = cents.withColumn("cent_n2", norm2_expr("centroid"))
-    scored = df.select(
-        F.col(id_col), F.col(vec_col), norm2_expr(vec_col).alias("v_n2")
-    ).join(F.broadcast(cents_n)).withColumn(
-        "sim",
-        cosine_from_norms(
-            dot_expr(vec_col, "centroid"), F.col("v_n2"), F.col("cent_n2")
-        ),
-    )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("sim").desc(), F.col("centroid_id")
-    )
-    assign = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, vec_col, "centroid_id")
-    )
-    return assign, cents
 
 
 def ivf_topk(
@@ -805,155 +648,26 @@ def ivf_topk(
     the coarse quantizer with deterministic Lloyd iterations (better-
     balanced buckets => better recall at the same n_probe).
 
-    Arrow single-pass scorer by DEFAULT since r11 — bit-identical to
-    the declarative form `_ivf_topk_fold` (equality pytest). The fold
-    form scored every (bucket row × probing query) candidate through
-    the interpreted HOF fold AND assigned the corpus via a
-    corpus×centroids fold join + a row_number window over n·C rows
-    (a 64M-row shuffle at 1M corpus): the r11 Q=10^4×10^6 memory
-    probe measured it PAST 590 s where the chunked exact Arrow scorer
-    takes 217 s — the approximate index lost to its own exact
-    baseline, the same interpreted-fold class as sf1 finding #5. The
-    Arrow path does assignment + probing + scoring in ONE corpus scan
-    (see _ivf_topk_arrow)."""
-    return _ivf_topk_arrow(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k,
-        n_centroids=n_centroids, n_probe=n_probe,
-        kmeans_iters=kmeans_iters, max_collect_rows=max_collect_rows,
-        q_chunk=q_chunk,
-    )
+    Single Arrow pass (r11): centroids (≤ n_centroids rows) and the
+    query matrix (bounded, enforced) ship in the task closure; per
+    batch each corpus row is assigned to its centroid and scored by the
+    kernel (`_topk`) only against the queries PROBING that centroid. No
+    corpus×centroids materialization, no centroid-keyed exchange, no
+    per-id window over the corpus: the declarative form did all three
+    and measured PAST 590 s at the r11 10⁶ corpus × 10⁴ query probe,
+    where the chunked exact Arrow scorer took 217 s.
 
+    Assignment and probe choice must match the fold's row_number
+    exactly — a flipped near-tie changes the candidate SET, which no
+    rescore can absorb — so both use dim-ascending sims (`_cos_matrix`),
+    NaN sims as greatest (Spark's DESC order) and ties to the lowest
+    centroid_id (centroids are sorted by id; argmax and the stable
+    argsort take the first maximum).
 
-def _ivf_topk_fold(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_centroids: int = 16,
-    n_probe: int = 4,
-    kmeans_iters: int = 0,
-) -> DataFrame:
-    """Declarative IVF top-k (the r8-r10 form, retained as the
-    verification oracle for `_ivf_topk_arrow`'s equality pytest and
-    for callers that must stay fully lazy). Scoring and assignment run
-    on the interpreted HOF fold — correct at query-gate scale,
-    interpreter-bound at the 100-TB readout shape (docstring of
-    ivf_topk)."""
-    cents_in = (
-        kmeans_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, k=n_centroids,
-            iters=kmeans_iters,
-        )
-        if kmeans_iters > 0
-        else None
-    )
-    assign, cents = ivf_assign(
-        corpus, id_col=id_col, vec_col=vec_col, n_centroids=n_centroids,
-        centroids=cents_in,
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_expr(vec_col).alias("q_n2"),
-    )
-    qc = q.join(
-        F.broadcast(cents.withColumn("cent_n2", norm2_expr("centroid")))
-    ).withColumn(
-        "sim",
-        cosine_from_norms(
-            dot_expr("q_vec", "centroid"), F.col("q_n2"), F.col("cent_n2")
-        ),
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("centroid_id")
-    )
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= n_probe)
-        .select("query_id", "q_vec", "q_n2", "centroid_id")
-    )
-    # BROADCAST the probes side: it is |Q|·n_probe rows by construction
-    # (queries are the small relation in any ANN readout). A shuffle
-    # join here keys on centroid_id — n_centroids distinct values — so
-    # parallelism collapses to n_centroids tasks and the corpus-side
-    # bucket scan skews onto them (measured 74s vs 9s at the 8× probe,
-    # r8). Broadcasting keeps the corpus in place at full parallelism.
-    cand = assign.withColumn("c_n2", norm2_expr(vec_col)).join(
-        F.broadcast(probes), "centroid_id"
-    ).filter(F.col(id_col) != F.col("query_id"))
-    scored = cand.withColumn(
-        "cosine",
-        cosine_from_norms(
-            dot_expr("q_vec", vec_col), F.col("q_n2"), F.col("c_n2")
-        ),
-    ).select("query_id", F.col(id_col).alias("neighbor_id"), "cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _ivf_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_centroids: int,
-    n_probe: int,
-    kmeans_iters: int,
-    max_collect_rows: int,
-    q_chunk: int,
-) -> DataFrame:
-    """Single-pass Arrow IVF — assignment, probing, and scoring in ONE
-    corpus scan, BIT-IDENTICAL to `_ivf_topk_fold` (equality pytest in
-    tests/test_similarity.py).
-
-    Why one pass: the fold form materializes corpus×centroids (n·C
-    rows) through a broadcast join, shuffles it for a per-id
-    row_number window, then joins the probed buckets against a
-    broadcast probes relation and scores every candidate through the
-    interpreted HOF fold. At the 100-TB readout shape (r11 probe:
-    10^6 corpus × 10^4 queries) that is interpreter-bound and
-    shuffle-heavy — the approximate index measured SLOWER than the
-    chunked exact Arrow scorer. Here the corpus is scanned once by
-    `mapInPandas`; centroids (≤ n_centroids rows) and the query matrix
-    (bounded, enforced) ship in the task closure; per batch each row
-    is assigned to its centroid and scored only against the queries
-    PROBING that centroid; only per-(batch, bucket, query) partial
-    top-k rows leave Python (map-side combine); one final small
-    shuffle ranks globally. No n·C materialization, no
-    centroid-keyed exchange, no per-id window over the corpus.
-
-    Bit-equality discipline (same as brute_force_topk_arrow):
-    - ASSIGNMENT must match the fold's row_number choice exactly — a
-      flipped near-tie changes the candidate SET, which no rescore can
-      absorb — so assignment sims use the exact dim-ascending
-      accumulation (n×C is small: C ≤ n_centroids), NaN sims treated
-      as greatest (Spark's DESC order) and ties broken by ascending
-      centroid_id (np.argmax returns the first maximum; centroids are
-      sorted by centroid_id);
-    - query-side PROBE selection replicates the fold's
-      (sim DESC NaN-greatest, centroid_id ASC) window driver-side with
-      the same dim-ascending sims (stable argsort on the negated
-      NaN-adjusted row);
-    - bucket SCORING selects with BLAS under the interval-sound keep
-      rule (±1e-12 absorbs the ≤ dim·2⁻⁵² reordering bound) and
-      re-scores survivors dim-ascending — emitted cosines are the
-      fold's doubles, bit for bit;
-    - zero-norm query/corpus/centroid vectors raise (the fold's ANSI
-      DIVIDE_BY_ZERO, failed at the source)."""
+    Zero-norm contract: raises ValueError on any zero-norm query or
+    centroid (at call time) or corpus vector (when scored)."""
     import numpy as np
-    import pandas as pd
 
-    out_schema = "query_id long, neighbor_id long, cosine double, rank long"
     cents_df = (
         kmeans_centroids(
             corpus, id_col=id_col, vec_col=vec_col, k=n_centroids,
@@ -963,301 +677,53 @@ def _ivf_topk_arrow(
         else _centroids(corpus, id_col, vec_col, n_centroids)
     )
     cent_rows = cents_df.orderBy("centroid_id").collect()  # ≤ n_centroids
-    q_rows = _collect_bounded(
-        queries.select(F.col(id_col), F.col(vec_col)).orderBy(id_col),
+    q = _collect_side(
+        queries, id_col=id_col, vec_col=vec_col, rounded=False,
         what="ivf_topk",
         escalation="a larger q_chunk / per-query-shard runs",
         max_rows=max_collect_rows,
     )
-    if not cent_rows or not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    centm = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in cent_rows]
-    )  # (C, D)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in q_rows]
-    )  # (Q, D)
-    dim = qm.shape[1]
+    if not cent_rows or q is None:
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    centm = _decode(r[1] for r in cent_rows)  # (C, D)
+    cent_n2 = _n2(centm)
+    _check_nonzero(q.n2, q.ids, "query vector")
+    _check_nonzero(
+        cent_n2, np.array([r[0] for r in cent_rows]), "centroid"
+    )
     n_cent = len(cent_rows)
-
-    def _n2_dim_ascending(m: np.ndarray) -> np.ndarray:
-        n2 = np.zeros(len(m))
-        for d in range(dim):
-            n2 += m[:, d] * m[:, d]
-        return n2
-
-    q_n2 = _n2_dim_ascending(qm)
-    cent_n2 = _n2_dim_ascending(centm)
-    if np.any(q_n2 == 0.0):
-        raise ValueError(
-            "zero-norm query vector(s): "
-            f"{q_ids[q_n2 == 0.0][:5].tolist()} — cosine is undefined "
-            "(ANSI fold path raises DIVIDE_BY_ZERO); filter them upstream"
-        )
-    if np.any(cent_n2 == 0.0):
-        raise ValueError(
-            "zero-norm centroid(s) — cosine probing is undefined "
-            "(ANSI fold path raises DIVIDE_BY_ZERO)"
-        )
-
-    # probe selection, dim-ascending (bit-identical to the fold window)
-    acc = np.zeros((len(q_ids), n_cent))
-    for d in range(dim):
-        acc += qm[:, d, None] * centm[None, :, d]
-    sim_qc = acc / np.sqrt(q_n2[:, None] * cent_n2[None, :])
-    adj = np.where(np.isnan(sim_qc), np.inf, sim_qc)
-    # stable sort on -adj: equal sims keep ascending centroid index =
-    # ascending centroid_id (the fold's tie-break)
-    probe_idx = np.argsort(-adj, axis=1, kind="stable")[
-        :, : min(n_probe, n_cent)
-    ]
+    sim_qc = _cos_matrix(q.m, q.n2, centm, cent_n2)
+    # stable sort on the negated NaN-greatest sims: equal sims keep
+    # ascending centroid_id (the fold window's tie-break)
+    probe_idx = np.argsort(
+        -np.where(np.isnan(sim_qc), np.inf, sim_qc), axis=1, kind="stable"
+    )[:, : min(n_probe, n_cent)]
     probed_by_cent = [
         np.nonzero((probe_idx == c).any(axis=1))[0] for c in range(n_cent)
     ]
-    blas_eps = 1e-12  # cosine-scale bound on BLAS reordering (see above)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["__nid"].to_numpy(np.int64)
-            cm = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
-            c_n2 = np.zeros(len(n_ids))
-            for d in range(dim):
-                c_n2 += cm[:, d] * cm[:, d]
-            if np.any(c_n2 == 0.0):
-                raise ValueError(
-                    "zero-norm corpus vector(s): "
-                    f"{n_ids[c_n2 == 0.0][:5].tolist()} — cosine is "
-                    "undefined (ANSI fold path raises DIVIDE_BY_ZERO); "
-                    "filter them upstream"
-                )
-            # in-batch assignment, dim-ascending (bit-identity note)
-            acc_b = np.zeros((len(n_ids), n_cent))
-            for d in range(dim):
-                acc_b += cm[:, d, None] * centm[None, :, d]
-            sim_nc = acc_b / np.sqrt(c_n2[:, None] * cent_n2[None, :])
-            assigned = np.argmax(
-                np.where(np.isnan(sim_nc), np.inf, sim_nc), axis=1
-            )
-            out_q, out_n, out_c = [], [], []
-            for c in np.unique(assigned):
-                qidx = probed_by_cent[c]
-                if not len(qidx):
-                    continue
-                rows = np.nonzero(assigned == c)[0]
-                cm_c, ids_c, n2_c = cm[rows], n_ids[rows], c_n2[rows]
-                ridx = np.arange(len(rows))
-                for j0 in range(0, len(qidx), q_chunk):
-                    js = qidx[j0 : j0 + q_chunk]
-                    cos_b = (cm_c @ qm[js].T) / np.sqrt(
-                        n2_c[:, None] * q_n2[None, js]
-                    )
-                    for jj, j in enumerate(js):
-                        mask = ids_c != q_ids[j]
-                        cand_i, cand_c = ridx[mask], cos_b[mask, jj]
-                        if len(cand_i) > k:
-                            finite = np.isfinite(cand_c)
-                            lo = np.where(finite, cand_c - blas_eps, -np.inf)
-                            hi = np.where(finite, cand_c + blas_eps, np.inf)
-                            thr = np.partition(lo, len(lo) - k)[len(lo) - k]
-                            cand_i = cand_i[hi >= thr]
-                        dots = np.zeros(len(cand_i))
-                        for d in range(dim):
-                            dots += cm_c[cand_i, d] * qm[j, d]
-                        cexact = dots / np.sqrt(n2_c[cand_i] * q_n2[j])
-                        out_q.append(np.full(len(cand_i), q_ids[j]))
-                        out_n.append(ids_c[cand_i])
-                        out_c.append(cexact)
-            if not out_c:
-                continue
-            all_c = np.concatenate(out_c)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "__cos": np.where(np.isnan(all_c), 0.0, all_c),
-                    "__isnan": np.isnan(all_c),
-                }
-            )
-
-    partial = corpus.select(
-        F.col(id_col).alias("__nid"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(
-        score, "query_id long, neighbor_id long, __cos double, __isnan boolean"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.when(F.col("__isnan"), F.lit(float("nan")))
-        .otherwise(F.col("__cos"))
-        .alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
-def _sketch_expr(vec_col: str, n_bits: int, seed: int) -> Column:
-    """Sign-bit LSH sketch expression: bit_i = sign(v · h_i) for
-    pseudo-random hyperplanes derived from xxhash64(dim, bit, seed) —
-    fully deterministic, no stored projection matrix."""
-    dim_idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-
-    def bit(i: int) -> Column:
-        # h_i[d] in {-1,+1} from the hash parity of (d, i, seed)
-        proj = F.aggregate(
-            F.zip_with(
-                F.col(vec_col),
-                dim_idx,
-                lambda x, d: x.cast("double")
-                * F.when(
-                    F.xxhash64(d, F.lit(i), F.lit(seed)).bitwiseAND(1) == 1, 1.0
-                ).otherwise(-1.0),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
+    def buckets(cm, ids, c_n2):
+        sim_nc = _cos_matrix(cm, c_n2, centm, cent_n2)
+        assigned = np.argmax(
+            np.where(np.isnan(sim_nc), np.inf, sim_nc), axis=1
         )
-        return F.when(proj > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
+        for c in np.unique(assigned):
+            if len(probed_by_cent[c]):
+                yield np.nonzero(assigned == c)[0], probed_by_cent[c], None
 
-    sketch = bit(0)
-    for i in range(1, n_bits):
-        sketch = sketch + bit(i)
-    return sketch
-
-
-def random_hyperplane_sketch(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_bits: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Adds the sign-bit LSH `sketch` (long) column — see `_sketch_expr`."""
-    return df.withColumn("sketch", _sketch_expr(vec_col, n_bits, seed))
-
-
-def lsh_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_bits: int = 16,
-    max_hamming: int = 6,
-    n_tables: int = 1,
-    max_collect_rows: int = MAX_COLLECT_ROWS_DEFAULT,
-    q_chunk: int = Q_CHUNK,
-) -> DataFrame:
-    """LSH-prefiltered top-k: score only candidates whose sign-bit sketch
-    is within `max_hamming` of the query's. The Hamming filter is a cheap
-    XOR + popcount on longs; the expensive cosine runs on the surviving
-    fraction only.
-
-    `n_tables > 1` is the standard E2LSH-style recall lever: L independent
-    sketch tables (different hyperplane seeds), a pair is a candidate if
-    ANY table passes the Hamming filter. Recall of one table is
-    1-(1-p)^1; of L tables 1-(1-p)^L.
-
-    Arrow single-pass scorer by DEFAULT since r11 — bit-identical to
-    the declarative form `_lsh_topk_fold` (equality pytest). The fold
-    form evaluated the Hamming filter inside an n×Q broadcast
-    nested-loop join (10^10 pair evaluations at the r11 probe shape)
-    and scored survivors through the interpreted HOF fold; the Arrow
-    path scans the corpus once and its compute scales with the
-    CANDIDATE count — the thing LSH exists to shrink (see
-    _lsh_topk_arrow)."""
-    return _lsh_topk_arrow(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k,
-        n_bits=n_bits, max_hamming=max_hamming, n_tables=n_tables,
-        max_collect_rows=max_collect_rows, q_chunk=q_chunk,
-    )
-
-
-def _lsh_topk_fold(
-    corpus: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_bits: int = 16,
-    max_hamming: int = 6,
-    n_tables: int = 1,
-) -> DataFrame:
-    """Declarative LSH top-k (the r7-r10 form, retained as the
-    verification oracle for `_lsh_topk_arrow`'s equality pytest and for
-    fully-lazy callers). The candidate union is computed per-row with a
-    bitwise OR-reduce over the per-table filters, not a union of L
-    joins, so the corpus is still read once — but the Hamming filter
-    itself runs inside an n×Q broadcast nested-loop join and the
-    scoring is the interpreted fold (see lsh_topk docstring)."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        norm2_expr(vec_col).alias("c_n2"),
-        *[
-            _sketch_expr(vec_col, n_bits, 42 + t).alias(f"c_sketch_{t}")
-            for t in range(n_tables)
-        ],
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        norm2_expr(vec_col).alias("q_n2"),
-        *[
-            _sketch_expr(vec_col, n_bits, 42 + t).alias(f"q_sketch_{t}")
-            for t in range(n_tables)
-        ],
-    )
-    any_table_close = None
-    for t in range(n_tables):
-        close = (
-            F.bit_count(
-                F.col(f"c_sketch_{t}").bitwiseXOR(F.col(f"q_sketch_{t}"))
-            )
-            <= max_hamming
-        )
-        any_table_close = (
-            close if any_table_close is None else (any_table_close | close)
-        )
-    cand = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).filter(any_table_close)
-    scored = cand.withColumn(
-        "cosine",
-        cosine_from_norms(
-            dot_expr("q_vec", "c_vec"), F.col("q_n2"), F.col("c_n2")
-        ),
-    ).select("query_id", "neighbor_id", "cosine")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _topk(
+        corpus, q, id_col=id_col, vec_col=vec_col, k=k, q_chunk=q_chunk,
+        blocks=buckets,
     )
 
 
 def _hyperplane_signs(spark, dim: int, n_bits: int, seed: int):
-    """The ±1 hyperplane sign matrix (dim × n_bits) behind
-    `_sketch_expr`, computed by the JVM's own xxhash64 so the numpy
-    sketch replication is BIT-EXACT (the hash is data-independent —
-    signs depend only on (dimension index, bit index, seed) — so one
-    tiny dim-row job materializes the whole family). The dimension
-    index is cast to INT to match `_sketch_expr`'s `F.sequence`
-    element type (xxhash64 hashes ints and longs differently)."""
+    """The ±1 hyperplane sign matrix (dim × n_bits) of the sign-bit LSH
+    sketch: h_i[d] = +1 iff xxhash64(d, i, seed) is odd, computed by the
+    JVM's own xxhash64 (the hash is data-independent, so one tiny
+    dim-row job materializes the whole family). The dimension index is
+    cast to INT, the element type of `F.sequence` over an array's
+    indices (xxhash64 hashes ints and longs differently)."""
     import numpy as np
 
     d_int = F.col("id").cast("int")
@@ -1289,193 +755,87 @@ def _popcount64(x):
     return (x * 0x0101010101010101) >> 56
 
 
-def _lsh_topk_arrow(
+def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    n_bits: int,
-    max_hamming: int,
-    n_tables: int,
-    max_collect_rows: int,
-    q_chunk: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 10,
+    n_bits: int = 16,
+    max_hamming: int = 6,
+    n_tables: int = 1,
+    max_collect_rows: int = MAX_COLLECT_ROWS_DEFAULT,
+    q_chunk: int = Q_CHUNK,
 ) -> DataFrame:
-    """Single-pass Arrow LSH top-k — sketching, Hamming filtering, and
-    scoring in ONE corpus scan, BIT-IDENTICAL to `_lsh_topk_fold`
-    (equality pytest in tests/test_similarity.py).
+    """LSH-prefiltered top-k: score only candidates whose sign-bit sketch
+    is within `max_hamming` of the query's. The Hamming filter is a cheap
+    XOR + popcount on longs; the expensive cosine runs on the surviving
+    fraction only.
 
-    Identity argument, piece by piece:
-    - SKETCHES: the hyperplane signs are the JVM's own xxhash64 values
-      (`_hyperplane_signs`); the projection accumulates dim-ascending
-      (the fold's exact order), and `proj > 0` is the same IEEE
-      comparison — so every sketch long equals `_sketch_expr`'s,
-      including NaN-component vectors (NaN > 0 is false on both
-      sides → sketch 0).
-    - CANDIDATES: XOR + SWAR popcount on the same longs ==
-      `bit_count(a ^ b)`; the per-table OR-reduce is the fold's
-      `any_table_close`; self-pairs excluded identically. Same longs +
-      same rule ⇒ the same candidate SET — no interval slack needed
-      where it matters most (set membership).
-    - SCORES: selection is density-adaptive per (batch, query-chunk).
-      Sparse candidates (the fraction LSH exists to shrink) are
-      gathered and BLAS-matvec'd per query; past a ~25 % candidate
-      density one full-chunk GEMM is cheaper than the per-query
-      gathers (the r11 clustered probe: whole clusters collide into
-      every query's candidate set and the gather path ran 321 s where
-      exact's GEMM took 120 s). Either route only SELECTS under the
-      interval-sound keep rule on the SAME candidate set; survivors
-      are re-scored dim-ascending — emitted cosines are the fold's
-      doubles, bit for bit, route-independent (equality pytest forces
-      both routes). Compute scales with the candidate count, not n×Q:
-      the fold evaluated its Hamming predicate INSIDE an n×Q broadcast
-      nested-loop join (10^10 evaluations at the r11 probe shape).
-    - zero-norm QUERY vectors raise upfront (brute/IVF contract); a
-      zero-norm CORPUS vector raises only when it is a candidate —
-      exactly when the fold's ANSI divide would raise."""
+    `n_tables > 1` is the standard E2LSH-style recall lever: L independent
+    sketch tables (hyperplane seeds 42, 43, ...), a pair is a candidate if
+    ANY table passes the Hamming filter. Recall of one table is
+    1-(1-p)^1; of L tables 1-(1-p)^L.
+
+    Single Arrow pass (r11): sketching, Hamming filtering and scoring in
+    ONE corpus scan, so compute scales with the CANDIDATE count — the
+    thing LSH exists to shrink — not n×Q (the declarative form evaluated
+    the Hamming predicate inside an n×Q broadcast nested-loop join).
+    Sketches are bit-exact with the JVM's: the hyperplane signs are its
+    own xxhash64 values (`_hyperplane_signs`), projections accumulate
+    dim-ascending, and `proj > 0` is the same IEEE comparison (a NaN
+    projection gives bit 0 on both sides). The kernel (`_topk`) picks
+    the GEMM route past ~25 % candidate density, else per-query gathers.
+
+    Zero-norm contract: zero-norm QUERY vectors raise at call time; a
+    zero-norm CORPUS vector raises only when it is a candidate — exactly
+    when the fold's ANSI divide would raise."""
     import numpy as np
-    import pandas as pd
 
-    out_schema = "query_id long, neighbor_id long, cosine double, rank long"
-    q_rows = _collect_bounded(
-        queries.select(F.col(id_col), F.col(vec_col)).orderBy(id_col),
+    q = _collect_side(
+        queries, id_col=id_col, vec_col=vec_col, rounded=False,
         what="lsh_topk",
         escalation="a larger q_chunk / per-query-shard runs",
         max_rows=max_collect_rows,
     )
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame([], out_schema)
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    dim = qm.shape[1]
-    spark = corpus.sparkSession
+    if q is None:
+        return corpus.sparkSession.createDataFrame([], _TOPK_SCHEMA)
+    _check_nonzero(q.n2, q.ids, "query vector")
+    dim = q.m.shape[1]
     hs = [
-        _hyperplane_signs(spark, dim, n_bits, 42 + t)
+        _hyperplane_signs(corpus.sparkSession, dim, n_bits, 42 + t)
         for t in range(n_tables)
     ]  # each (dim, n_bits)
-    bit_weights = (np.int64(1) << np.arange(n_bits, dtype=np.int64))
+    bit_weights = np.int64(1) << np.arange(n_bits, dtype=np.int64)
 
-    def _sketches(m: np.ndarray) -> list:
+    def sketches(m):  # n_tables × (rows,) uint64
         out = []
         for h in hs:
             acc = np.zeros((len(m), n_bits))
             for d in range(dim):
                 acc += m[:, d, None] * h[None, d, :]
-            out.append(((acc > 0) * bit_weights).sum(axis=1))
-        return out  # n_tables × (rows,) int64
+            out.append(((acc > 0) * bit_weights).sum(axis=1).astype(np.uint64))
+        return out
 
-    def _n2(m: np.ndarray) -> np.ndarray:
-        n2 = np.zeros(len(m))
-        for d in range(dim):
-            n2 += m[:, d] * m[:, d]
-        return n2
+    q_sk = sketches(q.m)
+    all_q = np.arange(len(q.ids))
 
-    q_n2 = _n2(qm)
-    if np.any(q_n2 == 0.0):
-        raise ValueError(
-            "zero-norm query vector(s): "
-            f"{q_ids[q_n2 == 0.0][:5].tolist()} — cosine is undefined "
-            "(ANSI fold path raises DIVIDE_BY_ZERO); filter them upstream"
-        )
-    q_sk = _sketches(qm)
-    blas_eps = 1e-12  # cosine-scale BLAS reordering bound (see brute)
+    def hamming(cm, ids, c_n2):
+        c_sk = sketches(cm)
 
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            n_ids = pdf["__nid"].to_numpy(np.int64)
-            cm = np.array(
-                [np.asarray(v, dtype=np.float64) for v in pdf["__vec"]]
-            )
-            c_n2 = _n2(cm)
-            c_sk = _sketches(cm)
-            out_q, out_n, out_c = [], [], []
-            for j0 in range(0, len(q_ids), q_chunk):
-                j1 = min(j0 + q_chunk, len(q_ids))
-                ok = None
-                for t in range(n_tables):
-                    x = np.bitwise_xor(
-                        c_sk[t][:, None].astype(np.uint64),
-                        q_sk[t][None, j0:j1].astype(np.uint64),
-                    )
-                    close = _popcount64(x) <= max_hamming
-                    ok = close if ok is None else (ok | close)
-                # density-adaptive selection route (docstring): past
-                # ~25% candidate density one full-chunk GEMM beats the
-                # per-query gathers; either route feeds the same
-                # interval rule and the same exact rescore
-                dense = ok.mean() > 0.25
-                cos_full = (
-                    (cm @ qm[j0:j1].T)
-                    / np.sqrt(c_n2[:, None] * q_n2[None, j0:j1])
-                    if dense
-                    else None
-                )
-                for j in range(j0, j1):
-                    cand_i = np.nonzero(
-                        ok[:, j - j0] & (n_ids != q_ids[j])
-                    )[0]
-                    if not len(cand_i):
-                        continue
-                    if np.any(c_n2[cand_i] == 0.0):
-                        raise ValueError(
-                            "zero-norm corpus vector(s) among LSH "
-                            "candidates — cosine is undefined (ANSI "
-                            "fold path raises DIVIDE_BY_ZERO); filter "
-                            "them upstream"
-                        )
-                    if len(cand_i) > k:
-                        if dense:
-                            cos_b = cos_full[cand_i, j - j0]
-                        else:
-                            cos_b = (cm[cand_i] @ qm[j]) / np.sqrt(
-                                c_n2[cand_i] * q_n2[j]
-                            )
-                        finite = np.isfinite(cos_b)
-                        lo = np.where(finite, cos_b - blas_eps, -np.inf)
-                        hi = np.where(finite, cos_b + blas_eps, np.inf)
-                        thr = np.partition(lo, len(lo) - k)[len(lo) - k]
-                        cand_i = cand_i[hi >= thr]
-                    cm_c = cm[cand_i]
-                    dots = np.zeros(len(cand_i))
-                    for d in range(dim):
-                        dots += cm_c[:, d] * qm[j, d]
-                    cexact = dots / np.sqrt(c_n2[cand_i] * q_n2[j])
-                    out_q.append(np.full(len(cand_i), q_ids[j]))
-                    out_n.append(n_ids[cand_i])
-                    out_c.append(cexact)
-            if not out_c:
-                continue
-            all_c = np.concatenate(out_c)
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "neighbor_id": np.concatenate(out_n),
-                    "__cos": np.where(np.isnan(all_c), 0.0, all_c),
-                    "__isnan": np.isnan(all_c),
-                }
-            )
+        def near(jc):  # the per-table filters, OR-reduced
+            ok = None
+            for c_t, q_t in zip(c_sk, q_sk):
+                close = _popcount64(c_t[:, None] ^ q_t[None, jc]) <= max_hamming
+                ok = close if ok is None else ok | close
+            return ok
 
-    partial = corpus.select(
-        F.col(id_col).alias("__nid"), F.col(vec_col).alias("__vec")
-    ).mapInPandas(
-        score, "query_id long, neighbor_id long, __cos double, __isnan boolean"
-    ).select(
-        "query_id",
-        "neighbor_id",
-        F.when(F.col("__isnan"), F.lit(float("nan")))
-        .otherwise(F.col("__cos"))
-        .alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        return [(None, all_q, near)]
+
+    return _topk(
+        corpus, q, id_col=id_col, vec_col=vec_col, k=k, q_chunk=q_chunk,
+        blocks=hamming, check_candidates=True,
     )
 
 
@@ -1532,10 +892,11 @@ def kmeans_centroids(
     expression instead of a dim-wide agg list (the 2·dim-expression
     wide-agg form measured ~1.0 s/iter of extra codegen+decimal
     machinery at dim=64; the explode form is plan-size-independent of
-    dim and measured ~0.1 s over the scan floor). Measured on the
-    10⁶×64-dim probe (tools/kmeans_probe.py): ~1.9 s/iter warm vs the
-    fold reference's 40.7 s/iter (r11 verdict row: 26.8 s/iter) —
-    the scan is the whole cost, as it should be."""
+    dim and measured ~0.1 s over the scan floor). Measured on a
+    10⁶×64-dim corpus (r12 probe, since retired; this is its record):
+    ~1.9 s/iter warm vs the declarative fold reference's 40.7 s/iter
+    (r11 verdict row: 26.8 s/iter) — the scan is the whole cost, as it
+    should be. The fold reference lives in tests/fold_refs.py."""
     import math
 
     import numpy as np
@@ -1554,9 +915,8 @@ def kmeans_centroids(
         df.select(id_col, vec_col).orderBy(id_col).limit(k).collect()
     )
     cent_ids = [int(r[0]) for r in seed_rows]
-    cent_mat = np.array(
-        [np.asarray(r[1], dtype=np.float64) for r in seed_rows]
-    )  # (C, dim), ordered by centroid_id ascending (argmax tie-break)
+    # (C, dim), ordered by centroid_id ascending (argmax tie-break)
+    cent_mat = _decode(r[1] for r in seed_rows)
     scale = float(1 << KMEANS_GRID_BITS)
     vec_only = df.select(F.col(vec_col).alias("__v"))
     out_schema = (
@@ -1566,20 +926,15 @@ def kmeans_centroids(
         cm = cent_mat  # rebind for closure capture per iteration
         c_ids = np.array(cent_ids, dtype=np.int64)
         # per-centroid inverse norm, dim-ascending fold — deterministic
-        c_n2 = np.zeros(len(cm))
-        for d in range(dim):
-            c_n2 += cm[:, d] * cm[:, d]
         with np.errstate(divide="ignore"):
-            c_inv = 1.0 / np.sqrt(c_n2)  # zero-norm centroid → +inf
+            c_inv = 1.0 / np.sqrt(_n2(cm))  # zero-norm centroid → +inf
 
         def assign_partials(batches, _cm=cm, _cinv=c_inv):
             nC = _cm.shape[0]
             for pdf in batches:
                 if not len(pdf):
                     continue
-                vm = np.array(
-                    [np.asarray(v, dtype=np.float64) for v in pdf["__v"]]
-                )  # (n, dim)
+                vm = _decode(pdf["__v"])  # (n, dim)
                 if vm.shape[1] != dim:
                     raise ValueError(
                         f"kmeans_centroids: ragged vector width "
@@ -1671,56 +1026,6 @@ def kmeans_centroids(
         ],
         "centroid_id long, centroid array<double>",
     )
-
-
-def _kmeans_centroids_fold(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 16,
-    iters: int = 3,
-) -> DataFrame:
-    """Pre-r12 declarative Lloyd form (broadcast-assign fold join +
-    row_number window + per-dim F.avg), retained as the semantic
-    reference for `kmeans_centroids`' pytest comparison. Deterministic
-    for a FIXED partitioning but order-SENSITIVE in its float avg —
-    which is why the Arrow fixed-point form above replaced it on the
-    hot path (26.8 s/iter at 10⁶×64-dim, and low-bit centroid drift
-    across partitionings)."""
-    row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None:
-        return _centroids(df, id_col, vec_col, k)
-    dim = row.d
-    cents = _centroids(df, id_col, vec_col, k)
-    for _ in range(iters):
-        scored = df.select(
-            id_col, vec_col, norm2_expr(vec_col).alias("v_n2")
-        ).join(
-            F.broadcast(cents.withColumn("cent_n2", norm2_expr("centroid")))
-        ).withColumn(
-            "sim",
-            cosine_from_norms(
-                dot_expr(vec_col, "centroid"), F.col("v_n2"), F.col("cent_n2")
-            ),
-        )
-        w = Window.partitionBy(id_col).orderBy(
-            F.col("sim").desc(), F.col("centroid_id")
-        )
-        assigned = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select(id_col, vec_col, "centroid_id")
-        )
-        cents = assigned.groupBy("centroid_id").agg(
-            F.array(
-                *[
-                    F.avg(F.element_at(F.col(vec_col), i + 1))
-                    for i in range(dim)
-                ]
-            ).alias("centroid")
-        )
-    return cents
 
 
 def cluster_assign_topn(
@@ -2012,11 +1317,9 @@ def clusteredness_probe(
     }
     if len(rows) < 3:
         return degenerate
-    vm = np.array([np.asarray(r[1], dtype=np.float64) for r in rows])
+    vm = _decode(r[1] for r in rows)
     n, dim = vm.shape
-    n2 = np.zeros(n)
-    for d in range(dim):  # fixed dim-ascending reduction
-        n2 += vm[:, d] * vm[:, d]
+    n2 = _n2(vm)  # fixed dim-ascending reduction
     keep = (n2 > 0) & np.isfinite(n2)
     vm, n2 = vm[keep], n2[keep]
     n = len(vm)

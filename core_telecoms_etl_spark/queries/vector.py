@@ -47,19 +47,6 @@ _DN = lambda t: (  # noqa: E731
 )
 
 
-def _rounded_n2(vec: str) -> F.Column:
-    return F.round(sim.norm2_expr(vec), 6)
-
-
-def _rounded_cosine_from_norms(a: str, b: str, n2_a: str, n2_b: str) -> F.Column:
-    """dot/sqrt(n²a·n²b) with every operand rounded at 1e-6 — identical
-    doubles to the inline form, but the O(dim) norm folds are hoisted to
-    once-per-row projections below the scoring join (judge-flagged: the
-    inline form re-folded the query norm for every corpus×query pair)."""
-    dot = F.round(sim.dot_expr(a, b), 6)
-    return dot / F.sqrt(F.col(n2_a) * F.col(n2_b))
-
-
 @query(
     "embedding_norms",
     oracle="""SELECT vec_id, label,
@@ -115,7 +102,7 @@ def vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`brute_force_topk_arrow_rounded6` — the inline fold join measured
     13× for 4× more vectors in the sf1 bench); the final 6dp display
     rounding stays a JVM projection, so output is bit-identical to the
-    pre-r10 fold form (`_vector_topk_fold` equality pytest)."""
+    pre-r10 fold form (equality pytest against tests/fold_refs.py)."""
     e = _load_conformant(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERY_VECS)
     topk = sim.brute_force_topk_arrow_rounded6(
@@ -123,37 +110,6 @@ def vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return topk.select(
         "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-    )
-
-
-def _vector_topk_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r10 inline fold form of vector_topk — NOT registered;
-    the verification baseline (tests/test_similarity.py)."""
-    e = _load_conformant(spark, sf_dir)
-    q = e.filter(F.col("vec_id") < N_QUERY_VECS).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_vec"),
-        _rounded_n2("embedding").alias("q_n2"),
-    )
-    c = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_vec"),
-        _rounded_n2("embedding").alias("c_n2"),
-    )
-    scored = c.join(
-        F.broadcast(q), F.col("neighbor_id") != F.col("query_id")
-    ).withColumn(
-        "cosine", _rounded_cosine_from_norms("q_vec", "c_vec", "q_n2", "c_n2")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-        .select(
-            "query_id", "neighbor_id", F.round("cosine", 6).alias("cosine"), "rank"
-        )
     )
 
 
@@ -169,35 +125,10 @@ def cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline; LSH/IVF below are the 100 TB paths). Since r10 the O(n²)
     scoring runs through the Arrow all-pairs scorer — the fold form
     measured 719 s at sf1 (8k vectors = 32M interpreted folds); output
-    is bit-identical (`_cosine_pairs_fold` equality pytest)."""
+    is bit-identical (equality pytest against tests/fold_refs.py)."""
     e = _load_conformant(spark, sf_dir)
     return sim.cosine_pairs_arrow_rounded6(
         e, id_col="vec_id", vec_col="embedding", threshold=0.3
-    )
-
-
-def _cosine_pairs_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r10 declarative join form of cosine_pairs — NOT
-    registered; the verification baseline the Arrow form is
-    equality-pinned against (tests/test_similarity.py)."""
-    e = _load_conformant(spark, sf_dir)
-    a = e.select(
-        F.col("vec_id").alias("id_a"),
-        F.col("embedding").alias("v_a"),
-        _rounded_n2("embedding").alias("n2_a"),
-    )
-    b = e.select(
-        F.col("vec_id").alias("id_b"),
-        F.col("embedding").alias("v_b"),
-        _rounded_n2("embedding").alias("n2_b"),
-    )
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cos_raw", _rounded_cosine_from_norms("v_a", "v_b", "n2_a", "n2_b")
-        )
-        .filter(F.col("cos_raw") >= 0.3)
-        .select("id_a", "id_b", F.round("cos_raw", 6).alias("cosine"))
     )
 
 
@@ -509,7 +440,8 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded-variant scorer (`brute_force_topk_arrow_rounded6` — the
     last interpreted fold hot path, VERDICT r9 ask #2; all 6dp
     roundings stay JVM-side so the output is bit-identical to the
-    inline fold form, pinned by `_knn_classify_fold` equality pytest).
+    inline fold form, pinned by an equality pytest against
+    tests/fold_refs.py).
     Per-batch interval-sound partial top-k keeps Python egress at
     ~batches×Q×k rows; swap the scorer for `ivf_topk`/`lsh_topk` at
     corpus scale (same downstream vote).
@@ -543,60 +475,6 @@ def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("qlab").cast("long").alias("true_label"),
             F.col("pred").cast("long").alias("pred_label"),
             (F.col("pred") == F.col("qlab")).cast("long").alias("correct"),
-        )
-        .orderBy("query_id")
-    )
-
-
-def _knn_classify_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pre-r10 inline rounded-fold form of knn_classify — NOT
-    registered; kept as the declarative verification baseline the
-    Arrow-scorer query is equality-pinned against
-    (tests/test_similarity.py::test_knn_classify_arrow_matches_fold)."""
-    e = _load_conformant(spark, sf_dir)
-    q = e.filter(
-        (F.col("vec_id") % 20 == 0) & F.col("label").isNotNull()
-    ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qv"),
-        F.col("label").alias("qlab"),
-        _rounded_n2("embedding").alias("qn2"),
-    )
-    c = e.filter(F.col("vec_id") % 20 != 0).select(
-        F.col("vec_id").alias("nid"),
-        F.col("embedding").alias("cv"),
-        F.col("label").alias("nlab"),
-        _rounded_n2("embedding").alias("cn2"),
-    )
-    from pyspark.sql import Window
-
-    scored = c.join(F.broadcast(q)).select(
-        "qid",
-        "qlab",
-        "nid",
-        "nlab",
-        _rounded_cosine_from_norms("qv", "cv", "qn2", "cn2").alias("cos"),
-    )
-    wk = Window.partitionBy("qid").orderBy(F.desc("cos"), "nid")
-    topk = (
-        scored.withColumn("r", F.row_number().over(wk))
-        .filter(F.col("r") <= 10)
-        .select("qid", "qlab", "nlab")
-    )
-    votes = (
-        topk.filter(F.col("nlab").isNotNull())
-        .groupBy("qid", "qlab", "nlab")
-        .agg(F.count("*").alias("cnt"))
-    )
-    wv = Window.partitionBy("qid").orderBy(F.desc("cnt"), "nlab")
-    return (
-        votes.withColumn("vr", F.row_number().over(wv))
-        .filter(F.col("vr") == 1)
-        .select(
-            F.col("qid").alias("query_id"),
-            F.col("qlab").cast("long").alias("true_label"),
-            F.col("nlab").cast("long").alias("pred_label"),
-            (F.col("nlab") == F.col("qlab")).cast("long").alias("correct"),
         )
         .orderBy("query_id")
     )

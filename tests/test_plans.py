@@ -459,34 +459,6 @@ def test_segment_dedup_no_windows_no_single_partition(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
 
 
-def test_ivf_topk_fold_broadcasts_probes_not_centroid_shuffle(spark, sf_dir):
-    """r8 fix, pinned on the retained FOLD form: the IVF candidates
-    join must BROADCAST the |Q|·n_probe probes relation — a shuffle
-    join would key on centroid_id (n_centroids distinct values),
-    collapsing parallelism to n_centroids tasks (measured 74s vs 27s
-    at the 8× probe)."""
-    from pyspark.sql import functions as F
-
-    from core_telecoms_etl_spark.operators import similarity as sim
-    from core_telecoms_etl_spark.sources.readers import load_table
-
-    e = load_table(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") % 20 == 0)
-    c = e.filter(F.col("vec_id") % 20 != 0)
-    plan = _formatted(
-        sim._ivf_topk_fold(c, q, k=10, n_centroids=16, n_probe=6)
-    )
-    assert "BroadcastExchange" in plan, plan
-    assert _n_ops(plan, "CartesianProduct") == 0, plan
-    # no shuffle exchange may partition on the low-cardinality centroid
-    ex_lines = [
-        l
-        for l in plan.splitlines()
-        if "hashpartitioning(" in l and "centroid_id" in l
-    ]
-    assert not ex_lines, ex_lines
-
-
 def test_ivf_topk_arrow_single_scan_no_centroid_exchange(spark, sf_dir):
     """The r11 default IVF path scans the corpus ONCE through
     mapInPandas (assignment + probing + scoring fused); the only

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from core_telecoms_etl_spark.operators import similarity as sim
 from core_telecoms_etl_spark.sources.readers import load_table
+from tests import fold_refs as refs
 
 VECS = [
     (0, [1.0, 0.0, 0.0]),
@@ -64,11 +65,11 @@ def test_brute_force_topk_arrow_bit_identical(spark, sf_dir):
     q = e.filter(F.col("vec_id") < 8)
     fold = {
         (r.query_id, r.neighbor_id, r.rank): r.cosine
-        for r in sim.brute_force_topk_fold(e, q, k=10).collect()
+        for r in refs.brute_force_topk_fold(e, q, k=10).collect()
     }
     arrow = {
         (r.query_id, r.neighbor_id, r.rank): r.cosine
-        for r in sim.brute_force_topk_arrow(e, q, k=10).collect()
+        for r in sim.brute_force_topk(e, q, k=10).collect()
     }
     assert set(fold) == set(arrow)
     for key, c in fold.items():
@@ -78,7 +79,7 @@ def test_brute_force_topk_arrow_bit_identical(spark, sf_dir):
 def test_brute_force_topk_arrow_empty_queries(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 0)
-    assert sim.brute_force_topk_arrow(e, q, k=5).count() == 0
+    assert sim.brute_force_topk(e, q, k=5).count() == 0
 
 
 def test_ivf_recall_vs_brute_force(spark, sf_dir):
@@ -123,7 +124,7 @@ def test_ivf_arrow_bit_identical_to_fold(spark, sf_dir):
     for iters in (0, 2):
         fold = {
             (r.query_id, r.neighbor_id, r.rank): r.cosine
-            for r in sim._ivf_topk_fold(
+            for r in refs.ivf_topk_fold(
                 e, q, k=10, n_centroids=16, n_probe=4, kmeans_iters=iters
             ).collect()
         }
@@ -160,7 +161,7 @@ def test_lsh_arrow_bit_identical_to_fold(spark, sf_dir):
     """The r11 single-pass Arrow LSH must return the EXACT rows of the
     retained declarative fold form — same candidate set (the JVM-hash
     hyperplane signs + dim-ascending projection make every sketch long
-    equal `_sketch_expr`'s), same (query_id, neighbor_id, rank), and
+    equal `refs.sketch_expr`'s), same (query_id, neighbor_id, rank), and
     bit-identical cosine doubles — single-table and multi-table, with
     q_chunk forced below the query count, and with max_hamming at both
     ends so BOTH density-adaptive selection routes run (ham=16 makes
@@ -173,7 +174,7 @@ def test_lsh_arrow_bit_identical_to_fold(spark, sf_dir):
     ):
         fold = {
             (r.query_id, r.neighbor_id, r.rank): r.cosine
-            for r in sim._lsh_topk_fold(
+            for r in refs.lsh_topk_fold(
                 e, q, k=10, n_bits=16, max_hamming=ham, n_tables=n_tables
             ).collect()
         }
@@ -449,7 +450,7 @@ def test_kmeans_centroids_agrees_with_fold_reference(spark, sf_dir):
     }
     ref = {
         r.centroid_id: np.array(r.centroid)
-        for r in sim._kmeans_centroids_fold(e, k=8, iters=2).collect()
+        for r in refs.kmeans_centroids_fold(e, k=8, iters=2).collect()
     }
     assert sorted(fast) == sorted(ref)
     for cid in fast:
@@ -561,38 +562,11 @@ def test_rounded_arrow_bit_identical(spark, sf_dir):
     (query_id, neighbor_id, rank) and bit-identical cosine doubles.
     This is the pin that lets knn_classify's exact arm run on the
     Arrow scorer (VERDICT r9 ask #2)."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    qq = q.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qv"),
-        F.round(sim.norm2_expr("embedding"), 6).alias("qn2"),
-    )
-    cc = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("cv"),
-        F.round(sim.norm2_expr("embedding"), 6).alias("cn2"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
     fold = {
         (r.query_id, r.neighbor_id, r.rank): r.cosine
-        for r in (
-            cc.join(
-                F.broadcast(qq), F.col("neighbor_id") != F.col("query_id")
-            )
-            .withColumn(
-                "cosine",
-                F.round(sim.dot_expr("qv", "cv"), 6)
-                / F.sqrt(F.col("qn2") * F.col("cn2")),
-            )
-            .withColumn("rank", F.row_number().over(w).cast("long"))
-            .filter(F.col("rank") <= 10)
-            .collect()
-        )
+        for r in refs.brute_force_topk_rounded6_fold(e, q, k=10).collect()
     }
     arrow = {
         (r.query_id, r.neighbor_id, r.rank): r.cosine
@@ -619,7 +593,7 @@ def test_q_chunked_selection_bit_identical(spark, sf_dir):
     the exact dim-ascending rescore either way."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    for fn in (sim.brute_force_topk_arrow, sim.brute_force_topk_arrow_rounded6):
+    for fn in (sim.brute_force_topk, sim.brute_force_topk_arrow_rounded6):
         wide = {
             (r.query_id, r.neighbor_id, r.rank): r.cosine
             for r in fn(e, q, k=10).collect()
@@ -634,59 +608,73 @@ def test_q_chunked_selection_bit_identical(spark, sf_dir):
 def test_knn_classify_arrow_matches_fold(spark, sf_dir):
     """End-to-end: the Arrow-scorer knn_classify equals the pre-r10
     inline-fold form row for row (same query set, labels, hits)."""
-    from core_telecoms_etl_spark.queries.vector import (
-        _knn_classify_fold,
-        knn_classify,
-    )
+    from core_telecoms_etl_spark.queries.vector import knn_classify
 
     new = [tuple(r) for r in knn_classify(spark, sf_dir).collect()]
-    old = [tuple(r) for r in _knn_classify_fold(spark, sf_dir).collect()]
+    old = [tuple(r) for r in refs.knn_classify_fold(spark, sf_dir).collect()]
     assert new == old
 
 
-def test_arrow_topk_nan_cosine_matches_fold(spark):
-    """NaN-component corpus vectors produce NaN cosines, which Spark's
-    window orders FIRST under DESC; the Arrow scorers' per-batch
-    partial top-k must keep them too (ADVICE r9: a bare -cosine sort
-    key dropped them, diverging from the fold path and making results
-    batch-partitioning-dependent)."""
-    import math
-
+def _nan_frame(spark):
+    """30 finite vectors plus two NaN-component ones (ids 98, 99)."""
     nan = float("nan")
     rows = [(i, [1.0 + 0.01 * i, 0.5, 0.0]) for i in range(30)]
     rows.append((98, [nan, 1.0, 0.0]))  # NaN component -> NaN cosine
     rows.append((99, [nan, 1.0, 0.0]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+
+
+def _rows_nan_as_str(df, order):
+    return [
+        tuple("nan" if isinstance(v, float) and math.isnan(v) else v for v in r)
+        for r in df.orderBy(*order).collect()
+    ]
+
+
+_TOPK_NAN_ROWS = [(0, 98, "nan", 1), (0, 99, "nan", 2)]
+
+
+@pytest.mark.parametrize(
+    "arrow, fold, order, nan_rows",
+    [
+        pytest.param(
+            lambda d, q: sim.brute_force_topk(d, q, k=5),
+            lambda d, q: refs.brute_force_topk_fold(d, q, k=5),
+            ["query_id", "rank"],
+            _TOPK_NAN_ROWS,
+            id="brute_force_topk",
+        ),
+        pytest.param(
+            lambda d, q: sim.brute_force_topk_arrow_rounded6(d, q, k=5),
+            lambda d, q: refs.brute_force_topk_rounded6_fold(d, q, k=5),
+            ["query_id", "rank"],
+            _TOPK_NAN_ROWS,
+            id="brute_force_topk_arrow_rounded6",
+        ),
+        pytest.param(
+            lambda d, q: sim.cosine_pairs_arrow_rounded6(d),
+            lambda d, q: refs.cosine_pairs_fold(d),
+            ["id_a", "id_b"],
+            sorted(
+                [(i, n, "nan") for i in range(30) for n in (98, 99)]
+                + [(98, 99, "nan")]
+            ),
+            id="cosine_pairs_arrow_rounded6",
+        ),
+    ],
+)
+def test_arrow_topk_nan_cosine_matches_fold(spark, arrow, fold, order, nan_rows):
+    """NaN-component vectors produce NaN cosines, which Spark's window
+    orders FIRST under DESC and which pass a `>= threshold` filter
+    (NaN is greatest). The Arrow scorers must keep them with a true NaN
+    cosine (ADVICE r9: a bare -cosine sort key dropped them, diverging
+    from the fold path and making results batch-partitioning-dependent)
+    — row for row equal to the fold form, finite cosines bit-equal."""
+    df = _nan_frame(spark)
     q = df.filter("vec_id = 0")
-    fold = [
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.brute_force_topk_fold(df, q, k=5)
-        .orderBy("rank")
-        .collect()
-    ]
-    arrow = [
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.brute_force_topk_arrow(df, q, k=5)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert arrow == fold
-    assert fold[0][1] == 98 and fold[1][1] == 99  # NaN first, id tiebreak
-    rounded = [
-        (r.query_id, r.neighbor_id, r.rank)
-        for r in sim.brute_force_topk_arrow_rounded6(df, q, k=5)
-        .orderBy("rank")
-        .collect()
-    ]
-    assert [t[1] for t in rounded[:2]] == [98, 99]
-    # NaN rows really are NaN in all paths
-    nan_cos = (
-        sim.brute_force_topk_arrow(df, q, k=5)
-        .filter("neighbor_id = 98")
-        .collect()[0]
-        .cosine
-    )
-    assert math.isnan(nan_cos)
+    got = _rows_nan_as_str(arrow(df, q), order)
+    assert got == _rows_nan_as_str(fold(df, q), order)
+    assert [r for r in got if "nan" in r] == nan_rows
 
 
 def test_ivf_lsh_arrow_nan_vectors_match_fold(spark):
@@ -696,18 +684,12 @@ def test_ivf_lsh_arrow_nan_vectors_match_fold(spark):
     NaN projection to bit 0 (NaN > 0 is false on both sides), and both
     keep NaN cosines first in the final order — row-for-row equal to
     the fold forms on the same frame."""
-    import math
-
-    nan = float("nan")
-    rows = [(i, [1.0 + 0.01 * i, 0.5, 0.0]) for i in range(30)]
-    rows.append((98, [nan, 1.0, 0.0]))
-    rows.append((99, [nan, 1.0, 0.0]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    df = _nan_frame(spark)
     q = df.filter("vec_id = 0")
     for arrow_fn, fold_fn, kw in (
-        (sim.ivf_topk, sim._ivf_topk_fold,
+        (sim.ivf_topk, refs.ivf_topk_fold,
          dict(n_centroids=4, n_probe=4)),
-        (sim.lsh_topk, sim._lsh_topk_fold,
+        (sim.lsh_topk, refs.lsh_topk_fold,
          dict(n_bits=16, max_hamming=16, n_tables=2)),
     ):
         fold = [
@@ -748,24 +730,49 @@ def test_ivf_lsh_arrow_zero_norm_corpus_raises(spark):
         ).count()
 
 
-def test_arrow_topk_zero_norm_raises(spark):
+@pytest.mark.parametrize(
+    "score, corpus_raises, call_match",
+    [
+        pytest.param(
+            lambda c, q: sim.brute_force_topk(c, q, k=5),
+            True, "zero-norm query", id="brute_force_topk",
+        ),
+        pytest.param(
+            lambda c, q: sim.brute_force_topk_arrow_rounded6(c, q, k=5),
+            True, "zero-norm query", id="brute_force_topk_arrow_rounded6",
+        ),
+        # zero-norm corpus rows on IVF/LSH:
+        # test_ivf_lsh_arrow_zero_norm_corpus_raises
+        pytest.param(
+            lambda c, q: sim.ivf_topk(c, q, k=5, n_centroids=4, n_probe=4),
+            False, "zero-norm query", id="ivf_topk",
+        ),
+        pytest.param(
+            lambda c, q: sim.lsh_topk(c, q, k=5, n_bits=16, max_hamming=16),
+            False, "zero-norm query", id="lsh_topk",
+        ),
+        # all-pairs has no query side: any zero-norm row fails the
+        # call-time collect
+        pytest.param(
+            lambda c, q: sim.cosine_pairs_arrow_rounded6(c),
+            False, "zero-norm vector", id="cosine_pairs_arrow_rounded6",
+        ),
+    ],
+)
+def test_arrow_topk_zero_norm_raises(spark, score, corpus_raises, call_match):
     """Zero-norm vectors make cosine undefined; the ANSI fold path
     raises DIVIDE_BY_ZERO, so the Arrow scorers raise the same loud
-    failure (documented contract) instead of silently emitting NaNs."""
+    failure (documented contract) instead of silently emitting NaNs:
+    zero-norm corpus rows when scored, zero-norm queries at call time
+    (driver-side collect)."""
     rows = [(i, [1.0 + 0.01 * i, 0.5, 0.0]) for i in range(20)]
     rows.append((99, [0.0, 0.0, 0.0]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    q = df.filter("vec_id = 0")
-    with pytest.raises(Exception, match="zero-norm"):
-        sim.brute_force_topk_arrow(df, q, k=5).collect()
-    with pytest.raises(Exception, match="zero-norm"):
-        sim.brute_force_topk_arrow_rounded6(df, q, k=5).collect()
-    # zero-norm QUERY vectors fail at call time (driver-side collect)
-    qz = df.filter("vec_id = 99")
-    with pytest.raises(ValueError, match="zero-norm query"):
-        sim.brute_force_topk_arrow(df, qz, k=5)
-    with pytest.raises(ValueError, match="zero-norm query"):
-        sim.brute_force_topk_arrow_rounded6(df, qz, k=5)
+    if corpus_raises:
+        with pytest.raises(Exception, match="zero-norm"):
+            score(df, df.filter("vec_id = 0")).collect()
+    with pytest.raises(ValueError, match=call_match):
+        score(df, df.filter("vec_id = 99"))
 
 
 def test_cosine_pairs_arrow_bit_identical(spark, sf_dir):
@@ -774,13 +781,15 @@ def test_cosine_pairs_arrow_bit_identical(spark, sf_dir):
     rounded cosines (the r10 sf1 sweep measured the fold form at 719s
     for 8k vectors; the swap is only legal at exact equality)."""
     from core_telecoms_etl_spark.queries.vector import (
-        _cosine_pairs_fold,
+        _load_conformant,
         cosine_pairs,
     )
 
     fold = {
         (r.id_a, r.id_b): r.cosine
-        for r in _cosine_pairs_fold(spark, sf_dir).collect()
+        for r in refs.cosine_pairs_fold(
+            _load_conformant(spark, sf_dir), threshold=0.3
+        ).collect()
     }
     arrow = {
         (r.id_a, r.id_b): r.cosine
@@ -795,46 +804,62 @@ def test_cosine_pairs_arrow_bit_identical(spark, sf_dir):
 def test_vector_topk_arrow_matches_fold(spark, sf_dir):
     """vector_topk on the Arrow scorer equals the pre-r10 inline fold
     form row for row, bit-identical cosines included."""
-    from core_telecoms_etl_spark.queries.vector import (
-        _vector_topk_fold,
-        vector_topk,
-    )
+    from core_telecoms_etl_spark.queries.vector import vector_topk
 
     new = sorted(tuple(r) for r in vector_topk(spark, sf_dir).collect())
-    old = sorted(tuple(r) for r in _vector_topk_fold(spark, sf_dir).collect())
+    old = sorted(
+        tuple(r) for r in refs.vector_topk_fold(spark, sf_dir).collect()
+    )
     assert new == old and len(new) > 0
 
 
-def test_eager_collect_bound_enforced(spark):
+@pytest.mark.parametrize(
+    "score, match",
+    [
+        pytest.param(
+            lambda v, m: sim.brute_force_topk(v, v, k=2, max_collect_rows=m),
+            "ivf_topk", id="brute_force_topk",
+        ),
+        pytest.param(
+            lambda v, m: sim.brute_force_topk_arrow_rounded6(
+                v, v, k=2, max_collect_rows=m
+            ),
+            "ivf_topk", id="brute_force_topk_arrow_rounded6",
+        ),
+        pytest.param(
+            lambda v, m: sim.cosine_pairs_arrow_rounded6(v, max_collect_rows=m),
+            "semantic_dedup", id="cosine_pairs_arrow_rounded6",
+        ),
+        pytest.param(
+            lambda v, m: sim.ivf_topk(
+                v, v, k=2, n_centroids=2, n_probe=2, max_collect_rows=m
+            ),
+            "ivf_topk", id="ivf_topk",
+        ),
+        pytest.param(
+            lambda v, m: sim.lsh_topk(
+                v, v, k=2, max_hamming=16, max_collect_rows=m
+            ),
+            "lsh_topk", id="lsh_topk",
+        ),
+    ],
+)
+def test_eager_collect_bound_enforced(spark, score, match):
     """VERDICT r10 ask #5: the eager-collect contract is a contract —
-    past max_collect_rows each Arrow scorer RAISES naming its
+    past max_collect_rows each Arrow scorer RAISES naming itself or its
     escalation path instead of collecting toward a driver OOM (and the
     limit+1 trick means the failing path itself never materializes
     more than max_collect_rows+1 rows)."""
-    import pytest as _pytest
-
-    from core_telecoms_etl_spark.operators.similarity import (
-        brute_force_topk_arrow,
-        brute_force_topk_arrow_rounded6,
-        cosine_pairs_arrow_rounded6,
-    )
-
     vecs = spark.range(8).select(
         F.col("id").alias("vec_id"),
         F.array(
             (F.col("id") + 1).cast("float"), F.lit(1.0).cast("float")
         ).alias("embedding"),
     )
-    with _pytest.raises(ValueError, match="ivf_topk"):
-        brute_force_topk_arrow(vecs, vecs, k=2, max_collect_rows=4)
-    with _pytest.raises(ValueError, match="ivf_topk"):
-        brute_force_topk_arrow_rounded6(vecs, vecs, k=2, max_collect_rows=4)
-    with _pytest.raises(ValueError, match="semantic_dedup"):
-        cosine_pairs_arrow_rounded6(vecs, max_collect_rows=4)
+    with pytest.raises(ValueError, match=match):
+        score(vecs, 4)
     # within the bound: unchanged behavior
-    assert brute_force_topk_arrow(
-        vecs, vecs, k=2, max_collect_rows=8
-    ).count() > 0
+    assert score(vecs, 8).count() > 0
 
 
 def test_conformant_vectors_drops_the_three_poison_modes(spark):

@@ -145,7 +145,7 @@ def main() -> None:
     queries.collect()  # stage the query side out of the measurement
     # warm pass: fork the python workers + page in the parquet scan so
     # the first measured variant isn't charged for them
-    sim.brute_force_topk_arrow(
+    sim.brute_force_topk(
         corpus, queries.filter(F.col("vec_id") < 32), k=10
     ).count()
 
@@ -162,7 +162,7 @@ def main() -> None:
         (
             "chunked",
             "exact q_chunk=1024",
-            lambda: sim.brute_force_topk_arrow(
+            lambda: sim.brute_force_topk(
                 corpus, queries, k=10, q_chunk=1024
             ),
             batch_rows * min(1024, n_queries) * 8,
@@ -170,7 +170,7 @@ def main() -> None:
         (
             "unchunked",
             f"exact unchunked (q_chunk={n_queries})",
-            lambda: sim.brute_force_topk_arrow(
+            lambda: sim.brute_force_topk(
                 corpus, queries, k=10, q_chunk=n_queries
             ),
             batch_rows * n_queries * 8,
@@ -222,7 +222,7 @@ def main() -> None:
             }
 
         t0 = time.time()
-        exact = pairs(sim.brute_force_topk_arrow(corpus, qs, k=10))
+        exact = pairs(sim.brute_force_topk(corpus, qs, k=10))
         t_exact = time.time() - t0
         for aname, afn in (
             (
