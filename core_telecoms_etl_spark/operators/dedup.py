@@ -769,6 +769,46 @@ def _simhash_mass_tripwire(
         )
 
 
+def _combination_keys(sig: DataFrame, n_b: int, m: int) -> DataFrame:
+    """`sig` exploded to one row per m-combination of the n_b blocks of
+    its 64-bit `simhash`: `chunk_pos` numbers the combination in
+    `itertools.combinations` order and `chunk` packs its blocks into one
+    long, the first block in the highest bits. Block i covers bits
+    [starts[i], starts[i+1]); widths differ by at most 1.
+
+    Disjoint blocks of at most 64 bits in total always fit one long.
+    The blocks are computed once per row as an array, and one
+    higher-order expression folds each literal combination over it, so
+    the plan grows with n_b, not with C(n_b, m)·m: unrolled
+    per-combination shift/OR trees (1287 of them at m = 5) overflow
+    codegen's 64 KB method limit and then the driver heap."""
+    from itertools import combinations
+
+    starts = [round(i * 64 / n_b) for i in range(n_b + 1)]
+    widths = [starts[i + 1] - starts[i] for i in range(n_b)]
+
+    def block(i: int):
+        # a full-width block (n_blocks=1) needs the all-ones long:
+        # (1 << 64) - 1 overflows LongType
+        mask = -1 if widths[i] == 64 else (1 << widths[i]) - 1
+        return F.shiftrightunsigned("simhash", starts[i]).bitwiseAND(mask)
+
+    combos = ", ".join(
+        "array(" + ", ".join(map(str, S)) + ")"
+        for S in combinations(range(n_b), m)
+    )
+    widths_sql = "array(" + ", ".join(map(str, widths)) + ")"
+    keys = F.expr(
+        f"transform(array({combos}), S -> aggregate(S, 0L,"
+        f" (acc, j) -> shiftleft(acc, {widths_sql}[j]) | __blk[j]))"
+    )
+    return (
+        sig.withColumn("__blk", F.array(*(block(i) for i in range(n_b))))
+        .select("*", F.posexplode(keys).alias("chunk_pos", "chunk"))
+        .drop("__blk")
+    )
+
+
 def simhash_pairs(
     df: DataFrame,
     id_col: str,
@@ -820,8 +860,6 @@ def simhash_pairs(
     with that many blocks (m = 1; n_blocks < max_hamming + 1 trades
     guaranteed recall for fewer candidates, as before) and skips the
     tripwire — manual control opts out of the guard rails."""
-    from itertools import combinations
-
     if n_blocks is not None:
         if not 1 <= n_blocks <= 64:
             raise ValueError(
@@ -840,33 +878,13 @@ def simhash_pairs(
             )
         m = _pick_combo_order(n_rows, max_hamming)
         n_b = max_hamming + m
-    # block i covers bits [starts[i], starts[i+1]) — widths differ by ≤1
-    starts = [round(i * 64 / n_b) for i in range(n_b + 1)]
-    widths = [starts[i + 1] - starts[i] for i in range(n_b)]
-
-    def block(i: int):
-        # a full-width block (n_blocks=1) needs the all-ones long:
-        # (1 << 64) - 1 overflows LongType
-        mask = -1 if widths[i] == 64 else (1 << widths[i]) - 1
-        return F.shiftrightunsigned("simhash", starts[i]).bitwiseAND(mask)
-
-    # one packed long per combination: disjoint sub-64-bit blocks always
-    # fit (total shifted width = sum of the combo's widths ≤ 64)
-    keys = []
-    for S in combinations(range(n_b), m):
-        e = block(S[0])
-        for j in S[1:]:
-            e = F.shiftleft(e, widths[j]).bitwiseOR(block(j))
-        keys.append(e)
     # signature computation is the expensive pass; the blocking self-join
     # reads it twice → cache
     sig = cache_scoped(
         "dedup.simhash.sig", simhash_signatures(df, id_col, text_col)
     )
-    chunks = sig.select(
-        F.col(id_col).alias("doc"),
-        "simhash",
-        F.posexplode(F.array(*keys)).alias("chunk_pos", "chunk"),
+    chunks = _combination_keys(
+        sig.select(F.col(id_col).alias("doc"), "simhash"), n_b, m
     )
     # Catalyst cannot size explode output — at m ≥ 2 it estimated the
     # n·C(B,m)-row chunk relation below the broadcast threshold and

@@ -4,13 +4,18 @@ The reference's only correctness mechanism is dbt schema tests — not_null
 and unique on business keys (dbt/coretelecom/models/facts/schema.yml:7-26,
 dimensions/schema.yml:5-9), compiled to SQL and run by `dbt test`. Here each
 check is a DataFrame aggregation returning a violation count, and a table's
-whole suite (`checks_df`) is ONE unioned relation — a single Spark action,
-not one compiled query per test; the declared `dq_suite` query exposes the
+whole suite (`checks_df`) is ONE aggregate — a single Spark action, not
+one compiled query per test; the declared `dq_suite` query exposes the
 same shape to the oracle harness.
 
-Scale: all scalar checks (not_null / accepted_values) fuse into one
-aggregate over one scan; each unique key is one hash aggregate on the key
-(map-side partial combine, AQE-coalesced), unioned into the same plan.
+Scale: every check is one expression of the same global aggregate over
+one column-pruned scan. A unique check is `count(key) - count(DISTINCT
+key)`, which equals dbt's `sum(count - 1)` over the keys that occur more
+than once (NULL keys excluded) without a per-key group-by branch:
+Catalyst plans the distinct count as a partial aggregate keyed on the
+column (map-side combine, AQE-coalesced), with an Expand when the suite
+holds several distinct keys. `check_not_null`, `check_unique` and
+`check_accepted_values` are one-check suites of the same kernel.
 """
 
 from __future__ import annotations
@@ -18,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -34,36 +39,20 @@ class DQResult:
 
 
 def check_not_null(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """NULL-count per column in ONE pass (vs one query per dbt test)."""
-    aggs = [
-        F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(c) for c in columns
-    ]
-    row = df.agg(*aggs).collect()[0]
-    return [DQResult("not_null", c, int(row[c] or 0)) for c in columns]
+    """NULL count per column (dbt not_null)."""
+    return run_checks(df, not_null=columns)
 
 
 def check_unique(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """Duplicate-key count per key (each key is one hash aggregate)."""
-    out = []
-    for c in columns:
-        dup = (
-            df.filter(F.col(c).isNotNull())
-            .groupBy(c)
-            .count()
-            .filter(F.col("count") > 1)
-            .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("v"))
-            .collect()[0]["v"]
-        )
-        out.append(DQResult("unique", c, int(dup)))
-    return out
+    """Excess duplicate rows per key, NULL keys excluded (dbt unique)."""
+    return run_checks(df, unique=columns)
 
 
 def check_accepted_values(
     df: DataFrame, column: str, values: Sequence[str]
 ) -> list[DQResult]:
-    """dbt accepted_values analog (capability; no instance in the ref)."""
-    n = df.filter(~F.col(column).isin(list(values)) & F.col(column).isNotNull()).count()
-    return [DQResult("accepted_values", column, int(n))]
+    """Non-NULL values outside `values` (dbt accepted_values)."""
+    return run_checks(df, accepted_values={column: values})
 
 
 def checks_df(
@@ -73,78 +62,44 @@ def checks_df(
     accepted_values: dict[str, Sequence[str]] | None = None,
 ) -> DataFrame:
     """A table's whole check suite as ONE relation of
-    (check_name, column_name, violations).
+    (check_name, column_name, violations), rows in the order not_null,
+    accepted_values, unique.
 
-    All scalar checks (not_null + accepted_values) fuse into a single
-    aggregate over one scan; each unique key is necessarily its own
-    hash aggregate (different group keys), but all branches union into
-    one plan, so materializing it is one Spark action — not one job per
-    check the way `dbt test` compiles."""
-    branches: list[DataFrame] = []
-
-    scalar_aggs = []
-    scalar_rows: list[tuple[str, str]] = []  # (check_name, column)
-    for c in not_null:
-        # coalesce: SUM over an empty table is NULL, but zero rows have
-        # zero violations — an empty batch PASSES its checks (r8
-        # empty-facts differential)
-        scalar_aggs.append(
-            F.coalesce(
-                F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)), F.lit(0)
-            )
-            .cast("long")
-            .alias(f"nn_{c}")
+    Every check is one aggregate expression of a single global
+    aggregate, unpivoted by `stack`:
+    - not_null: `count_if(c IS NULL)`;
+    - accepted_values: `count_if(c NOT IN values)`, NULL not counted;
+    - unique: `count(c) - count(DISTINCT c)`, the excess rows of every
+      duplicated key. Both counts skip NULL keys, and the distinct
+      aggregate groups NaN and -0.0/0.0 the way `groupBy` does.
+    Over an empty table every count is 0, so an empty batch passes."""
+    suite: list[tuple[str, str, Column]] = [
+        ("not_null", c, F.count_if(F.col(c).isNull())) for c in not_null
+    ]
+    suite += [
+        (
+            "accepted_values",
+            c,
+            F.count_if(F.col(c).isNotNull() & ~F.col(c).isin(list(values))),
         )
-        scalar_rows.append(("not_null", c))
-    for c, values in (accepted_values or {}).items():
-        scalar_aggs.append(
-            F.coalesce(
-                F.sum(
-                    F.when(
-                        ~F.col(c).isin(list(values)) & F.col(c).isNotNull(),
-                        1,
-                    ).otherwise(0)
-                ),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias(f"av_{c}")
-        )
-        scalar_rows.append(("accepted_values", c))
-    if scalar_aggs:
-        stack = ", ".join(
-            f"'{check}', '{col}', {'nn_' if check == 'not_null' else 'av_'}{col}"
-            for check, col in scalar_rows
-        )
-        branches.append(
-            df.agg(*scalar_aggs).selectExpr(
-                f"stack({len(scalar_rows)}, {stack})"
-                " as (check_name, column_name, violations)"
-            )
-        )
-
-    for key in unique:
-        branches.append(
-            df.filter(F.col(key).isNotNull())
-            .groupBy(key)
-            .count()
-            .filter(F.col("count") > 1)
-            .agg(
-                F.lit("unique").alias("check_name"),
-                F.lit(key).alias("column_name"),
-                F.coalesce(F.sum(F.col("count") - 1), F.lit(0))
-                .cast("long")
-                .alias("violations"),
-            )
-            .select("check_name", "column_name", "violations")
-        )
-
-    if not branches:
+        for c, values in (accepted_values or {}).items()
+    ]
+    suite += [
+        ("unique", c, F.count(c) - F.count_distinct(c)) for c in unique
+    ]
+    if not suite:
         raise ValueError("checks_df: no checks requested")
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    counts = df.agg(*(v.alias(f"v{i}") for i, (_, _, v) in enumerate(suite)))
+    rows = [
+        x
+        for i, (check, col, _) in enumerate(suite)
+        for x in (F.lit(check), F.lit(col), F.col(f"v{i}"))
+    ]
+    return counts.select(
+        F.stack(F.lit(len(suite)), *rows).alias(
+            "check_name", "column_name", "violations"
+        )
+    )
 
 
 def run_checks(

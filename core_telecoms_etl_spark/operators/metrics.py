@@ -26,7 +26,21 @@ class ObservedFrame:
 
     @property
     def metrics(self) -> dict:
+        """The observed values, or {} when the action's final plan lost
+        the observed node: once a shuffle stage above it comes back
+        empty, AQE replaces the plan over that stage with an empty
+        relation, and the metrics computed below it are not reported
+        (Spark 4.1)."""
+        if self.observation._jo.getRow().length() == 0:
+            return {}
         return dict(self.observation.get)
+
+    @property
+    def n_rows(self) -> int:
+        """The observed row count; when the metrics were lost (see
+        `metrics`), one count job over the same plan."""
+        m = self.metrics
+        return m["n_rows"] if m else self.df.count()
 
 
 def observe_counts(

@@ -19,6 +19,10 @@ What replaces what:
   the cleaning chain.
 - COPY INTO + DDL-from-data        → normalized append parquet write
   (sources/writers.py); the staging folder IS the warehouse table.
+- post-load `dbt test`             → `SourceConfig` audits, one fused
+  aggregate (operators/dq.py) over the files the append just added.
+- per-operation tallies            → rows read / written per source,
+  observed during the write (operators/metrics.py), no extra job.
 
 Orchestration concerns (retries, emails, schedules) stay OUT of the
 engine, per SURVEY.md §3.1.
@@ -30,12 +34,18 @@ import os
 from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
-from core_telecoms_etl_spark.operators.cleaning import clean
+from core_telecoms_etl_spark.operators.cleaning import (
+    clean,
+    normalize_column_names,
+)
+from core_telecoms_etl_spark.operators.dq import DQResult, run_checks
+from core_telecoms_etl_spark.operators.metrics import observe_counts
 from core_telecoms_etl_spark.sources.incremental import (
     IncrementalLoader,
     LoadReport,
+    visible_files,
 )
 from core_telecoms_etl_spark.sources.readers import read_csv, read_json
 from core_telecoms_etl_spark.sources.writers import write_parquet
@@ -53,12 +63,12 @@ class SourceConfig:
     rename_map: Mapping[str, str] = field(default_factory=dict)
     schema: str | None = None  # DDL string; None → infer
     dedup: bool = True
-    # dbt-style schema tests run against each CLEANED batch before the
-    # append (the reference runs them post-load as a separate `dbt
-    # test`; auditing the batch catches the violation before it lands).
-    # Column names refer to post-rename names. Violations are REPORTED,
-    # not fatal — the caller decides (quarantine via
-    # readers.split_corrupt, abort, or alert).
+    # dbt-style schema tests run against each cleaned batch right after
+    # its append, on the files that append added (the reference runs
+    # `dbt test` post-load too). Column names refer to post-rename
+    # names; a name the cleaned batch lacks raises before anything is
+    # written. Violations are REPORTED, not fatal — the caller decides
+    # (quarantine via readers.split_corrupt, abort, or alert).
     audit_not_null: Sequence[str] = ()
     audit_unique: Sequence[str] = ()
 
@@ -70,10 +80,24 @@ class PipelineConfig:
     manifest_path: str
 
 
+@dataclass(frozen=True)
+class RowCounts:
+    """Rows of one source batch: read from the raw files, and written
+    to staging after cleaning (the rest were all-NULL or duplicates)."""
+
+    read: int
+    written: int
+
+    @property
+    def dropped(self) -> int:
+        return self.read - self.written
+
+
 @dataclass
 class PipelineReport:
     loads: dict[str, LoadReport]
     audits: dict[str, list] = field(default_factory=dict)
+    rows: dict[str, RowCounts] = field(default_factory=dict)
 
     @property
     def total_new_files(self) -> int:
@@ -97,36 +121,73 @@ def _read(spark: SparkSession, src: SourceConfig, files: list[str]):
     raise ValueError(f"unknown source format {src.fmt!r}")
 
 
+def _audit(
+    spark: SparkSession,
+    src: SourceConfig,
+    cleaned: DataFrame,
+    staged: str,
+    added: list[str],
+) -> list[DQResult]:
+    """Run the source's audits on the files one append added to the
+    staging folder `staged`: the batch just written, never earlier days.
+    The scan passes the written schema, so no footer is read to infer
+    it, and the aggregate prunes it to the audited columns. The staged
+    columns are the cleaned ones name-normalized in order, so a
+    positional rename gives the audits the cleaned names. An append
+    that added no file audits an empty batch, which passes."""
+    if added:
+        written = normalize_column_names(cleaned).schema
+        batch = spark.read.schema(written).parquet(
+            *(os.path.join(staged, f) for f in added)
+        )
+        batch = batch.toDF(*cleaned.columns)
+    else:
+        batch = spark.createDataFrame([], cleaned.schema)
+    return run_checks(
+        batch, not_null=src.audit_not_null, unique=src.audit_unique
+    )
+
+
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
     """Incrementally land every source: discover raw files, subtract the
     manifest, read all new files as one batch, clean (normalize + rename +
-    trim + empty⇒NULL + drop-all-null + dedup), and append to the staging
-    folder. Idempotent: a second run with no new files writes nothing."""
+    trim + empty⇒NULL + drop-all-null + dedup), append to the staging
+    folder, then audit the appended files. Idempotent: a second run with
+    no new files writes nothing.
+
+    Each batch is computed once, by the write: row counts ride on it as
+    observed metrics, and the audits re-read only the audited columns of
+    the files it added. Sources run one after another."""
     loader = IncrementalLoader(spark, config.manifest_path)
     loads: dict[str, LoadReport] = {}
     audits: dict[str, list] = {}
+    rows: dict[str, RowCounts] = {}
     for src in config.sources:
         candidates = (
             sorted(os.listdir(src.raw_dir)) if os.path.isdir(src.raw_dir) else []
         )
 
         def process(new_files: list[str], src: SourceConfig = src) -> None:
-            df = clean(
-                _read(spark, src, new_files),
-                rename_map=src.rename_map or None,
-                dedup=src.dedup,
+            read = observe_counts(_read(spark, src, new_files), name="read")
+            cleaned = observe_counts(
+                clean(
+                    read.df,
+                    rename_map=src.rename_map or None,
+                    dedup=src.dedup,
+                ),
+                name="cleaned",
             )
-            if src.audit_not_null or src.audit_unique:
-                from core_telecoms_etl_spark.operators.dq import run_checks
-
-                audits[src.name] = run_checks(
-                    df,
-                    not_null=src.audit_not_null,
-                    unique=src.audit_unique,
-                )
-            write_parquet(
-                df, os.path.join(config.staging_dir, src.name), mode="append"
-            )
+            audited = [*src.audit_not_null, *src.audit_unique]
+            # analysis only: a missing audit column raises here, before
+            # the append, not after it (a retry would append twice)
+            cleaned.df.select(*audited).schema
+            staged = os.path.join(config.staging_dir, src.name)
+            before = visible_files(staged) if audited else set()
+            write_parquet(cleaned.df, staged, mode="append")
+            rows[src.name] = RowCounts(read.n_rows, cleaned.n_rows)
+            if audited:
+                added = sorted(visible_files(staged) - before)
+                audits[src.name] = _audit(spark, src, cleaned.df, staged, added)
 
         loads[src.name] = loader.run(
             src.name,
@@ -134,4 +195,4 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
             process,
             extensions=(_EXTENSIONS[src.fmt],),
         )
-    return PipelineReport(loads=loads, audits=audits)
+    return PipelineReport(loads=loads, audits=audits, rows=rows)

@@ -17,6 +17,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Half the machine's memory, at most 48g: a local-mode JVM holds
+    driver and executors, and a constant 48g heap on a smaller machine
+    turns a runaway plan into a kernel OOM kill instead of a Java heap
+    error."""
+    try:
+        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(48 << 10, total // 2 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "core-telecoms-etl-spark",
     shuffle_partitions: int | None = None,
@@ -43,10 +55,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     if not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
-        # local mode = driver-only JVM; give it real memory (the container
-        # has 128 GiB). On a cluster these come from spark-submit instead.
+        # local mode = driver-only JVM; give it real memory, sized to the
+        # machine. On a cluster these come from spark-submit instead.
         builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory(),
         ).config(
             # Splits are sized by bytes, so the 128 MB default hands a
             # 1–20 MB local test file to ONE core and every scan-rooted

@@ -68,13 +68,29 @@ _ARROW_SCHEMA = pa.schema(
 _KEY_SCHEMA = pa.schema([_ARROW_SCHEMA.field(0), _ARROW_SCHEMA.field(1)])
 
 
-def _ledger_fs(path: str) -> tuple[pafs.FileSystem, str]:
-    """pyarrow filesystem and in-filesystem path for a ledger location.
-    A bare path resolves against the working directory, as Spark
-    resolves it; an unknown URI scheme raises."""
+def _filesystem(path: str) -> tuple[pafs.FileSystem, str]:
+    """pyarrow filesystem and in-filesystem path for a ledger or folder
+    location. A bare path resolves against the working directory, as
+    Spark resolves it; an unknown URI scheme raises."""
     if not urlparse(path).scheme:
         path = os.path.abspath(path)
     return pafs.FileSystem.from_uri(path)
+
+
+def visible_files(path: str) -> set[str]:
+    """Names of the files directly under the folder `path`, listed on
+    the driver with pyarrow, no Spark job. Names starting with `.` or
+    `_` are skipped, the rule the ledger read applies and Spark's own
+    listing follows: `_SUCCESS`, `.crc` checksums and in-flight
+    `_temporary` output are not data. A missing folder is empty."""
+    fs, root = _filesystem(path)
+    infos = fs.get_file_info(pafs.FileSelector(root, allow_not_found=True))
+    return {
+        i.base_name
+        for i in infos
+        if i.type == pafs.FileType.File
+        and not i.base_name.startswith((".", "_"))
+    }
 
 
 @dataclass
@@ -168,7 +184,7 @@ class IncrementalLoader:
         exist is an empty ledger; any other read error raises."""
         if not files:
             return []
-        fs, root = _ledger_fs(self.manifest_path)
+        fs, root = _filesystem(self.manifest_path)
         if fs.get_file_info(root).type == pafs.FileType.NotFound:
             return list(files)
         ledger = ds.dataset(
@@ -198,7 +214,7 @@ class IncrementalLoader:
         file and a crash mid-write leaves only an ignored temp file."""
         if not files:
             return
-        fs, root = _ledger_fs(self.manifest_path)
+        fs, root = _filesystem(self.manifest_path)
         fs.create_dir(root, recursive=True)
         now = dt.datetime.now(dt.timezone.utc)
         table = pa.table(

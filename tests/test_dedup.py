@@ -152,6 +152,34 @@ def test_simhash_single_full_width_block(spark):
     assert got == {(0, 3): 0}
 
 
+def test_simhash_combination_keys_pack_each_block_combination(spark):
+    """Each blocking key is its combination's blocks packed high to low,
+    as an unrolled shift/OR per combination would build it. Keys that
+    drop or merge blocks stay recall-complete (the Hamming filter is
+    exact) but collide and grow the self-join, which only this catches."""
+    from itertools import combinations
+
+    sigs = [0, -1, 1, -(1 << 63), 0x0123456789ABCDEF, -0x5A5A5A5A5A5A5A5B]
+    frame = spark.createDataFrame([(s,) for s in sigs], "simhash long")
+    for n_b, m in ((1, 1), (9, 1), (7, 3), (13, 5)):
+        got = {
+            (r.simhash, r.chunk_pos): r.chunk
+            for r in dd._combination_keys(frame, n_b, m).collect()
+        }
+        starts = [round(i * 64 / n_b) for i in range(n_b + 1)]
+        widths = [starts[i + 1] - starts[i] for i in range(n_b)]
+        want = {}
+        for s in sigs:
+            u = s & ((1 << 64) - 1)
+            blocks = [(u >> starts[i]) & ((1 << widths[i]) - 1) for i in range(n_b)]
+            for pos, combo in enumerate(combinations(range(n_b), m)):
+                key = 0
+                for j in combo:
+                    key = (key << widths[j]) | blocks[j]
+                want[(s, pos)] = key - (1 << 64) if key >= 1 << 63 else key
+        assert got == want, (n_b, m)
+
+
 def test_refine_pairs_exact_matches_jaccard_pairs(spark, sf_dir):
     """Sketch-candidates + exact refine must equal the full exact
     inverted-index result whenever the candidate set covers the true

@@ -29,6 +29,9 @@ def test_unique_counts_excess_rows(spark):
 def test_accepted_values(spark):
     res = dq.check_accepted_values(_df(spark), "v", ["a", "b"])
     assert res[0].violations == 1  # 'd'; NULL is not a violation
+    # NULL IN () is false, not NULL: NULL stays no violation regardless
+    none = dq.check_accepted_values(_df(spark), "v", [])
+    assert none[0].violations == 3
 
 
 def test_run_checks_combined(spark):
@@ -37,9 +40,8 @@ def test_run_checks_combined(spark):
 
 
 def test_run_checks_single_action_all_check_types(spark):
-    """The fused suite: not_null + accepted_values share one aggregate,
-    unique keys union into the same plan — results match the per-check
-    helpers exactly."""
+    """The fused suite: every check type in one aggregate, results in
+    the order not_null, accepted_values, unique."""
     df = _df(spark)
     res = dq.run_checks(
         df,
@@ -47,6 +49,13 @@ def test_run_checks_single_action_all_check_types(spark):
         unique=["k", "v"],
         accepted_values={"v": ["a", "b"]},
     )
+    assert [r.check for r in res] == [
+        "not_null",
+        "not_null",
+        "accepted_values",
+        "unique",
+        "unique",
+    ]
     got = {(r.check, r.column): r.violations for r in res}
     assert got == {
         ("not_null", "k"): 1,
@@ -58,13 +67,67 @@ def test_run_checks_single_action_all_check_types(spark):
 
 
 def test_checks_df_is_one_plan(spark):
-    """checks_df returns a single relation (one action materializes the
-    whole suite)."""
+    """checks_df is a single aggregate unpivoted by stack: no union of
+    per-check branches, results in the order not_null, accepted_values,
+    unique."""
     out = dq.checks_df(
         _df(spark), not_null=["k"], unique=["k"], accepted_values={"v": ["a"]}
     )
     assert out.columns == ["check_name", "column_name", "violations"]
-    assert out.count() == 3
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Union" not in plan and plan.count("Aggregate") == 1, plan
+    assert [tuple(r) for r in out.collect()] == [
+        ("not_null", "k", 1),
+        ("accepted_values", "v", 2),
+        ("unique", "k", 1),
+    ]
+
+
+def _unique_reference(df, key: str) -> int:
+    """dbt's unique test: excess rows over the keys that occur more
+    than once, NULL keys excluded."""
+    from pyspark.sql import functions as F
+
+    v = (
+        df.filter(F.col(key).isNotNull())
+        .groupBy(key)
+        .count()
+        .filter(F.col("count") > 1)
+        .agg(F.sum(F.col("count") - 1))
+        .collect()[0][0]
+    )
+    return int(v or 0)
+
+
+def test_fused_unique_matches_group_by_reference(spark):
+    """count(key) - count(DISTINCT key) equals the group-by/having form
+    on NULL keys, NaN and signed-zero doubles, two unique keys in one
+    suite, and an empty frame."""
+    nan = float("nan")
+    schema = "k int, x double"
+    df = spark.createDataFrame(
+        [
+            (1, 0.0),
+            (1, -0.0),
+            (None, nan),
+            (None, nan),
+            (2, nan),
+            (3, None),
+            (3, 1.5),
+            (3, 1.5),
+        ],
+        schema,
+    )
+    empty = spark.createDataFrame([], schema)
+    for frame, want in ((df, [3, 4]), (empty, [0, 0])):
+        res = dq.run_checks(frame, unique=["k", "x"])
+        assert [(r.check, r.column) for r in res] == [
+            ("unique", "k"),
+            ("unique", "x"),
+        ]
+        got = [r.violations for r in res]
+        assert got == [_unique_reference(frame, c) for c in ("k", "x")]
+        assert got == want
 
 
 def test_star_schema_dq_green(spark, sf_dir):
