@@ -3,9 +3,14 @@
 warehouse load) as one Spark driver function.
 
 What replaces what:
-- Airflow task topology            → plain call order in `run_pipeline`
-  (Spark's scheduler supplies the intra-source parallelism the reference
-  got from sibling Airflow tasks and its 10-thread pool).
+- Airflow task topology            → one driver thread per source in
+  (sibling extract task groups,      `run_pipeline`. The sources have no
+  pipeline.py:166,228, and a         edges between them, so one source's
+  10-thread customer pool)           planning, schema inference, write and
+  audit jobs overlap with the others', and Spark's scheduler shares the
+  cores between their jobs. A failed source does not stop the others:
+  they land and are recorded, and the first failure in config order
+  re-raises once every source has finished.
 - per-file pandas loops            → one multi-file DataFrame scan per
   source batch.
 - 3-layer skip logic               → one file ledger
@@ -31,9 +36,11 @@ engine, per SURVEY.md §3.1.
 from __future__ import annotations
 
 import os
-from collections.abc import Mapping, Sequence
+from collections.abc import Callable, Mapping, Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from core_telecoms_etl_spark.operators.cleaning import (
@@ -78,6 +85,15 @@ class PipelineConfig:
     sources: Sequence[SourceConfig]
     staging_dir: str
     manifest_path: str
+
+    def __post_init__(self) -> None:
+        # the name is the staging folder and the ledger folder_name: two
+        # sources landing under one name would each audit the other's
+        # files and share one ledger
+        names = [s.name for s in self.sources]
+        dups = sorted({n for n in names if names.count(n) > 1})
+        if dups:
+            raise ValueError(f"duplicate source names: {dups}")
 
 
 @dataclass(frozen=True)
@@ -148,6 +164,71 @@ def _audit(
     )
 
 
+def _land(
+    spark: SparkSession,
+    loader: IncrementalLoader,
+    src: SourceConfig,
+    staging_dir: str,
+    in_caller_context: Callable[[Callable], Callable],
+) -> tuple[LoadReport, list[DQResult] | None, RowCounts | None]:
+    """Land one source: list its folder, then load the files the ledger
+    has not seen as one batch. Returns the load report, and the audit
+    results and row counts of the batch (None when no new file came,
+    and audits None too when the source declares none).
+
+    `in_caller_context` is `_caller_context(spark)` taken in the
+    calling thread. Only `process` starts Spark jobs, so only it is
+    wrapped: a source with no new file makes no JVM call from its
+    thread, where the first call would open a py4j connection."""
+    candidates = (
+        sorted(os.listdir(src.raw_dir)) if os.path.isdir(src.raw_dir) else []
+    )
+    audits: list[DQResult] | None = None
+    rows: RowCounts | None = None
+
+    def process(new_files: list[str]) -> None:
+        nonlocal audits, rows
+        read = observe_counts(_read(spark, src, new_files), name="read")
+        cleaned = observe_counts(
+            clean(
+                read.df,
+                rename_map=src.rename_map or None,
+                dedup=src.dedup,
+            ),
+            name="cleaned",
+        )
+        audited = [*src.audit_not_null, *src.audit_unique]
+        # analysis only: a missing audit column raises here, before
+        # the append, not after it (a retry would append twice)
+        cleaned.df.select(*audited).schema
+        staged = os.path.join(staging_dir, src.name)
+        before = visible_files(staged) if audited else set()
+        write_parquet(cleaned.df, staged, mode="append")
+        rows = RowCounts(read.n_rows, cleaned.n_rows)
+        if audited:
+            added = sorted(visible_files(staged) - before)
+            audits = _audit(spark, src, cleaned.df, staged, added)
+
+    load = loader.run(
+        src.name,
+        candidates,
+        in_caller_context(process),
+        extensions=(_EXTENSIONS[src.fmt],),
+    )
+    return load, audits, rows
+
+
+def _caller_context(spark: SparkSession) -> Callable[[Callable], Callable]:
+    """A wrapper that runs a function, in another thread, under the
+    calling thread's local properties (job group, job description,
+    scheduler pool) and session tags. Without pinned threads
+    (PYSPARK_PIN_THREAD=false) the JVM keeps no per-thread state to
+    carry, and `inheritable_thread_target` hands the session back
+    instead of a wrapper: the function then runs as it is."""
+    wrap = inheritable_thread_target(spark)
+    return wrap if callable(wrap) else lambda fn: fn
+
+
 def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
     """Incrementally land every source: discover raw files, subtract the
     manifest, read all new files as one batch, clean (normalize + rename +
@@ -157,42 +238,34 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
 
     Each batch is computed once, by the write: row counts ride on it as
     observed metrics, and the audits re-read only the audited columns of
-    the files it added. Sources run one after another."""
+    the files it added.
+
+    Each source lands in its own driver thread, so the sources' Spark
+    jobs overlap. Every job a source starts carries the caller's job
+    group, job description, scheduler pool and session tags. A source
+    that fails does not stop the others: they land and are recorded,
+    the failed one is not recorded, and once every source has finished
+    the first failure in config order re-raises. The report lists the
+    sources in config order."""
     loader = IncrementalLoader(spark, config.manifest_path)
-    loads: dict[str, LoadReport] = {}
-    audits: dict[str, list] = {}
-    rows: dict[str, RowCounts] = {}
-    for src in config.sources:
-        candidates = (
-            sorted(os.listdir(src.raw_dir)) if os.path.isdir(src.raw_dir) else []
-        )
-
-        def process(new_files: list[str], src: SourceConfig = src) -> None:
-            read = observe_counts(_read(spark, src, new_files), name="read")
-            cleaned = observe_counts(
-                clean(
-                    read.df,
-                    rename_map=src.rename_map or None,
-                    dedup=src.dedup,
-                ),
-                name="cleaned",
+    with ThreadPoolExecutor(max_workers=len(config.sources) or 1) as pool:
+        futures = [
+            pool.submit(
+                _land,
+                spark,
+                loader,
+                src,
+                config.staging_dir,
+                _caller_context(spark),
             )
-            audited = [*src.audit_not_null, *src.audit_unique]
-            # analysis only: a missing audit column raises here, before
-            # the append, not after it (a retry would append twice)
-            cleaned.df.select(*audited).schema
-            staged = os.path.join(config.staging_dir, src.name)
-            before = visible_files(staged) if audited else set()
-            write_parquet(cleaned.df, staged, mode="append")
-            rows[src.name] = RowCounts(read.n_rows, cleaned.n_rows)
-            if audited:
-                added = sorted(visible_files(staged) - before)
-                audits[src.name] = _audit(spark, src, cleaned.df, staged, added)
-
-        loads[src.name] = loader.run(
-            src.name,
-            candidates,
-            process,
-            extensions=(_EXTENSIONS[src.fmt],),
-        )
-    return PipelineReport(loads=loads, audits=audits, rows=rows)
+            for src in config.sources
+        ]
+    report = PipelineReport(loads={})
+    for src, future in zip(config.sources, futures):
+        load, audits, rows = future.result()
+        report.loads[src.name] = load
+        if audits is not None:
+            report.audits[src.name] = audits
+        if rows is not None:
+            report.rows[src.name] = rows
+    return report

@@ -76,89 +76,33 @@ from core_telecoms_etl_spark.caching import (  # noqa: E402,F401
 # head lesson: 18 late-round operator rewrites silently missed the
 # window).
 _CHECK_ORDER: tuple[str, ...] = (
-    # ---- r16 window: head is EXACTLY 50. This round the head is
-    # ---- OVER-SUBSCRIBED: 26 r15-changed-but-never-driver-sampled
-    # ---- queries (VERDICT r15 #1: the 18 optimization rewrites + the
-    # ---- 8 tailed float-specials adopters) + 4 r16-changed queries +
-    # ---- the 36-query r11 stratum (which reaches the 5-round
-    # ---- staleness bar when CORRECTNESS_r16 lands) = 57 distinct
-    # ---- claims on 50 slots (9 of the changed set are themselves
-    # ---- r11). Resolution, per policy (1) and the r16 VERDICT's
-    # ---- top-ranked ask: every changed query gets a slot — slots
-    # ---- 1-18 the r15 optimization rewrites (kll_sliding_quantile's
-    # ---- hand-rolled percentile, exact_dedup_rows' min_by survivors,
-    # ---- segment __n_segs, the shared-exchange TPC-H trio, the
-    # ---- array-percentile family, the HashAggregate survival pair),
-    # ---- slots 19-26 the float-specials adopters tailed by the
-    # ---- late-r15 freeze, slots 27-30 this round's own work —
-    # ---- sequence_pack (pack_sequences' negative-count guard) and
-    # ---- simhash_signatures (single evaluation of the exact pair
-    # ---- relation) changed bytes; late_arrival_audit and
-    # ---- corpus_incremental_dedup were optimization-EXAMINED with
-    # ---- committed measurements (code unchanged) and are the two
-    # ---- stalest examined rows, so they keep their slots — then 20
-    # ---- of the 29 remaining r11 rows. The NINE r11 rows that do not fit
-    # ---- (count_filter, csv_scan, cube_agg, dataset_split,
-    # ---- distinct_agg, filter_predicate, promo_revenue,
-    # ---- top_supplier_revenue, volume_shipping — chosen as the
-    # ---- simplest single-scan/single-agg shapes in the stratum, each
-    # ---- green in FIVE driver windows with byte-stable plans since
-    # ---- r11) head the tail as the first claim on any future window;
-    # ---- their exclusion is the least-risk resolution of an
-    # ---- over-subscribed head, not a policy change. Changed-slot
-    # ---- membership is what test_changed_plans_enter_the_window
-    # ---- verifies mechanically at round end.
-    "kll_sliding_quantile",  # green r13
-    "training_pipeline",  # green r11
-    "near_dedup_layered",  # green r11
-    "segment_boilerplate_dedup",  # green r11
-    "min_cost_supplier",  # green r12
-    "part_promotion_suppliers",  # green r12
-    "waiting_orders_suppliers",  # green r12
-    "bigram_surprisal",  # green r14
-    "profile_table",  # green r14
-    "approx_quantiles",  # green r13
-    "percentile_agg",  # green r12
-    "kll_quantile_rollup",  # green r14
-    "feature_binning",  # green r11
-    "winsorize_features",  # green r13
-    "kaplan_meier",  # green r13
-    "log_rank_test",  # green r13
-    "seasonal_naive_forecast",  # green r13
-    "deterministic_shuffle",  # green r14
-    "rolling_anomaly",  # green r11
-    "attribution_last_touch",  # green r12
-    "cohort_ltv_curve",  # green r12
-    "psi_drift",  # green r13
-    "zorder_locality",  # green r13
-    "moments_profile",  # green r14
-    "grouped_map_zscore",  # green r14
-    "partition_pruned_rollup",  # green r11
-    "sequence_pack",  # green r15
-    "late_arrival_audit",  # green r13
-    "corpus_incremental_dedup",  # green r14
-    "simhash_signatures",  # green r11
-    "cohort_retention",  # green r11
-    "dedup_latest_by_key",  # green r11
-    "dedup_rows",  # green r11
-    "discounted_revenue_or",  # green r11
-    "events_sliding",  # green r11
-    "exists_group_agg",  # green r11
-    "full_outer_join",  # green r11
-    "heavy_hitters",  # green r11
-    "recursive_hierarchy_walk",  # green r11
-    "referential_integrity",  # green r11
-    "rfm_segments",  # green r11
-    "stream_dedup",  # green r11
-    "stream_session",  # green r11
-    "stream_static_join",  # green r11
-    "stream_tumbling",  # green r11
-    "text_exact_dedup",  # green r11
-    "tf_idf",  # green r11
-    "traffic_heatmap",  # green r11
-    "weighted_sample",  # green r11
-    "windowed_funnel",  # green r11
-    # ---- end of the 50-slot r16 window ----------------------------------
+    # ---- r17 window: head is EXACTLY 50, in three claims. Slots 1-15
+    # ---- are the 15 queries whose plans differ from
+    # ---- plans/fingerprints_base.json (training_pipeline, psi_drift,
+    # ---- sequence_pack and simhash_signatures were already in the r16
+    # ---- head; the other 11 changed through shared operators outside
+    # ---- it). Slots 16-24 are the nine r11 rows, last green five
+    # ---- rounds ago, which the r16 head had no room for. Slots 25-50
+    # ---- are the first 26 of the 34 r12 rows; the 8 left over
+    # ---- (theta_sketch_setops through window_value_funcs) head the
+    # ---- tail as the first claim on the next window. The tail runs
+    # ---- stalest last-green first; the r16 head's rows close it. The
+    # ---- "green rN" labels are tools/gen_inventory.last_green_rounds.
+    "training_pipeline",  # green r16
+    "psi_drift",  # green r16
+    "sequence_pack",  # green r16
+    "simhash_signatures",  # green r16
+    "best_match_links",  # green r15
+    "bootstrap_ci",  # green r13
+    "bootstrap_ci_partials",  # green r13
+    "copurchase_pairs",  # green r13
+    "fuzzy_linkage_compound",  # green r15
+    "lift_analysis",  # green r13
+    "minhash_near_dup",  # green r15
+    "node_jaccard_similarity",  # green r13
+    "time_grid_fill",  # green r13
+    "time_grid_interpolate",  # green r13
+    "triangle_count",  # green r13
     "count_filter",  # green r11
     "csv_scan",  # green r11
     "cube_agg",  # green r11
@@ -194,6 +138,7 @@ _CHECK_ORDER: tuple[str, ...] = (
     "stats_agg",  # green r12
     "string_agg",  # green r12
     "supplier_part_counts",  # green r12
+    # ---- end of the 50-slot r17 window ----------------------------------
     "theta_sketch_setops",  # green r12
     "top_k",  # green r12
     "upsert",  # green r12
@@ -203,9 +148,6 @@ _CHECK_ORDER: tuple[str, ...] = (
     "window_running_sum",  # green r12
     "window_value_funcs",  # green r12
     "approx_count_distinct",  # green r13
-    "bootstrap_ci",  # green r13
-    "bootstrap_ci_partials",  # green r13
-    "copurchase_pairs",  # green r13
     "cusum_changepoint",  # green r13
     "dedup_clusters",  # green r13
     "duplicate_rate_by_source",  # green r13
@@ -222,20 +164,15 @@ _CHECK_ORDER: tuple[str, ...] = (
     "interarrival_stats",  # green r13
     "keyword_pmi",  # green r13
     "lexical_diversity",  # green r13
-    "lift_analysis",  # green r13
     "mann_whitney_u",  # green r13
     "mutual_information",  # green r13
-    "node_jaccard_similarity",  # green r13
     "pagerank_copurchase",  # green r13
     "runs_test",  # green r13
     "scalar_subquery",  # green r13
     "session_window",  # green r13
     "star_fact_complaints",  # green r13
     "stream_sliding",  # green r13
-    "time_grid_fill",  # green r13
-    "time_grid_interpolate",  # green r13
     "token_topk",  # green r13
-    "triangle_count",  # green r13
     "zipf_profile",  # green r13
     "ab_test_stats",  # green r14
     "activity_streaks",  # green r14
@@ -273,7 +210,6 @@ _CHECK_ORDER: tuple[str, ...] = (
     "array_funcs",  # green r15
     "auto_topk_route",  # green r15
     "benford_profile",  # green r15
-    "best_match_links",  # green r15
     "cms_heavy_hitters",  # green r15
     "completeness_gaps",  # green r15
     "containment_near_dup",  # green r15
@@ -283,7 +219,6 @@ _CHECK_ORDER: tuple[str, ...] = (
     "exists_subquery",  # green r15
     "feature_scaling",  # green r15
     "fuzzy_linkage",  # green r15
-    "fuzzy_linkage_compound",  # green r15
     "groupby_agg",  # green r15
     "incremental_rollup",  # green r15
     "iqr_outliers",  # green r15
@@ -294,7 +229,6 @@ _CHECK_ORDER: tuple[str, ...] = (
     "mad_outliers",  # green r15
     "market_share",  # green r15
     "markov_transitions",  # green r15
-    "minhash_near_dup",  # green r15
     "mom_revenue_growth",  # green r15
     "multi_join",  # green r15
     "order_price_consistency",  # green r15
@@ -319,6 +253,52 @@ _CHECK_ORDER: tuple[str, ...] = (
     "vector_topk_ivf",  # green r15
     "vector_topk_lsh",  # green r15
     "weighted_median",  # green r15
+    "kll_sliding_quantile",  # green r16
+    "near_dedup_layered",  # green r16
+    "segment_boilerplate_dedup",  # green r16
+    "min_cost_supplier",  # green r16
+    "part_promotion_suppliers",  # green r16
+    "waiting_orders_suppliers",  # green r16
+    "bigram_surprisal",  # green r16
+    "profile_table",  # green r16
+    "approx_quantiles",  # green r16
+    "percentile_agg",  # green r16
+    "kll_quantile_rollup",  # green r16
+    "feature_binning",  # green r16
+    "winsorize_features",  # green r16
+    "kaplan_meier",  # green r16
+    "log_rank_test",  # green r16
+    "seasonal_naive_forecast",  # green r16
+    "deterministic_shuffle",  # green r16
+    "rolling_anomaly",  # green r16
+    "attribution_last_touch",  # green r16
+    "cohort_ltv_curve",  # green r16
+    "zorder_locality",  # green r16
+    "moments_profile",  # green r16
+    "grouped_map_zscore",  # green r16
+    "partition_pruned_rollup",  # green r16
+    "late_arrival_audit",  # green r16
+    "corpus_incremental_dedup",  # green r16
+    "cohort_retention",  # green r16
+    "dedup_latest_by_key",  # green r16
+    "dedup_rows",  # green r16
+    "discounted_revenue_or",  # green r16
+    "events_sliding",  # green r16
+    "exists_group_agg",  # green r16
+    "full_outer_join",  # green r16
+    "heavy_hitters",  # green r16
+    "recursive_hierarchy_walk",  # green r16
+    "referential_integrity",  # green r16
+    "rfm_segments",  # green r16
+    "stream_dedup",  # green r16
+    "stream_session",  # green r16
+    "stream_static_join",  # green r16
+    "stream_tumbling",  # green r16
+    "text_exact_dedup",  # green r16
+    "tf_idf",  # green r16
+    "traffic_heatmap",  # green r16
+    "weighted_sample",  # green r16
+    "windowed_funnel",  # green r16
 )
 
 

@@ -9,6 +9,7 @@ import json
 
 from core_telecoms_etl_spark.pipeline import (
     PipelineConfig,
+    RowCounts,
     SourceConfig,
     run_pipeline,
 )
@@ -332,3 +333,190 @@ def test_pipeline_row_counts_start_no_jobs(
     monkeypatch.setattr(pipeline, "observe_counts", Unobserved)
     unobserved, _ = first_run(tmp_path / "unobserved")
     assert observed == unobserved == AUDITED_FIRST_RUN_JOBS
+
+
+def test_duplicate_source_names_are_rejected(tmp_path):
+    """Two sources under one name would land in one staging folder, audit
+    each other's files and share one ledger folder_name."""
+    import pytest
+
+    src = SourceConfig(name="t", fmt="csv", raw_dir=str(tmp_path / "a"))
+    other = SourceConfig(name="t", fmt="json", raw_dir=str(tmp_path / "b"))
+    with pytest.raises(ValueError, match="duplicate source names: \\['t'\\]"):
+        PipelineConfig(
+            sources=[src, other],
+            staging_dir=str(tmp_path / "staging"),
+            manifest_path=str(tmp_path / "manifest"),
+        )
+
+
+# an exact duplicate, a NULL key and an all-NULL row
+WEB_DAY1 = {
+    "request_id": [7, 8, 8, None, None],
+    "page": [" home", "faq", "faq", "about", None],
+}
+
+
+def _three_sources(root, names=("call_logs", "social", "web"), **audit_cols):
+    """A csv + json + parquet config over one landed day under `root`,
+    audited on each source's key; `names` picks which sources it holds.
+    `audit_cols` overrides a source's audited column."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw = root / "raw"
+    _write(raw / "call_logs" / "day1.csv", CSV_DAY1)
+    _write(
+        raw / "social" / "day1.json",
+        "\n".join(json.dumps(r) for r in SOCIAL_DAY1),
+    )
+    (raw / "web").mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table(WEB_DAY1), str(raw / "web" / "day1.parquet"))
+    spec = {
+        "call_logs": ("csv", CALL_LOGS_RENAMES, "call_id"),
+        "social": ("json", {}, "complaint_id"),
+        "web": ("parquet", {}, "request_id"),
+    }
+    sources = []
+    for name in names:
+        fmt, renames, key = spec[name]
+        key = audit_cols.get(name, key)
+        sources.append(
+            SourceConfig(
+                name=name,
+                fmt=fmt,
+                raw_dir=str(raw / name),
+                rename_map=renames,
+                audit_not_null=[key],
+                audit_unique=[key],
+            )
+        )
+    return PipelineConfig(
+        sources=sources,
+        staging_dir=str(root / "staging"),
+        manifest_path=str(root / "manifest"),
+    )
+
+
+def _summary(rep, name):
+    return (
+        rep.loads[name].new_files,
+        rep.rows[name],
+        [(r.check, r.column, r.violations) for r in rep.audits[name]],
+    )
+
+
+def test_sources_land_concurrently_as_if_alone(spark, tmp_path, jobs_started):
+    """A csv + json + parquet day lands in one run: each source's counts
+    and audits equal landing it alone, the report keeps config order,
+    and the run starts as many jobs as the three single-source runs.
+    The job count also shows that every source thread runs its jobs in
+    the caller's job group."""
+    names = ("call_logs", "social", "web")
+    alone, alone_jobs = {}, 0
+    for name in names:
+        cfg = _three_sources(tmp_path / name, names=(name,))
+        out = []
+        alone_jobs += jobs_started(lambda: out.append(run_pipeline(spark, cfg)))
+        alone[name] = _summary(out[0], name)
+
+    cfg = _three_sources(tmp_path / "all")
+    out = []
+    together_jobs = jobs_started(lambda: out.append(run_pipeline(spark, cfg)))
+    rep = out[0]
+
+    assert list(rep.loads) == list(rep.audits) == list(rep.rows) == list(names)
+    assert {n: _summary(rep, n) for n in names} == alone
+    assert alone["call_logs"][1] == RowCounts(4, 2)
+    assert alone["social"][1] == RowCounts(2, 2)
+    assert alone["web"][1] == RowCounts(5, 3)
+    assert alone["web"][2] == [
+        ("not_null", "request_id", 1),
+        ("unique", "request_id", 0),
+    ]
+    assert together_jobs == alone_jobs > 0
+
+
+def test_a_failed_source_lets_the_others_land(spark, tmp_path):
+    """The middle of three sources fails inside `process` (an audit
+    column its batch lacks). The other two land and are recorded, the
+    failed one writes and records nothing, and the exception re-raises
+    only once every source has finished. Fixed, a re-run loads only the
+    failed source."""
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    from core_telecoms_etl_spark.sources.incremental import (
+        IncrementalLoader,
+        visible_files,
+    )
+
+    broken = _three_sources(tmp_path, social="no_such_column")
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        run_pipeline(spark, broken)
+    staging = tmp_path / "staging"
+    landed = {n: visible_files(str(staging / n)) for n in ("call_logs", "web")}
+    loader = IncrementalLoader(spark, broken.manifest_path)
+    # recorded before the raise: the ledger append is each source's last step
+    assert loader.new_files("call_logs", ["day1.csv"]) == []
+    assert loader.new_files("web", ["day1.parquet"]) == []
+    assert loader.new_files("social", ["day1.json"]) == ["day1.json"]
+    assert not (staging / "social").exists()
+    assert all(landed.values())
+
+    fixed = _three_sources(tmp_path)
+    rep = run_pipeline(spark, fixed)
+    assert {n: r.new_files for n, r in rep.loads.items()} == {
+        "call_logs": [],
+        "social": ["day1.json"],
+        "web": [],
+    }
+    assert list(rep.rows) == ["social"] and rep.audits_passed
+    for name, files in landed.items():
+        assert visible_files(str(staging / name)) == files
+
+
+def test_more_sources_than_cores_each_land_once(spark, tmp_path):
+    """More source threads than Spark has cores, switching often, all
+    appending to one ledger: every source lands its rows once and the
+    ledger holds one row per file."""
+    import sys
+
+    import pyarrow.dataset as ds
+
+    n = spark.sparkContext.defaultParallelism + 2
+    names = [f"s{i:02d}" for i in range(n)]
+    for i, name in enumerate(names):
+        _write(tmp_path / "raw" / name / "day1.csv", f"id,v\n{i},a\n{i},b\n")
+    cfg = PipelineConfig(
+        sources=[
+            SourceConfig(name=name, fmt="csv", raw_dir=str(tmp_path / "raw" / name))
+            for name in names
+        ],
+        staging_dir=str(tmp_path / "staging"),
+        manifest_path=str(tmp_path / "manifest"),
+    )
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        rep = run_pipeline(spark, cfg)
+    finally:
+        sys.setswitchinterval(interval)
+
+    assert list(rep.rows) == names
+    assert all(rep.rows[name] == RowCounts(2, 2) for name in names)
+    ledger = ds.dataset(cfg.manifest_path, format="parquet").to_table()
+    assert sorted(ledger.column("folder_name").to_pylist()) == names
+    for name in names:
+        staged = ds.dataset(str(tmp_path / "staging" / name), format="parquet")
+        assert staged.count_rows() == 2
+
+
+def test_pipeline_runs_without_pinned_threads(spark, tmp_path, monkeypatch):
+    """With PYSPARK_PIN_THREAD=false, `inheritable_thread_target(session)`
+    returns the session itself, not a wrapper; the sources still land."""
+    from core_telecoms_etl_spark import pipeline
+
+    monkeypatch.setattr(pipeline, "inheritable_thread_target", lambda s: s)
+    rep = run_pipeline(spark, _three_sources(tmp_path, names=("call_logs",)))
+    assert rep.rows["call_logs"] == RowCounts(4, 2)
