@@ -54,10 +54,20 @@ from core_telecoms_etl_spark.sources.incremental import (
     LoadReport,
     visible_files,
 )
-from core_telecoms_etl_spark.sources.readers import read_csv, read_json
+from core_telecoms_etl_spark.sources.readers import (
+    read_csv,
+    read_json,
+    read_parquet,
+)
 from core_telecoms_etl_spark.sources.writers import write_parquet
 
-_EXTENSIONS = {"csv": ".csv", "json": ".json", "parquet": ".parquet"}
+# per source format: the raw files' extension, and the batch reader
+# (spark, paths, DDL schema or None); parquet files carry their schema
+_FORMATS: dict[str, tuple[str, Callable[..., DataFrame]]] = {
+    "csv": (".csv", read_csv),
+    "json": (".json", read_json),
+    "parquet": (".parquet", lambda spark, paths, _: read_parquet(spark, paths)),
+}
 
 
 @dataclass(frozen=True)
@@ -78,6 +88,13 @@ class SourceConfig:
     # (quarantine via readers.split_corrupt, abort, or alert).
     audit_not_null: Sequence[str] = ()
     audit_unique: Sequence[str] = ()
+
+    def __post_init__(self) -> None:
+        if self.fmt not in _FORMATS:
+            raise ValueError(
+                f"unknown source format {self.fmt!r}: "
+                f"expected one of {', '.join(_FORMATS)}"
+            )
 
 
 @dataclass(frozen=True)
@@ -128,13 +145,7 @@ class PipelineReport:
 
 def _read(spark: SparkSession, src: SourceConfig, files: list[str]):
     paths = [os.path.join(src.raw_dir, f) for f in files]
-    if src.fmt == "csv":
-        return read_csv(spark, paths, schema=src.schema)
-    if src.fmt == "json":
-        return read_json(spark, paths, schema=src.schema)
-    if src.fmt == "parquet":
-        return spark.read.parquet(*paths)
-    raise ValueError(f"unknown source format {src.fmt!r}")
+    return _FORMATS[src.fmt][1](spark, paths, src.schema)
 
 
 def _audit(
@@ -213,7 +224,7 @@ def _land(
         src.name,
         candidates,
         in_caller_context(process),
-        extensions=(_EXTENSIONS[src.fmt],),
+        extensions=(_FORMATS[src.fmt][0],),
     )
     return load, audits, rows
 
@@ -256,6 +267,12 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
                 loader,
                 src,
                 config.staging_dir,
+                # one context per source, not one shared: each call
+                # clones the caller's local properties once, and every
+                # function its wrapper runs installs that same clone in
+                # its thread, so a shared one would have the sources'
+                # concurrent SQL executions write spark.sql.execution.id
+                # into one object
                 _caller_context(spark),
             )
             for src in config.sources

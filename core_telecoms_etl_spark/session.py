@@ -8,6 +8,16 @@ Settings rationale (100 TB design stance):
 - UTC session timezone so timestamp semantics match the DuckDB oracle and
   are portable across clusters.
 - Arrow enabled for any pandas exchange (toPandas / pandas UDFs).
+- Python workers: every Python task starts with
+  `importlib.invalidate_caches()`, which under CPython 3.11 makes each
+  zip importer on the worker's path re-parse its archive (pyspark.zip,
+  the py4j zip and the 37 MB spark-core jar): ~200 ms per task. The
+  workers come from the engine's own daemon (`_pydaemon`), which
+  re-reads an archive only when its (mtime, size) stamp changed. Spark
+  starts the daemon by module name, so the module must be importable
+  where workers start, or every Python stage fails. The package's
+  parent directory therefore goes on the workers' PYTHONPATH; on a
+  cluster the executors need the engine installed there too.
 """
 
 from __future__ import annotations
@@ -15,6 +25,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package, for the Python workers' path
+_ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -53,6 +66,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.caseSensitive", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "core_telecoms_etl_spark._pydaemon")
+        .config("spark.executorEnv.PYTHONPATH", _ENGINE_ROOT)
     )
     if not os.environ.get("SPARK_MASTER") and "spark.master" not in os.environ:
         # local mode = driver-only JVM; give it real memory, sized to the

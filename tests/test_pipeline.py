@@ -350,6 +350,20 @@ def test_duplicate_source_names_are_rejected(tmp_path):
         )
 
 
+def test_unknown_source_format_is_rejected_at_construction(tmp_path):
+    """Before the config is used: not as a KeyError when its folder is
+    first listed."""
+    import pytest
+
+    for fmt in ("csv", "json", "parquet"):
+        SourceConfig(name="t", fmt=fmt, raw_dir=str(tmp_path))
+    with pytest.raises(
+        ValueError,
+        match="unknown source format 'xml': expected one of csv, json, parquet",
+    ):
+        SourceConfig(name="t", fmt="xml", raw_dir=str(tmp_path))
+
+
 # an exact duplicate, a NULL key and an all-NULL row
 WEB_DAY1 = {
     "request_id": [7, 8, 8, None, None],
