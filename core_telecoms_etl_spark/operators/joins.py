@@ -2,8 +2,8 @@
 broadcast hints, skew salting, and bucketed (co-located) joins.
 
 When to use what — MEASURED on the standing skew corpus (one hot key
-carrying 20% of fact mass; tools/make_skew_testdata.py +
-tools/bench_skew.py, r15; full matrix in BASELINE.md round-15):
+carrying 20% of fact mass, tools/make_skew_testdata.py, r15; full
+matrix in BASELINE.md round-15, "Skewed-key standing corpus"):
 - `broadcast` hint (re-exported): any dim ≲ a few hundred MB — kills the
   shuffle entirely, and with it the skew (no shuffle by key ⇒ no hot
   reducer). When the dim fits, THIS is the skew strategy.
@@ -28,9 +28,10 @@ tools/bench_skew.py, r15; full matrix in BASELINE.md round-15):
   partition partials, not the hot key's rows — so `salted_groupby`
   pays only for aggregates whose partial state does not collapse.
   Deterministic salts — no rand() — so plans are replayable and tests
-  exact; value-identity of every salted path vs the plain plan is
-  asserted on the skew corpus itself (bench_skew + the 210-query
-  differential).
+  exact; value-identity of every salted path and the AQE split vs the
+  plain plan is asserted on a hot key in tier-1
+  (tests/test_joins.py) and on the skew corpus by the 210-query
+  differential.
 - `write_bucketed` + joining two tables bucketed on the same key/count:
   Spark plans a shuffle-free sort-merge join (no Exchange) — the
   pre-partitioning amortizes the shuffle across every downstream join of

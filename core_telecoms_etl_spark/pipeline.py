@@ -18,7 +18,7 @@ What replaces what:
   so the check is a driver-side set difference over the parquet ledger
   and the append is one driver-written parquet file, no Spark job (a
   broadcast anti-join would pull the whole ledger through the driver
-  anyway); distributed DataFrame listings keep the left_anti path.
+  anyway, and reading the new files needs their paths there).
 - per-source rename maps
   (pipeline.py:49-99)              → `SourceConfig.rename_map` applied in
   the cleaning chain.
@@ -258,7 +258,7 @@ def run_pipeline(spark: SparkSession, config: PipelineConfig) -> PipelineReport:
     the failed one is not recorded, and once every source has finished
     the first failure in config order re-raises. The report lists the
     sources in config order."""
-    loader = IncrementalLoader(spark, config.manifest_path)
+    loader = IncrementalLoader(config.manifest_path)
     with ThreadPoolExecutor(max_workers=len(config.sources) or 1) as pool:
         futures = [
             pool.submit(

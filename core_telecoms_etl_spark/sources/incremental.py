@@ -14,17 +14,17 @@ manifest parquet → process only new files → append manifest entries. At
 100 TB the manifest is thousands-to-millions of rows (one per file), always
 tiny relative to data.
 
-For a listing that is already a Python list (the per-batch case:
-`pipeline.run_pipeline` lists each folder with `os.listdir`, and the new
-names must come back to the driver to build read paths) the subtraction
-is a driver-side set difference: `new_files` reads the ledger's two key
-columns with pyarrow and `record` appends one parquet file with pyarrow.
-A Spark anti-join would move no work off the driver — its broadcast side
-already pulls the whole ledger through the driver — and would add two
-jobs plus planning to every call. A distributed `DataFrame` listing keeps
-the Spark path: `new_files_df` left_anti-joins it against the broadcast
-manifest and `record_df` appends with a Spark write. Both paths read and
-write the same parquet ledger.
+The subtraction is a driver-side set difference: `new_files` reads the
+ledger's two key columns with pyarrow and `record` appends one parquet
+file with pyarrow. The listing and the answer live on the driver anyway:
+any read of the new files needs their paths there. A Spark anti-join
+would move no work off the driver — its broadcast side already pulls the
+whole ledger through the driver — and would add two jobs plus planning
+to every call. Ledgers written by earlier versions through Spark (with
+`_SUCCESS` and `.crc` side files) still load: names starting with `.` or
+`_` are skipped, as in Spark's own listing. Where the listing itself is
+too large for the driver, `streaming_incremental_load`'s checkpoint file
+log replaces the ledger.
 
 Crash-safety without a transactional table format: data is written BEFORE the
 manifest entry, so a crash between the two re-processes that batch's files on
@@ -47,15 +47,15 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
+# The ledger as Spark DDL, for auditing it with Spark:
+# `spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)`.
 MANIFEST_SCHEMA = "folder_name string, file_name string, loaded_at timestamp"
 # MANIFEST_SCHEMA as pyarrow writes it. A UTC-adjusted timestamp is
 # isAdjustedToUTC=true in the footer, so a reader that infers the schema
-# (Spark under inferTimestampNTZ) sees TimestampType, as in the files
-# Spark's `record_df` writes, not a conflicting TIMESTAMP_NTZ.
+# (Spark under inferTimestampNTZ) sees TimestampType, as in ledger files
+# Spark wrote, not a conflicting TIMESTAMP_NTZ.
 _ARROW_SCHEMA = pa.schema(
     [
         ("folder_name", pa.string()),
@@ -124,51 +124,8 @@ class IncrementalLoader:
     PROCESSED_FILES ledger (plugins/snowflake_load.py:64-69) as parquet.
     """
 
-    def __init__(self, spark: SparkSession, manifest_path: str) -> None:
-        self.spark = spark
+    def __init__(self, manifest_path: str) -> None:
         self.manifest_path = manifest_path
-
-    def manifest(self) -> DataFrame:
-        """The whole ledger as a Spark DataFrame. A ledger path that does
-        not exist yet is an empty ledger; any other failure (unknown
-        filesystem, unreadable file) raises, because treating it as empty
-        would load every file again."""
-        try:
-            return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.manifest_path)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            return self.spark.createDataFrame([], MANIFEST_SCHEMA)
-
-    def new_files_df(
-        self, folder: str, files: Sequence[str] | DataFrame
-    ) -> DataFrame:
-        """Distributed discovery: candidates ∖ manifest via left_anti
-        (replaces the reference's per-file COUNT(*) ledger probe,
-        plugins/snowflake_load.py:108-121). The manifest side is
-        broadcast — no shuffle of the candidate list. Returns a DataFrame
-        of (folder_name, file_name) whose names never reach the driver:
-        at the millions-of-files end, feed it straight to `record_df` /
-        downstream joins and collect only counts. For a listing that is
-        already a driver-side list, `new_files` is the cheaper path.
-
-        `files` may be a Sequence[str] of names (small case) or a
-        DataFrame with a `file_name` column (e.g. a listing table), which
-        stays distributed end-to-end."""
-        if isinstance(files, DataFrame):
-            cand = files.select(
-                F.lit(folder).alias("folder_name"), "file_name"
-            )
-        else:
-            cand = self.spark.createDataFrame(
-                [(folder, f) for f in files],
-                "folder_name string, file_name string",
-            )
-        return cand.join(
-            F.broadcast(self.manifest()),
-            ["folder_name", "file_name"],
-            "left_anti",
-        )
 
     def new_files(self, folder: str, files: Sequence[str]) -> list[str]:
         """The candidates of `folder` not in the ledger, in input order.
@@ -198,14 +155,6 @@ class IncrementalLoader:
             .to_pylist()
         )
         return [f for f in files if f not in seen]
-
-    def record_df(self, new_df: DataFrame) -> None:
-        """Append manifest entries straight from the (folder_name,
-        file_name) DataFrame — no driver round-trip; the new-file set
-        stays distributed from discovery through commit."""
-        new_df.select("folder_name", "file_name").withColumn(
-            "loaded_at", F.current_timestamp()
-        ).write.mode("append").parquet(self.manifest_path)
 
     def record(self, folder: str, files: Sequence[str]) -> None:
         """Append ledger entries for `files` as one parquet file written

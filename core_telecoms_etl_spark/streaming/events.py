@@ -309,7 +309,8 @@ def first_state_bound_violation(q, max_state_rows: int):
     this scan with `_StateBoundListener`, which observes EVERY
     progress event through the listener bus with no retention bound —
     this function remains the dependency-free post-hoc check for
-    replayed histories (tools/stream_state_probe.py)."""
+    replayed histories (the sf10 replays in BASELINE.md round-13,
+    "Streaming state at the decade")."""
     for p in q.recentProgress:
         for so in p.get("stateOperators") or []:
             total = int(so.get("numRowsTotal") or 0)
@@ -597,9 +598,9 @@ def run_stream_stream_join(
     the watermark is sized to real lateness — a missing or
     decade-wide watermark marches join state with stream LIFETIME
     (both buffered sides never evict; measured marching to the full
-    delivered row count on the sf10 churn corpus,
-    tools/stream_state_probe.py MODE=interval). The cap checks
-    numRowsTotal per micro-batch through the same
+    delivered row count on the sf10 churn corpus, BASELINE.md
+    round-15 "Stream-stream interval join at the sf10 decade"). The
+    cap checks numRowsTotal per micro-batch through the same
     listener+sampler+scan triple and raises at the earliest over-cap
     batch naming the watermark as the escalation path.
     """

@@ -69,10 +69,14 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
     commit (instructions in tools/plan_fingerprints.py). Because the
     live side is computed HERE, at test time, a change landing at any
     point in the round — before or after the rotation commit — fails
-    this test until the query is given a head slot."""
+    this test until the query is given a head slot. The base must also
+    name a commit this branch descends from: a base taken from a commit
+    that is not an ancestor of HEAD (or unknown to git) compares against
+    plans this branch never had."""
     import importlib.util
     import json
     import os
+    import subprocess
 
     from core_telecoms_etl_spark import queries as q
 
@@ -92,6 +96,16 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert meta["sf_dir"] == sf_dir, (meta["sf_dir"], sf_dir)
     assert meta["shuffle_partitions"] == n_shuffle, (meta, n_shuffle)
+    ancestry = subprocess.run(
+        ["git", "merge-base", "--is-ancestor", meta["commit"], "HEAD"],
+        cwd=os.path.dirname(base_path),
+        capture_output=True,
+        text=True,
+    )
+    assert ancestry.returncode == 0, (
+        f"fingerprint base commit {meta['commit']!r} is not an ancestor of "
+        f"HEAD: {ancestry.stderr.strip() or 'not an ancestor'}"
+    )
 
     fp_path = os.path.join(
         os.path.dirname(__file__), "..", "tools", "plan_fingerprints.py"
@@ -192,3 +206,31 @@ def test_window_head_rotation():
         f"are outside this head — next round's window (50 slots minus "
         f"new/changed) cannot absorb them: {sorted(due_next)}"
     )
+
+
+def test_cited_tools_exist():
+    """Every `tools/<name>.py` that the engine, the tools, README.md,
+    SCALING.md or the verify notes cite exists, so a deleted tool
+    cannot leave a dangling how-to behind. Records of past rounds
+    (BASELINE.md, OPTIMIZATION_r*.md, VERDICT.md, CHANGES.md,
+    ROADMAP.md) name tools as they were then and are not scanned."""
+    import glob
+    import os
+    import re
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    scanned = (
+        glob.glob(f"{root}/core_telecoms_etl_spark/**/*.py", recursive=True)
+        + glob.glob(f"{root}/tools/*.py")
+        + [
+            f"{root}/{p}"
+            for p in ("README.md", "SCALING.md", ".claude/skills/verify/SKILL.md")
+        ]
+    )
+    missing = set()
+    for path in scanned:
+        with open(path, encoding="utf-8") as f:
+            for name in re.findall(r"tools/(\w+)\.py", f.read()):
+                if not os.path.exists(f"{root}/tools/{name}.py"):
+                    missing.add((os.path.relpath(path, root), name))
+    assert not missing, sorted(missing)

@@ -470,7 +470,7 @@ def test_a_failed_source_lets_the_others_land(spark, tmp_path):
         run_pipeline(spark, broken)
     staging = tmp_path / "staging"
     landed = {n: visible_files(str(staging / n)) for n in ("call_logs", "web")}
-    loader = IncrementalLoader(spark, broken.manifest_path)
+    loader = IncrementalLoader(broken.manifest_path)
     # recorded before the raise: the ledger append is each source's last step
     assert loader.new_files("call_logs", ["day1.csv"]) == []
     assert loader.new_files("web", ["day1.parquet"]) == []

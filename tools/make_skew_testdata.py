@@ -16,9 +16,9 @@ corpus. Here `orders.o_custkey` and `events.user_id` each send ~20% of
 fact mass to key 0 (hot-key skew_ratio ≈ 0.2·n_keys — ~300× at sf0.01,
 the "one whale customer / one bot user" shape every production fact
 table grows), so the full differential sweep exercises every
-orders-per-customer and events-per-user path under real skew, and
-`tools/bench_skew.py` times plain vs salted vs AQE-skew-split on the
-same corpus.
+orders-per-customer and events-per-user path under real skew. The
+plain vs salted vs AQE-skew-split timings on this corpus are in
+BASELINE.md round-15.
 
 Hot value 0 EXISTS on the dimension side: this synthetic testdata is
 0-based (min c_custkey = min user_id = 0, unlike 1-based TPC-H), so the
