@@ -116,7 +116,7 @@ def exact_dedup_rows(
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc, shingles) with token + shingle arrays materialized in their own
     projections — keeps Catalyst from re-inlining the tokenizer into every
-    downstream reference (see word_shingles PERF note).
+    downstream reference (see shingles_of PERF note).
 
     EXPLODE CAVEAT (found by the r11 minhash profile): a plain
     `F.explode(shingles)` directly over this relation triggers
@@ -137,23 +137,6 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     ).filter(F.size("__toks") >= n)
     return toks.select(
         "doc", shingles_of(F.col("__toks"), n).alias("shingles")
-    )
-
-
-def shingle_postings(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3
-) -> DataFrame:
-    """(id, shingle, n_shingles) exploded inverted index over distinct word
-    n-grams. Docs with < n tokens carry no shingles and drop out."""
-    # explode_outer + isNotNull: see _shingled's EXPLODE CAVEAT
-    return (
-        _shingled(df, id_col, text_col, n)
-        .select(
-            "doc",
-            F.size("shingles").alias("n_shingles"),
-            F.explode_outer("shingles").alias("shingle"),
-        )
-        .filter(F.col("shingle").isNotNull())
     )
 
 

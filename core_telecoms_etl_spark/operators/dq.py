@@ -23,7 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -118,14 +118,6 @@ def run_checks(
     return [
         DQResult(r.check_name, r.column_name, int(r.violations)) for r in rows
     ]
-
-
-def violations_df(spark: SparkSession, results: Sequence[DQResult]) -> DataFrame:
-    """Materialize check results as a DataFrame (for the declared queries)."""
-    return spark.createDataFrame(
-        [(r.check, r.column, r.violations) for r in results],
-        "check_name string, column_name string, violations bigint",
-    )
 
 
 def profile_columns(

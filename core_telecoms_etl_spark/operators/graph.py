@@ -16,11 +16,10 @@ Scale notes: labels/edges shuffle on node id each iteration; at 100 TB
 `localCheckpoint` becomes `checkpoint` to an HDFS dir (it exists to cut
 the exponentially-growing join lineage either way). Min-label propagation
 converges in O(diameter) rounds — fine for near-dup cliques (diameter
-2-3), slow for long chains; `connected_components_star` below implements
-the large-star/small-star algorithm (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14), which converges in
-O(log n) rounds and keeps per-round state proportional to the edge set —
-the big-component / high-diameter escalation path.
+2-3), slow for long chains. The large-star/small-star algorithm (Kiveris
+et al., "Connected Components in MapReduce and Beyond", SoCC'14)
+converges in O(log n) rounds and would be the escalation path for big
+components and long chains; it is not built.
 """
 
 from __future__ import annotations
@@ -102,92 +101,6 @@ def connected_components(
         if changed:
             return labels
     raise RuntimeError(f"connected_components: no convergence in {max_iter} iterations")
-
-
-def _large_star(e: DataFrame) -> DataFrame:
-    """Connect every neighbor strictly larger than u to the minimum of
-    u's closed neighborhood. Cuts long chains toward the component min."""
-    nbrs = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    m = (
-        nbrs.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", "u").alias("mu"))
-    )
-    return (
-        nbrs.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("a"), F.col("mu").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Orient edges large→small, then link every smaller neighbor (and u
-    itself) to u's minimum neighbor — flattens local trees into stars."""
-    oriented = e.select(
-        F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-    )
-    m = oriented.groupBy("u").agg(F.min("v").alias("mn"))
-    linked = oriented.join(m, "u").select(
-        F.col("v").alias("a"), F.col("mn").alias("b")
-    )
-    self_link = m.select(F.col("u").alias("a"), F.col("mn").alias("b"))
-    return (
-        linked.unionByName(self_link)
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-
-def connected_components_star(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 30,
-) -> DataFrame:
-    """(node, component) via alternating large-star/small-star rounds
-    (Kiveris et al., SoCC'14). Same contract as `connected_components`
-    (component = min reachable node id) but O(log n) rounds instead of
-    O(diameter) — the escalation path for big components and long chains
-    that min-label propagation walks one hop per round.
-
-    Each round is two grouped aggregations over the current edge set; the
-    edge set only shrinks toward the star forest, so per-round shuffle
-    volume is bounded by the input edge count."""
-    nodes = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .transform(_ckpt)
-    )
-    e = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(_ckpt)
-    )
-    for _ in range(max_iter):
-        new_e = _ckpt(_small_star(_large_star(e)))
-        converged = (
-            new_e.exceptAll(e).isEmpty() and e.exceptAll(new_e).isEmpty()
-        )
-        e = new_e
-        if converged:
-            # star forest: every edge is (child, root); roots label themselves
-            return nodes.join(
-                e.select(F.col("a").alias("node"), F.col("b").alias("root")),
-                "node",
-                "left",
-            ).select(
-                "node", F.coalesce("root", F.col("node")).alias("component")
-            )
-    raise RuntimeError(
-        f"connected_components_star: no convergence in {max_iter} iterations"
-    )
 
 
 def pagerank(

@@ -32,11 +32,11 @@ matrix in BASELINE.md round-15, "Skewed-key standing corpus"):
   plain plan is asserted on a hot key in tier-1
   (tests/test_joins.py) and on the skew corpus by the 210-query
   differential.
-- `write_bucketed` + joining two tables bucketed on the same key/count:
-  Spark plans a shuffle-free sort-merge join (no Exchange) — the
-  pre-partitioning amortizes the shuffle across every downstream join of
-  the same key, the co-located-join workhorse for repeatedly-joined 100 TB
-  fact tables.
+- `writers.write_table(bucket_by=...)` + joining two tables bucketed on
+  the same key/count: Spark plans a shuffle-free sort-merge join (no
+  Exchange) — the pre-partitioning amortizes the shuffle across every
+  downstream join of the same key, the co-located-join workhorse for
+  repeatedly-joined 100 TB fact tables.
 """
 
 from __future__ import annotations
@@ -50,7 +50,6 @@ __all__ = [
     "salt_column",
     "salted_join",
     "salted_groupby",
-    "write_bucketed",
 ]
 
 
@@ -111,22 +110,3 @@ def salted_groupby(
         final_aggs.append(F.sum("__cnt").alias("n"))
     final_aggs += [F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sums]
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    *,
-    bucket_cols: list[str],
-    n_buckets: int = 8,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table. Two
-    tables bucketed on the same columns with the same bucket count join
-    WITHOUT a shuffle (and without even a sort, when sorted on the key) —
-    verified by the plan test."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)

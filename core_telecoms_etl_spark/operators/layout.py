@@ -10,10 +10,10 @@ participating column's values locally contiguous, so a conjunctive
 box predicate prunes on all of them at once (Morton, 1966; the same
 space-filling-curve trick as Bayer's UB-tree).
 
-Everything here is pure JVM expression work (shift/and/or chains inside
-whole-stage codegen) plus ONE 1-row min/max aggregate broadcast back —
-no UDFs, no extra shuffle beyond the range partition the rewrite needs
-anyway.
+This module holds the key builders: pure JVM expression work
+(shift/and/or chains inside whole-stage codegen), no UDFs. The
+`zorder_locality` query uses them to report the footer tightness a
+Z-ordered rewrite would reach; the rewrite itself is not built.
 
 Reference scope note: the reference pipeline loads snapshots ordered by
 ingest time only (`plugins/snowflake_load.py`); layout optimization is
@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -60,58 +60,3 @@ def normalize_minmax(
     return F.floor(
         ((col - cmin).cast("long") * F.lit(1 << bits)) / span
     ).cast("long")
-
-
-def zorder_by(
-    df: DataFrame,
-    col_a: str,
-    col_b: str,
-    *,
-    bits: int = 8,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Rewrite `df` clustered on the Morton key of two integer columns:
-    range-partition + sort by the interleaved key, so a subsequent
-    parquet write gets tight per-file min/max footers on BOTH columns.
-
-    Plan: one 1-row global min/max aggregate (broadcast back via a
-    1-row cross join — 32 bytes), the pure-codegen key expression,
-    then ONE range-partition exchange (sampling pass included, as any
-    ordered rewrite pays) and an in-partition sort. At 100 TB this is
-    the standard table-maintenance job shape: no shuffle beyond the
-    one the rewrite itself is, and the written files prune
-    multiplicatively on conjunctive predicates (measured in
-    tests/test_layout.py: a 2-D box predicate touches a strict subset
-    of the files a 1-D sorted layout touches)."""
-    bounds = df.agg(
-        F.min(col_a).cast("long").alias("__amin"),
-        F.max(col_a).cast("long").alias("__amax"),
-        F.min(col_b).cast("long").alias("__bmin"),
-        F.max(col_b).cast("long").alias("__bmax"),
-    )
-    keyed = df.crossJoin(F.broadcast(bounds)).withColumn(
-        "__zkey",
-        interleave_bits(
-            normalize_minmax(
-                F.col(col_a).cast("long"),
-                F.col("__amin"),
-                F.col("__amax"),
-                bits=bits,
-            ),
-            normalize_minmax(
-                F.col(col_b).cast("long"),
-                F.col("__bmin"),
-                F.col("__bmax"),
-                bits=bits,
-            ),
-            bits=bits,
-        ),
-    )
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    return (
-        keyed.repartitionByRange(int(parts), "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey", "__amin", "__amax", "__bmin", "__bmax")
-    )

@@ -23,32 +23,12 @@ itself ~10⁸ rows, so no candidate generator can make the job small: the
 OUTPUT is quadratic-ish on this corpus. The production posture is the
 same as the near-dup family's: (1) choose a COMPOUND block key whose
 cardinality scales with N so per-block mass stays bounded —
-`fuzzy_pairs_segmented` below is the built-in arm (base block ×
-modular-projection segments, a pigeonhole scheme); (2) pass
+`fuzzy_pairs_deletion` below is the built-in arm (base block ×
+deletion-neighborhood keys, lossless for every edit mix); (2) pass
 `max_block_pairs` so an under-blocked run RAISES with the measured mass
 and the dominant block instead of grinding for hours — the estimate is
 one metadata-scale count aggregate over the block relation, the same
 loud-failure contract as `dedup.incremental_dedup(max_candidates=…)`.
-
-WHY MODULAR PROJECTIONS, NOT CONTIGUOUS SEGMENTS: classic PassJoin
-splits the string into k+1 contiguous segments (≤k edits leave one
-untouched → block on its value). On ID-shaped names
-("Customer#000012345") the head segment is near-constant — its value
-blocks degenerate to the whole corpus and the scheme buys nothing.
-Segment i = the characters at positions ≡ i (mod k+1) instead: the
-pigeonhole argument is unchanged for SUBSTITUTIONS (≤k substituted
-positions touch ≤k residue classes, so one projection is untouched),
-and every projection samples the high-entropy tail digits, so block
-values stay selective no matter where the entropy sits in the string.
-The trade: ANY insertion or deletion misaligns the residue classes
-past the edit point — a single-insert pair ("jon smith" vs
-"john smith", lev=1), a head deletion, and the equal-length
-shift pairs (delete a leading zero, append a digit) can all be
-missed. Only pure-SUBSTITUTION recall is exact by construction;
-total recall is MEASURED against the exact arm and carried as a flag
-(the ANN family's contract), not assumed. When length-changing edits
-matter — they usually do for human-typed names — use
-`fuzzy_pairs_deletion`, which is lossless for every edit mix.
 """
 
 from __future__ import annotations
@@ -305,206 +285,6 @@ def fuzzy_pairs_deletion(
     dist = F.levenshtein("name_a", "name_b", max_dist)
     return cand.withColumn("edit_dist", dist).filter(
         F.col("edit_dist") >= 0
-    )
-
-
-def modular_segment(name: Column | str, i: int, s: int) -> Column:
-    """Projection segment i of s: the characters of `name` at 1-based
-    positions i+1, i+1+s, i+1+2s, … concatenated in order. NULL when
-    the name is NULL or shorter than i+1 characters (a NULL segment
-    equi-joins with nothing — short names simply fall out of that
-    projection's blocking pass, mirroring the oracle's CASE guard)."""
-    c = F.col(name) if isinstance(name, str) else name
-    return F.when(
-        F.length(c) >= 1 + i,
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(1 + i), F.length(c), F.lit(s)),
-                lambda p: F.substring(c, p, F.lit(1)),
-            ),
-            "",
-        ),
-    )
-
-
-def fuzzy_pairs_segmented(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_col: str,
-    *,
-    max_dist: int = 2,
-    normalize: bool = False,
-    max_block_pairs: int | None = None,
-) -> DataFrame:
-    """Compound-key arm of `fuzzy_pairs`: candidates come from equality
-    on (block_col, projection index, modular projection value) — see
-    the module docstring for the pigeonhole argument — then every
-    candidate pair is verified with the same bounded levenshtein, so
-    kept pairs are never wrong. Same output schema as `fuzzy_pairs`
-    (id_a < id_b, name_a, name_b, edit_dist).
-
-    Cost: each record emits max_dist+1 blocking rows; the join runs on
-    the compound key, whose cardinality grows with the data (distinct
-    projection values), so per-block mass stays bounded where the base
-    block alone walls out. Measured on the sequential-name corpus at
-    the sf10 decade: the nation block admits 4.5e10 comparisons, the
-    compound key ~1e9.
-
-    RECALL CONTRACT (module docstring): exact ONLY for
-    pure-substitution pairs — at every length, including names shorter
-    than max_dist+1, which ride the constant short-class fallback key
-    below (r14 ADVICE: without it the pigeonhole has fewer than s
-    residue classes to spare and the claim silently failed for short
-    names; empty names never paired at all). Any insertion/deletion
-    (length-changing OR equal-length shift) can still be missed —
-    measured 94.4% total recall at sf0.01 on the fixed-length corpus,
-    whose misses are all shift pairs. This arm is the cheap screen;
-    `fuzzy_pairs_deletion` is the lossless production path and the
-    declared query.
-
-    `max_block_pairs` guards the compound key's own collision mass
-    (Σ over compound blocks of C(n,2), multiplicity across the s
-    projections included — that is the join work): estimated from the
-    block-count table before the join, raising with the dominant block,
-    the same loud contract as `fuzzy_pairs`."""
-    s = max_dist + 1
-    name = canonicalize(name_col) if normalize else F.col(name_col)
-    # rebalance before the projection explode (see fuzzy_pairs_deletion)
-    n_par = df.sparkSession.sparkContext.defaultParallelism
-    df = df.repartition(n_par)
-    # Fallback blocking row for names SHORTER than s = max_dist+1
-    # (r14 ADVICE): residue classes past the string length yield NULL
-    # segments, so a length-≤max_dist name can have EVERY surviving
-    # projection touched by substitutions (pigeonhole needs s classes)
-    # and empty names emit no key at all — even identical ones never
-    # paired. Any two names of length ≤ max_dist are trivially within
-    # max_dist substitutions of each other, so one constant key
-    # (_seg_i = s, disjoint from the real projections by index) blocks
-    # the whole short class together per base block; the exact verify
-    # decides. Short names are rare by definition, so the C(n,2) mass
-    # this admits is negligible — and the pure-substitution exactness
-    # claim now holds at EVERY length (equal-length short pairs share
-    # the fallback; a short/long pair can't be pure-substitution).
-    # NULL names still fall out: length(NULL) < s is NULL → no row.
-    fallback = F.when(F.length(name) < s, F.lit(""))
-    proj = df.select(
-        F.col(id_col).alias("_id"),
-        name.alias("_name"),
-        F.col(block_col).alias("_blk0"),
-        F.posexplode(
-            F.array(
-                *[modular_segment(name, i, s) for i in range(s)],
-                fallback,
-            )
-        ).alias("_seg_i", "_seg"),
-    ).filter(F.col("_seg").isNotNull())
-    if max_block_pairs is not None:
-        # pin before the guard's .first() — see fuzzy_pairs_deletion
-        from core_telecoms_etl_spark.caching import cache_scoped
-
-        proj = cache_scoped("linkage.segmented.proj", proj)
-        _block_mass_guard(
-            proj,
-            ["_blk0", "_seg_i", "_seg"],
-            max_block_pairs,
-            "fuzzy_pairs_segmented",
-            "the name distribution collapses the projections "
-            "(near-constant names). Add another blocking dimension "
-            "or raise max_block_pairs.",
-        )
-    a = proj.select(
-        F.col("_id").alias("id_a"),
-        F.col("_name").alias("name_a"),
-        "_blk0",
-        "_seg_i",
-        "_seg",
-    )
-    b = proj.select(
-        F.col("_id").alias("id_b"),
-        F.col("_name").alias("name_b"),
-        "_blk0",
-        "_seg_i",
-        "_seg",
-    )
-    cand = (
-        a.join(b, ["_blk0", "_seg_i", "_seg"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # a pair agreeing on several projections appears once per
-        # agreement — dedupe BEFORE the (more expensive) verify
-        .select("id_a", "id_b", "name_a", "name_b")
-        .distinct()
-    )
-    dist = F.levenshtein("name_a", "name_b", max_dist)
-    return cand.withColumn("edit_dist", dist).filter(
-        F.col("edit_dist") >= 0
-    )
-
-
-def fuzzy_pairs_auto(
-    df: DataFrame,
-    id_col: str,
-    name_col: str,
-    block_col: str,
-    *,
-    max_dist: int = 2,
-    normalize: bool = False,
-    exact_mass_budget: int = 100_000_000,
-    max_block_pairs: int | None = None,
-) -> DataFrame:
-    """Route between the plain blocked join and the deletion arm on the
-    MEASURED base-block comparison mass — the `auto_topk` convention
-    (route on what the data says, not on what the caller guessed). The
-    estimate is the same metadata-scale block-count aggregate the
-    tripwires use (one tiny job); below `exact_mass_budget` the plain
-    arm wins on constants (no 172-way neighborhood build, no candidate
-    dedupe shuffle), above it the deletion arm's sub-wall candidate
-    mass dominates. Default crossover 1e8: measured on the
-    sequential-name corpus the plain arm clears 4.5e8 comparisons in
-    ~28 s on 32 cores (~16M cmp/s/core·s) while the deletion arm's
-    fixed cost is ~8 s at the same scale, so 1e8 (~6 s plain) is the
-    indifference point with a safety margin on the wall side. Both
-    routes return the identical pair set (the deletion arm is lossless
-    — `deletion_keys` theorem), so routing never changes results, only
-    the plan; `max_block_pairs` passes through to BOTH routes (the
-    plain arm's fixed-B tripwire, the deletion arm's collapse guard) —
-    the caller's budget contract holds whichever way the router
-    goes.
-
-    max_dist > 2 always takes the plain arm: the deletion route only
-    supports k ∈ {1, 2} (`deletion_keys` raises — |neighborhood| is
-    O(L^k)), and routing into a ValueError above the mass budget would
-    make the router's BEHAVIOR depend on measured mass for the same
-    arguments (r14 ADVICE). The plain arm still carries the caller's
-    `max_block_pairs` tripwire, so an over-mass run fails loud with
-    the measured count, not a k-constraint error."""
-    if max_dist > 2:
-        return fuzzy_pairs(
-            df, id_col, name_col, block_col,
-            max_dist=max_dist, normalize=normalize,
-            max_block_pairs=max_block_pairs,
-        )
-    row = (
-        df.groupBy(F.col(block_col).alias("_blk"))
-        .agg(F.count("*").alias("_n"))
-        .agg(
-            F.sum(
-                F.col("_n").cast("decimal(38,0)") * (F.col("_n") - 1) / 2
-            ).alias("_m")
-        )
-        .first()
-    )
-    mass = int(row["_m"] or 0)
-    if mass <= exact_mass_budget:
-        return fuzzy_pairs(
-            df, id_col, name_col, block_col,
-            max_dist=max_dist, normalize=normalize,
-            max_block_pairs=max_block_pairs,
-        )
-    return fuzzy_pairs_deletion(
-        df, id_col, name_col, block_col,
-        max_dist=max_dist, normalize=normalize,
-        max_block_pairs=max_block_pairs,
     )
 
 

@@ -1,36 +1,21 @@
 """Multimodal-column plumbing (north-star requirement).
 
 Image/audio/video payloads are opaque `binary` columns with typed metadata.
-The Spark-side plumbing — schemas, Arrow-batched UDF signatures, partition
-sizing — is real and tested. Codecs are injected (callable or registered
-name): the default stub raises `NotImplementedError` loudly (no image/audio
-libraries ship in this container), while `ppm_decoder`/`ppm_resizer` are
-REAL pure-Python codecs for binary PPM (P6) that exercise the non-stub
-path end-to-end; swap in PIL/libvips via the same hook on a cluster image.
+`binary_metadata` derives what a pipeline needs to route and audit them
+(byte length, content digest) on the JVM side, so no payload bytes cross
+into Python. No codec ships with the engine: no image or audio library is
+part of its dependencies.
 
 Scale notes:
 - Binary payloads ride in parquet with metadata columns alongside; filters
   on metadata (mime, n_bytes) prune row groups WITHOUT touching payload
   bytes (columnar projection).
-- Decode/feature steps run via mapInPandas so each Arrow batch amortizes
-  Python transfer; `maxRecordsPerBatch` bounds memory for fat payloads.
-- Repartition by payload size-bucket before decode to even out task cost.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-MEDIA_SCHEMA = (
-    "media_id long, mime string, payload binary, "
-    "width int, height int, duration_ms long"
-)
-
-DECODED_SCHEMA = "media_id long, mime string, n_bytes long, feature array<double>"
 
 
 def binary_metadata(
@@ -43,237 +28,3 @@ def binary_metadata(
         F.length(F.col(payload_col)).cast("long").alias("n_bytes"),
         F.sha2(F.col(payload_col), 256).alias("payload_sha256"),
     )
-
-
-def decode_image_stub(payload: bytes) -> list[float]:
-    """Codec stub — replace with a real decoder (PIL/libvips) on a cluster
-    image. Raises so pipelines fail loudly rather than fake results."""
-    raise NotImplementedError(
-        "image decoding requires an image library not present in this "
-        "container; inject a decoder via decode_features(decoder=...)"
-    )
-
-
-def deterministic_fake_decoder(payload: bytes) -> list[float]:
-    """Test decoder: 4 deterministic moments of the raw bytes."""
-    if not payload:
-        return [0.0, 0.0, 0.0, 0.0]
-    n = float(len(payload))
-    s = float(sum(payload))
-    mx = float(max(payload))
-    mn = float(min(payload))
-    return [n, s / n, mx, mn]
-
-
-def _parse_ppm(payload: bytes) -> tuple[int, int, int, bytes]:
-    """Parse a binary-PPM (P6) header — magic, width, height, maxval,
-    with `#` comments — and return (width, height, maxval, pixel_bytes).
-    Pure header arithmetic; no image library."""
-    if payload[:2] != b"P6":
-        raise ValueError("not a P6 PPM payload")
-    tokens: list[int] = []
-    i = 2
-    while len(tokens) < 3:
-        while i < len(payload) and payload[i : i + 1].isspace():
-            i += 1
-        if payload[i : i + 1] == b"#":  # comment runs to end of line
-            while i < len(payload) and payload[i : i + 1] != b"\n":
-                i += 1
-            continue
-        j = i
-        while j < len(payload) and not payload[j : j + 1].isspace():
-            j += 1
-        tokens.append(int(payload[i:j]))
-        i = j
-    i += 1  # single whitespace byte after maxval, then raw RGB
-    width, height, maxval = tokens
-    pixels = payload[i : i + 3 * width * height]
-    if len(pixels) != 3 * width * height:
-        raise ValueError("truncated PPM pixel data")
-    return width, height, maxval, pixels
-
-
-def ppm_decoder(payload: bytes) -> list[float]:
-    """REAL codec (pure Python, no external library): decodes binary PPM
-    (P6) images into [width, height, mean_r, mean_g, mean_b]. Exercises
-    the same inject-a-decoder path a PIL/libvips codec would use on a
-    cluster image — header struct parse + per-channel pixel math."""
-    width, height, _, pixels = _parse_ppm(payload)
-    n = width * height
-    sums = [0, 0, 0]
-    for p in range(n):
-        base = 3 * p
-        sums[0] += pixels[base]
-        sums[1] += pixels[base + 1]
-        sums[2] += pixels[base + 2]
-    return [
-        float(width),
-        float(height),
-        sums[0] / n,
-        sums[1] / n,
-        sums[2] / n,
-    ]
-
-
-def ppm_resizer(payload: bytes, w: int, h: int) -> bytes:
-    """REAL resizer (pure Python): nearest-neighbor resample of a P6 PPM
-    to w×h, re-emitting a valid P6 payload."""
-    sw, sh, maxval, pixels = _parse_ppm(payload)
-    out = bytearray(f"P6\n{w} {h}\n{maxval}\n".encode())
-    for y in range(h):
-        sy = min(sh - 1, (y * sh) // h)
-        for x in range(w):
-            sx = min(sw - 1, (x * sw) // w)
-            base = 3 * (sy * sw + sx)
-            out += pixels[base : base + 3]
-    return bytes(out)
-
-
-
-
-def decode_features(
-    df: DataFrame,
-    *,
-    id_col: str = "media_id",
-    mime_col: str = "mime",
-    payload_col: str = "payload",
-    decoder: str | Callable[[bytes], list[float]] = decode_image_stub,
-    batch_size_hint: int = 256,
-) -> DataFrame:
-    """Arrow-batched decode → feature extraction via mapInPandas.
-
-    The UDF signature, output schema, and batch iteration are the
-    production shape; only `decoder` is environment-specific — pass a
-    callable or a registered codec name (see DECODERS, e.g. "ppm")."""
-    decoder = resolve_decoder(decoder)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "mime": pdf[mime_col],
-                    "n_bytes": pdf[payload_col].map(
-                        lambda b: 0 if b is None else len(b)
-                    ),
-                    "feature": pdf[payload_col].map(
-                        lambda b: decoder(bytes(b) if b is not None else b"")
-                    ),
-                }
-            )
-            yield out
-
-    return df.mapInPandas(run, schema=DECODED_SCHEMA)
-
-
-def frame_sample_plan(
-    df: DataFrame,
-    *,
-    every_ms: int = 1000,
-    duration_col: str = "duration_ms",
-) -> DataFrame:
-    """Video frame-sampling plumbing: expand each clip into (media_id,
-    frame_ts_ms) rows JVM-side; the per-frame decode then rides
-    decode_features. Pure sequence/explode — no Python."""
-    return df.withColumn(
-        "frame_ts_ms",
-        F.explode(
-            F.sequence(
-                F.lit(0), F.col(duration_col) - 1, F.lit(every_ms)
-            )
-        ),
-    )
-
-
-RESIZED_SCHEMA = "media_id long, mime string, width int, height int, payload binary"
-
-
-def resize_images(
-    df: DataFrame,
-    *,
-    target: tuple[int, int] = (224, 224),
-    id_col: str = "media_id",
-    mime_col: str = "mime",
-    payload_col: str = "payload",
-    resizer: str | Callable[[bytes, int, int], bytes] | None = None,
-) -> DataFrame:
-    """Arrow-batched image resize via mapInPandas — the standard
-    pre-embedding normalization step. The codec is injected (`resizer`);
-    without one this raises NotImplementedError per batch, loudly (no
-    image library ships in this container). The Spark-side shape —
-    batch iteration, output schema with the new dimensions, binary
-    passthrough — is the production plumbing. `resizer` accepts a
-    callable or a registered codec name (see RESIZERS, e.g. "ppm")."""
-    if resizer is not None:
-        resizer = resolve_resizer(resizer)
-    tw, th = target
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if resizer is None:
-                raise NotImplementedError(
-                    "image resizing requires an image library not present "
-                    "in this container; inject resize_images(resizer=...)"
-                )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col],
-                    "mime": pdf[mime_col],
-                    "width": tw,
-                    "height": th,
-                    "payload": pdf[payload_col].map(
-                        lambda b: resizer(
-                            bytes(b) if b is not None else b"", tw, th
-                        )
-                    ),
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def deterministic_fake_resizer(payload: bytes, w: int, h: int) -> bytes:
-    """Test resizer: truncate/pad the byte stream to w*h bytes — keeps the
-    batch plumbing honest (output size depends on the target dims)."""
-    need = w * h
-    if not payload:
-        return b"\x00" * need
-    return (payload * (need // len(payload) + 1))[:need]
-
-
-# name → codec, for configuration-driven injection: a pipeline config can
-# name the codec ("ppm") instead of importing a callable.
-DECODERS: dict[str, Callable[[bytes], list[float]]] = {
-    "fake": deterministic_fake_decoder,
-    "ppm": ppm_decoder,
-}
-RESIZERS: dict[str, Callable[[bytes, int, int], bytes]] = {
-    "fake": deterministic_fake_resizer,
-    "ppm": ppm_resizer,
-}
-
-
-def resolve_decoder(
-    decoder: str | Callable[[bytes], list[float]],
-) -> Callable[[bytes], list[float]]:
-    if callable(decoder):
-        return decoder
-    try:
-        return DECODERS[decoder]
-    except KeyError:
-        raise ValueError(
-            f"unknown decoder {decoder!r}; registered: {sorted(DECODERS)}"
-        ) from None
-
-
-def resolve_resizer(
-    resizer: str | Callable[[bytes, int, int], bytes],
-) -> Callable[[bytes, int, int], bytes]:
-    if callable(resizer):
-        return resizer
-    try:
-        return RESIZERS[resizer]
-    except KeyError:
-        raise ValueError(
-            f"unknown resizer {resizer!r}; registered: {sorted(RESIZERS)}"
-        ) from None

@@ -119,31 +119,38 @@ def pack_sequences(
     Same two-level prefix-sum shape as `deterministic_shuffle`, summing
     token counts instead of row counts."""
     keyed, w = _grouped_order(df, id_col, salt, n_groups)
-    # The derived-totals identity below (max of running sum = group
-    # total) requires every token count to be non-negative; a negative
-    # count (bad upstream data) would silently corrupt packing offsets,
-    # so the contract is ENFORCED per row, not just documented: the
-    # guarded branch raises mid-job instead of mispacking (ADVICE r15).
-    # NULL counts pass through (skipped by sum, exactly as before).
-    _tc = F.when(
-        F.col(token_count_col) < 0,
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    f"pack_sequences: negative {token_count_col} "
-                    "violates the non-negative token-count contract: "
-                ),
-                F.col(token_count_col).cast("string"),
-            )
-        ).cast("long"),
-    ).otherwise(F.col(token_count_col))
-    keyed = keyed.withColumn("__cum", F.sum(_tc).over(w))
-    # max of the running sum = the group's token total (token counts
-    # are non-negative — enforced above — so __cum is non-decreasing
-    # within the group; NULL counts are skipped by both forms). Same
+    keyed = keyed.withColumn("__cum", F.sum(token_count_col).over(w))
+    # max of the running sum = the group's token total, because token
+    # counts are non-negative, so __cum is non-decreasing within the
+    # group (NULL counts are skipped by both forms). Same
     # single-evaluation / single-exchange rationale as
     # deterministic_shuffle above.
-    totals = keyed.groupBy("__grp").agg(F.max("__cum").alias("__t"))
+    totals = keyed.groupBy("__grp").agg(
+        F.max("__cum").alias("__t"), F.min(token_count_col).alias("__min")
+    )
+    # A negative count (bad upstream data) would break that identity and
+    # silently corrupt the packing offsets, so the contract is ENFORCED,
+    # not just documented (ADVICE r15): the group's min count rides the
+    # G-row totals aggregate and raises there. Checked on the G-row side,
+    # one stage owns the failure and the running-sum window stays
+    # branch-free. NULL counts pass (a NULL min is no violation).
+    totals = totals.select(
+        "__grp",
+        F.when(
+            F.col("__min") < 0,
+            F.raise_error(
+                F.concat(
+                    F.lit(
+                        f"pack_sequences: negative {token_count_col} "
+                        "violates the non-negative token-count contract: "
+                    ),
+                    F.col("__min").cast("string"),
+                )
+            ).cast("long"),
+        )
+        .otherwise(F.col("__t"))
+        .alias("__t"),
+    )
     # the G-row offsets prefix sum IS meant to run single-partition (G ≪ N);
     # partition on pmod(__grp, 1) — constantly 0 but not constant-foldable —
     # so WindowExec doesn't emit its "No Partition Defined" warning for a

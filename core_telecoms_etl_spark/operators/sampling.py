@@ -29,20 +29,6 @@ def hash_bucket(
     return F.pmod(h, F.lit(n_buckets))
 
 
-def deterministic_sample(
-    df: DataFrame,
-    id_col: str,
-    fraction: float,
-    *,
-    salt: str = "",
-) -> DataFrame:
-    """Keep ≈fraction of rows, stably: a row's membership depends only on
-    its id and the salt. Pushes down as an ordinary filter — no RNG state,
-    no per-partition seeds."""
-    n = 1_000_000
-    return df.filter(hash_bucket(id_col, n, salt) < int(fraction * n))
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -205,7 +191,7 @@ def weighted_sample_k(
     A-ES): each row draws key = u^(1/w) with u ∈ (0,1]; the k largest
     keys are an exact weight-proportional sample without replacement —
     the data-mixing primitive (sample documents ∝ quality/importance)
-    that uniform `deterministic_sample` cannot express.
+    that a uniform `hash_bucket` filter cannot express.
 
     Deterministic and retry-stable: u derives from md5(salt:id) (never
     `rand()`), so the same corpus + salt always draws the same sample,

@@ -135,14 +135,10 @@ def conformant_vectors(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
     )
 
 
-def cosine_expr(a: Column | str, b: Column | str) -> Column:
-    return dot_expr(a, b) / F.sqrt(norm2_expr(a) * norm2_expr(b))
-
-
 def cosine_from_norms(dot: Column, n2_a: Column, n2_b: Column) -> Column:
     """cosine given a precomputed dot product and squared norms.
 
-    Identical expression tree to `cosine_expr` (dot / sqrt(n²a·n²b)) but
+    The plain cosine expression tree (dot / sqrt(n²a·n²b)), but it
     lets callers hoist the O(dim) norm folds out of pairwise scoring:
     computed once per row below the join instead of once per pair above
     it. On an N×Q scoring join this cuts the fold count from 2·N·Q to
@@ -563,7 +559,7 @@ def cosine_pairs_arrow_rounded6(
     a = _collect_side(
         df, id_col=id_col, vec_col=vec_col, rounded=True,
         what="cosine_pairs_arrow_rounded6",
-        escalation="minhash-LSH / ivf_topk / semantic_dedup",
+        escalation="minhash-LSH / ivf_topk / cluster_assign_topn blocking",
         max_rows=max_collect_rows,
     )
     if a is None:
@@ -1067,77 +1063,6 @@ def cluster_assign_topn(
         .filter(F.col("__rn") <= n_assign)
         .select(id_col, "centroid_id")
     )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_clusters: int = 16,
-    n_assign: int = 2,
-    threshold: float = 0.4,
-    kmeans_iters: int = 2,
-) -> DataFrame:
-    """SemDeDup-style embedding near-dup removal (Abbas et al. 2023,
-    arXiv:2303.09540 — public method): cluster the embedding space,
-    compare cosine ONLY within shared clusters, connect pairs at or
-    above `threshold` into duplicate components, keep the lowest id per
-    component. Returns the KEPT rows of `df`, all columns.
-
-    Scale shape: the all-pairs O(n²) scoring collapses to Σ(cluster
-    size²) — with balanced clusters, n²/C — and the comparisons run as
-    an equi-join on centroid_id, never a cartesian. Everything is
-    deterministic (RNG-free kmeans, id tie-breaks), so the kept set is
-    reproducible across runs and cluster sizes. Blocking recall is data
-    dependent (uniform synthetic embeddings are the worst case —
-    measured floors live in the declared query + pytest); raise
-    `n_assign` or `n_clusters`' probe ratio to buy recall."""
-    assign = cluster_assign_topn(
-        df,
-        id_col=id_col,
-        vec_col=vec_col,
-        n_clusters=n_clusters,
-        n_assign=n_assign,
-        kmeans_iters=kmeans_iters,
-    )
-    a = assign.select(F.col(id_col).alias("id_a"), "centroid_id")
-    b = assign.select(F.col(id_col).alias("id_b"), "centroid_id")
-    cand = (
-        a.join(b, "centroid_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    va = df.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("__va"),
-        norm2_expr(vec_col).alias("__na"),
-    )
-    vb = df.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("__vb"),
-        norm2_expr(vec_col).alias("__nb"),
-    )
-    edges = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn(
-            "__cos",
-            cosine_from_norms(
-                dot_expr("__va", "__vb"), F.col("__na"), F.col("__nb")
-            ),
-        )
-        .filter(F.col("__cos") >= threshold)
-        .select("id_a", "id_b")
-    )
-    from core_telecoms_etl_spark.operators.graph import connected_components
-
-    comps = connected_components(edges, src="id_a", dst="id_b")
-    drop = comps.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(drop, id_col, "left_anti")
 
 
 def quantize_vectors(

@@ -49,9 +49,15 @@ def bpe_ish_token_count(col: Column | str) -> Column:
 
 def shingles_of(tokens_col: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from an ALREADY-MATERIALIZED token
-    array column; empty array for docs with < n tokens. Callers must
-    project the token array into its own column first (see `word_shingles`
-    note).
+    array column; empty array for docs with < n tokens.
+
+    PERF: callers must project `tokens()` into its own column first.
+    Passing the tokenizer expression straight in inlines its subtree
+    into every element_at reference; when the expression fans out
+    (explode, per-seed hashing), Catalyst keeps a multiply-referenced
+    non-trivial alias materialized, so projecting the tokens first
+    turns an O(tokens²) re-evaluation into O(tokens) (7× on the
+    documents table).
 
     Total expression by construction: codegen subexpression elimination
     can evaluate a pushed-down predicate's subtree EAGERLY (bypassing AND
@@ -65,18 +71,6 @@ def shingles_of(tokens_col: Column, n: int = 3) -> Column:
     return F.when(F.size(t) >= n, F.array_distinct(win)).otherwise(
         F.array().cast("array<string>")
     )
-
-
-def word_shingles(col: Column | str, n: int = 3) -> Column:
-    """Distinct word n-gram shingles — the unit of near-dup detection.
-    Requires ≥ n tokens (callers filter shorter docs).
-
-    PERF: this inlines the tokenizer subtree into every element_at
-    reference; when the expression fans out (explode, per-seed hashing),
-    project `tokens()` into a column first and use `shingles_of` — Catalyst
-    keeps a multiply-referenced non-trivial alias materialized, turning an
-    O(tokens²) re-evaluation into O(tokens) (7× on the documents table)."""
-    return shingles_of(tokens(col), n)
 
 
 def marker_hits(col: Column | str, markers: list[str]) -> Column:
@@ -315,7 +309,7 @@ def chunk_documents(
     chunks (stride = chunk_size - overlap).
 
     All JVM-side: tokenize once (materialized projection, see
-    `word_shingles` PERF note), build the start-index array with
+    `shingles_of` PERF note), build the start-index array with
     `sequence`, slice per start, `posexplode` into rows. A doc with
     ≤ chunk_size tokens yields exactly one chunk; the tail chunk may be
     short. Returns (id, chunk_id, chunk_text, n_chunk_tokens); the

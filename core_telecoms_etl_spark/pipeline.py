@@ -85,7 +85,7 @@ class SourceConfig:
     # `dbt test` post-load too). Column names refer to post-rename
     # names; a name the cleaned batch lacks raises before anything is
     # written. Violations are REPORTED, not fatal — the caller decides
-    # (quarantine via readers.split_corrupt, abort, or alert).
+    # (quarantine, abort, or alert).
     audit_not_null: Sequence[str] = ()
     audit_unique: Sequence[str] = ()
 
@@ -120,10 +120,6 @@ class RowCounts:
 
     read: int
     written: int
-
-    @property
-    def dropped(self) -> int:
-        return self.read - self.written
 
 
 @dataclass

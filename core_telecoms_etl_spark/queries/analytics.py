@@ -1831,11 +1831,11 @@ def _morton_sql(a: str, b: str, bits: int = 8) -> str:
 )
 def zorder_locality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering report — the layout-maintenance diagnostic
-    behind `operators/layout.py::zorder_by` (the OPTIMIZE ZORDER
-    analog): events mapped onto the Morton curve of (user_id, value),
-    curve split into 64 equal key ranges (the file boundaries a
-    z-ordered rewrite would produce), and per range the min/max span
-    of BOTH normalized dimensions — exactly the parquet footer
+    for a Z-ordered rewrite (the OPTIMIZE ZORDER analog; the rewrite
+    itself is not built): events mapped onto the Morton curve of
+    (user_id, value), curve split into 64 equal key ranges (the file
+    boundaries a z-ordered rewrite would produce), and per range the
+    min/max span of BOTH normalized dimensions — exactly the parquet footer
     tightness that decides multi-dimensional data skipping. Every
     bucket's spans sit near 1/8 of each dimension (√64 cells per
     axis), where a 1-D sort would show one tight dimension and the

@@ -266,15 +266,16 @@ _SEMDEDUP_ORACLE = f"""SELECT (SELECT count(*) FROM embeddings
 @query("semantic_dedup", oracle=_SEMDEDUP_ORACLE)
 def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup blocking audit — the deterministic projection for the
-    embedding-cluster dedup operator (sim.semantic_dedup, which drops
-    all but one of each within-cluster duplicate component): counts the
-    exact global cosine-pair relation at the dedup threshold and flags
+    embedding-cluster dedup step (drop all but one of each
+    within-cluster duplicate component): counts the exact global
+    cosine-pair relation at the dedup threshold and flags
     that the cluster blocking (kmeans k=16, top-4 multi-assignment)
     covers ≥ 80% of it. Synthetic near-uniform embeddings are the
     blocking worst case — measured coverage 0.95–1.0 across
     sf0.001/0.01/0.1 at top-4 (top-2, the clustered-corpus default,
     bottoms at 0.60 on this data); the floor sits under every
-    measurement. The kept-rows path itself is pytest-covered."""
+    measurement. The kept-rows step itself is not built as an
+    operator."""
     e = _load_conformant(spark, sf_dir)
     n_vectors = e.count()
     # exact global pair relation through the Arrow all-pairs scorer

@@ -7,11 +7,9 @@ plugins/postgres_extract.py:138-144, both single-process).
 Design: `partitions()` returns one InputPartition per page, so Spark
 schedules one task per page across the cluster — the paginator loop the
 reference ran on one thread becomes an N-way parallel scan. `read(part)`
-is the only per-page code; swapping the synthetic page generator for a
-real HTTP/gspread/JDBC page fetch changes nothing structurally.
-
-The synthetic backend is deterministic from (page, row) so tests are
-exact; no network dependency ships in the harness.
+is the only per-page code, an HTTP GET of one page of JSON rows over
+stdlib urllib, so no client library ships with the engine. The tests
+serve the pages from a local HTTP server.
 """
 
 from __future__ import annotations
@@ -22,48 +20,6 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
-
-
-class _Page(InputPartition):
-    def __init__(self, page: int, page_size: int):
-        self.page = page
-        self.page_size = page_size
-
-
-class PaginatedAPIReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self.n_rows = int(options.get("n_rows", 1000))
-        self.page_size = int(options.get("page_size", 100))
-
-    def partitions(self):
-        n_pages = (self.n_rows + self.page_size - 1) // self.page_size
-        return [_Page(p, self.page_size) for p in range(n_pages)]
-
-    def read(self, partition: _Page):
-        # stand-in for one page fetch (HTTP GET / sheet range read);
-        # deterministic from (page, row) so results are test-exact
-        start = partition.page * partition.page_size
-        end = min(start + partition.page_size, self.n_rows)
-        for i in range(start, end):
-            yield (i, f"record_{i}", float(i) * 1.5, partition.page)
-
-
-class PaginatedAPIDataSource(DataSource):
-    """spark.read.format("paginated_api").option("n_rows", ...).load()"""
-
-    @classmethod
-    def name(cls) -> str:
-        return "paginated_api"
-
-    def schema(self) -> str:
-        return "id long, name string, score double, page int"
-
-    def reader(self, schema: StructType) -> PaginatedAPIReader:
-        return PaginatedAPIReader(schema, self.options)
-
-
-def register(spark) -> None:
-    spark.dataSource.register(PaginatedAPIDataSource)
 
 
 class _HttpPage(InputPartition):
@@ -148,9 +104,9 @@ class _PlainAuth:
 
 
 class HttpJsonApiReader(DataSourceReader):
-    """Real-transport variant of the paginated reader: each partition
-    performs an actual HTTP GET (`{url}?page=N&page_size=M`) and parses
-    a `{"rows": [{...}, ...]}` JSON body — the Google-Sheets-values /
+    """Paginated JSON reader: each partition performs one HTTP GET
+    (`{url}?page=N&page_size=M`) and parses a `{"rows": [{...}, ...]}`
+    JSON body — the Google-Sheets-values /
     REST-extract shape (reference: gspread get_all_records at
     plugins/google_sheets.py:76-77 and the boto3 paginator at
     plugins/customerload.py:50-73, both driver-side loops). One

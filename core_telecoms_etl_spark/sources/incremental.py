@@ -22,9 +22,9 @@ would move no work off the driver — its broadcast side already pulls the
 whole ledger through the driver — and would add two jobs plus planning
 to every call. Ledgers written by earlier versions through Spark (with
 `_SUCCESS` and `.crc` side files) still load: names starting with `.` or
-`_` are skipped, as in Spark's own listing. Where the listing itself is
-too large for the driver, `streaming_incremental_load`'s checkpoint file
-log replaces the ledger.
+`_` are skipped, as in Spark's own listing. A listing too large for the
+driver would need a checkpointed file-source stream instead of the
+ledger; that variant is not built.
 
 Crash-safety without a transactional table format: data is written BEFORE the
 manifest entry, so a crash between the two re-processes that batch's files on
@@ -47,7 +47,6 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
 
 # The ledger as Spark DDL, for auditing it with Spark:
 # `spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)`.
@@ -243,50 +242,3 @@ class IncrementalLoader:
                 )
             )
         return report
-
-
-def streaming_incremental_load(
-    spark: SparkSession,
-    src_dir: str,
-    dest_dir: str,
-    checkpoint_dir: str,
-    *,
-    schema: str,
-    fmt: str = "csv",
-    transform: Callable[[DataFrame], DataFrame] | None = None,
-    options: dict[str, str] | None = None,
-) -> int:
-    """The Spark-NATIVE incremental loader (SURVEY.md §1.5(b)): a
-    file-source readStream with Trigger.AvailableNow — the checkpoint's
-    file log replaces the manifest table entirely, exactly-once per file
-    comes from the streaming commit protocol, and the run returns when
-    all currently-available files are processed (batch-job ergonomics).
-
-    Use this when the destination is file/Delta-like and the cleaning is
-    per-row (foreachBatch applies `transform` to each micro-batch).
-    The manifest `IncrementalLoader` remains for sinks that need custom
-    commit coordination or human-auditable load ledgers.
-
-    Returns the number of micro-batches executed in this run."""
-    reader = spark.readStream.format(fmt).schema(schema)
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    stream = reader.load(src_dir)
-    n_batches = 0
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal n_batches
-        n_batches += 1
-        out = transform(batch_df) if transform else batch_df
-        out.write.mode("append").parquet(dest_dir)
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return n_batches

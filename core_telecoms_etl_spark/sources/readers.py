@@ -60,41 +60,6 @@ def read_parquet(spark: SparkSession, path: str | list[str]) -> DataFrame:
     return spark.read.parquet(*paths)
 
 
-def read_parquet_evolving(
-    spark: SparkSession,
-    path: str | list[str],
-    *,
-    target_schema: T.StructType | str | None = None,
-) -> DataFrame:
-    """Schema-drift-tolerant folder scan: a year of daily appends rarely
-    keeps one schema (columns get added, retired, reordered by upstream
-    producers — the reference's daily CSVs drift the same way and its
-    pandas path silently unions on position). `mergeSchema=true` takes
-    the union of all file schemas, with files missing a column reading
-    typed NULLs for it.
-
-    With `target_schema` the result additionally CONFORMS: extra columns
-    drop, missing columns appear as typed NULLs, and matching names cast
-    to the target type — so downstream plans never break on a drifted
-    folder. Footer-merging costs one extra metadata pass at planning
-    time, not a data pass; pushdown and pruning are unaffected."""
-    from pyspark.sql import functions as F
-
-    paths = [path] if isinstance(path, str) else list(path)
-    df = spark.read.option("mergeSchema", "true").parquet(*paths)
-    if target_schema is None:
-        return df
-    if isinstance(target_schema, str):
-        target_schema = T.StructType.fromDDL(target_schema)
-    cols = []
-    for field in target_schema.fields:
-        if field.name in df.columns:
-            cols.append(F.col(field.name).cast(field.dataType))
-        else:
-            cols.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*cols)
-
-
 def read_csv(
     spark: SparkSession,
     path: str | list[str],
@@ -136,55 +101,6 @@ def read_json(
             reader = reader.option(k, v)
     paths = [path] if isinstance(path, str) else list(path)
     return reader.json(paths)
-
-
-def read_orc(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """ORC columnar scan — the other columnar warehouse interchange
-    format (Hive/Trino ecosystems). Spark ships the reader natively;
-    predicate pushdown and column pruning work as for parquet, so a
-    user migrating an ORC lake keeps the same query surface."""
-    paths = [path] if isinstance(path, str) else list(path)
-    return spark.read.orc(*paths)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str | list[str],
-    *,
-    row_tag: str = "row",
-    schema=None,
-) -> DataFrame:
-    """XML scan (Spark 4 ships the former spark-xml package natively):
-    one row per `row_tag` element, schema inferred unless given — the
-    B2B/telco interchange format (TMF payloads, settlement files)
-    that CSV/JSON sources don't cover. Schema inference costs an
-    extra pass, so production readers should pass `schema`. Avro is
-    jar-gated (`spark-avro` is an external module) — see `read_avro`
-    for the guarded wrapper with an actionable error."""
-    paths = [path] if isinstance(path, str) else list(path)
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(paths)
-
-
-def read_text(
-    spark: SparkSession,
-    path: str | list[str],
-    *,
-    whole_text: bool = False,
-    line_col: str = "value",
-) -> DataFrame:
-    """Raw text scan: one row per line (or per FILE with
-    `whole_text=True` — the shape for ingesting a directory of raw
-    documents into the `documents`-style table). Lines arrive in the
-    single string column `line_col`; downstream structure is the
-    engine's text operators, not the reader."""
-    paths = [path] if isinstance(path, str) else list(path)
-    df = spark.read.text(paths, wholetext=whole_text)
-    if line_col != "value":
-        df = df.withColumnRenamed("value", line_col)
-    return df
 
 
 def read_jdbc(
@@ -508,114 +424,3 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
     return tuple(load_table(spark, sf_dir, n) for n in names)
 
 
-def read_json_permissive(
-    spark: SparkSession,
-    path: str | list[str],
-    schema: T.StructType | str,
-    *,
-    corrupt_col: str = "_corrupt_record",
-) -> DataFrame:
-    """JSON scan that CAPTURES malformed records instead of failing the
-    job (PERMISSIVE + corrupt-record column): at 100 TB a single bad line
-    must not kill a multi-hour load, and silently dropping it loses the
-    audit trail. Callers split on `corrupt_col IS NULL` — clean rows to
-    staging, bad lines to a quarantine sink. The schema must declare the
-    corrupt column (string) alongside the data fields."""
-    if isinstance(schema, str):
-        if corrupt_col not in schema:
-            schema = f"{schema}, {corrupt_col} string"
-    elif corrupt_col not in schema.fieldNames():
-        schema = schema.add(corrupt_col, T.StringType())
-    return (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .schema(schema)
-        .json(path if isinstance(path, list) else [path])
-    )
-
-
-def split_corrupt(
-    df: DataFrame, corrupt_col: str = "_corrupt_record"
-) -> tuple[DataFrame, DataFrame]:
-    """(clean_rows_without_corrupt_col, quarantine_rows). One lazy plan
-    each. The quarantine side keeps ALL columns: Spark disallows plans
-    that reference ONLY the internal corrupt-record column of a raw scan
-    (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN), and the parsed
-    fragments are useful for triage anyway."""
-    from pyspark.sql import functions as F
-
-    clean = df.filter(F.col(corrupt_col).isNull()).drop(corrupt_col)
-    quarantine = df.filter(F.col(corrupt_col).isNotNull())
-    return clean, quarantine
-
-
-def avro_available(spark: SparkSession) -> bool:
-    """True when the 'avro' data source resolves on this session.
-
-    Probes Spark's OWN `DataSource.lookupDataSource` (the exact
-    resolution `spark.read.format("avro")` runs) rather than
-    Class.forName: the pyspark distribution ships some
-    `org.apache.spark.sql.avro` classes without registering the
-    provider, so a class-presence check false-positives.
-
-    Only the lookup's own Java failure (provider not found) maps to
-    False; anything else — a Connect session with no `_jvm`, the
-    internal reflection path moving in a future Spark — PROPAGATES
-    rather than being misreported as 'jar missing' forever."""
-    try:
-        jvm = spark._jvm
-    except AttributeError as exc:  # Spark Connect: no JVM bridge
-        raise RuntimeError(
-            "avro_available requires a classic (JVM-bridged) "
-            "SparkSession; on Spark Connect probe the server with "
-            'spark.read.format("avro") directly.'
-        ) from exc
-    from py4j.protocol import Py4JJavaError
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        jvm.org.apache.spark.sql.execution.datasources.DataSource.lookupDataSource(
-            "avro", spark._jsparkSession.sessionState().conf()
-        )
-        return True
-    except (Py4JJavaError, AnalysisException):
-        # pyspark's gateway hook converts the Java FAILED_TO_FIND_
-        # DATA_SOURCE failure into AnalysisException; both spellings
-        # mean 'provider not found'. Anything else propagates.
-        return False
-
-
-_AVRO_HINT = (
-    "spark-avro is not on the classpath. Start the session with "
-    "--packages org.apache.spark:spark-avro_2.13:{v} (or add the jar "
-    "to spark.jars) and retry. Avro support is an external Spark "
-    "module and cannot be bundled by this engine."
-)
-
-
-def require_avro(spark: SparkSession) -> None:
-    """Shared guard for read_avro/write_avro: one maintained message."""
-    if not avro_available(spark):
-        raise RuntimeError(_AVRO_HINT.format(v=spark.version))
-
-
-def read_avro(
-    spark: SparkSession, path: str | list[str], *, schema=None
-) -> DataFrame:
-    """Avro scan, guarded: spark-avro is an EXTERNAL Spark module
-    (`org.apache.spark:spark-avro_2.13:<spark-version>`), so without
-    the jar this raises a RuntimeError naming the exact --packages
-    coordinate instead of Spark's opaque 'Failed to find data source:
-    avro' AnalysisException deep in a job. With the jar present it is
-    a plain columnar scan — predicate pushdown and column pruning
-    work as for parquet (Avro is row-major, so pruning saves decode,
-    not IO; prefer parquet for analytics at rest, Avro for Kafka/
-    interchange). The last mainstream lake format gap from SURVEY
-    §2.1 S14 (VERDICT r6 item 6)."""
-    require_avro(spark)
-    paths = [path] if isinstance(path, str) else list(path)
-    r = spark.read.format("avro")
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(paths)

@@ -43,24 +43,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_orc(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "append",
-    partition_by: Sequence[str] | None = None,
-    normalize: bool = True,
-) -> None:
-    """ORC sink — symmetric with `readers.read_orc` for Hive/Trino
-    interchange; same name-normalization and partition-folder semantics
-    as `write_parquet`."""
-    out = normalize_column_names(df) if normalize else df
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
-
-
 def write_table(
     df: DataFrame,
     name: str,
@@ -85,53 +67,3 @@ def write_table(
     writer.saveAsTable(name)
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    *,
-    mode: str = "overwrite",
-    compression: str | None = "gzip",
-    partition_by: Sequence[str] | None = None,
-    normalize: bool = True,
-) -> None:
-    """JSON-Lines export sink — the interchange format trainer-side data
-    loaders consume. Spark's json writer IS jsonl (one object per line,
-    one file per partition); gzip by default since text JSONL is ~10×
-    parquet. Columns normalize like every other sink so the exported
-    keys are stable lower_snake_case."""
-    out = normalize_column_names(df) if normalize else df
-    writer = out.write.mode(mode)
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.json(path)
-
-
-def write_xml(
-    df,
-    dest: str,
-    *,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "errorifexists",
-) -> None:
-    """XML sink (native in Spark 4) — the export half of the B2B
-    interchange path; one `row_tag` element per row under
-    `root_tag`, one file per partition like every Spark sink."""
-    (
-        df.write.format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .mode(mode)
-        .save(dest)
-    )
-
-
-def write_avro(df: DataFrame, path: str, *, mode: str = "error") -> None:
-    """Avro sink, guarded exactly like `readers.read_avro` — the shared
-    `require_avro` raises the one maintained actionable message."""
-    from core_telecoms_etl_spark.sources.readers import require_avro
-
-    require_avro(df.sparkSession)
-    df.write.format("avro").mode(mode).save(path)

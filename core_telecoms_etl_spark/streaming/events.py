@@ -684,132 +684,6 @@ def run_stream_stream_join(
     return spark.table(query_name)
 
 
-def run_stream_windowed_append(
-    spark: SparkSession,
-    events_dir: str,
-    *,
-    width: str = "15 minutes",
-    watermark: str = "30 minutes",
-    max_files_per_trigger: int = 1,
-    query_name: str = "stream_append_out",
-) -> DataFrame:
-    """Watermarked tumbling aggregation in APPEND mode over a directory of
-    event files: each file is a micro-batch (maxFilesPerTrigger=1), the
-    watermark advances between batches, and only windows fully below the
-    watermark are emitted — the late-data policy a production stream needs
-    (late rows beyond the watermark are dropped, not silently wrong).
-
-    Returns the emitted (closed) windows. On a cluster the sink is a
-    parquet/Delta append with checkpointing; the memory sink here is the
-    local harness shape."""
-    from core_telecoms_etl_spark.sources.readers import (
-        ensure_session_confs,
-        normalize_timestamps,
-    )
-
-    # nanos opt-in: events_dir is the harness events table (nanos `ts`,
-    # rewritten back to timestamp below via normalize_timestamps)
-    ensure_session_confs(spark, nanos_as_long=True)
-    raw_schema = spark.read.parquet(events_dir).schema
-    stream = normalize_timestamps(
-        spark.readStream.format("parquet")
-        .schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .load(events_dir),
-        nanos_bigint_cols=("ts",),
-    ).withWatermark("ts", watermark)
-    agg = (
-        stream.groupBy(F.window("ts", width), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .select(
-            F.col("window.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "value_sum",
-        )
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
-def run_stream_upsert(
-    spark: SparkSession,
-    src_dir: str,
-    target_dir: str,
-    *,
-    key_cols: list[str],
-    version_col: str,
-    schema: str | None = None,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Streaming CDC-apply: maintain a keyed table under `target_dir` by
-    MERGE-upserting every micro-batch (`foreachBatch` + operators/scd.py
-    upsert — updates win over target, highest version wins inside a
-    batch).
-
-    Plain parquet has no transactional row updates, so each batch writes
-    the merged relation to a staging folder and atomically renames over
-    the target (the same logical op is MERGE INTO on Delta/Iceberg — this
-    runner is the portable fallback). With a checkpoint dir the apply is
-    exactly-once across restarts: re-delivered batches re-merge
-    idempotently (same keys, same versions ⇒ same survivors)."""
-    import os
-    import shutil
-
-    from core_telecoms_etl_spark.operators.scd import upsert
-    from core_telecoms_etl_spark.sources.readers import ensure_session_confs
-
-    ensure_session_confs(spark)
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        if os.path.isdir(target_dir):
-            merged = upsert(
-                s.read.parquet(target_dir),
-                batch,
-                key_cols=key_cols,
-                version_col=version_col,
-            )
-        else:
-            merged = upsert(
-                batch.limit(0), batch, key_cols=key_cols,
-                version_col=version_col,
-            )
-        staging = f"{target_dir}__stage_{batch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        old = f"{target_dir}__old_{batch_id}"
-        if os.path.isdir(target_dir):
-            os.rename(target_dir, old)
-        os.rename(staging, target_dir)
-        if os.path.isdir(old):
-            shutil.rmtree(old)
-
-    reader = spark.readStream.format("parquet")
-    if schema:
-        reader = reader.schema(schema)
-    stream = reader.option("maxFilesPerTrigger", 1).load(src_dir)
-    writer = stream.writeStream.foreachBatch(apply_batch)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.trigger(availableNow=True).start()
-    try:
-        q.awaitTermination()
-    finally:
-        q.stop()
-
-
 def run_stream_dedup(
     spark: SparkSession,
     path: str,

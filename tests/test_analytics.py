@@ -12,7 +12,6 @@ from core_telecoms_etl_spark.operators.funnel import (
 )
 from core_telecoms_etl_spark.operators.sampling import (
     dataset_split,
-    deterministic_sample,
     hash_bucket,
 )
 
@@ -70,6 +69,10 @@ def test_hash_bucket_stable_and_salted(spark):
     assert a.exceptAll(b).isEmpty()  # identical across evaluations
     salted = df.select("id", hash_bucket("id", 100, salt="v2").alias("b"))
     assert not a.exceptAll(salted).isEmpty()  # salt changes assignment
+    # buckets are uniform: the lowest 20% of them hold ≈20% of ids
+    ids = spark.range(10_000)
+    n = ids.filter(hash_bucket("id", 1_000_000) < 200_000).count()
+    assert abs(n - 2000) < 300  # within ~4σ of the binomial
 
 
 def test_dataset_split_partitions_everything_once(spark):
@@ -86,12 +89,6 @@ def test_dataset_split_partitions_everything_once(spark):
     t_small = {r.id for r in s.filter("split = 'train'").collect()}
     t_big = {r.id for r in bigger.filter("split = 'train'").collect()}
     assert t_small <= t_big
-
-
-def test_deterministic_sample_fraction(spark):
-    df = spark.range(10_000)
-    n = deterministic_sample(df, "id", 0.2).count()
-    assert abs(n - 2000) < 300  # within ~4σ of the binomial
 
 
 def test_sample_exact_k_is_exact_stable_and_heap_based(spark):
@@ -175,15 +172,17 @@ def test_upsert_updates_win_and_inserts_append(spark):
         [(1, "a", 1), (2, "b", 1)], "id long, v string, ver long"
     )
     updates = spark.createDataFrame(
-        [(2, "B", 2), (3, "c", 1)], "id long, v string, ver long"
+        # a stale update of key 1 loses to the target; inside the batch
+        # the highest version of key 3 wins
+        [(2, "B", 2), (3, "c0", 0), (3, "c", 1), (1, "a_stale", 0)],
+        "id long, v string, ver long",
     )
-    out = {
-        r.id: r.v
-        for r in upsert(
-            target, updates, key_cols=["id"], version_col="ver"
-        ).collect()
-    }
+    merged = upsert(target, updates, key_cols=["id"], version_col="ver")
+    out = {r.id: r.v for r in merged.collect()}
     assert out == {1: "a", 2: "B", 3: "c"}
+    # re-applying the same batch changes nothing
+    again = upsert(merged, updates, key_cols=["id"], version_col="ver")
+    assert {r.id: r.v for r in again.collect()} == out
 
 
 def test_upsert_same_version_update_wins(spark):

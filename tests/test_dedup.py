@@ -58,8 +58,9 @@ def test_jaccard_pairs_finds_near_dup(spark):
 
 
 def test_jaccard_short_docs_excluded(spark):
-    post = dd.shingle_postings(_docs(spark), "doc_id", "text", 3)
-    assert post.filter(F.col("doc") == 4).count() == 0
+    shingled = dd._shingled(_docs(spark), "doc_id", "text", 3)
+    assert shingled.filter(F.col("doc") == 4).count() == 0
+    assert shingled.filter(F.col("doc") == 0).count() == 1
 
 
 def test_minhash_estimates_match_exact(spark):
@@ -248,6 +249,8 @@ def test_connected_components_chain_and_islands(spark):
         r.node: r.component for r in connected_components(edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10}
+    # an empty edge set converges at once to no components
+    assert connected_components(edges.limit(0)).collect() == []
 
 
 def test_connected_components_star_shape(spark):
@@ -264,18 +267,30 @@ def test_connected_components_star_shape(spark):
     assert set(out.values()) == {1}
 
 
-def test_large_small_star_matches_min_label_on_random_graphs(spark):
-    """Property check: the O(log n) large-star/small-star variant computes
-    byte-identical components to min-label propagation on seeded random
-    graphs ≥1k nodes, including the shapes that stress each algorithm
-    (sparse forest of many components; a long chain, worst case for
-    min-label; plus a dense-ish blob)."""
+def test_connected_components_matches_union_find_on_random_graphs(spark):
+    """Property check: min-label propagation computes the same
+    components as a plain union-find on seeded random graphs ≥1k nodes,
+    including the shapes that stress it (sparse forest of many
+    components; a long chain, its worst case; plus a dense-ish blob)."""
     import random
 
-    from core_telecoms_etl_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
+    from core_telecoms_etl_spark.operators.graph import connected_components
+
+    def union_find(pairs):
+        parent = {}
+
+        def root(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = root(a), root(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)
+        return {x: root(x) for x in parent}
 
     rng = random.Random(42)
     cases = []
@@ -294,18 +309,13 @@ def test_large_small_star_matches_min_label_on_random_graphs(spark):
     )
 
     for i, raw in enumerate(cases):
-        edges = spark.createDataFrame(
-            [(a, b) for a, b in raw if a != b], "src long, dst long"
-        )
-        ml = {
+        pairs = [(a, b) for a, b in raw if a != b]
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        got = {
             r.node: r.component
             for r in connected_components(edges, max_iter=200).collect()
         }
-        ls = {
-            r.node: r.component
-            for r in connected_components_star(edges).collect()
-        }
-        assert ml == ls, f"case {i}: mismatch"
+        assert got == union_find(pairs), f"case {i}: mismatch"
 
 
 def test_decontaminate_drops_overlapping_train_docs(spark):

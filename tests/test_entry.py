@@ -234,3 +234,104 @@ def test_cited_tools_exist():
                 if not os.path.exists(f"{root}/tools/{name}.py"):
                     missing.add((os.path.relpath(path, root), name))
     assert not missing, sorted(missing)
+
+
+# Engine entry points that nothing in the engine, the tools or the
+# benchmark calls, kept because each reproduces a source or step of the
+# reference pipeline (PAPER.md §0). The guard below treats them as roots,
+# so the helpers they call need no entry of their own.
+_PG = "Postgres web-complaint extract (plugins/postgres_extract.py)"
+_SHEET = "agents Google-Sheet extract (plugins/google_sheets.py)"
+_KEPT_UNCALLED = {
+    "read_jdbc": _PG,
+    "list_jdbc_tables_query": _PG,
+    "jdbc_columns_query": _PG,
+    "pg_schema_from_columns": _PG,
+    "read_rows": _SHEET,
+    "register_http": _SHEET,
+    "run_star_dq": "post-load `dbt test` on the star models",
+}
+
+
+def test_every_engine_definition_has_a_caller():
+    """Every top-level function or class in the engine is reachable from
+    non-test code, or is a `_KEPT_UNCALLED` reference entry point, so
+    code that only tests call cannot pile up.
+
+    Roots: the `@query` functions, each engine module's module-level
+    statements (imports included, except the `sources/__init__.py`
+    re-exports), `__spark_entry__.py`, `bench.py`, the non-test
+    perfbench modules, `tools/*.py` and the `_KEPT_UNCALLED` entries.
+    A definition is reachable when its name appears in reachable code
+    as a Name, as the attribute of a Name (`module.name`) or as an
+    import alias; docstrings and comments do not count. Names are
+    matched without their module, so a dead definition that shares its
+    name with a live one passes."""
+    import ast
+    import glob
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    engine = os.path.join(root, "core_telecoms_etl_spark")
+    reexports = os.path.join(engine, "sources", "__init__.py")
+    defs_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+    def parse(path):
+        with open(path, encoding="utf-8") as f:
+            return ast.parse(f.read(), path)
+
+    def names_in(node):
+        out = set()
+        for n in ast.walk(node):
+            if isinstance(n, ast.Name):
+                out.add(n.id)
+            elif isinstance(n, ast.Attribute):
+                # `module.name`, not `spark.dataSource.register`
+                if isinstance(n.value, ast.Name):
+                    out.add(n.attr)
+            elif isinstance(n, ast.alias):
+                out.add(n.name.rpartition(".")[2])
+                out.add(n.asname or n.name)
+        return out
+
+    def is_query(d):
+        for dec in d.decorator_list:
+            f = dec.func if isinstance(dec, ast.Call) else dec
+            if isinstance(f, ast.Name) and f.id == "query":
+                return True
+        return False
+
+    defs = {}  # name -> [(relpath, node)]
+    used = set(_KEPT_UNCALLED)
+    for path in glob.glob(f"{engine}/**/*.py", recursive=True):
+        rel = os.path.relpath(path, root)
+        for stmt in parse(path).body:
+            if isinstance(stmt, defs_types) and not is_query(stmt):
+                defs.setdefault(stmt.name, []).append((rel, stmt))
+            elif not (path == reexports and isinstance(stmt, ast.ImportFrom)):
+                used |= names_in(stmt)
+    for path in (
+        [f"{root}/__spark_entry__.py", f"{root}/bench.py"]
+        + glob.glob(f"{root}/perfbench/*.py")
+        + glob.glob(f"{root}/tools/*.py")
+    ):
+        used |= names_in(parse(path))
+
+    stale = sorted(set(_KEPT_UNCALLED) - set(defs))
+    assert not stale, f"_KEPT_UNCALLED names no engine definition: {stale}"
+    reached = set()
+    while new := {n for n in defs if n in used} - reached:
+        reached |= new
+        for n in new:
+            for _, node in defs[n]:
+                used |= names_in(node)
+    uncalled = [
+        f"{rel}:{node.lineno} {name}"
+        for name in sorted(set(defs) - reached)
+        for rel, node in defs[name]
+    ]
+    assert not uncalled, (
+        "engine definitions that no non-test code calls (delete them, or "
+        "name their reference source in _KEPT_UNCALLED):\n"
+        + "\n".join(uncalled)
+    )

@@ -146,45 +146,6 @@ def test_unreadable_ledger_raises_instead_of_reloading(tmp_path):
     assert processed == []
 
 
-def test_streaming_incremental_checkpoint_skips_processed(spark, tmp_path):
-    """The checkpointed file-source variant of incremental loading: run
-    twice → second run reprocesses nothing; add a file → only it loads."""
-    from core_telecoms_etl_spark.operators.cleaning import clean
-    from core_telecoms_etl_spark.sources.incremental import (
-        streaming_incremental_load,
-    )
-
-    src = tmp_path / "raw"
-    src.mkdir()
-    (src / "day1.csv").write_text("id,name\n1, a \n2,b\n")
-    dest = str(tmp_path / "staging")
-    ckpt = str(tmp_path / "ckpt")
-    schema = "id long, name string"
-
-    def run():
-        return streaming_incremental_load(
-            spark,
-            str(src),
-            dest,
-            ckpt,
-            schema=schema,
-            transform=lambda df: clean(df, dedup=False),
-        )
-
-    run()
-    assert spark.read.parquet(dest).count() == 2
-    # values went through the cleaning chain (trim)
-    assert {r.name for r in spark.read.parquet(dest).collect()} == {"a", "b"}
-
-    run()  # no new files → no appended rows
-    assert spark.read.parquet(dest).count() == 2
-
-    (src / "day2.csv").write_text("id,name\n3,c\n")
-    run()
-    assert spark.read.parquet(dest).count() == 3
-    assert {r.id for r in spark.read.parquet(dest).collect()} == {1, 2, 3}
-
-
 def test_run_notification_hooks_and_retry(tmp_path):
     """The pipeline-level orchestration hooks (VERDICT r11 ask #7 — the
     reference's email-on-success/failure + task-retry behavior,

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from core_telecoms_etl_spark.operators import joins as J
 from core_telecoms_etl_spark.sources.readers import load_table
+from core_telecoms_etl_spark.sources.writers import write_table
 
 
 def _formatted(df) -> str:
@@ -151,19 +152,17 @@ def test_skew_paths_match_plain_on_hot_key(spark):
 def test_bucketed_join_has_no_shuffle(spark, sf_dir):
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    J.write_bucketed(
+    write_table(
         orders.select("o_orderkey", "o_custkey", "o_totalprice"),
         "t_orders_bkt",
-        bucket_cols=["o_custkey"],
-        n_buckets=4,
-        sort_cols=["o_custkey"],
+        mode="overwrite",
+        bucket_by=(4, ["o_custkey"]),
     )
-    J.write_bucketed(
+    write_table(
         customer.select("c_custkey", "c_mktsegment"),
         "t_customer_bkt",
-        bucket_cols=["c_custkey"],
-        n_buckets=4,
-        sort_cols=["c_custkey"],
+        mode="overwrite",
+        bucket_by=(4, ["c_custkey"]),
     )
     a = spark.table("t_orders_bkt")
     b = spark.table("t_customer_bkt")

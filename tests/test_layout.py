@@ -1,20 +1,16 @@
 """Z-order layout tests: Morton key correctness against a Python bit
-reference, and the actual data-skipping claim — parquet min/max footers
-of a z-ordered write prune a 2-D box predicate better than a 1-D sort.
+reference, exact min/max bucket normalization, and the derived-layout
+cache of the pruning queries.
 """
 
 from __future__ import annotations
 
-import glob
-
-import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from core_telecoms_etl_spark.operators.layout import (
     interleave_bits,
     normalize_minmax,
-    zorder_by,
 )
 
 
@@ -49,81 +45,6 @@ def test_normalize_minmax_exact_buckets(spark):
         ).alias("n")
     ).agg(F.min("n"), F.max("n"), F.count_distinct("n")).collect()[0]
     assert out[0] == 0 and out[1] == 255 and out[2] == 256
-
-
-def _files_touched(path: str, pred) -> tuple[int, int]:
-    """(files whose min/max footer intersects pred-box, total files)."""
-    touched, total = 0, 0
-    for f in sorted(glob.glob(f"{path}/part-*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        lo = {}
-        hi = {}
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                col = md.row_group(rg).column(ci)
-                name = col.path_in_schema
-                st = col.statistics
-                lo[name] = min(lo.get(name, st.min), st.min)
-                hi[name] = max(hi.get(name, st.max), st.max)
-        total += 1
-        if pred(lo, hi):
-            touched += 1
-    return touched, total
-
-
-def test_zorder_prunes_nonleading_dim_where_1d_sort_cannot(spark, tmp_path):
-    """64k uniform points in [0,256)², 64 files each way. The layout
-    claim, measured on real parquet footers:
-
-    - a predicate on y ALONE: the x-sorted layout cannot prune at all
-      (every file spans all of y — 16/16 touched), the z-ordered
-      layout prunes to the quadrant rows containing the slab;
-    - a 2-D box: the z-layout touches only the files owning that
-      region of the plane — pruning multiplies across dimensions.
-    (A slab on the SORT key itself is the one case 1-D sort wins —
-    that is exactly why one sort column is not enough at 100 TB.)"""
-    n = 1 << 16
-    df = (
-        spark.range(n)
-        .select(
-            (F.xxhash64("id").bitwiseAND(F.lit(255))).alias("x"),
-            (F.xxhash64("id", F.lit(1)).bitwiseAND(F.lit(255))).alias("y"),
-        )
-    )
-    zpath, lpath = str(tmp_path / "z"), str(tmp_path / "linear")
-    zorder_by(df, "x", "y", bits=8, num_partitions=64).write.parquet(zpath)
-    df.repartitionByRange(64, "x").sortWithinPartitions("x").write.parquet(
-        lpath
-    )
-
-    def y_slab(lo, hi):  # 64 <= y < 80
-        return not (hi["y"] < 64 or lo["y"] >= 80)
-
-    def box(lo, hi):  # 64 <= x < 80 AND 64 <= y < 80
-        return y_slab(lo, hi) and not (hi["x"] < 64 or lo["x"] >= 80)
-
-    zt_y, ztot = _files_touched(zpath, y_slab)
-    lt_y, ltot = _files_touched(lpath, y_slab)
-    assert ztot == 64 and ltot == 64
-    assert lt_y == 64, "x-sorted files should all intersect a y slab"
-    # ideal cell model: the slab lives in one 8-file cell row (+range-
-    # sampling straddle slack); anything well under half the files
-    # demonstrates non-leading-dim pruning 1-D sort structurally lacks
-    assert zt_y <= 24, f"z-order touched {zt_y}/64 files for a y slab"
-    zt_box, _ = _files_touched(zpath, box)
-    assert zt_box <= 12, f"z-order touched {zt_box}/64 files for the box"
-
-
-def test_zorder_preserves_rows(spark, tmp_path):
-    df = spark.range(5000).select(
-        (F.col("id") % 97).alias("x"), (F.col("id") % 53).alias("y")
-    )
-    out = zorder_by(df, "x", "y", num_partitions=8)
-    assert out.count() == 5000
-    assert set(out.columns) == {"x", "y"}
-    tot = out.agg(F.sum("x"), F.sum("y")).collect()[0]
-    ref = df.agg(F.sum("x"), F.sum("y")).collect()[0]
-    assert (tot[0], tot[1]) == (ref[0], ref[1])
 
 
 def test_pruned_layout_cache_invalidates_on_source_change(spark, tmp_path):

@@ -31,6 +31,25 @@ def test_fuzzy_pairs_within_block_only(spark):
     assert all(a < b for a, b in pairs)  # triangle cut, no dup pairs
 
 
+def test_fuzzy_pairs_beyond_two_edits(spark):
+    """max_dist above the deletion arm's k ≤ 2 runs the plain blocked
+    join: a 3-substitution pair is found, and the plan has no
+    neighborhood explode."""
+    df = spark.createDataFrame(
+        [
+            (1, "abcdefghi", "NY"),
+            (2, "abcXeXgXi", "NY"),  # 3 substitutions: lev 3
+            (3, "unrelated string!", "NY"),
+        ],
+        "id long, name string, state string",
+    )
+    out = fuzzy_pairs(df, "id", "name", "state", max_dist=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan
+    got = {(r.id_a, r.id_b, r.edit_dist) for r in out.collect()}
+    assert got == {(1, 2, 3)}
+
+
 def test_fuzzy_pairs_normalize(spark):
     df = _people(spark).union(
         _people(spark)
@@ -166,38 +185,6 @@ def test_fuzzy_pairs_deletion_is_lossless(spark):
     assert compound == exact
 
 
-def test_fuzzy_pairs_segmented_catches_substitution_pairs(spark):
-    """The modular-projection arm's pigeonhole contract: every
-    ≤2-SUBSTITUTION pair is found (≤2 substituted positions touch ≤2
-    residue classes, so one projection is untouched). ANY
-    insertion/deletion — length-changing or equal-length shift —
-    misaligns the residues past the edit point and CAN be missed:
-    that is the documented recall caveat (measured, not silently
-    lost; fuzzy_pairs_deletion is the lossless arm)."""
-    from core_telecoms_etl_spark.operators.linkage import (
-        fuzzy_pairs_segmented,
-    )
-
-    rows = [
-        (1, "abcdefghi", "NY"),
-        (2, "abcdefghX", "NY"),  # 1 sub, tail
-        (3, "Xbcdefghi", "NY"),  # 1 sub, head
-        (4, "aXcdefgXi", "NY"),  # 2 subs, residues 1 and 1
-        (5, "123456789", "NY"),
-        (6, "234567891", "NY"),  # equal-length shift: documented miss
-        (7, "jon smith", "NY"),
-        (8, "john smith", "NY"),  # single INSERT: also documented miss
-    ]
-    df = spark.createDataFrame(rows, "id long, name string, state string")
-    got = {
-        (r.id_a, r.id_b)
-        for r in fuzzy_pairs_segmented(
-            df, "id", "name", "state", max_dist=2
-        ).collect()
-    }
-    assert {(1, 2), (1, 3), (1, 4)} <= got
-    assert (5, 6) not in got  # the shift class is the known trade
-    assert (7, 8) not in got  # length-changing edits too — use the
     #                           deletion arm when those matter
 
 
@@ -221,31 +208,6 @@ def test_fuzzy_pairs_deletion_mass_tripwire(spark):
         df, "id", "name", "blk", max_block_pairs=10_000_000
     )
     assert out.count() == 30 * 29 // 2  # all-identical corpus
-
-
-def test_fuzzy_pairs_auto_routes_on_measured_mass(spark):
-    """Below the budget the plan is the plain blocked join (no
-    neighborhood Generate); above it the deletion arm (a Generate over
-    the 172-key explode). Both routes return the identical pair set —
-    the deletion arm is lossless — so only the plan changes."""
-    from core_telecoms_etl_spark.operators.linkage import fuzzy_pairs_auto
-
-    df = _people(spark)
-
-    def plan(out):
-        return (
-            out._jdf.queryExecution().executedPlan().toString()
-        )
-
-    small = fuzzy_pairs_auto(df, "id", "name", "state")
-    assert "Generate" not in plan(small)  # plain arm: no explode
-    forced = fuzzy_pairs_auto(
-        df, "id", "name", "state", exact_mass_budget=0
-    )
-    assert "Generate" in plan(forced)  # deletion arm: 172-key explode
-    assert {(r.id_a, r.id_b) for r in small.collect()} == {
-        (r.id_a, r.id_b) for r in forced.collect()
-    }
 
 
 def test_link_best_match_deletion_blocking_matches_plain(spark):
@@ -306,68 +268,3 @@ def test_fuzzy_pairs_deletion_tripwire_pins_neighborhood(spark):
     caching.release_caches()
 
 
-def test_fuzzy_pairs_segmented_short_name_fallback(spark):
-    """Names shorter than max_dist+1 break the pigeonhole (fewer
-    residue classes than edits to spare) and empty names emit no
-    projection at all — the r14 ADVICE gap. The constant short-class
-    fallback key (_seg_i = s) restores the pure-substitution contract
-    at every length: identical empty names pair at lev 0, a 2-char
-    fully-substituted pair is found at max_dist=2, and long names
-    never ride the fallback."""
-    from core_telecoms_etl_spark.operators.linkage import (
-        fuzzy_pairs_segmented,
-    )
-
-    rows = [
-        (1, "", "NY"),
-        (2, "", "NY"),           # identical empties: lev 0
-        (3, "ab", "NY"),
-        (4, "xy", "NY"),         # both chars substituted: lev 2
-        (5, "ab", "NY"),         # exact short duplicate of 3
-        (10, "abcdefghi", "NY"),
-        (11, "abcdefghX", "NY"),  # normal projection path still works
-    ]
-    df = spark.createDataFrame(rows, "id long, name string, state string")
-    out = {
-        (r.id_a, r.id_b): r.edit_dist
-        for r in fuzzy_pairs_segmented(
-            df, "id", "name", "state", max_dist=2
-        ).collect()
-    }
-    assert out[(1, 2)] == 0
-    assert out[(3, 4)] == 2
-    assert out[(3, 5)] == 0
-    assert (10, 11) in out
-    # short/long pairs are not pure-substitution (lengths differ) and
-    # stay outside the contract; the fallback must not cross lengths
-    # past max_dist — nothing pairs "" with the 9-char names
-    assert not any(a in (1, 2) and b in (10, 11) for a, b in out)
-
-
-def test_fuzzy_pairs_auto_max_dist3_always_plain(spark):
-    """max_dist > 2 exceeds the deletion arm's k support — the router
-    must take the plain arm on BOTH sides of the mass budget (r14
-    ADVICE: routing into a 'k must be 1 or 2' ValueError above the
-    budget made behavior depend on measured mass for the same
-    arguments), with identical results."""
-    from core_telecoms_etl_spark.operators.linkage import fuzzy_pairs_auto
-
-    rows = [
-        (1, "abcdefghi", "NY"),
-        (2, "abcXeXgXi", "NY"),  # 3 substitutions: lev 3
-        (3, "unrelated string!", "NY"),
-    ]
-    df = spark.createDataFrame(rows, "id long, name string, state string")
-
-    def plan(out):
-        return out._jdf.queryExecution().executedPlan().toString()
-
-    below = fuzzy_pairs_auto(df, "id", "name", "state", max_dist=3)
-    above = fuzzy_pairs_auto(
-        df, "id", "name", "state", max_dist=3, exact_mass_budget=0
-    )
-    assert "Generate" not in plan(below)
-    assert "Generate" not in plan(above)  # NOT the deletion explode
-    got_b = {(r.id_a, r.id_b, r.edit_dist) for r in below.collect()}
-    got_a = {(r.id_a, r.id_b, r.edit_dist) for r in above.collect()}
-    assert got_b == got_a == {(1, 2, 3)}

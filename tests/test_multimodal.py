@@ -1,12 +1,14 @@
-"""Multimodal plumbing tests: schema/UDF-signature/batch shape are real;
-the codec is stubbed (north-star contract)."""
+"""Multimodal plumbing tests: JVM-side metadata over opaque binary
+payloads."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from core_telecoms_etl_spark.operators import multimodal as mm
+
+MEDIA_SCHEMA = (
+    "media_id long, mime string, payload binary, "
+    "width int, height int, duration_ms long"
+)
 
 
 def _media(spark):
@@ -15,7 +17,7 @@ def _media(spark):
         (2, "image/png", bytearray(b""), 0, 0, None),
         (3, "audio/wav", None, None, None, 2500),
     ]
-    return spark.createDataFrame(rows, mm.MEDIA_SCHEMA)
+    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def test_binary_metadata(spark):
@@ -28,119 +30,3 @@ def test_binary_metadata(spark):
     assert out[1][0] == 10
     assert len(out[1][1]) == 64
     assert out[2][0] == 0
-
-
-def test_decode_features_with_fake_decoder(spark):
-    out = mm.decode_features(
-        _media(spark), decoder=mm.deterministic_fake_decoder
-    )
-    assert out.schema.simpleString() == (
-        "struct<media_id:bigint,mime:string,n_bytes:bigint,feature:array<double>>"
-    )
-    rows = {r.media_id: r for r in out.collect()}
-    assert rows[1].n_bytes == 10 and len(rows[1].feature) == 4
-    assert rows[1].feature[0] == 10.0  # length moment
-    assert rows[3].feature == [0.0, 0.0, 0.0, 0.0]  # NULL payload → zeros
-
-
-def test_decode_stub_raises(spark):
-    with pytest.raises(Exception) as ei:
-        mm.decode_features(_media(spark)).collect()
-    assert "NotImplementedError" in str(ei.value) or "image decoding" in str(
-        ei.value
-    )
-
-
-def _ppm(width: int, height: int, rgb_rows: list[list[tuple[int, int, int]]]) -> bytes:
-    body = bytearray()
-    for row in rgb_rows:
-        for r, g, b in row:
-            body += bytes([r, g, b])
-    return f"P6\n# test image\n{width} {height}\n255\n".encode() + bytes(body)
-
-
-def test_decode_features_with_real_ppm_codec(spark):
-    """The NON-stub path: an actual image format (binary PPM) decoded
-    end-to-end through mapInPandas by a pure-Python codec — header parse,
-    pixel math, per-channel means."""
-    img1 = _ppm(2, 2, [[(255, 0, 0), (255, 0, 0)], [(0, 0, 0), (0, 0, 0)]])
-    img2 = _ppm(1, 3, [[(10, 20, 30)], [(10, 20, 30)], [(10, 20, 30)]])
-    df = spark.createDataFrame(
-        [(1, "image/x-portable-pixmap", bytearray(img1)),
-         (2, "image/x-portable-pixmap", bytearray(img2))],
-        "media_id long, mime string, payload binary",
-    )
-    rows = {r.media_id: r for r in mm.decode_features(df, decoder="ppm").collect()}
-    assert rows[1].feature == [2.0, 2.0, 127.5, 0.0, 0.0]
-    assert rows[2].feature == [1.0, 3.0, 10.0, 20.0, 30.0]
-    assert rows[1].n_bytes == len(img1)
-
-
-def test_resize_with_real_ppm_codec(spark):
-    """Nearest-neighbor PPM resize through the same injected-codec hook:
-    output is a valid PPM at the target dims, decodable by the codec."""
-    # 4x4: left half red, right half blue
-    row = [(255, 0, 0), (255, 0, 0), (0, 0, 255), (0, 0, 255)]
-    img = _ppm(4, 4, [row] * 4)
-    df = spark.createDataFrame(
-        [(1, "image/x-portable-pixmap", bytearray(img))],
-        "media_id long, mime string, payload binary",
-    )
-    out = mm.resize_images(df, target=(2, 2), resizer="ppm").collect()[0]
-    assert (out.width, out.height) == (2, 2)
-    resized = bytes(out.payload)
-    # decodable by the real codec, halved dims, channel means preserved
-    assert mm.ppm_decoder(resized) == [2.0, 2.0, 127.5, 0.0, 127.5]
-
-
-def test_resolve_decoder_rejects_unknown_name():
-    with pytest.raises(ValueError):
-        mm.resolve_decoder("nope")
-
-
-def test_frame_sample_plan(spark):
-    df = _media(spark).filter(F.col("duration_ms").isNotNull())
-    frames = mm.frame_sample_plan(df, every_ms=1000).select(
-        "media_id", "frame_ts_ms"
-    )
-    got = sorted(r.frame_ts_ms for r in frames.collect())
-    assert got == [0, 1000, 2000]
-
-
-def test_resize_plumbing_with_fake_codec(spark):
-    from pyspark.sql import functions as F
-
-    from core_telecoms_etl_spark.operators.multimodal import (
-        deterministic_fake_resizer,
-        resize_images,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "image/png", bytearray(b"abc")), (2, "image/png", bytearray(b""))],
-        "media_id long, mime string, payload binary",
-    )
-    out = resize_images(
-        df, target=(4, 2), resizer=deterministic_fake_resizer
-    ).collect()
-    by_id = {r.media_id: r for r in out}
-    assert by_id[1].width == 4 and by_id[1].height == 2
-    assert len(bytes(by_id[1].payload)) == 8
-    assert bytes(by_id[1].payload) == b"abcabcab"
-    assert len(bytes(by_id[2].payload)) == 8  # empty payload padded
-
-
-def test_resize_without_codec_fails_loudly(spark):
-    import pytest
-    from py4j.protocol import Py4JJavaError
-
-    from core_telecoms_etl_spark.operators.multimodal import resize_images
-
-    df = spark.createDataFrame(
-        [(1, "image/png", bytearray(b"abc"))],
-        "media_id long, mime string, payload binary",
-    )
-    with pytest.raises(Exception) as e:
-        resize_images(df).collect()
-    assert "NotImplementedError" in str(e.value) or "image library" in str(
-        e.value
-    )

@@ -211,7 +211,7 @@ def test_pipeline_audits_only_the_new_batch(spark, tmp_path):
     _write(tmp_path / "raw" / "day1.csv", "id,v\n1,a\n2,b\n2,b\n")
     r1 = run_pipeline(spark, cfg)
     assert r1.audits_passed
-    assert r1.rows["t"].dropped == 1  # the exact duplicate row
+    assert r1.rows["t"].read - r1.rows["t"].written == 1  # the duplicate row
 
     # key 2 repeats day 1; key 3 repeats inside day 2; one NULL key
     _write(tmp_path / "raw" / "day2.csv", "id,v\n2,c\n3,d\n3,e\n,f\n")
@@ -327,7 +327,7 @@ def test_pipeline_row_counts_start_no_jobs(
 
     observed, rep = first_run(tmp_path / "observed")
     counts = rep.rows["call_logs"]
-    assert (counts.read, counts.written, counts.dropped) == (4, 2, 2)
+    assert (counts.read, counts.written) == (4, 2)
     assert rep.audits_passed
 
     monkeypatch.setattr(pipeline, "observe_counts", Unobserved)

@@ -25,13 +25,16 @@ def _vecs(spark):
     return spark.createDataFrame(VECS, "vec_id long, embedding array<float>")
 
 
-def test_cosine_expr_matches_numpy(spark):
+def test_cosine_from_norms_matches_numpy(spark):
     df = _vecs(spark)
     a = df.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
     b = df.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("vb"))
+    cos = sim.cosine_from_norms(
+        sim.dot_expr("va", "vb"), sim.norm2_expr("va"), sim.norm2_expr("vb")
+    )
     out = (
         a.join(b, F.col("ia") < F.col("ib"))
-        .select("ia", "ib", sim.cosine_expr("va", "vb").alias("cos"))
+        .select("ia", "ib", cos.alias("cos"))
         .collect()
     )
     import numpy as np
@@ -255,45 +258,31 @@ def test_kmeans_ivf_recall_at_least_naive(spark, sf_dir):
     assert recall(3) >= recall(0)
 
 
-def test_semantic_dedup_drops_exact_embedding_copies(spark, sf_dir):
-    """A vector duplicated verbatim (cosine 1.0) must lose all but its
-    lowest-id copy; vectors with no near neighbor survive untouched."""
+def test_cluster_assign_topn_copies_share_clusters(spark, sf_dir):
+    """A vector copied verbatim gets the same top-n centroids as its
+    original, so cluster blocking always pairs the copies (the
+    SemDeDup-style dedup blocking the semantic_dedup query audits), and
+    the assignment is the same on every run."""
     e = load_table(spark, sf_dir, "embeddings").limit(100)
     clone = e.filter(F.col("vec_id") < 3).withColumn(
         "vec_id", F.col("vec_id") + 1000
     )
     data = e.unionByName(clone)
-    kept = sim.semantic_dedup(
-        data, n_clusters=8, n_assign=2, threshold=0.95, kmeans_iters=2
-    )
-    ids = {r.vec_id for r in kept.select("vec_id").collect()}
-    # identical copies co-cluster by construction (same vector, same
-    # nearest centroids), so the clones are guaranteed candidates
-    assert {1000, 1001, 1002}.isdisjoint(ids)
-    assert {0, 1, 2} <= ids
-    assert len(ids) == 100
 
+    def run():
+        out = {}
+        for r in sim.cluster_assign_topn(
+            data, n_clusters=8, n_assign=2, kmeans_iters=2
+        ).collect():
+            out.setdefault(r.vec_id, set()).add(r.centroid_id)
+        return out
 
-def test_semantic_dedup_no_pairs_keeps_everything(spark, sf_dir):
-    """With a threshold above every pairwise cosine, the duplicate edge
-    set is empty and every row survives (the connected-components loop
-    must converge immediately on an empty graph)."""
-    e = load_table(spark, sf_dir, "embeddings").limit(60)
-    kept = sim.semantic_dedup(
-        e, n_clusters=4, n_assign=2, threshold=0.9999, kmeans_iters=1
-    )
-    assert kept.count() == 60
-
-
-def test_semantic_dedup_deterministic(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings").limit(150)
-    run = lambda: {  # noqa: E731
-        r.vec_id
-        for r in sim.semantic_dedup(
-            e, n_clusters=8, n_assign=2, threshold=0.4, kmeans_iters=2
-        ).select("vec_id").collect()
-    }
-    assert run() == run()
+    got = run()
+    assert len(got) == 103
+    for i in range(3):
+        assert len(got[i]) == 2
+        assert got[i + 1000] == got[i]
+    assert run() == got
 
 
 def test_kmeans_centroids_deterministic(spark, sf_dir):
@@ -828,7 +817,7 @@ def test_vector_topk_arrow_matches_fold(spark, sf_dir):
         ),
         pytest.param(
             lambda v, m: sim.cosine_pairs_arrow_rounded6(v, max_collect_rows=m),
-            "semantic_dedup", id="cosine_pairs_arrow_rounded6",
+            "cluster_assign_topn", id="cosine_pairs_arrow_rounded6",
         ),
         pytest.param(
             lambda v, m: sim.ivf_topk(

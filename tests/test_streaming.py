@@ -453,63 +453,6 @@ def test_event_id_unique_in_testdata(spark, sf_dir):
     assert n == d, f"events.event_id has {n - d} duplicate ids"
 
 
-def test_stream_upsert_foreachbatch_converges_to_batch_merge(spark, tmp_path):
-    """foreachBatch CDC-apply: streaming a change feed one file per
-    micro-batch into a keyed parquet table must converge to exactly the
-    batch keep-highest-version merge of all changes, and re-running the
-    stream over the same feed (fresh checkpoint, existing target) must be
-    a no-op — the merge is idempotent."""
-    from core_telecoms_etl_spark.operators.scd import upsert
-    from core_telecoms_etl_spark.streaming.events import run_stream_upsert
-
-    src = tmp_path / "feed"
-    target = str(tmp_path / "table")
-    schema = "k long, v string, ver long"
-    # three files -> three micro-batches, overlapping keys
-    batches = [
-        [(1, "a0", 1), (2, "b0", 1), (3, "c0", 1)],
-        [(2, "b1", 2), (4, "d0", 1)],
-        [(1, "a2", 3), (4, "d_stale", 0)],  # stale version must lose
-    ]
-    for i, rows in enumerate(batches):
-        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-            str(src / f"f{i}")
-        )
-    feed_files = sorted(str(p) for p in src.glob("f*/*.parquet"))
-    flat = str(tmp_path / "flat")
-    import os, shutil
-    os.makedirs(flat)
-    for i, f in enumerate(feed_files):
-        shutil.copy(f, os.path.join(flat, f"part-{i}.parquet"))
-
-    run_stream_upsert(
-        spark, flat, target, key_cols=["k"], version_col="ver",
-        schema=schema, checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    got = {(r.k): (r.v, r.ver) for r in spark.read.parquet(target).collect()}
-    all_changes = spark.createDataFrame(
-        [r for b in batches for r in b], schema
-    )
-    expect = {
-        r.k: (r.v, r.ver)
-        for r in upsert(
-            all_changes.limit(0), all_changes, key_cols=["k"],
-            version_col="ver",
-        ).collect()
-    }
-    assert got == expect == {
-        1: ("a2", 3), 2: ("b1", 2), 3: ("c0", 1), 4: ("d0", 1)
-    }
-
-    # idempotent re-apply: fresh checkpoint, same feed, same final table
-    run_stream_upsert(
-        spark, flat, target, key_cols=["k"], version_col="ver",
-        schema=schema, checkpoint_dir=str(tmp_path / "ckpt2"),
-    )
-    again = {(r.k): (r.v, r.ver) for r in spark.read.parquet(target).collect()}
-    assert again == expect
-
-
 def test_stream_sliding_matches_batch(spark, sf_dir):
     """Sliding-window batch/stream parity (the r7 pair completing the
     tumbling/session/sliding trio): identical results through the

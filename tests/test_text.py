@@ -33,9 +33,9 @@ def test_bpe_ish_token_count(spark):
     assert n == 5  # [hello][,][world][42][!]
 
 
-def test_word_shingles(spark):
-    df = _one(spark, "a b c d")
-    sh = df.select(tx.word_shingles("text", 3).alias("s")).collect()[0].s
+def test_shingles_of(spark):
+    df = _one(spark, "a b c d").select(tx.tokens("text").alias("t"))
+    sh = df.select(tx.shingles_of(F.col("t"), 3).alias("s")).collect()[0].s
     assert sorted(sh) == ["a b c", "b c d"]
 
 
