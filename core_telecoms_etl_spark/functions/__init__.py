@@ -1,7 +1,1 @@
-from core_telecoms_etl_spark.functions.expressions import (
-    money_sum,
-    null_if_empty,
-    snapped_avg,
-)
-
-__all__ = ["money_sum", "null_if_empty", "snapped_avg"]
+"""Shared column-expression helpers (`functions.expressions`)."""

@@ -1,35 +1,10 @@
-"""Shared scalar/aggregate expression helpers (SURVEY.md §2.8).
-
-These encode the engine's float-determinism discipline (see
-queries/__init__.py): money columns live on a 2-decimal grid, so summing
-then rounding at that grid snaps away engine/partition-order float drift —
-results are reproducible run-to-run AND across engines.
-"""
+"""Shared column-expression helpers for the query modules (SURVEY.md
+§2.8)."""
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def money_sum(col: Column | str, scale: int = 2) -> Column:
-    """Sum a fixed-decimal money column, snapped back to its grid."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c), scale)
-
-
-def snapped_avg(col: Column | str, scale: int = 2) -> Column:
-    """Average derived from the snapped sum (deterministic division of a
-    grid-exact numerator), not a float-order-dependent native avg."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.round(F.sum(c), scale) / F.count("*")
-
-
-def null_if_empty(col: Column | str) -> Column:
-    """Empty-or-blank string ⇒ NULL (the reference's load rule,
-    aws_infrastructure/snowflake.tf:86)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(F.trim(c) == "", None).otherwise(c)
 
 
 def single_partition(col: Column | str) -> Column:

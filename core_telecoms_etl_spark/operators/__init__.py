@@ -25,19 +25,10 @@ from core_telecoms_etl_spark.operators.cleaning import (
     rename_columns,
     trim_strings,
 )
-from core_telecoms_etl_spark.operators.dq import (
-    DQResult,
-    check_accepted_values,
-    check_not_null,
-    check_unique,
-    run_checks,
-)
+from core_telecoms_etl_spark.operators.dq import DQResult, run_checks
 
 __all__ = [
     "DQResult",
-    "check_accepted_values",
-    "check_not_null",
-    "check_unique",
     "clean",
     "dedup_latest_by_key",
     "dedup_rows",

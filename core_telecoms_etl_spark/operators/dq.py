@@ -14,8 +14,8 @@ key)`, which equals dbt's `sum(count - 1)` over the keys that occur more
 than once (NULL keys excluded) without a per-key group-by branch:
 Catalyst plans the distinct count as a partial aggregate keyed on the
 column (map-side combine, AQE-coalesced), with an Expand when the suite
-holds several distinct keys. `check_not_null`, `check_unique` and
-`check_accepted_values` are one-check suites of the same kernel.
+holds several distinct keys. `run_checks` runs a suite and returns one
+`DQResult` per check.
 """
 
 from __future__ import annotations
@@ -36,23 +36,6 @@ class DQResult:
     @property
     def passed(self) -> bool:
         return self.violations == 0
-
-
-def check_not_null(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """NULL count per column (dbt not_null)."""
-    return run_checks(df, not_null=columns)
-
-
-def check_unique(df: DataFrame, columns: Sequence[str]) -> list[DQResult]:
-    """Excess duplicate rows per key, NULL keys excluded (dbt unique)."""
-    return run_checks(df, unique=columns)
-
-
-def check_accepted_values(
-    df: DataFrame, column: str, values: Sequence[str]
-) -> list[DQResult]:
-    """Non-NULL values outside `values` (dbt accepted_values)."""
-    return run_checks(df, accepted_values={column: values})
 
 
 def checks_df(

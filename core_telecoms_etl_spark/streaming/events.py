@@ -22,16 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-# Historical raw schema: some testdata generations write ts as
-# TIMESTAMP(NANOS), which Spark (under nanosAsLong) reads as a nanos long.
-# Newer generations write timestamp[us] (→ TIMESTAMP_NTZ under
-# inferTimestampNTZ). Streams therefore infer the on-disk schema from a
-# batch footer read and normalize afterwards — see `events_file_stream`.
-EVENTS_RAW_SCHEMA = (
-    "event_id long, ts long, user_id long, event_type string, "
-    "value double, props string"
-)
-
 
 def events_file_stream(
     spark: SparkSession,

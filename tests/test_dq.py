@@ -13,24 +13,24 @@ def _df(spark):
 
 
 def test_not_null_counts(spark):
-    res = dq.check_not_null(_df(spark), ["k", "v"])
+    res = dq.run_checks(_df(spark), not_null=["k", "v"])
     got = {r.column: r.violations for r in res}
     assert got == {"k": 1, "v": 1}
     assert not res[0].passed
 
 
 def test_unique_counts_excess_rows(spark):
-    res = dq.check_unique(_df(spark), ["k"])
+    res = dq.run_checks(_df(spark), unique=["k"])
     assert res[0].violations == 1  # one excess duplicate of k=1
-    clean = dq.check_unique(_df(spark), ["v"])
+    clean = dq.run_checks(_df(spark), unique=["v"])
     assert clean[0].violations == 0  # NULLs don't count as duplicates
 
 
 def test_accepted_values(spark):
-    res = dq.check_accepted_values(_df(spark), "v", ["a", "b"])
+    res = dq.run_checks(_df(spark), accepted_values={"v": ["a", "b"]})
     assert res[0].violations == 1  # 'd'; NULL is not a violation
     # NULL IN () is false, not NULL: NULL stays no violation regardless
-    none = dq.check_accepted_values(_df(spark), "v", [])
+    none = dq.run_checks(_df(spark), accepted_values={"v": []})
     assert none[0].violations == 3
 
 

@@ -30,21 +30,67 @@ def test_queries_run_at_smallest_sf(spark, sf_dir):
         df.limit(5).collect()
 
 
-def test_check_order_is_exact_and_duplicate_free():
-    """_CHECK_ORDER must list every registry entry exactly once: a
-    missing name silently falls to the tail (out of its curated
-    window slot — the r6 json_scan near-miss), a duplicate shifts
-    every later query's window position."""
-    from collections import Counter
+def test_check_order_rule():
+    """The driver order: changed queries first, then never-green ones,
+    then ascending last-green round, ties broken by name. Inside the
+    changed block the same key applies."""
+    from core_telecoms_etl_spark.queries import check_order
 
-    from core_telecoms_etl_spark import queries as q
+    names = ["e", "d", "c", "b", "a", "f", "g"]
+    last_green = {"a": 3, "b": 1, "c": 3, "d": 2, "g": 1, "gone": 0}
+    assert check_order(names, last_green, {"g", "c"}) == [
+        "g",  # changed: last green r1
+        "c",  # changed: r3
+        "e",  # never green, then by name
+        "f",
+        "b",  # last green r1
+        "d",  # r2
+        "a",  # r3, then by name
+    ]
 
-    q._load_all()
-    counts = Counter(q._CHECK_ORDER)
-    dups = [n for n, c in counts.items() if c > 1]
-    assert not dups, f"duplicated in _CHECK_ORDER: {dups}"
-    missing = set(q.REGISTRY) - set(q._CHECK_ORDER)
-    assert not missing, f"registered but not in _CHECK_ORDER: {missing}"
+
+def _plan_fingerprints():
+    """tools/plan_fingerprints.py, loaded by its path (anchored to this
+    file, not the cwd), so sys.path stays clean."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(__file__), "..", "tools", "plan_fingerprints.py"
+    )
+    spec = importlib.util.spec_from_file_location("plan_fingerprints", path)
+    pf = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(pf)
+    return pf
+
+
+def test_fingerprint_masks_shuffle_count_only_in_partitioning():
+    """The session's shuffle-partition count is masked where it is the
+    last argument of a partitioning spec, and nowhere else: a
+    `round(x, 4)` under 4 shuffle partitions keeps its scale."""
+    plan = (
+        "Arguments: hashpartitioning(k#1, 4), ENSURE_REQUIREMENTS\n"
+        "Output [1]: [round(x#2, 4) AS x#3]"
+    )
+    assert _plan_fingerprints().normalize_plan(plan, 4) == (
+        "Arguments: hashpartitioning(_NSHUF, k#), ENSURE_REQUIREMENTS\n"
+        "Output [1]: [round(x#, 4) AS x#]"
+    )
+
+
+def test_fingerprint_masks_bare_ints_only_in_expand():
+    """Bare integers in bracket lists are masked only inside Expand node
+    sections, whose gid literals follow a session-varying group order;
+    elsewhere an integer such as an `Input [N]` column count is kept."""
+    pf = _plan_fingerprints()
+    expand = "(2) Expand\nArguments: [[a#1, null, {}], [null, b#2, {}]]"
+    assert pf.normalize_plan(expand.format(1, 2)) == pf.normalize_plan(
+        expand.format(2, 1)
+    )
+    project = "(3) Project\nOutput [1]: [k#1]\nInput [2]: [k#1, v#2]"
+    assert pf.normalize_plan(project) == (
+        "(3) Project\nOutput [1]: [k#]\nInput [2]: [k#, v#]"
+    )
 
 
 def test_changed_plans_enter_the_window(spark, sf_dir):
@@ -69,11 +115,11 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
     commit (instructions in tools/plan_fingerprints.py). Because the
     live side is computed HERE, at test time, a change landing at any
     point in the round — before or after the rotation commit — fails
-    this test until the query is given a head slot. The base must also
-    name a commit this branch descends from: a base taken from a commit
-    that is not an ancestor of HEAD (or unknown to git) compares against
-    plans this branch never had."""
-    import importlib.util
+    this test until the query is named in `queries._PLAN_CHANGED`, which
+    the driver order puts first. A stale name fails too. The base must
+    also name a commit this branch descends from: a base taken from a
+    commit that is not an ancestor of HEAD (or unknown to git) compares
+    against plans this branch never had."""
     import json
     import os
     import subprocess
@@ -107,29 +153,20 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
         f"HEAD: {ancestry.stderr.strip() or 'not an ancestor'}"
     )
 
-    fp_path = os.path.join(
-        os.path.dirname(__file__), "..", "tools", "plan_fingerprints.py"
-    )
-    spec = importlib.util.spec_from_file_location("plan_fingerprints", fp_path)
-    pf = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pf)
-
-    live = pf.compute_all(spark, sf_dir)
-    q._load_all()
-    head = set(q._CHECK_ORDER[:50])
+    live = _plan_fingerprints().compute_all(spark, sf_dir)
     changed = {n for n, fp in live.items() if base.get(n) != fp}
-    missed = sorted(changed - head)
-    assert not missed, (
-        f"{len(missed)} queries' physical plans changed since the round "
-        f"base but sit outside the 50-slot window head — rotate them in "
-        f"(queries/__init__.py _CHECK_ORDER): {missed}"
+    assert q._PLAN_CHANGED == changed, (
+        "queries/__init__.py _PLAN_CHANGED must name exactly the queries "
+        "whose physical plans changed since the round base; paste:\n"
+        + "\n".join(f'        "{n}",' for n in sorted(changed))
     )
+    assert changed <= set(list(q.queries())[:50]), len(changed)
 
 
 def test_window_head_rotation():
     """The driver samples the first 50 registry entries per round.
     Everything here is DATA-DRIVEN from
-    tools/gen_inventory.last_green_rounds (the committed
+    queries.last_green_rounds (the committed
     CORRECTNESS_r01..rN files) — no hand-maintained name lists (the r7
     lesson). Invariants:
 
@@ -154,24 +191,10 @@ def test_window_head_rotation():
     CORRECTNESS_r{N}.json lands, provided each round's head carries
     (a) all never-green queries, (b) everything at last-green ==
     max(round)-4, and (c) as much of max(round)-3 as fits."""
-    import importlib.util
-    import os
-
     from core_telecoms_etl_spark import queries as q
 
-    q._load_all()
-    head = set(q._CHECK_ORDER[:50])
-
-    # import by absolute path (anchored to this file, not the cwd) so
-    # pytest runs from any directory and sys.path stays clean
-    inv_path = os.path.join(
-        os.path.dirname(__file__), "..", "tools", "gen_inventory.py"
-    )
-    spec = importlib.util.spec_from_file_location("gen_inventory", inv_path)
-    gen_inventory = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(gen_inventory)
-
-    green = gen_inventory.last_green_rounds()
+    head = set(list(q.queries())[:50])
+    green = q.last_green_rounds()
     latest = max(green.values())
 
     never_green = {n for n in q.REGISTRY if n not in green}
@@ -259,8 +282,8 @@ def test_every_engine_definition_has_a_caller():
     code that only tests call cannot pile up.
 
     Roots: the `@query` functions, each engine module's module-level
-    statements (imports included, except the `sources/__init__.py`
-    re-exports), `__spark_entry__.py`, `bench.py`, the non-test
+    statements (imports included, except the re-exports of each package
+    `__init__.py`), `__spark_entry__.py`, `bench.py`, the non-test
     perfbench modules, `tools/*.py` and the `_KEPT_UNCALLED` entries.
     A definition is reachable when its name appears in reachable code
     as a Name, as the attribute of a Name (`module.name`) or as an
@@ -273,7 +296,6 @@ def test_every_engine_definition_has_a_caller():
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     engine = os.path.join(root, "core_telecoms_etl_spark")
-    reexports = os.path.join(engine, "sources", "__init__.py")
     defs_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
     def parse(path):
@@ -308,7 +330,10 @@ def test_every_engine_definition_has_a_caller():
         for stmt in parse(path).body:
             if isinstance(stmt, defs_types) and not is_query(stmt):
                 defs.setdefault(stmt.name, []).append((rel, stmt))
-            elif not (path == reexports and isinstance(stmt, ast.ImportFrom)):
+            elif not (
+                path.endswith("__init__.py")
+                and isinstance(stmt, ast.ImportFrom)
+            ):
                 used |= names_in(stmt)
     for path in (
         [f"{root}/__spark_entry__.py", f"{root}/bench.py"]

@@ -288,6 +288,15 @@ def test_stream_stream_join_matches_batch(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
+# Historical raw events schema: some testdata generations write ts as
+# TIMESTAMP(NANOS), which Spark (under nanosAsLong) reads as a nanos long.
+# The test below writes that encoding and streams it with this schema.
+_EVENTS_RAW_SCHEMA = (
+    "event_id long, ts long, user_id long, event_type string, "
+    "value double, props string"
+)
+
+
 def test_watermark_append_emits_closed_windows_and_drops_late(
     spark, tmp_path
 ):
@@ -300,8 +309,6 @@ def test_watermark_append_emits_closed_windows_and_drops_late(
     from datetime import datetime
 
     import pyspark.sql.functions as F
-
-    from core_telecoms_etl_spark.streaming.events import EVENTS_RAW_SCHEMA
 
     dir_ = str(tmp_path / "ev")
     schema = (
@@ -321,7 +328,7 @@ def test_watermark_append_emits_closed_windows_and_drops_late(
     write_batch([(0, datetime(2023, 12, 31, 23, 59), 1, "click", 0.5, None)])
     stream = (
         spark.readStream.format("parquet")
-        .schema(EVENTS_RAW_SCHEMA)
+        .schema(_EVENTS_RAW_SCHEMA)
         .load(dir_)
         .withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         .withWatermark("ts", "30 minutes")

@@ -1,19 +1,17 @@
 """Generate QUERIES.md — the authoritative declared-query inventory:
 name, defining module, oracle kind, first docstring line, and the
-LAST-GREEN DRIVER ROUND of each query (scanned from CORRECTNESS_r*.json
-— the VERDICT r6 staleness-self-audit ask). Run after adding queries so
-SURVEY.md §2's checklist, the registry, and window staleness can be
-cross-checked mechanically.
+LAST-GREEN DRIVER ROUND of each query (`queries.last_green_rounds`, over
+the committed CORRECTNESS_r*.json) and its slot in the driver order
+(`queries.queries()`). Run after adding queries so SURVEY.md §2's
+checklist, the registry, and window staleness can be cross-checked
+mechanically.
 
 Usage: python tools/gen_inventory.py
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -21,41 +19,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def last_green_rounds() -> dict[str, int]:
-    """query -> highest round whose driver CORRECTNESS row was green.
-
-    Green = rows/schema match and the value hash matched (rows-only
-    checks have hash_match null/absent — rows+schema suffice there,
-    mirroring the driver's weaker gate)."""
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err"):
-                continue
-            if not (row.get("rows_match") and row.get("schema_match")):
-                continue
-            if row.get("hash_match") is False:
-                continue
-            out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
 def main() -> None:
     from core_telecoms_etl_spark import queries as qmod
 
-    qmod._load_all()  # noqa: SLF001
-    green = last_green_rounds()
-    order = {n: i for i, n in enumerate(qmod._CHECK_ORDER)}  # noqa: SLF001
+    green = qmod.last_green_rounds()
+    order = {n: i for i, n in enumerate(qmod.queries())}
     rows = []
     for name, spec in sorted(qmod.REGISTRY.items()):
         fn = spec.fn
@@ -64,7 +32,7 @@ def main() -> None:
         module = fn.__module__.rsplit(".", 1)[-1]
         kind = "full oracle" if spec.oracle else "rows-only"
         lg = green.get(name)
-        slot = order.get(name, -1)
+        slot = order[name]
         rows.append((name, module, kind, lg, slot, first))
     n_full = sum(1 for r in rows if r[2] == "full oracle")
     n_green = sum(1 for r in rows if r[3])
@@ -88,7 +56,7 @@ def main() -> None:
         f"Driver history: {n_green}/{len(rows)} ever-green across "
         f"CORRECTNESS_r01..r{latest:02d}; 'green' column = last round "
         "the driver's own gate passed the query (the first 50 slots of "
-        "the check order form each round's driver window). "
+        "the driver order `queries()` form each round's window). "
         f"Never driver-sampled yet: "
         f"{', '.join('`%s`' % n for n in never) if never else 'none'}. "
         f"Stale (last green ≤ r{latest - 4}, due in the next window): "

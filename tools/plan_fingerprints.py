@@ -15,18 +15,26 @@ and is invariant to docstring/comment edits.
 
 Normalization strips the environment-dependent tokens so fingerprints
 compare across sessions and boxes: expression ids (#123), plan ids,
-file locations, and the session's shuffle-partition count inside
-partitioning specs.
+file locations, the session's shuffle-partition count where it is the
+last argument of a hash/range partitioning spec, and the gid literals
+of Expand nodes (bare integers in an Expand section's bracket lists).
+Bracket lists are sorted (see `_sort_brackets`). Any other integer is
+kept, so `round(x, 4)` under 4 shuffle partitions keeps its scale.
+
+The queries whose fingerprint differs from the base snapshot form
+`core_telecoms_etl_spark.queries._PLAN_CHANGED`, which the driver order
+puts first.
 
 Usage:
   python tools/plan_fingerprints.py OUT.json   # fingerprint HEAD's code
 
-To snapshot the ROUND BASE (the last driver-verified commit), run this
-script from a clean checkout of that commit but write into the live
-repo, e.g.:
-  git clone -q /root/repo /tmp/base && git -C /tmp/base checkout -q <sha>
-  cd /tmp/base && python tools/plan_fingerprints.py \
-      /root/repo/plans/fingerprints_base.json --meta-commit <sha>
+To snapshot the ROUND BASE (the last driver-verified commit), copy this
+script into a clean checkout of that commit (older commits lack it) and
+write into this repo; from the repo root:
+  git clone -q . ../base && git -C ../base checkout -q <sha>
+  cp tools/plan_fingerprints.py ../base/tools/
+  (cd ../base && python tools/plan_fingerprints.py \
+      "$OLDPWD/plans/fingerprints_base.json" --meta-commit <sha>)
 """
 
 from __future__ import annotations
@@ -60,7 +68,7 @@ def _split_top(s: str) -> list[str]:
     return parts
 
 
-def _sort_brackets(s: str) -> str:
+def _sort_brackets(s: str, mask_ints: bool) -> str:
     """Recursively sort the elements of every [...] list.
 
     Catalyst's distinct-aggregate rewrite (Expand) orders its projection
@@ -70,7 +78,11 @@ def _sort_brackets(s: str) -> str:
     that a pure reorder of a list (e.g. output column order) is not
     flagged — acceptable because schema-order changes are caught by the
     oracle's schema check, while order-only Expand variance would
-    otherwise make every multi-distinct query a false positive."""
+    otherwise make every multi-distinct query a false positive.
+
+    With `mask_ints` (Expand node sections only), bare-integer elements
+    are masked as `_INT`: they are the Expand gid literals, whose values
+    follow the same session-varying group order."""
     out: list[str] = []
     i = 0
     while i < len(s):
@@ -85,18 +97,43 @@ def _sort_brackets(s: str) -> str:
             if depth:  # unbalanced — leave untouched
                 out.append(s[i:])
                 break
-            inner = _sort_brackets(s[i + 1 : j - 1])
-            # bare-integer elements are Expand gid literals whose values
-            # depend on the (session-varying) group order — mask them
-            parts = [
-                "_INT" if p.isdigit() else p for p in _split_top(inner)
-            ]
+            parts = _split_top(_sort_brackets(s[i + 1 : j - 1], mask_ints))
+            if mask_ints:
+                parts = ["_INT" if p.isdigit() else p for p in parts]
             out.append("[" + ", ".join(sorted(parts)) + "]")
             i = j
         else:
             out.append(s[i])
             i += 1
     return "".join(out)
+
+
+_PARTITIONING = re.compile(r"\b(hash|range)partitioning\(")
+
+
+def _mask_partitioning(s: str, n_shuffle: int) -> str:
+    """Mask the session's shuffle-partition count, the last argument of
+    each hash/range partitioning spec, as `_NSHUF`, and sort
+    hashpartitioning's arguments: its key order follows the
+    session-varying Expand group order, and the distribution guarantee
+    is order-free. The same integer anywhere else (`round(x, 4)`) is
+    left as it is."""
+    out, pos = [], 0
+    for m in _PARTITIONING.finditer(s):
+        depth, j = 1, m.end()
+        while j < len(s) and depth:
+            depth += {"(": 1, ")": -1}.get(s[j], 0)
+            j += 1
+        if depth:  # unbalanced — leave the rest untouched
+            break
+        args = _split_top(s[m.end() : j - 1])
+        if args[-1] == str(n_shuffle):
+            args[-1] = "_NSHUF"
+        if m.group(1) == "hash":
+            args.sort()
+        out.append(f"{s[pos : m.end()]}{', '.join(args)})")
+        pos = j
+    return "".join(out) + s[pos:]
 
 
 def normalize_plan(plan: str, n_shuffle: int = SHUFFLE_PARTITIONS) -> str:
@@ -110,31 +147,21 @@ def normalize_plan(plan: str, n_shuffle: int = SHUFFLE_PARTITIONS) -> str:
     # .java:0" vs "at <unknown>:0") vary with JVM reflection inlining
     s = re.sub(r" at [^,\s]+:\d+", " at :", s)
     s = re.sub(r"file:[^\]\s,]+", "file:", s)  # scan locations
-    # shuffle-partition counts inside partitioning specs: the trailing
-    # ", N)" where N is the session's shuffle.partitions value
-    s = re.sub(rf", {n_shuffle}\)", ", _NSHUF)", s)
+    s = _mask_partitioning(s, n_shuffle)
     # Expand gid literals: the distinct-group numbering varies with the
     # session's exprId history (Catalyst orders the groups by expression
     # hash), so gid comparisons and the gid column of each Expand row
     # are masked (rows themselves are sorted below)
     s = re.sub(r"gid# = \d+", "gid# = _", s)
-    # hashpartitioning key order follows the same Expand group order —
-    # sort the argument list (distribution guarantee is order-free)
-    def _sort_hp(m: re.Match) -> str:
-        return "hashpartitioning(" + ", ".join(
-            sorted(_split_top(m.group(1)))
-        ) + ")"
-
-    s = re.sub(
-        r"hashpartitioning\("
-        r"((?:[^()]|\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*)\)",
-        _sort_hp,
-        s,
+    # bracket lists sorted line by line, one node section ("(N) Name"
+    # up to the next blank line) at a time (see _sort_brackets)
+    return "\n\n".join(
+        "\n".join(
+            _sort_brackets(line, bool(re.match(r"\(\d+\) Expand\b", sec)))
+            for line in sec.splitlines()
+        )
+        for sec in s.split("\n\n")
     )
-    # bracket lists sorted line-by-line (Expand group order varies with
-    # session exprId history — see _sort_brackets)
-    s = "\n".join(_sort_brackets(line) for line in s.splitlines())
-    return s
 
 
 def fingerprint(plan: str, n_shuffle: int = SHUFFLE_PARTITIONS) -> str:
@@ -186,8 +213,8 @@ def main() -> None:
             "note": (
                 "normalized-plan sha256[:16] per query at the ROUND BASE "
                 "commit; tests/test_entry.py compares live plans against "
-                "this snapshot and requires every changed query inside "
-                "the 50-slot correctness window head"
+                "this snapshot and requires the queries whose hash "
+                "differs to equal queries._PLAN_CHANGED"
             ),
         },
         "fingerprints": fps,
