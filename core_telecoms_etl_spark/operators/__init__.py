@@ -19,7 +19,6 @@ from core_telecoms_etl_spark.operators.cleaning import (
     dedup_latest_by_key,
     dedup_rows,
     drop_all_null_rows,
-    empty_guard,
     empty_strings_to_null,
     normalize_column_names,
     rename_columns,
@@ -33,7 +32,6 @@ __all__ = [
     "dedup_latest_by_key",
     "dedup_rows",
     "drop_all_null_rows",
-    "empty_guard",
     "empty_strings_to_null",
     "normalize_column_names",
     "rename_columns",

@@ -108,28 +108,26 @@ def drop_all_null_rows(df: DataFrame) -> DataFrame:
     return df.na.drop(how="all")
 
 
-def dedup_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
+def dedup_rows(df: DataFrame) -> DataFrame:
     """Exact duplicate removal (reference: df.drop_duplicates(),
     plugins/transform.py:97-102). Spark plans this as a hash aggregate over
-    the subset columns — one shuffle, map-side partial combine. At 100 TB
-    prefer a key subset over full-row dedup so the shuffle key is narrow."""
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
+    every column — one shuffle, map-side partial combine."""
+    return df.dropDuplicates()
 
 
 def dedup_latest_by_key(
     df: DataFrame,
     keys: Sequence[str],
     order_by: Sequence[str],
-    descending: bool = True,
 ) -> DataFrame:
     """Keep the latest record per key (capability implied by the reference's
-    unique-key tests, dbt facts/schema.yml:9-11). row_number over a
-    partitioned window — single shuffle on the key. ``order_by`` should end
-    with a unique tiebreaker for determinism."""
+    unique-key tests, dbt facts/schema.yml:9-11): the first row per key
+    with ``order_by`` descending. row_number over a partitioned window —
+    single shuffle on the key. ``order_by`` should end with a unique
+    tiebreaker for determinism."""
     from pyspark.sql import Window
 
-    ordering = [F.col(c).desc() if descending else F.col(c).asc() for c in order_by]
-    w = Window.partitionBy(*keys).orderBy(*ordering)
+    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_by])
     return (
         df.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
@@ -137,25 +135,17 @@ def dedup_latest_by_key(
     )
 
 
-def empty_guard(df: DataFrame, context: str = "clean") -> DataFrame:
-    """Raise if the relation is empty (reference: ValueError on empty
-    cleaned frame, plugins/transform.py:111-112). The check is a cheap
-    LIMIT-1 job, not a full count."""
-    if df.isEmpty():
-        raise ValueError(f"{context}: no data rows after cleaning")
-    return df
-
-
 def clean(
     df: DataFrame,
     rename_map: Mapping[str, str] | None = None,
     *,
     dedup: bool = True,
-    guard: bool = False,
 ) -> DataFrame:
     """The reference's full cleaning chain (plugins/transform.py:85-114) as
     one lazy plan: normalize names → rename → trim → empty-string⇒NULL →
-    drop all-null rows → dedup."""
+    drop all-null rows → dedup. Unlike the reference's ValueError on an
+    empty cleaned frame, an empty batch passes: it lands nothing and its
+    audits pass (`dq.checks_df`)."""
     out = normalize_column_names(df)
     if rename_map:
         out = rename_columns(out, rename_map)
@@ -164,6 +154,4 @@ def clean(
     out = drop_all_null_rows(out)
     if dedup:
         out = dedup_rows(out)
-    if guard:
-        out = empty_guard(out)
     return out

@@ -6,8 +6,8 @@ Scale design (the whole point of these at 100 TB):
   the shuffle moves digests + ids only.
 - Jaccard: inverted-index self-join on shingles (explode → join on shingle
   → pair-count). Quadratic only within a shingle's posting list; common
-  shingles are the skew risk → `max_shingle_freq` drops stop-shingles
-  (standard in web-dedup pipelines).
+  shingles are the skew risk → `prefix_filter_pairs` bounds the join
+  without losing a pair.
 - MinHash+LSH: signatures are k xxhash64 mins (one pass), banded into b
   buckets; candidate pairs only form inside a (band, bucket) — the
   classic sub-quadratic near-dup join. All hashing is JVM-side.
@@ -140,6 +140,19 @@ def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     )
 
 
+def _hashed(sh: DataFrame) -> DataFrame:
+    """Each shingle replaced by its xxhash64. array_distinct restores the
+    distinct-shingle invariant if two of a doc's shingles collide in 64
+    bits (else n_common could exceed the true intersection for that
+    doc's pairs)."""
+    return sh.select(
+        "doc",
+        F.array_distinct(
+            F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
+        ).alias("shingles"),
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -147,15 +160,14 @@ def jaccard_pairs(
     *,
     n: int = 3,
     threshold: float = 0.8,
-    max_shingle_freq: int | None = None,
     hash_shingles: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via inverted-index self-join.
 
     jaccard = |A∩B| / (|A|+|B|-|A∩B|) from integer counts → deterministic.
-    `max_shingle_freq` prunes stop-shingles (posting lists longer than the
-    cap), bounding the worst-case pair blowup at scale; exactness then
-    holds for pairs whose shared shingles are all below the cap.
+    The self-join is quadratic in each shingle's posting list; for
+    corpora with skewed shingles `prefix_filter_pairs` is the lossless
+    bounded alternative.
 
     `hash_shingles` replaces each shingle string with its xxhash64 before
     the explode+self-join: the shuffle and join keys become 8-byte longs
@@ -172,27 +184,13 @@ def jaccard_pairs(
     # slower end-to-end). At cluster scale: persist(DISK) or checkpoint.
     sh = _shingled(df, id_col, text_col, n)
     if hash_shingles:
-        # array_distinct restores the distinct-shingle invariant if two
-        # of a doc's shingles collide in 64 bits (else n_common could
-        # exceed the true intersection for that doc's pairs)
-        sh = sh.select(
-            "doc",
-            F.array_distinct(
-                F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-            ).alias("shingles"),
-        )
+        sh = _hashed(sh)
     sh = cache_scoped("dedup.jaccard.shingles", sh)
     post = sh.select(
         "doc",
         F.size("shingles").alias("n_shingles"),
         F.explode("shingles").alias("shingle"),
     )
-    if max_shingle_freq is not None:
-        freq = post.groupBy("shingle").agg(F.count("*").alias("df"))
-        post = (
-            post.join(freq.filter(F.col("df") <= max_shingle_freq), "shingle")
-            .drop("df")
-        )
     a = post.select(
         F.col("doc").alias("doc_a"),
         F.col("n_shingles").alias("n_a"),
@@ -230,8 +228,8 @@ def prefix_filter_pairs(
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (SSJoin /
     PPJoin candidate generation, Chaudhuri et al. ICDE'06, Xiao et al.
-    WWW'08) — LOSSLESS, unlike `max_shingle_freq` capping: identical
-    result to uncapped `jaccard_pairs`, with a candidate join that
+    WWW'08) — LOSSLESS, unlike capping stop-shingle posting lists:
+    identical result to `jaccard_pairs`, with a candidate join that
     explodes only each doc's PREFIX instead of its full posting list.
 
     The filter: order every doc's shingle set by one GLOBAL canonical
@@ -431,7 +429,6 @@ def contamination_pairs(
     *,
     n: int = 5,
     min_common: int = 1,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """Train/test contamination detection — the eval-integrity pass of a
     training-data pipeline: (train_id, test_id, n_common) for every train
@@ -440,7 +437,8 @@ def contamination_pairs(
     Same inverted-index shape as `jaccard_pairs` but ACROSS two corpora:
     the test side is tiny by construction (an eval set), so its exploded
     postings broadcast and the 100 TB train side never shuffles — the
-    scan streams against a broadcast hash table.
+    scan streams against a broadcast hash table. Shingles join as their
+    xxhash64, as in `jaccard_pairs`.
 
     Both sides cache at the shingle-ARRAY level for the same reason
     jaccard_pairs does: InferFiltersFromGenerate otherwise pushes a
@@ -450,16 +448,7 @@ def contamination_pairs(
     checkpoint — or accept the 2-3× recompute and drop the cache."""
 
     def _posts(df: DataFrame, slot: str) -> DataFrame:
-        sh = _shingled(df, id_col, text_col, n)
-        if hash_shingles:
-            # see jaccard_pairs: keep hashed arrays distinct so in-doc
-            # 64-bit collisions can't inflate n_common
-            sh = sh.select(
-                "doc",
-                F.array_distinct(
-                    F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-                ).alias("shingles"),
-            )
+        sh = _hashed(_shingled(df, id_col, text_col, n))
         # one slot per SIDE: train/test caches must stay live together
         return cache_scoped(slot, sh).select(
             "doc", F.explode("shingles").alias("shingle")
@@ -576,27 +565,6 @@ def minhash_signature(
     )
 
 
-def _banded(sig: DataFrame, bands: int, r: int) -> DataFrame:
-    """(doc, band, bucket) — hash each r-row band of the minhash
-    signature to one 8-byte bucket key. Shared by the self-join
-    (minhash_lsh_pairs) and cross-corpus (incremental_dedup
-    blocking="minhash") banding paths so the band geometry cannot
-    drift between them."""
-    return sig.select(
-        "doc",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.concat_ws(
-                        "_", F.slice("sig", b * r + 1, r).cast("array<string>")
-                    )
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -616,7 +584,20 @@ def minhash_lsh_pairs(
         "dedup.minhash.sig",
         minhash_signature(df, id_col, text_col, n=n, k=k),
     )
-    banded = _banded(sig, bands, r)
+    # (doc, band, bucket): each r-row band hashed to one 8-byte key
+    banded = sig.select(
+        "doc",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.lit(bands - 1)),
+                lambda b: F.xxhash64(
+                    F.concat_ws(
+                        "_", F.slice("sig", b * r + 1, r).cast("array<string>")
+                    )
+                ),
+            )
+        ).alias("band", "bucket"),
+    )
     cand = (
         banded.alias("x")
         .join(
@@ -771,7 +752,7 @@ def _combination_keys(sig: DataFrame, n_b: int, m: int) -> DataFrame:
     widths = [starts[i + 1] - starts[i] for i in range(n_b)]
 
     def block(i: int):
-        # a full-width block (n_blocks=1) needs the all-ones long:
+        # a full-width block (max_hamming = 0, m = 1) needs the all-ones long:
         # (1 << 64) - 1 overflows LongType
         mask = -1 if widths[i] == 64 else (1 << widths[i]) - 1
         return F.shiftrightunsigned("simhash", starts[i]).bitwiseAND(mask)
@@ -798,7 +779,6 @@ def simhash_pairs(
     text_col: str,
     *,
     max_hamming: int = 8,
-    n_blocks: int | None = None,
     n_rows: int | None = None,
     max_candidates: int | None = 1_000_000_000,
 ) -> DataFrame:
@@ -837,30 +817,18 @@ def simhash_pairs(
     bounded collect of 2048 longs) and RAISES with the measurement and
     the escalation path (minhash banding separates this regime; or a
     wider signature) instead of silently launching a shuffle that
-    cannot fit. Pass max_candidates=None to run regardless.
-
-    Passing `n_blocks` explicitly keeps the legacy single-block scheme
-    with that many blocks (m = 1; n_blocks < max_hamming + 1 trades
-    guaranteed recall for fewer candidates, as before) and skips the
-    tripwire — manual control opts out of the guard rails."""
-    if n_blocks is not None:
-        if not 1 <= n_blocks <= 64:
-            raise ValueError(
-                f"n_blocks must be in [1, 64], got {n_blocks}"
-            )
-        n_b, m = n_blocks, 1
-    else:
-        if n_rows is None:
-            n_rows = df.count()
-        if (
-            max_candidates is not None
-            and n_rows * (n_rows - 1) / 2 > max_candidates
-        ):
-            _simhash_mass_tripwire(
-                df, id_col, text_col, max_hamming, n_rows, max_candidates
-            )
-        m = _pick_combo_order(n_rows, max_hamming)
-        n_b = max_hamming + m
+    cannot fit. Pass max_candidates=None to run regardless."""
+    if n_rows is None:
+        n_rows = df.count()
+    if (
+        max_candidates is not None
+        and n_rows * (n_rows - 1) / 2 > max_candidates
+    ):
+        _simhash_mass_tripwire(
+            df, id_col, text_col, max_hamming, n_rows, max_candidates
+        )
+    m = _pick_combo_order(n_rows, max_hamming)
+    n_b = max_hamming + m
     # signature computation is the expensive pass; the blocking self-join
     # reads it twice → cache
     sig = cache_scoped(
@@ -1001,8 +969,6 @@ def incremental_dedup(
     *,
     n: int = 3,
     threshold: float = 0.8,
-    hash_shingles: bool = True,
-    blocking: str = "exact",
     max_candidates: int | None = None,
 ) -> DataFrame:
     """Continuous-ingest dedup: drop new-batch docs that duplicate the
@@ -1013,7 +979,8 @@ def incremental_dedup(
     Two cuts, both one-directional:
     1. exact — batch docs whose sha256 digest matches any corpus doc;
     2. near  — batch docs with distinct word n-gram Jaccard >= threshold
-       against any corpus doc (same integer-count math as jaccard_pairs).
+       against any corpus doc (same integer-count math as jaccard_pairs),
+       from a posting join on the shared shingle strings.
 
     Returns the surviving batch rows (original columns).
 
@@ -1026,37 +993,15 @@ def incremental_dedup(
     beyond that, switch the near cut to a shuffled join on the hashed
     shingle key — same counts, one corpus shuffle.)
 
-    `blocking` picks the NEAR cut's candidate generator:
-
-    - "exact" (default, the oracle-checked config): posting join on
-      shared shingles — lossless, but its candidate mass is
-      Σ_s df_batch(s)·df_corpus(s), which degrades toward Θ(|b|·|c|/V)
-      when the shingle vocabulary V saturates (the r12 sf10 decade
-      measured 3.7e9 candidates at 100k×400k docs over V = 29,791 —
-      one spilling hash aggregate that never finished). Pass
-      `max_candidates` to make that wall LOUD: the mass is estimated
-      from the two df tables (one V-row join — metadata-scale next to
-      the join it guards) and the cut RAISES with the measured mass
-      and this escalation path instead of launching it.
-    - "minhash" — band both sides' 64-hash MinHash signatures
-      (16 bands × r=4, the minhash_lsh_pairs geometry) and take
-      candidates from shared (band, bucket) only, then re-score each
-      candidate with the EXACT distinct-shingle jaccard (array
-      intersect per pair, no posting shuffle). Candidate mass is the
-      banding collision mass (measured 899k at the same sf10 shape —
-      4000× under the posting join), at banding recall: a true pair at
-      j = 0.8 is missed with P = (1-0.8⁴)¹⁶ ≈ 2.2e-4; kept pairs are
-      never wrong (the refine is exact). The decade-scale default.
-
-    `max_candidates` guards BOTH generators (ADVICE r12: the banding
-    join has its own blowup mode — skewed (band, bucket) collision
-    buckets, e.g. a constant-prefix corpus whose band signatures all
-    coincide): under "minhash" the collision mass
-    Σ over shared (band, bucket) of n_batch·n_corpus is estimated
-    from the two bucket-count tables (one bucket-grain join —
-    metadata-scale next to the candidate join it guards) and the cut
-    raises with the measured mass and the dominant bucket before
-    launching the join."""
+    The posting join is lossless, but its candidate mass is
+    Σ_s df_batch(s)·df_corpus(s), which degrades toward Θ(|b|·|c|/V)
+    when the shingle vocabulary V saturates (the r12 sf10 decade
+    measured 3.7e9 candidates at 100k×400k docs over V = 29,791 — one
+    spilling hash aggregate that never finished). Pass `max_candidates`
+    to make that wall LOUD: the mass is estimated from the two df
+    tables (one V-row join — metadata-scale next to the join it guards)
+    and the cut RAISES with the measured mass and the escalation path
+    instead of launching it."""
     b_digest = batch.select(
         F.col(id_col).alias("__bid"),
         content_sha256(text_col).alias("__digest"),
@@ -1069,19 +1014,10 @@ def incremental_dedup(
     )
 
     def _posts(df: DataFrame, side: str) -> DataFrame:
-        sh = _shingled(df, id_col, text_col, n)
-        if hash_shingles:
-            # see jaccard_pairs: keep hashed arrays distinct so in-doc
-            # 64-bit collisions can't inflate n_common
-            sh = sh.select(
-                "doc",
-                F.array_distinct(
-                    F.transform(F.col("shingles"), lambda s: F.xxhash64(s))
-                ).alias("shingles"),
-            )
         # explode_outer + isNotNull: see _shingled's EXPLODE CAVEAT
         return (
-            sh.select(
+            _shingled(df, id_col, text_col, n)
+            .select(
                 F.col("doc").alias(f"{side}_id"),
                 F.size("shingles").alias(f"n_{side}"),
                 F.explode_outer("shingles").alias("shingle"),
@@ -1089,129 +1025,46 @@ def incremental_dedup(
             .filter(F.col("shingle").isNotNull())
         )
 
-    if blocking == "exact":
-        c_posts = _posts(corpus, "c")
-        b_posts = _posts(batch, "b")
-        if max_candidates is not None:
-            mass_row = (
-                c_posts.groupBy("shingle")
-                .agg(F.count("*").alias("__dfc"))
-                .join(
-                    b_posts.groupBy("shingle").agg(
-                        F.count("*").alias("__dfb")
-                    ),
-                    "shingle",
-                )
-                .agg(F.sum(F.col("__dfc") * F.col("__dfb")).alias("__m"))
-                .first()
+    c_posts = _posts(corpus, "c")
+    b_posts = _posts(batch, "b")
+    if max_candidates is not None:
+        mass_row = (
+            c_posts.groupBy("shingle")
+            .agg(F.count("*").alias("__dfc"))
+            .join(
+                b_posts.groupBy("shingle").agg(F.count("*").alias("__dfb")),
+                "shingle",
             )
-            mass = int(mass_row["__m"] or 0)
-            if mass > max_candidates:
-                raise RuntimeError(
-                    "incremental_dedup: the exact posting join would "
-                    f"generate ~{mass:.3g} candidate rows "
-                    f"(max_candidates={max_candidates:.3g}) — the "
-                    "shingle vocabulary is too dense for exact "
-                    "blocking at this corpus size. Re-run with "
-                    "blocking='minhash' (banded candidates + exact "
-                    "re-score, recall ~1-2e-4 miss at the 0.8 "
-                    "threshold) or raise max_candidates."
-                )
-        near_hits = (
-            c_posts.join(F.broadcast(b_posts), "shingle")
-            .groupBy("b_id", "c_id")
-            .agg(
-                F.count("*").alias("n_common"),
-                F.first("n_b").alias("n_b"),
-                F.first("n_c").alias("n_c"),
+            .agg(F.sum(F.col("__dfc") * F.col("__dfb")).alias("__m"))
+            .first()
+        )
+        mass = int(mass_row["__m"] or 0)
+        if mass > max_candidates:
+            raise RuntimeError(
+                "incremental_dedup: the exact posting join would "
+                f"generate ~{mass:.3g} candidate rows "
+                f"(max_candidates={max_candidates:.3g}) — the shingle "
+                "vocabulary is too dense for exact blocking at this "
+                "corpus size. Narrow the batch, raise max_candidates, "
+                "or take banded candidates with minhash_lsh_pairs and "
+                "re-score them exactly with refine_pairs_exact."
             )
-            .filter(
-                F.col("n_common")
-                / (F.col("n_b") + F.col("n_c") - F.col("n_common"))
-                >= threshold
-            )
-            .select(F.col("b_id").alias("__bid"))
-            .distinct()
+    near_hits = (
+        c_posts.join(F.broadcast(b_posts), "shingle")
+        .groupBy("b_id", "c_id")
+        .agg(
+            F.count("*").alias("n_common"),
+            F.first("n_b").alias("n_b"),
+            F.first("n_c").alias("n_c"),
         )
-    elif blocking == "minhash":
-        bands, k = 16, 64
-        r = k // bands
-        band_c = _banded(
-            minhash_signature(corpus, id_col, text_col, n=n, k=k),
-            bands,
-            r,
-        ).select(F.col("doc").alias("__cid"), "band", "bucket")
-        band_b = _banded(
-            minhash_signature(batch, id_col, text_col, n=n, k=k),
-            bands,
-            r,
-        ).select(F.col("doc").alias("__bid"), "band", "bucket")
-        if max_candidates is not None:
-            # The mass estimate's .first() is an eager action over BOTH
-            # banded relations, which the candidate join then consumes
-            # AGAIN — without a pin the k=64-hash signature build (the
-            # dominant pre-join cost) runs twice at exactly the decade
-            # scale the guard targets (ADVICE r13). Scoped slots: the
-            # next invocation (or release_caches) evicts the pin.
-            band_c = cache_scoped("dedup.incremental.band_c", band_c)
-            band_b = cache_scoped("dedup.incremental.band_b", band_b)
-            mass_row = (
-                band_c.groupBy("band", "bucket")
-                .agg(F.count("*").alias("__nc"))
-                .join(
-                    band_b.groupBy("band", "bucket").agg(
-                        F.count("*").alias("__nb")
-                    ),
-                    ["band", "bucket"],
-                )
-                .agg(
-                    F.sum(F.col("__nc") * F.col("__nb")).alias("__m"),
-                    F.max(F.col("__nc") * F.col("__nb")).alias("__mx"),
-                )
-                .first()
-            )
-            mass = int(mass_row["__m"] or 0)
-            if mass > max_candidates:
-                raise RuntimeError(
-                    "incremental_dedup: the minhash banding join would "
-                    f"generate ~{mass:.3g} candidate rows "
-                    f"(max_candidates={max_candidates:.3g}; largest "
-                    f"single (band, bucket) contributes "
-                    f"{int(mass_row['__mx'] or 0):.3g}) — the corpus's "
-                    "band signatures are heavily skewed (near-constant "
-                    "content collapses buckets). Narrow the batch, "
-                    "pre-split the dominant buckets, or raise "
-                    "max_candidates."
-                )
-        cand = (
-            band_c.join(F.broadcast(band_b), ["band", "bucket"])
-            .select("__bid", "__cid")
-            .distinct()
+        .filter(
+            F.col("n_common")
+            / (F.col("n_b") + F.col("n_c") - F.col("n_common"))
+            >= threshold
         )
-        # exact re-score per candidate: array-intersect jaccard on the
-        # two sides' distinct-shingle arrays — no posting shuffle, two
-        # id-keyed joins (batch side broadcast: candidates ≤ banding
-        # collision mass, batch shingle arrays ≤ batch size)
-        sh_c = _shingled(corpus, id_col, text_col, n).select(
-            F.col("doc").alias("__cid"), F.col("shingles").alias("__sh_c")
-        )
-        sh_b = _shingled(batch, id_col, text_col, n).select(
-            F.col("doc").alias("__bid"), F.col("shingles").alias("__sh_b")
-        )
-        inter = F.size(F.array_intersect("__sh_c", "__sh_b"))
-        union = F.size("__sh_c") + F.size("__sh_b") - inter
-        near_hits = (
-            cand.join(sh_c, "__cid")
-            .join(F.broadcast(sh_b), "__bid")
-            .filter(inter / union >= threshold)
-            .select("__bid")
-            .distinct()
-        )
-    else:
-        raise ValueError(
-            f"incremental_dedup: unknown blocking {blocking!r} "
-            "(expected 'exact' or 'minhash')"
-        )
+        .select(F.col("b_id").alias("__bid"))
+        .distinct()
+    )
     dropped = exact_hits.union(near_hits).distinct()
     return batch.join(
         F.broadcast(dropped),

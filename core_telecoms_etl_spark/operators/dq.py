@@ -42,30 +42,20 @@ def checks_df(
     df: DataFrame,
     not_null: Sequence[str] = (),
     unique: Sequence[str] = (),
-    accepted_values: dict[str, Sequence[str]] | None = None,
 ) -> DataFrame:
     """A table's whole check suite as ONE relation of
     (check_name, column_name, violations), rows in the order not_null,
-    accepted_values, unique.
+    unique.
 
     Every check is one aggregate expression of a single global
     aggregate, unpivoted by `stack`:
     - not_null: `count_if(c IS NULL)`;
-    - accepted_values: `count_if(c NOT IN values)`, NULL not counted;
     - unique: `count(c) - count(DISTINCT c)`, the excess rows of every
       duplicated key. Both counts skip NULL keys, and the distinct
       aggregate groups NaN and -0.0/0.0 the way `groupBy` does.
     Over an empty table every count is 0, so an empty batch passes."""
     suite: list[tuple[str, str, Column]] = [
         ("not_null", c, F.count_if(F.col(c).isNull())) for c in not_null
-    ]
-    suite += [
-        (
-            "accepted_values",
-            c,
-            F.count_if(F.col(c).isNotNull() & ~F.col(c).isin(list(values))),
-        )
-        for c, values in (accepted_values or {}).items()
     ]
     suite += [
         ("unique", c, F.count(c) - F.count_distinct(c)) for c in unique
@@ -89,15 +79,12 @@ def run_checks(
     df: DataFrame,
     not_null: Sequence[str] = (),
     unique: Sequence[str] = (),
-    accepted_values: dict[str, Sequence[str]] | None = None,
 ) -> list[DQResult]:
     """Run a table's suite via `checks_df` — one collect (one Spark
     action) regardless of the number of checks."""
-    if not (not_null or unique or accepted_values):
+    if not (not_null or unique):
         return []
-    rows = checks_df(
-        df, not_null=not_null, unique=unique, accepted_values=accepted_values
-    ).collect()
+    rows = checks_df(df, not_null=not_null, unique=unique).collect()
     return [
         DQResult(r.check_name, r.column_name, int(r.violations)) for r in rows
     ]
@@ -105,8 +92,8 @@ def run_checks(
 
 def profile_columns(
     df: DataFrame,
-    numeric_cols: Sequence[str] = (),
-    string_cols: Sequence[str] = (),
+    numeric_cols: Sequence[str],
+    string_cols: Sequence[str],
 ) -> DataFrame:
     """Deequ/dbt-profile-style column statistics in ONE aggregation pass:
     (column, n_rows, n_nulls, n_distinct, min_num, max_num, min_str,
@@ -138,13 +125,11 @@ def profile_columns(
     for c in numeric_cols:
         aggs.append(F.min(F.col(c).cast("double")).alias(f"__min_{c}"))
         aggs.append(F.max(F.col(c).cast("double")).alias(f"__max_{c}"))
-    wide = df.agg(*aggs)
-    if string_cols:
-        str_aggs: list = []
-        for c in string_cols:
-            str_aggs.append(F.min(F.col(c)).alias(f"__min_{c}"))
-            str_aggs.append(F.max(F.col(c)).alias(f"__max_{c}"))
-        wide = wide.join(F.broadcast(df.agg(*str_aggs)))
+    str_aggs: list = []
+    for c in string_cols:
+        str_aggs.append(F.min(F.col(c)).alias(f"__min_{c}"))
+        str_aggs.append(F.max(F.col(c)).alias(f"__max_{c}"))
+    wide = df.agg(*aggs).join(F.broadcast(df.agg(*str_aggs)))
 
     def _row(c: str, numeric: bool) -> F.Column:
         none_d = F.lit(None).cast("double")

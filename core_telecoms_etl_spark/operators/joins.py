@@ -32,11 +32,6 @@ matrix in BASELINE.md round-15, "Skewed-key standing corpus"):
   plain plan is asserted on a hot key in tier-1
   (tests/test_joins.py) and on the skew corpus by the 210-query
   differential.
-- `writers.write_table(bucket_by=...)` + joining two tables bucketed on
-  the same key/count: Spark plans a shuffle-free sort-merge join (no
-  Exchange) — the pre-partitioning amortizes the shuffle across every
-  downstream join of the same key, the co-located-join workhorse for
-  repeatedly-joined 100 TB fact tables.
 """
 
 from __future__ import annotations
@@ -91,22 +86,20 @@ def salted_groupby(
     *,
     salt_from: str,
     n_salts: int = 16,
-    counts: bool = True,
     sums: list[str] | None = None,
 ) -> DataFrame:
     """Two-phase aggregation for skewed group keys: partial agg on
     (keys + salt) — spreading a hot key across n_salts reducers — then a
-    cheap final agg on keys over n_salts partials. Supports the
-    decomposable aggregates (count/sum; avg = sum/count downstream)."""
+    cheap final agg on keys over n_salts partials. Returns the keys, the
+    row count `n` and `sum_<c>` for each `sums` column (the decomposable
+    aggregates; avg = sum/count downstream)."""
     sums = sums or []
     salted = df.withColumn("__salt", salt_column(salt_from, n_salts))
-    partial_aggs = []
-    if counts:
-        partial_aggs.append(F.count("*").alias("__cnt"))
-    partial_aggs += [F.sum(c).alias(f"__sum_{c}") for c in sums]
-    partial = salted.groupBy(*keys, "__salt").agg(*partial_aggs)
-    final_aggs = []
-    if counts:
-        final_aggs.append(F.sum("__cnt").alias("n"))
-    final_aggs += [F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sums]
-    return partial.groupBy(*keys).agg(*final_aggs)
+    partial = salted.groupBy(*keys, "__salt").agg(
+        F.count("*").alias("__cnt"),
+        *[F.sum(c).alias(f"__sum_{c}") for c in sums],
+    )
+    return partial.groupBy(*keys).agg(
+        F.sum("__cnt").alias("n"),
+        *[F.sum(f"__sum_{c}").alias(f"sum_{c}") for c in sums],
+    )

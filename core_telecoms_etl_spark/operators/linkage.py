@@ -37,14 +37,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def canonicalize(col: Column | str) -> Column:
-    """Normalization applied before any fuzzy compare: lowercase, trim,
-    collapse internal whitespace runs. Cheap, deterministic, and removes
-    the edit-distance noise that isn't entity identity."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(F.trim(F.lower(c)), r"\s+", " ")
-
-
 def fuzzy_pairs(
     df: DataFrame,
     id_col: str,
@@ -52,11 +44,10 @@ def fuzzy_pairs(
     block_col: str,
     *,
     max_dist: int = 2,
-    normalize: bool = False,
     max_block_pairs: int | None = None,
 ) -> DataFrame:
     """Candidate duplicate pairs within each block: records whose
-    (optionally canonicalized) names are within `max_dist` edits.
+    names are within `max_dist` edits.
     Returns (id_a, id_b, name_a, name_b, edit_dist) with id_a < id_b so
     each unordered pair appears once.
 
@@ -74,7 +65,7 @@ def fuzzy_pairs(
     aggregate) and the operator RAISES with the measured mass and the
     dominant block before launching a join that cannot finish —
     re-block on a compound key or raise the budget."""
-    name = canonicalize(name_col) if normalize else F.col(name_col)
+    name = F.col(name_col)
     if max_block_pairs is not None:
         _block_mass_guard(
             df.select(F.col(block_col).alias("_blk")),
@@ -201,7 +192,6 @@ def fuzzy_pairs_deletion(
     block_col: str,
     *,
     max_dist: int = 2,
-    normalize: bool = False,
     max_block_pairs: int | None = None,
 ) -> DataFrame:
     """LOSSLESS compound-key arm of `fuzzy_pairs` (the production path
@@ -224,7 +214,7 @@ def fuzzy_pairs_deletion(
 
     `max_block_pairs` guards the neighborhood join's own collision
     mass, same loud contract as the other arms."""
-    name = canonicalize(name_col) if normalize else F.col(name_col)
+    name = F.col(name_col)
     # rebalance BEFORE the 172-way explode: the input relation is small
     # (a dim-table scan — one or two parquet partitions; at sf10 the
     # whole 1.5M-row customer table is 24 MB), so the narrow

@@ -47,16 +47,11 @@ def observe_counts(
     df: DataFrame,
     *,
     name: str = "load_metrics",
-    not_null_col: str | None = None,
 ) -> ObservedFrame:
-    """Attach row-count (+ optional null-key count) metrics to a plan.
-    The counts come for free with whatever action the caller runs."""
+    """Attach a row-count metric to a plan. The count comes for free
+    with whatever action the caller runs."""
     obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    if not_null_col is not None:
-        aggs.append(
-            F.sum(
-                F.when(F.col(not_null_col).isNull(), 1).otherwise(0)
-            ).alias(f"n_null_{not_null_col}")
-        )
-    return ObservedFrame(df=df.observe(obs, *aggs), observation=obs)
+    return ObservedFrame(
+        df=df.observe(obs, F.count(F.lit(1)).alias("n_rows")),
+        observation=obs,
+    )

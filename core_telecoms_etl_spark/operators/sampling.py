@@ -153,12 +153,13 @@ def cap_per_group(
     order_cols: list[Column | str],
     n: int,
     *,
-    rank_col: str | None = None,
+    rank_col: str,
 ) -> DataFrame:
     """Keep at most `n` rows per group under a deterministic priority
     order (C4/CommonCrawl-style per-domain document caps: no single
-    domain may dominate the corpus). `order_cols` MUST end in a unique
-    tiebreaker so the kept set is stable across engines and runs.
+    domain may dominate the corpus), each with its 1-based rank in
+    `rank_col`. `order_cols` MUST end in a unique tiebreaker so the
+    kept set is stable across engines and runs.
 
     Scale: one shuffle on `group_col`; Spark plans the rank filter as a
     WindowGroupLimit (per-partition top-n pushed below the final sort),
@@ -170,10 +171,6 @@ def cap_per_group(
 
     w = Window.partitionBy(group_col).orderBy(*order_cols)
     rk = F.row_number().over(w)
-    if rank_col is None:
-        return (
-            df.withColumn("__rk", rk).filter(F.col("__rk") <= n).drop("__rk")
-        )
     return df.withColumn(rank_col, rk.cast("long")).filter(
         F.col(rank_col) <= n
     )

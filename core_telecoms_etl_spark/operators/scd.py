@@ -68,7 +68,6 @@ def snapshot_diff(
     *,
     key_cols: list[str],
     compare_cols: list[str] | None = None,
-    include_unchanged: bool = False,
 ) -> DataFrame:
     """CDC-style diff of two snapshots of the same table: classify each
     business key as ``insert`` (only in new), ``delete`` (only in old)
@@ -78,8 +77,8 @@ def snapshot_diff(
     delta between runs, not a rewrite — this produces exactly that
     change feed.
 
-    Returns the key columns + ``change_type`` (+ unchanged rows when
-    ``include_unchanged``). Scale: ONE shuffle per side on the key for
+    Returns the key columns + ``change_type``; unchanged keys drop out.
+    Scale: ONE shuffle per side on the key for
     the full outer join; only key + compared columns are carried
     through the exchange (column pruning reaches the scans), and the
     comparison is JVM-side null-safe equality — no hashing, so no
@@ -119,13 +118,10 @@ def snapshot_diff(
         .when(changed, F.lit("update"))
         .otherwise(F.lit("unchanged"))
     )
-    out = joined.select(
+    return joined.select(
         *[
             F.coalesce(F.col(f"__nk_{c}"), F.col(f"__ok_{c}")).alias(c)
             for c in key_cols
         ],
         change_type.alias("change_type"),
-    )
-    if not include_unchanged:
-        out = out.filter(F.col("change_type") != "unchanged")
-    return out
+    ).filter(F.col("change_type") != "unchanged")

@@ -1031,20 +1031,15 @@ def cluster_assign_topn(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     n_assign: int = 1,
-    kmeans_iters: int = 2,
 ) -> DataFrame:
     """(id, centroid_id) with each vector assigned to its `n_assign`
-    nearest centroids (kmeans-refined deterministic quantizer).
+    nearest centroids (deterministic quantizer refined by 2 kmeans
+    iterations).
     Multi-assignment is the blocking-recall lever: a pair is compared if
     the two vectors share ANY assigned cluster, so n_assign > 1 plays
     the same role as LSH's multiple tables."""
-    cents = (
-        kmeans_centroids(
-            df, id_col=id_col, vec_col=vec_col, k=n_clusters,
-            iters=kmeans_iters,
-        )
-        if kmeans_iters > 0
-        else _centroids(df, id_col, vec_col, n_clusters)
+    cents = kmeans_centroids(
+        df, id_col=id_col, vec_col=vec_col, k=n_clusters, iters=2
     )
     cn = cents.withColumn("cent_n2", norm2_expr("centroid"))
     scored = df.select(

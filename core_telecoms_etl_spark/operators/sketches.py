@@ -45,22 +45,19 @@ def cms_build(
     *,
     depth: int = 4,
     width: int = 8192,
-    weight_col: str | None = None,
 ) -> DataFrame:
-    """(seed, bucket, count) counter matrix over `df[key_col]`.
+    """(seed, bucket, count) counter matrix over `df[key_col]`, each row
+    counted once.
 
     Missing (seed, bucket) cells are zero by convention — `cms_estimate`
     coalesces them — so the table never materializes empty cells."""
     if depth < 1 or width < 1:
         raise ValueError(f"depth/width must be >= 1, got {depth}/{width}")
-    w = (
-        F.col(weight_col).cast("long")
-        if weight_col is not None
-        else F.lit(1).cast("long")
-    )
     seeds = F.array(*[F.lit(i) for i in range(depth)])
     return (
-        df.select(F.col(key_col).alias("__key"), w.alias("__w"))
+        df.select(
+            F.col(key_col).alias("__key"), F.lit(1).cast("long").alias("__w")
+        )
         .select(F.explode(seeds).alias("seed"), "__key", "__w")
         .select(
             "seed",

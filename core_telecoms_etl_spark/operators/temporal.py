@@ -41,7 +41,6 @@ def asof_join(
     right_cols: list[str] | None = None,
     suffix: str = "_right",
     direction: str = "backward",
-    tolerance: float | None = None,
 ) -> DataFrame:
     """For each left row, attach one right row for the same ``on`` key
     (left-join semantics: unmatched left rows keep NULLs), pandas
@@ -51,8 +50,6 @@ def asof_join(
     - ``forward``: earliest right with ``right.ts >= left.ts``
     - ``nearest``: whichever of the two is closer (ties → backward,
       matching pandas)
-    - ``tolerance``: maximum |left.ts - right.ts| (in the ts column's
-      units; seconds for timestamps) — farther matches become NULLs.
 
     Single shuffle on ``on`` for every direction; per-partition ordered
     scans (nearest adds a second sort over the SAME partitioning — no
@@ -105,8 +102,8 @@ def asof_join(
         ],
     )
     out = carried.filter(F.col("__side") == 1)
-    ts_d = F.col("__ts").cast("double")
     if direction == "nearest":
+        ts_d = F.col("__ts").cast("double")
         d_b = ts_d - F.col("__mts_b")
         d_f = F.col("__mts_f") - ts_d
         use_b = F.col("__mts_f").isNull() | (
@@ -116,15 +113,11 @@ def asof_join(
             F.when(use_b, F.col(f"__mb_{c}")).otherwise(F.col(f"__mf_{c}"))
             for c in right_cols
         ]
-        delta = F.when(use_b, d_b).otherwise(d_f)
     else:
         tag = "b" if direction == "backward" else "f"
         picked = [F.col(f"__m{tag}_{c}") for c in right_cols]
-        delta = F.abs(ts_d - F.col(f"__mts_{tag}"))
     keep = list(left.columns)
     for c, col in zip(right_cols, picked):
-        if tolerance is not None:
-            col = F.when(delta <= F.lit(float(tolerance)), col)
         name = c if c not in left.columns else f"{c}{suffix}"
         out = out.withColumn(name, col)
         keep.append(name)
@@ -136,11 +129,9 @@ def range_join_binned(
     right: DataFrame,
     *,
     on: str,
-    left_id: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
     window_seconds: int,
-    how: str = "inner",
 ) -> DataFrame:
     """Join right rows with ``l.ts < r.ts <= l.ts + window_seconds`` for the
     same key. Executed as an equi-join on (key, time-bin): bin width equals
@@ -149,9 +140,9 @@ def range_join_binned(
     exact range predicate refines inside the hash join.
 
     Output columns: every left column prefixed ``l_``, every right column
-    prefixed ``r_``. ``how="left"`` keeps zero-match left rows (NULL right
-    columns), reconstructed via a left-anti join keyed on ``left_id`` (must
-    be unique per left row)."""
+    prefixed ``r_``. Inner-join semantics: a left row with no match in
+    its window drops out (a caller that needs it back joins its
+    aggregates onto the left side)."""
     span_us = window_seconds * 1_000_000
 
     def bin_of(ts: Column) -> Column:
@@ -182,27 +173,9 @@ def range_join_binned(
             <= F.unix_micros(l_pref["__lts"]) + span_us
         )
     )
-    inner = l_pref.join(r_pref, cond, "inner").drop(
+    return l_pref.join(r_pref, cond, "inner").drop(
         "__k", "__rk", "__bin", "__lts", "__rts", "__rbin_src"
     )
-    if how == "inner":
-        return inner
-    if how != "left":
-        raise ValueError(f"unsupported how={how!r}")
-    r_null_types = {c: t for c, t in inner.dtypes if c.startswith("r_")}
-    unmatched = (
-        l_pref.drop("__bin")
-        .dropDuplicates([f"l_{left_id}"])
-        .join(
-            inner.select(F.col(f"l_{left_id}").alias("__mk")).distinct(),
-            F.col(f"l_{left_id}") == F.col("__mk"),
-            "left_anti",
-        )
-        .drop("__k", "__lts")
-    )
-    for c, t in r_null_types.items():
-        unmatched = unmatched.withColumn(c, F.lit(None).cast(t))
-    return inner.unionByName(unmatched)
 
 
 def time_grid_ffill(

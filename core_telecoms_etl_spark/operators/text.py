@@ -257,13 +257,7 @@ def sentiment_polarity(col: Column | str) -> Column:
     return (pos - neg) / (pos + neg + F.lit(1))
 
 
-def quality_quantile_filter(
-    df,
-    score_col,
-    quantile: float = 0.25,
-    *,
-    exact: bool = True,
-):
+def quality_quantile_filter(df, score_col, quantile: float = 0.25):
     """Drop rows below the `quantile`-th percentile of `score_col` — the
     corpus-relative quality cut of a training-data pipeline ("keep the
     top 75%"), as opposed to the absolute-threshold filter callers can
@@ -272,11 +266,8 @@ def quality_quantile_filter(
     The threshold is computed with `percentile` (exact, linearly
     interpolated) and broadcast back as a scalar cross join, so the data
     pass is an ordinary pushdown-able filter. Two passes over the data —
-    unavoidable for a corpus-relative cut. `exact=True` keeps memory
-    proportional to DISTINCT score values (fine for ratio-valued scores);
-    at 100 TB with high-cardinality scores switch `exact=False` →
-    `approx_percentile` (t-digest, mergeable, bounded memory, rows-only
-    vs an oracle).
+    unavoidable for a corpus-relative cut. Memory is proportional to
+    DISTINCT score values (fine for ratio-valued scores).
 
     Boundary safety for exact-oracle comparison: an interpolated
     threshold lies strictly between two ADJACENT sorted data values, so
@@ -284,9 +275,8 @@ def quality_quantile_filter(
     ulp-different one — `score >= thr` membership matches bit-exactly.
     """
     c = F.col(score_col) if isinstance(score_col, str) else score_col
-    fn = "percentile" if exact else "approx_percentile"
     thr = df.select(
-        F.expr(f"{fn}({score_col}, {quantile!r})").alias("__thr")
+        F.expr(f"percentile({score_col}, {quantile!r})").alias("__thr")
     )
     return (
         df.crossJoin(F.broadcast(thr))

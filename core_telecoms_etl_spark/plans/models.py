@@ -60,8 +60,9 @@ class ModelRegistry:
 
         return deco
 
-    def _order(self, targets: Sequence[str]) -> list[str]:
-        """DFS topological order over ref() edges, with cycle detection."""
+    def _order(self) -> list[str]:
+        """DFS topological order of every model over ref() edges, with
+        cycle detection."""
         order: list[str] = []
         state: dict[str, int] = {}  # 1=visiting, 2=done
 
@@ -78,21 +79,19 @@ class ModelRegistry:
             state[n] = 2
             order.append(n)
 
-        for t in targets:
+        for t in self.models:
             visit(t)
         return order
 
-    def build(
-        self, spark: SparkSession, select: Sequence[str] | None = None
-    ) -> dict[str, DataFrame]:
-        """Build models in dependency order; returns name → DataFrame."""
-        targets = list(select) if select else list(self.models)
+    def build(self, spark: SparkSession) -> dict[str, DataFrame]:
+        """Build every model in dependency order; returns name →
+        DataFrame."""
         built: dict[str, DataFrame] = {}
 
         def ref(name: str) -> DataFrame:
             return built[name]
 
-        for name in self._order(targets):
+        for name in self._order():
             spec = self.models[name]
             df = spec.fn(spark, ref)
             if spec.materialized == "view":

@@ -80,8 +80,7 @@ def range_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     event, per user. Executed as a binned equi-join (≤2 bins per window),
     never a nested-loop (operators/temporal.py). Zero-match errors are
     restored by LEFT-joining the aggregated counts back onto the error
-    set — cheaper than the operator's how="left" reconstruction because
-    the second join touches per-error aggregates, not candidates."""
+    set: the second join touches per-error aggregates, not candidates."""
     ev = load_table(spark, sf_dir, "events")
     errors = ev.filter(F.col("event_type") == "error").select(
         "event_id", "user_id", "ts"
@@ -90,9 +89,7 @@ def range_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         errors,
         ev.select("event_id", "user_id", "ts", "value"),
         on="user_id",
-        left_id="event_id",
         window_seconds=600,
-        how="inner",
     )
     counts = cand.groupBy("l_event_id").agg(
         F.count("r_event_id").alias("n_next_10m"),

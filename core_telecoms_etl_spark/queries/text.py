@@ -1055,16 +1055,13 @@ def corpus_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ingested batch, the rest the existing (already-clean) corpus; batch
     docs that exactly or near-duplicate (3-gram Jaccard ≥ 0.8) a corpus
     doc are dropped. The corpus side never shuffles — both cuts stream it
-    against the broadcast batch (operators/dedup.py incremental_dedup).
-    hash_shingles=False here so the near cut joins exact string shingles
-    — the oracle-checked configuration; hashing to 8-byte longs is the
-    scale default, exact up to 64-bit collisions."""
+    against the broadcast batch (operators/dedup.py incremental_dedup),
+    whose near cut joins the exact string shingles."""
     d = load_table(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 10 < 2)
     corpus = d.filter(F.col("doc_id") % 10 >= 2)
     return dd.incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.8,
-        hash_shingles=False,
+        corpus, batch, "doc_id", "text", n=3, threshold=0.8
     ).select("doc_id", "source", "n_chars")
 
 

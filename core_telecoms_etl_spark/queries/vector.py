@@ -285,9 +285,7 @@ def semantic_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     glob = sim.cosine_pairs_arrow_rounded6(
         e, id_col="vec_id", vec_col="embedding", threshold=_SEMDEDUP_TH
     ).select("id_a", "id_b")
-    assign = sim.cluster_assign_topn(
-        e, n_clusters=16, n_assign=4, kmeans_iters=2
-    )
+    assign = sim.cluster_assign_topn(e, n_clusters=16, n_assign=4)
     ca = assign.select(F.col("vec_id").alias("id_a"), "centroid_id")
     cb = assign.select(F.col("vec_id").alias("id_b"), "centroid_id")
     cand = (

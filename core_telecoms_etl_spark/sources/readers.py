@@ -67,7 +67,6 @@ def read_csv(
     *,
     header: bool = True,
     null_value: str = "",
-    options: Mapping[str, Any] | None = None,
 ) -> DataFrame:
     """Header CSV scan. ``null_value=""`` mirrors the reference's
     empty-string⇒NULL load semantics."""
@@ -76,9 +75,6 @@ def read_csv(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", True)
-    if options:
-        for k, v in options.items():
-            reader = reader.option(k, v)
     paths = [path] if isinstance(path, str) else list(path)
     return reader.csv(paths)
 
@@ -89,16 +85,12 @@ def read_json(
     schema: T.StructType | str | None = None,
     *,
     multiline: bool = False,
-    options: Mapping[str, Any] | None = None,
 ) -> DataFrame:
     """JSON-lines (or record-array with multiline=True) scan for the
     social-media complaint shape (plugins/s3_copy.py:113-114)."""
     reader = spark.read.option("multiLine", multiline)
     if schema is not None:
         reader = reader.schema(schema)
-    if options:
-        for k, v in options.items():
-            reader = reader.option(k, v)
     paths = [path] if isinstance(path, str) else list(path)
     return reader.json(paths)
 

@@ -29,41 +29,13 @@ def write_parquet(
     *,
     mode: str = "append",
     partition_by: Sequence[str] | None = None,
-    normalize: bool = True,
 ) -> None:
     """Append-merge parquet sink (reference: every daily file appended to
     the folder-table, README.md:23). Column names are normalized to
     lower_snake_case before the write so later multi-file scans resolve
     by-name across daily schema/case drift — the Spark analog of
     MATCH_BY_COLUMN_NAME=CASE_INSENSITIVE (plugins/snowflake_load.py:191)."""
-    out = normalize_column_names(df) if normalize else df
-    writer = out.write.mode(mode)
+    writer = normalize_column_names(df).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
-
-
-def write_table(
-    df: DataFrame,
-    name: str,
-    *,
-    mode: str = "append",
-    partition_by: Sequence[str] | None = None,
-    bucket_by: tuple[int, Sequence[str]] | None = None,
-    normalize: bool = True,
-) -> None:
-    """Catalog-table sink: replaces the reference's CREATE-TABLE-from-
-    first-parquet + COPY INTO (plugins/snowflake_load.py:138-196).
-    `saveAsTable` derives the DDL from the DataFrame schema natively.
-    Optional bucketing pre-co-locates future joins on the bucket key —
-    the shuffle the reference paid Snowflake for disappears."""
-    out = normalize_column_names(df) if normalize else df
-    writer = out.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    if bucket_by:
-        n, cols = bucket_by
-        writer = writer.bucketBy(n, *cols).sortBy(*cols)
-    writer.saveAsTable(name)
-
-

@@ -791,7 +791,6 @@ def _stage_explicit_slices(
 def run_stream_cms(
     spark: SparkSession,
     events_path: str,
-    stage_dir: str | None = None,
     *,
     key_col: str = "user_id",
     depth: int = 4,
@@ -810,7 +809,7 @@ def run_stream_cms(
     file moves of Spark-written parts — no driver data path) so
     maxFilesPerTrigger=1 genuinely exercises the multi-batch merge;
     staging is SHARED and write-once per source generation
-    (`staged_key_slices`) unless an explicit `stage_dir` is passed.
+    (`staged_key_slices`).
     The accumulated counter table is localized per batch via collect —
     small-by-construction (≤ depth·width rows), the same class as the
     DQ summaries; on a cluster the same loop writes it to a parquet
@@ -819,18 +818,9 @@ def run_stream_cms(
     from core_telecoms_etl_spark.sources.readers import ensure_session_confs
 
     ensure_session_confs(spark, nanos_as_long=True)
-    if stage_dir is None:
-        stage_dir = staged_key_slices(
-            spark, events_path, key_col=key_col, n_slices=n_slices
-        )
-    else:
-        _stage_explicit_slices(
-            spark,
-            events_path,
-            stage_dir,
-            key_col=key_col,
-            n_slices=n_slices,
-        )
+    stage_dir = staged_key_slices(
+        spark, events_path, key_col=key_col, n_slices=n_slices
+    )
 
     state: dict[str, DataFrame | None] = {"counters": None}
 

@@ -62,12 +62,6 @@ def test_full_clean_chain(dirty):
     assert rows[2].gender is None
 
 
-def test_empty_guard_raises(spark):
-    df = spark.createDataFrame([], "a int")
-    with pytest.raises(ValueError, match="no data rows"):
-        cl.empty_guard(df)
-
-
 def test_dedup_latest_by_key(spark):
     df = spark.createDataFrame(
         [(1, "2024-01-01", "old"), (1, "2024-02-01", "new"), (2, "2024-01-05", "only")],

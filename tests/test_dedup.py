@@ -108,8 +108,8 @@ def test_simhash_signature_deterministic(spark):
 
 
 def test_simhash_blocking_is_pigeonhole_complete(spark, sf_dir):
-    """With n_blocks = max_hamming + 1 (the default), EVERY pair within
-    max_hamming must surface as a candidate — pigeonhole, not luck.
+    """With max_hamming + m blocks, EVERY pair within max_hamming must
+    surface as a candidate — pigeonhole, not luck.
     Checked against a brute-force all-pairs Hamming computation on real
     documents."""
     from core_telecoms_etl_spark.sources.readers import load_table
@@ -140,8 +140,8 @@ def test_simhash_blocking_is_pigeonhole_complete(spark, sf_dir):
 
 
 def test_simhash_single_full_width_block(spark):
-    """n_blocks=1 (reachable via max_hamming=0 + the documented default
-    n_blocks = max_hamming + 1) builds ONE 64-bit-wide block; its
+    """max_hamming=0 on a small corpus (m = 1, so max_hamming + m = 1
+    block) builds ONE 64-bit-wide block; its
     all-ones mask must be the -1 long, not (1 << 64) - 1, which
     overflows LongType and crashed at plan-build time (ADVICE r5).
     Exact duplicates share the full signature, so they — and only
@@ -226,14 +226,6 @@ def test_minhash_candidates_cover_exact_pairs(spark, sf_dir):
     ).select("doc_a", "doc_b")
     missed = exact.join(cands, ["doc_a", "doc_b"], "left_anti").count()
     assert missed == 0
-
-
-def test_jaccard_max_shingle_freq_prunes(spark):
-    # with a cap of 1, every shared shingle is pruned → no pairs survive
-    pairs = dd.jaccard_pairs(
-        _docs(spark), "doc_id", "text", n=3, threshold=0.1, max_shingle_freq=1
-    )
-    assert pairs.count() == 0
 
 
 def test_connected_components_chain_and_islands(spark):
@@ -405,34 +397,9 @@ def test_incremental_dedup_keeps_batch_internal_dups(spark):
     assert {r.id for r in out.collect()} == {10, 11}
 
 
-def test_incremental_dedup_minhash_blocking_matches_exact(spark):
-    # blocking="minhash" (banded candidates + exact re-score) must keep
-    # the SAME batch docs as the exact posting join on real corpus data
-    # — banding miss probability at j>=0.8 is ~2e-4 per pair, far below
-    # what this corpus can express, so any disagreement is a bug, not
-    # recall
-    from core_telecoms_etl_spark.operators.dedup import incremental_dedup
-
-    d = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    from pyspark.sql import functions as F
-
-    batch = d.filter(F.col("doc_id") % 10 < 2)
-    corpus = d.filter(F.col("doc_id") % 10 >= 2)
-    exact = incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.8
-    )
-    banded = incremental_dedup(
-        corpus, batch, "doc_id", "text", n=3, threshold=0.8,
-        blocking="minhash",
-    )
-    assert {r.doc_id for r in exact.select("doc_id").collect()} == {
-        r.doc_id for r in banded.select("doc_id").collect()
-    }
-
-
 def test_incremental_dedup_mass_tripwire_raises(spark):
     # max_candidates below the true posting-join mass must raise LOUDLY
-    # naming the minhash escalation path — the r12 sf10 decade's
+    # naming a live escalation path — the r12 sf10 decade's
     # 3.7e9-candidate spill loop, made a diagnosis instead of a hang
     import pytest
 
@@ -445,7 +412,9 @@ def test_incremental_dedup_mass_tripwire_raises(spark):
         [(100 + i, "a b c d e f") for i in range(5)],
         "id long, text string",
     )
-    with pytest.raises(RuntimeError, match="blocking='minhash'"):
+    with pytest.raises(
+        RuntimeError, match="minhash_lsh_pairs and .* refine_pairs_exact"
+    ):
         incremental_dedup(
             corpus, batch, "id", "text", n=3, threshold=0.8,
             max_candidates=10,
@@ -456,68 +425,6 @@ def test_incremental_dedup_mass_tripwire_raises(spark):
         max_candidates=10_000,
     )
     assert out.count() == 0  # every batch doc duplicates the corpus
-
-
-def test_incremental_dedup_minhash_mass_tripwire_raises(spark):
-    # ADVICE r12: max_candidates must guard the MINHASH path too — a
-    # constant-content corpus collapses every band signature into one
-    # bucket, so the banding join's collision mass is |batch|x|corpus|
-    # (the banding analog of the posting-join wall). Previously the
-    # parameter was silently ignored under blocking='minhash'.
-    import pytest
-
-    from core_telecoms_etl_spark.operators.dedup import incremental_dedup
-
-    corpus = spark.createDataFrame(
-        [(i, "a b c d e f") for i in range(20)], "id long, text string"
-    )
-    batch = spark.createDataFrame(
-        [(100 + i, "a b c d e f") for i in range(5)],
-        "id long, text string",
-    )
-    with pytest.raises(RuntimeError, match="banding join"):
-        incremental_dedup(
-            corpus, batch, "id", "text", n=3, threshold=0.8,
-            blocking="minhash", max_candidates=10,
-        ).collect()
-    # a budget above the collision mass (16 bands x 20x5) passes
-    out = incremental_dedup(
-        corpus, batch, "id", "text", n=3, threshold=0.8,
-        blocking="minhash", max_candidates=10_000,
-    )
-    assert out.count() == 0  # every batch doc duplicates the corpus
-
-
-def test_incremental_dedup_minhash_tripwire_pins_band_relations(spark):
-    # ADVICE r13: the minhash mass estimate's .first() materializes both
-    # banded relations, which the candidate join then consumes again —
-    # without a scoped pin the k=64 signature build (the dominant
-    # pre-join cost) runs TWICE at exactly the decade scale the guard
-    # targets. The tripwire path must leave both band slots pinned
-    # (memory or disk) so the join reads the cache, not a recompute.
-    from core_telecoms_etl_spark import caching
-    from core_telecoms_etl_spark.operators.dedup import incremental_dedup
-
-    corpus = spark.createDataFrame(
-        [(i, f"alpha bravo charlie delta echo {i}") for i in range(20)],
-        "id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(100, "foxtrot golf hotel india juliet kilo")],
-        "id long, text string",
-    )
-    caching.release_caches()
-    out = incremental_dedup(
-        corpus, batch, "id", "text", n=3, threshold=0.8,
-        blocking="minhash", max_candidates=10_000,
-    )
-    for slot in ("dedup.incremental.band_c", "dedup.incremental.band_b"):
-        pinned = caching._SCOPED_CACHES.get(slot)
-        assert pinned is not None, slot
-        lvl = pinned.storageLevel
-        assert lvl.useMemory or lvl.useDisk, (slot, lvl)
-    assert out.count() == 1  # the novel batch doc survives
-    caching.release_caches()
 
 
 def test_segment_dedup_drops_boilerplate_preserves_order(spark):
@@ -830,8 +737,7 @@ def test_simhash_quadratic_mass_tripwire(spark):
     the budget (a corpus-SHAPE property — measured live at sf10 where
     concentrated signatures put 1.5% of all pairs inside hamming 8),
     the operator must refuse LOUDLY with the measurement instead of
-    launching a shuffle that cannot fit; max_candidates=None opts out;
-    the explicit-n_blocks legacy path never probes."""
+    launching a shuffle that cannot fit; max_candidates=None opts out."""
     import pytest
 
     docs = _docs(spark)  # holds an exact-dup pair -> sample density > 0
@@ -844,16 +750,13 @@ def test_simhash_quadratic_mass_tripwire(spark):
             n_rows=10_000_000,  # the scale the density extrapolates to
             max_candidates=1_000_000,
         )
-    # opt-out and the manual path both still run
+    # the opt-out still runs
     assert (
         dd.simhash_pairs(
             docs, "doc_id", "text", n_rows=10_000_000,
             max_candidates=None,
         ).count()
         >= 1
-    )
-    assert (
-        dd.simhash_pairs(docs, "doc_id", "text", n_blocks=9).count() >= 1
     )
 
 

@@ -26,14 +26,6 @@ def test_unique_counts_excess_rows(spark):
     assert clean[0].violations == 0  # NULLs don't count as duplicates
 
 
-def test_accepted_values(spark):
-    res = dq.run_checks(_df(spark), accepted_values={"v": ["a", "b"]})
-    assert res[0].violations == 1  # 'd'; NULL is not a violation
-    # NULL IN () is false, not NULL: NULL stays no violation regardless
-    none = dq.run_checks(_df(spark), accepted_values={"v": []})
-    assert none[0].violations == 3
-
-
 def test_run_checks_combined(spark):
     res = dq.run_checks(_df(spark), not_null=["k"], unique=["k"])
     assert [r.check for r in res] == ["not_null", "unique"]
@@ -41,18 +33,12 @@ def test_run_checks_combined(spark):
 
 def test_run_checks_single_action_all_check_types(spark):
     """The fused suite: every check type in one aggregate, results in
-    the order not_null, accepted_values, unique."""
+    the order not_null, unique."""
     df = _df(spark)
-    res = dq.run_checks(
-        df,
-        not_null=["k", "v"],
-        unique=["k", "v"],
-        accepted_values={"v": ["a", "b"]},
-    )
+    res = dq.run_checks(df, not_null=["k", "v"], unique=["k", "v"])
     assert [r.check for r in res] == [
         "not_null",
         "not_null",
-        "accepted_values",
         "unique",
         "unique",
     ]
@@ -60,7 +46,6 @@ def test_run_checks_single_action_all_check_types(spark):
     assert got == {
         ("not_null", "k"): 1,
         ("not_null", "v"): 1,
-        ("accepted_values", "v"): 1,
         ("unique", "k"): 1,
         ("unique", "v"): 0,
     }
@@ -68,17 +53,13 @@ def test_run_checks_single_action_all_check_types(spark):
 
 def test_checks_df_is_one_plan(spark):
     """checks_df is a single aggregate unpivoted by stack: no union of
-    per-check branches, results in the order not_null, accepted_values,
-    unique."""
-    out = dq.checks_df(
-        _df(spark), not_null=["k"], unique=["k"], accepted_values={"v": ["a"]}
-    )
+    per-check branches, results in the order not_null, unique."""
+    out = dq.checks_df(_df(spark), not_null=["v"], unique=["k"])
     assert out.columns == ["check_name", "column_name", "violations"]
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     assert "Union" not in plan and plan.count("Aggregate") == 1, plan
     assert [tuple(r) for r in out.collect()] == [
-        ("not_null", "k", 1),
-        ("accepted_values", "v", 2),
+        ("not_null", "v", 1),
         ("unique", "k", 1),
     ]
 

@@ -3,6 +3,10 @@ column-name contract between queries() and oracle_sql()."""
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
+
 import __spark_entry__ as e
 
 
@@ -49,19 +53,34 @@ def test_check_order_rule():
     ]
 
 
-def _plan_fingerprints():
-    """tools/plan_fingerprints.py, loaded by its path (anchored to this
-    file, not the cwd), so sys.path stays clean."""
+def _tool(name):
+    """tools/<name>.py, loaded by its path (anchored to this file, not
+    the cwd), so sys.path stays clean."""
     import importlib.util
-    import os
 
-    path = os.path.join(
-        os.path.dirname(__file__), "..", "tools", "plan_fingerprints.py"
+    path = os.path.join(os.path.dirname(__file__), "..", "tools", f"{name}.py")
+    spec = importlib.util.spec_from_file_location(name, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def _plan_fingerprints():
+    return _tool("plan_fingerprints")
+
+
+def test_queries_md_is_current():
+    """The committed QUERIES.md is what tools/gen_inventory.py renders
+    from the registry and the committed CORRECTNESS_r*.json, so a new
+    round record, query or docstring cannot leave it stale. Reads
+    files only; starts no Spark."""
+    path = os.path.join(os.path.dirname(__file__), "..", "QUERIES.md")
+    with open(path, encoding="utf-8") as f:
+        committed = f.read()
+    assert _tool("gen_inventory").render() == committed, (
+        "QUERIES.md is stale: regenerate it with "
+        "`python tools/gen_inventory.py`"
     )
-    spec = importlib.util.spec_from_file_location("plan_fingerprints", path)
-    pf = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(pf)
-    return pf
 
 
 def test_fingerprint_masks_shuffle_count_only_in_partitioning():
@@ -112,7 +131,9 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
     `plans/fingerprints_base.json` is the snapshot of every query's
     normalized-plan hash AT THE ROUND BASE (the last driver-verified
     commit), regenerated once per round from a clean checkout of that
-    commit (instructions in tools/plan_fingerprints.py). Because the
+    commit (instructions in tools/plan_fingerprints.py). Its corpus
+    stamp (file name → byte size) must equal the live corpus: a base
+    hashed on other data would read unchanged plans as changed. Because the
     live side is computed HERE, at test time, a change landing at any
     point in the round — before or after the rotation commit — fails
     this test until the query is named in `queries._PLAN_CHANGED`, which
@@ -142,6 +163,17 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
     assert meta["sf_dir"] == sf_dir, (meta["sf_dir"], sf_dir)
     assert meta["shuffle_partitions"] == n_shuffle, (meta, n_shuffle)
+    pf = _plan_fingerprints()
+    stamp = pf.corpus_stamp(sf_dir)
+    differing = sorted(
+        f"{name}: base {meta['corpus'].get(name)} B, live {stamp.get(name)} B"
+        for name in set(meta["corpus"]) | set(stamp)
+        if meta["corpus"].get(name) != stamp.get(name)
+    )
+    assert not differing, (
+        f"the fingerprint base was made on another corpus than {sf_dir}:\n"
+        + "\n".join(differing)
+    )
     ancestry = subprocess.run(
         ["git", "merge-base", "--is-ancestor", meta["commit"], "HEAD"],
         cwd=os.path.dirname(base_path),
@@ -153,7 +185,7 @@ def test_changed_plans_enter_the_window(spark, sf_dir):
         f"HEAD: {ancestry.stderr.strip() or 'not an ancestor'}"
     )
 
-    live = _plan_fingerprints().compute_all(spark, sf_dir)
+    live = pf.compute_all(spark, sf_dir)
     changed = {n for n, fp in live.items() if base.get(n) != fp}
     assert q._PLAN_CHANGED == changed, (
         "queries/__init__.py _PLAN_CHANGED must name exactly the queries "
@@ -259,6 +291,57 @@ def test_cited_tools_exist():
     assert not missing, sorted(missing)
 
 
+# The static guards below read the engine and the non-test code that
+# calls it (`__spark_entry__.py`, `bench.py`, the perfbench modules and
+# `tools/*.py`) as Python syntax trees; none of them starts Spark.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_ENGINE = os.path.join(_ROOT, "core_telecoms_etl_spark")
+# top-level names an import can bind to a module of this repository
+_PACKAGES = {"core_telecoms_etl_spark", "__spark_entry__"}
+
+
+def _parse(path):
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _engine_paths():
+    return sorted(glob.glob(f"{_ENGINE}/**/*.py", recursive=True))
+
+
+def _caller_paths():
+    return (
+        [f"{_ROOT}/__spark_entry__.py", f"{_ROOT}/bench.py"]
+        + sorted(glob.glob(f"{_ROOT}/perfbench/*.py"))
+        + sorted(glob.glob(f"{_ROOT}/tools/*.py"))
+    )
+
+
+def _module_names(tree):
+    """The names a file binds to a module of this repository:
+    `from core_telecoms_etl_spark import queries as q` binds `q`,
+    `import __spark_entry__ as e` binds `e`. A name bound to a
+    function or class (`from ...readers import load_table`) is not one."""
+    out = set()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                if a.name.split(".")[0] in _PACKAGES:
+                    out.add(a.asname or a.name.split(".")[0])
+        elif (
+            isinstance(n, ast.ImportFrom)
+            and n.level == 0
+            and n.module.split(".")[0] in _PACKAGES
+        ):
+            base = os.path.join(_ROOT, *n.module.split("."))
+            for a in n.names:
+                if os.path.exists(f"{base}/{a.name}.py") or os.path.isdir(
+                    f"{base}/{a.name}"
+                ):
+                    out.add(a.asname or a.name)
+    return out
+
+
 # Engine entry points that nothing in the engine, the tools or the
 # benchmark calls, kept because each reproduces a source or step of the
 # reference pipeline (PAPER.md §0). The guard below treats them as roots,
@@ -286,30 +369,21 @@ def test_every_engine_definition_has_a_caller():
     `__init__.py`), `__spark_entry__.py`, `bench.py`, the non-test
     perfbench modules, `tools/*.py` and the `_KEPT_UNCALLED` entries.
     A definition is reachable when its name appears in reachable code
-    as a Name, as the attribute of a Name (`module.name`) or as an
-    import alias; docstrings and comments do not count. Names are
-    matched without their module, so a dead definition that shares its
-    name with a live one passes."""
-    import ast
-    import glob
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    engine = os.path.join(root, "core_telecoms_etl_spark")
+    as a Name, as an import alias, or as `X.name` where the same file
+    binds `X` to a module of this repository; docstrings and comments
+    do not count. So `pq.write_table` (pyarrow) does not reach an
+    engine `write_table`. Names are otherwise matched without their
+    module: the engine has no two top-level definitions of one name."""
     defs_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
-    def parse(path):
-        with open(path, encoding="utf-8") as f:
-            return ast.parse(f.read(), path)
-
-    def names_in(node):
+    def names_in(node, modules):
         out = set()
         for n in ast.walk(node):
             if isinstance(n, ast.Name):
                 out.add(n.id)
             elif isinstance(n, ast.Attribute):
                 # `module.name`, not `spark.dataSource.register`
-                if isinstance(n.value, ast.Name):
+                if isinstance(n.value, ast.Name) and n.value.id in modules:
                     out.add(n.attr)
             elif isinstance(n, ast.alias):
                 out.add(n.name.rpartition(".")[2])
@@ -323,40 +397,251 @@ def test_every_engine_definition_has_a_caller():
                 return True
         return False
 
-    defs = {}  # name -> [(relpath, node)]
+    defs = {}  # name -> [(relpath, node, names its file binds to modules)]
     used = set(_KEPT_UNCALLED)
-    for path in glob.glob(f"{engine}/**/*.py", recursive=True):
-        rel = os.path.relpath(path, root)
-        for stmt in parse(path).body:
+    for path in _engine_paths():
+        rel = os.path.relpath(path, _ROOT)
+        tree = _parse(path)
+        modules = _module_names(tree)
+        for stmt in tree.body:
             if isinstance(stmt, defs_types) and not is_query(stmt):
-                defs.setdefault(stmt.name, []).append((rel, stmt))
+                defs.setdefault(stmt.name, []).append((rel, stmt, modules))
             elif not (
                 path.endswith("__init__.py")
                 and isinstance(stmt, ast.ImportFrom)
             ):
-                used |= names_in(stmt)
-    for path in (
-        [f"{root}/__spark_entry__.py", f"{root}/bench.py"]
-        + glob.glob(f"{root}/perfbench/*.py")
-        + glob.glob(f"{root}/tools/*.py")
-    ):
-        used |= names_in(parse(path))
+                used |= names_in(stmt, modules)
+    for path in _caller_paths():
+        tree = _parse(path)
+        used |= names_in(tree, _module_names(tree))
 
+    duplicated = sorted(n for n, d in defs.items() if len(d) > 1)
+    assert not duplicated, f"defined in two engine modules: {duplicated}"
     stale = sorted(set(_KEPT_UNCALLED) - set(defs))
     assert not stale, f"_KEPT_UNCALLED names no engine definition: {stale}"
     reached = set()
     while new := {n for n in defs if n in used} - reached:
         reached |= new
         for n in new:
-            for _, node in defs[n]:
-                used |= names_in(node)
+            for _, node, modules in defs[n]:
+                used |= names_in(node, modules)
     uncalled = [
         f"{rel}:{node.lineno} {name}"
         for name in sorted(set(defs) - reached)
-        for rel, node in defs[name]
+        for rel, node, _ in defs[name]
     ]
     assert not uncalled, (
         "engine definitions that no non-test code calls (delete them, or "
         "name their reference source in _KEPT_UNCALLED):\n"
         + "\n".join(uncalled)
+    )
+
+
+# Engine options whose non-test callers all pass one value, kept because
+# the other value has a job outside those callers.
+_SAFETY = "safety bound: tests lower it to trip the named error"
+_DAG = "reference DAG: `retries: 2` and the email callbacks (SURVEY §3.1)"
+_KEPT_OPTIONS = {
+    ("simhash_pairs", "max_candidates"): _SAFETY,
+    ("simhash_pairs", "n_rows"): (
+        "tripwire seam: tests pass a row count to trip the mass bound "
+        "without building the frame"
+    ),
+    ("incremental_dedup", "max_candidates"): _SAFETY,
+    ("fuzzy_pairs", "max_block_pairs"): _SAFETY,
+    ("fuzzy_pairs_deletion", "max_block_pairs"): _SAFETY,
+    ("exact_top_k_by_count", "max_tracked"): _SAFETY,
+    ("auto_topk", "gap_ratio"): (
+        "router threshold: tests move it to force each route"
+    ),
+    ("auto_topk", "min_ivf_rows"): (
+        "router floor: tests lower it to reach the IVF route on a "
+        "small corpus"
+    ),
+    ("ensure_session_confs", "nanos_as_long"): (
+        "off is the safe default on a real lake (see its docstring)"
+    ),
+    ("IncrementalLoader.run", "retries"): _DAG,
+    ("IncrementalLoader.run", "on_success"): _DAG,
+    ("IncrementalLoader.run", "on_failure"): _DAG,
+    ("jaccard_pairs", "hash_shingles"): (
+        "test reference: hash_shingles=False is the unhashed reference "
+        "the live hashed arm is compared against (test_dedup.py)"
+    ),
+    ("link_best_match", "blocking"): (
+        "test reference: blocking='block' is the reference the live "
+        "'deletion' arm is compared against (test_linkage.py)"
+    ),
+}
+
+
+def test_every_engine_option_has_two_live_values():
+    """Every engine option that the code branches on is set to at least
+    two values by non-test code, or is a `_KEPT_OPTIONS` entry, so a
+    code path that only tests reach cannot hide behind an option.
+
+    An option is a defaulted parameter of a top-level engine function
+    or of a method of a top-level engine class that appears in the
+    test of an `if`/`elif` or a conditional expression. Tests that do
+    not count: an `if` whose body is only a `raise` (validation) and an
+    `isinstance` check (str-or-Column dispatch).
+
+    Callers are the same non-test code as the reachability guard's.
+    At each call a literal argument counts as its value and an omitted
+    argument as the default; any other expression, `*args` or
+    `**kwargs` counts as varying. A function referenced as a value
+    (`_FORMATS = {"csv": read_csv}`) has varying positional parameters.
+    A call `f(...)` or `module.f(...)` reaches the top-level `f`, a call
+    `Cls(...)` reaches `Cls.__init__`, and any other `x.f(...)` reaches
+    every method named `f`. The `_KEPT_UNCALLED` entry points have no
+    live caller at all, so their options are not checked."""
+    varies = object()
+
+    def value(node):
+        try:
+            return repr(ast.literal_eval(node))
+        except ValueError:
+            return varies
+
+    def default(node):
+        v = value(node)
+        return ast.unparse(node) if v is varies else v
+
+    def branched(fn):
+        """Names read in the tests of fn's if/elif/conditional
+        expressions, less raise-only ifs and isinstance checks."""
+        out = set()
+        for n in ast.walk(fn):
+            if isinstance(n, ast.If) and all(
+                isinstance(b, ast.Raise) for b in n.body
+            ):
+                continue
+            if isinstance(n, (ast.If, ast.IfExp)):
+                skip = {
+                    id(x)
+                    for c in ast.walk(n.test)
+                    if isinstance(c, ast.Call)
+                    and isinstance(c.func, ast.Name)
+                    and c.func.id == "isinstance"
+                    for x in ast.walk(c)
+                }
+                out |= {
+                    x.id
+                    for x in ast.walk(n.test)
+                    if isinstance(x, ast.Name) and id(x) not in skip
+                }
+        return out
+
+    params = {}  # qualname -> (positional parameters, all parameters)
+    funcs, methods = {}, {}  # name -> qualname, method name -> qualnames
+    options = {}  # (qualname, parameter) -> default value
+    for path in _engine_paths():
+        for stmt in _parse(path).body:
+            if getattr(stmt, "name", None) in _KEPT_UNCALLED:
+                continue  # no live caller: its options are reference API
+            if isinstance(stmt, ast.ClassDef):
+                funcs[stmt.name] = f"{stmt.name}.__init__"
+                members = [
+                    (f"{stmt.name}.{m.name}", m)
+                    for m in stmt.body
+                    if isinstance(m, ast.FunctionDef)
+                ]
+            elif isinstance(stmt, ast.FunctionDef):
+                funcs[stmt.name] = stmt.name
+                members = [(stmt.name, stmt)]
+            else:
+                continue
+            for qual, fn in members:
+                a = fn.args
+                positional = [p.arg for p in a.posonlyargs + a.args]
+                if qual != fn.name:
+                    methods.setdefault(fn.name, []).append(qual)
+                    if not any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in fn.decorator_list
+                    ):
+                        positional = positional[1:]  # self / cls
+                params[qual] = (
+                    positional,
+                    positional + [p.arg for p in a.kwonlyargs],
+                )
+                defaults = dict(zip(positional[::-1], a.defaults[::-1]))
+                defaults.update(
+                    (p.arg, d)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                )
+                tested = branched(fn)
+                options.update(
+                    ((qual, p), default(d))
+                    for p, d in defaults.items()
+                    if p in tested
+                )
+
+    seen = {opt: set() for opt in options}
+
+    def record(qual, given):
+        for (q, p), vals in seen.items():
+            if q == qual:
+                vals.add(given.get(p, options[(q, p)]))
+
+    def bind(qual, call):
+        positional, every = params[qual]
+        given = {}
+        for i, arg in enumerate(call.args):
+            if isinstance(arg, ast.Starred):
+                given.update((p, varies) for p in positional[i:])
+                break
+            if i < len(positional):
+                given[positional[i]] = value(arg)
+        for k in call.keywords:
+            if k.arg is None:
+                given.update((p, varies) for p in every if p not in given)
+            else:
+                given[k.arg] = value(k.value)
+        return given
+
+    def targets(func, modules):
+        if isinstance(func, ast.Attribute) and not (
+            isinstance(func.value, ast.Name) and func.value.id in modules
+        ):
+            quals = methods.get(func.attr, [])
+        elif isinstance(func, (ast.Name, ast.Attribute)):
+            name = func.id if isinstance(func, ast.Name) else func.attr
+            quals = [funcs[name]] if name in funcs else []
+        else:
+            quals = []
+        return [q for q in quals if q in params]
+
+    for path in _engine_paths() + _caller_paths():
+        tree = _parse(path)
+        modules = _module_names(tree)
+        called = set()
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call):
+                called.add(id(n.func))
+                for qual in targets(n.func, modules):
+                    record(qual, bind(qual, n))
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, (ast.Name, ast.Attribute))
+                and isinstance(n.ctx, ast.Load)
+                and id(n) not in called
+            ):
+                for qual in targets(n, modules):
+                    record(qual, dict.fromkeys(params[qual][0], varies))
+
+    stale = sorted(set(_KEPT_OPTIONS) - set(options))
+    assert not stale, f"_KEPT_OPTIONS names no engine option: {stale}"
+    single = sorted(
+        f"{qual}.{param} = {next(iter(vals), options[(qual, param)])}"
+        for (qual, param), vals in seen.items()
+        if varies not in vals
+        and len(vals) < 2
+        and (qual, param) not in _KEPT_OPTIONS
+    )
+    assert not single, (
+        f"{len(single)} engine options that every non-test caller sets to "
+        "one value (make each a constant and delete the other arm, or "
+        "give its reason in _KEPT_OPTIONS):\n" + "\n".join(single)
     )

@@ -1,16 +1,12 @@
 """Join-strategy helper tests: salted join/groupby and the AQE skew split
-equal to the unsalted plans, on near-uniform keys and on one hot key, and
-the bucketed co-located join producing a shuffle-free physical plan."""
+equal to the unsalted plans, on near-uniform keys and on one hot key."""
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import functions as F
 
 from core_telecoms_etl_spark.operators import joins as J
 from core_telecoms_etl_spark.sources.readers import load_table
-from core_telecoms_etl_spark.sources.writers import write_table
 
 
 def _formatted(df) -> str:
@@ -147,34 +143,3 @@ def test_skew_paths_match_plain_on_hot_key(spark):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    customer = load_table(spark, sf_dir, "customer")
-    write_table(
-        orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-        "t_orders_bkt",
-        mode="overwrite",
-        bucket_by=(4, ["o_custkey"]),
-    )
-    write_table(
-        customer.select("c_custkey", "c_mktsegment"),
-        "t_customer_bkt",
-        mode="overwrite",
-        bucket_by=(4, ["c_custkey"]),
-    )
-    a = spark.table("t_orders_bkt")
-    b = spark.table("t_customer_bkt")
-    # disable auto-broadcast so the co-location (not size) is what's tested
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, a.o_custkey == b.c_custkey)
-        plan = _formatted(joined)
-        assert not re.findall(r"\(\d+\) Exchange\b", plan), plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS t_orders_bkt")
-        spark.sql("DROP TABLE IF EXISTS t_customer_bkt")

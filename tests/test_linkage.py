@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 from core_telecoms_etl_spark.operators.linkage import (
-    canonicalize,
     fuzzy_pairs,
     link_best_match,
 )
@@ -48,28 +47,6 @@ def test_fuzzy_pairs_beyond_two_edits(spark):
     assert "Generate" not in plan
     got = {(r.id_a, r.id_b, r.edit_dist) for r in out.collect()}
     assert got == {(1, 2, 3)}
-
-
-def test_fuzzy_pairs_normalize(spark):
-    df = _people(spark).union(
-        _people(spark)
-        .limit(0)
-        .sparkSession.createDataFrame(
-            [(6, "  JON   SMITH ", "NY")], "id long, name string, state string"
-        )
-    )
-    out = fuzzy_pairs(df, "id", "name", "state", max_dist=0, normalize=True)
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert (1, 6) in pairs  # case/whitespace noise removed before compare
-
-
-def test_canonicalize(spark):
-    row = (
-        spark.createDataFrame([("  A   B\tC ",)], "s string")
-        .select(canonicalize("s").alias("c"))
-        .collect()[0]
-    )
-    assert row.c == "a b c"
 
 
 def test_link_best_match_picks_lowest_distance(spark):

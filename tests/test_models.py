@@ -13,17 +13,18 @@ def test_build_order_follows_refs(spark):
     reg = ModelRegistry()
     calls = []
 
-    @reg.model("base")
-    def base(spark, ref):
-        calls.append("base")
-        return spark.range(3)
-
+    # registered before its ref: the build order comes from the edges
     @reg.model("derived", refs=["base"])
     def derived(spark, ref):
         calls.append("derived")
         return ref("base").selectExpr("id * 2 AS id2")
 
-    built = reg.build(spark, select=["derived"])
+    @reg.model("base")
+    def base(spark, ref):
+        calls.append("base")
+        return spark.range(3)
+
+    built = reg.build(spark)
     assert calls == ["base", "derived"]
     assert built["derived"].count() == 3
 

@@ -310,7 +310,8 @@ diff_tables = st.tuples(
 @_settings
 def test_snapshot_diff_matches_python_oracle(spark, tables):
     """Classification equals a dict-based diff for arbitrary key/value
-    maps including NULL values on either side."""
+    maps including NULL values on either side; unchanged keys drop
+    out."""
     from core_telecoms_etl_spark.operators.scd import snapshot_diff
 
     old_d, new_d = tables
@@ -324,9 +325,7 @@ def test_snapshot_diff_matches_python_oracle(spark, tables):
     ).filter("k IS NOT NULL")
     got = {
         r.k: r.change_type
-        for r in snapshot_diff(
-            old, new, key_cols=["k"], include_unchanged=True
-        ).collect()
+        for r in snapshot_diff(old, new, key_cols=["k"]).collect()
     }
     expect = {}
     for k in set(old_d) | set(new_d):
@@ -336,8 +335,6 @@ def test_snapshot_diff_matches_python_oracle(spark, tables):
             expect[k] = "delete"
         elif old_d[k] != new_d[k]:
             expect[k] = "update"
-        else:
-            expect[k] = "unchanged"
     assert got == expect
 
 

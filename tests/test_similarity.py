@@ -272,7 +272,7 @@ def test_cluster_assign_topn_copies_share_clusters(spark, sf_dir):
     def run():
         out = {}
         for r in sim.cluster_assign_topn(
-            data, n_clusters=8, n_assign=2, kmeans_iters=2
+            data, n_clusters=8, n_assign=2
         ).collect():
             out.setdefault(r.vec_id, set()).add(r.centroid_id)
         return out

@@ -66,20 +66,6 @@ def test_cms_merge_equals_whole(spark):
     }
 
 
-def test_cms_weighted_counts(spark):
-    df = spark.createDataFrame(
-        [("a", 5), ("a", 3), ("b", 2)], "token string, w int"
-    )
-    counters = sk.cms_build(df, "token", depth=2, width=256, weight_col="w")
-    est = {
-        r.token: r.cms_est
-        for r in sk.cms_estimate(
-            counters, df.select("token").distinct(), "token", width=256
-        ).collect()
-    }
-    assert est["a"] >= 8 and est["b"] >= 2
-
-
 def test_cms_rejects_bad_params(spark):
     with pytest.raises(ValueError):
         sk.cms_build(_tokens(spark), "token", depth=0, width=64)

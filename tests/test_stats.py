@@ -87,7 +87,7 @@ def test_snapshot_diff_classes(spark):
     assert out == {1: "delete", 2: "update", 4: "insert"}
 
 
-def test_snapshot_diff_include_unchanged_and_null_transitions(spark):
+def test_snapshot_diff_null_transitions_are_updates(spark):
     old = spark.createDataFrame(
         [(1, None), (2, 5.0)], "k long, v double"
     )
@@ -96,12 +96,10 @@ def test_snapshot_diff_include_unchanged_and_null_transitions(spark):
     )
     out = {
         r.k: r.change_type
-        for r in snapshot_diff(
-            old, new, key_cols=["k"], include_unchanged=True
-        ).collect()
+        for r in snapshot_diff(old, new, key_cols=["k"]).collect()
     }
     # null -> value and value -> null are both updates under
-    # null-safe compare, never 'unchanged'
+    # null-safe compare, never 'unchanged' (which would drop out)
     assert out == {1: "update", 2: "update"}
 
 
@@ -115,13 +113,11 @@ def test_snapshot_diff_null_key_component(spark):
     new = spark.createDataFrame(
         [(1, None, 15.0), (2, "x", 20.0)], "k long, k2 string, v double"
     )
-    out = {
-        (r.k, r.k2): r.change_type
-        for r in snapshot_diff(
-            old, new, key_cols=["k", "k2"], include_unchanged=True
-        ).collect()
-    }
-    assert out == {(1, None): "update", (2, "x"): "unchanged"}
+    out = [
+        (r.k, r.k2, r.change_type)
+        for r in snapshot_diff(old, new, key_cols=["k", "k2"]).collect()
+    ]
+    assert out == [(1, None, "update")]
 
 
 def test_ab_test_one_row_and_partition(spark):

@@ -4,7 +4,9 @@ LAST-GREEN DRIVER ROUND of each query (`queries.last_green_rounds`, over
 the committed CORRECTNESS_r*.json) and its slot in the driver order
 (`queries.queries()`). Run after adding queries so SURVEY.md §2's
 checklist, the registry, and window staleness can be cross-checked
-mechanically.
+mechanically. `render()` builds the text without writing it (it reads
+no data and starts no Spark); tests/test_entry.py holds the committed
+QUERIES.md equal to it.
 
 Usage: python tools/gen_inventory.py
 """
@@ -19,7 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> None:
+def render() -> str:
+    """The QUERIES.md text for the current registry and record."""
     from core_telecoms_etl_spark import queries as qmod
 
     green = qmod.last_green_rounds()
@@ -69,14 +72,14 @@ def main() -> None:
         out.append(
             f"| `{name}` | {module} | {kind} | {g} | {slot} | {first} |"
         )
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
     path = os.path.join(REPO, "QUERIES.md")
     with open(path, "w") as f:
-        f.write("\n".join(out) + "\n")
-    print(
-        f"wrote {path}: {len(rows)} queries ({n_full} full-oracle, "
-        f"{n_green} ever-green, {len(never)} never-sampled, "
-        f"{len(stale)} stale)"
-    )
+        f.write(render())
+    print(f"wrote {path}")
 
 
 if __name__ == "__main__":

@@ -23,7 +23,10 @@ kept, so `round(x, 4)` under 4 shuffle partitions keeps its scale.
 
 The queries whose fingerprint differs from the base snapshot form
 `core_telecoms_etl_spark.queries._PLAN_CHANGED`, which the driver order
-puts first.
+puts first. The snapshot's `_meta.corpus` stamps the test corpus it was
+made on (file name → byte size, `corpus_stamp`), so a base checked
+against another corpus fails by name instead of reading as changed
+plans.
 
 Usage:
   python tools/plan_fingerprints.py OUT.json   # fingerprint HEAD's code
@@ -170,6 +173,17 @@ def fingerprint(plan: str, n_shuffle: int = SHUFFLE_PARTITIONS) -> str:
     ).hexdigest()[:16]
 
 
+def corpus_stamp(sf_dir: str = SF_DIR) -> dict[str, int]:
+    """Byte size of every file under `sf_dir`, by path relative to it."""
+    return {
+        os.path.relpath(os.path.join(root, f), sf_dir): os.path.getsize(
+            os.path.join(root, f)
+        )
+        for root, _, files in sorted(os.walk(sf_dir))
+        for f in sorted(files)
+    }
+
+
 def compute_all(spark=None, sf_dir: str = SF_DIR) -> dict[str, str]:
     from core_telecoms_etl_spark import get_spark
     from core_telecoms_etl_spark.queries import queries
@@ -208,6 +222,7 @@ def main() -> None:
     payload = {
         "_meta": {
             "commit": commit,
+            "corpus": corpus_stamp(),
             "sf_dir": SF_DIR,
             "shuffle_partitions": SHUFFLE_PARTITIONS,
             "note": (
