@@ -133,21 +133,33 @@ def _block_mass_guard(
         )
 
 
-def deletion_keys(name: Column | str, k: int = 2) -> Column:
-    """All strings obtainable from `name` by deleting at most `k`
-    characters (k ∈ {1, 2}), duplicates removed — the SymSpell-style
-    blocking neighborhood. THEOREM (what makes blocking on these keys
-    LOSSLESS): lev(A, B) ≤ k ⟹ A and B reach a common string by
-    deleting ≤ k characters each — charge each edit to one deletion
-    per side (substitution: delete the differing character from both;
-    insertion/deletion: delete the inserted character from the side
-    that has it). So two names within k edits ALWAYS share a deletion
-    key, for any corpus, any alphabet, any edit mix — including the
-    equal-length shift pairs that break positional segment schemes.
-    |keys| = 1 + L + C(L, 2) at k=2 (172 at L=18). NULL name → NULL
-    (falls out of the blocking join, like every other arm)."""
-    if k not in (1, 2):
-        raise ValueError(f"deletion_keys: k must be 1 or 2, got {k}")
+# the deletion neighborhood's depth: blocking on it is lossless for any
+# max_dist up to this
+DELETION_MAX_DIST = 2
+
+
+def _check_deletion_dist(max_dist: int, what: str) -> None:
+    if max_dist > DELETION_MAX_DIST:
+        raise ValueError(
+            f"{what}: the deletion neighborhood finds pairs within "
+            f"{DELETION_MAX_DIST} edits, not {max_dist}; use fuzzy_pairs"
+        )
+
+
+def deletion_keys(name: Column | str) -> Column:
+    """All strings obtainable from `name` by deleting at most
+    k = DELETION_MAX_DIST = 2 characters, duplicates removed — the
+    SymSpell-style blocking neighborhood. THEOREM (what makes blocking
+    on these keys LOSSLESS): lev(A, B) ≤ k ⟹ A and B reach a common
+    string by deleting ≤ k characters each — charge each edit to one
+    deletion per side (substitution: delete the differing character
+    from both; insertion/deletion: delete the inserted character from
+    the side that has it). So two names within k edits ALWAYS share a
+    deletion key, for any corpus, any alphabet, any edit mix —
+    including the equal-length shift pairs that break positional
+    segment schemes. |keys| = 1 + L + C(L, 2) (172 at L=18). NULL
+    name → NULL (falls out of the blocking join, like every other
+    arm)."""
     c = F.col(name) if isinstance(name, str) else name
     L = F.length(c)
     zero = F.array(c)
@@ -161,28 +173,25 @@ def deletion_keys(name: Column | str, k: int = 2) -> Column:
             ),
         ),
     ).otherwise(F.array())
-    parts = [zero, one]
-    if k == 2:
-        two = F.when(
-            L >= 2,
-            F.flatten(
-                F.transform(
-                    F.sequence(F.lit(1), L - 1),
-                    lambda i: F.transform(
-                        F.sequence(i + 1, L),
-                        lambda j: F.concat(
-                            F.substring(c, F.lit(1), i - 1),
-                            F.substring(c, i + 1, j - i - 1),
-                            F.substring(c, j + 1, L - j),
-                        ),
+    two = F.when(
+        L >= 2,
+        F.flatten(
+            F.transform(
+                F.sequence(F.lit(1), L - 1),
+                lambda i: F.transform(
+                    F.sequence(i + 1, L),
+                    lambda j: F.concat(
+                        F.substring(c, F.lit(1), i - 1),
+                        F.substring(c, i + 1, j - i - 1),
+                        F.substring(c, j + 1, L - j),
                     ),
-                )
-            ),
-        ).otherwise(F.array())
-        parts.append(two)
+                ),
+            )
+        ),
+    ).otherwise(F.array())
     # NULL name -> NULL (not [NULL]: xxhash64(NULL) is a CONSTANT, so a
     # [NULL] neighborhood would block every null-named record together)
-    return F.when(c.isNotNull(), F.array_distinct(F.concat(*parts)))
+    return F.when(c.isNotNull(), F.array_distinct(F.concat(zero, one, two)))
 
 
 def fuzzy_pairs_deletion(
@@ -214,6 +223,7 @@ def fuzzy_pairs_deletion(
 
     `max_block_pairs` guards the neighborhood join's own collision
     mass, same loud contract as the other arms."""
+    _check_deletion_dist(max_dist, "fuzzy_pairs_deletion")
     name = F.col(name_col)
     # rebalance BEFORE the 172-way explode: the input relation is small
     # (a dim-table scan — one or two parquet partitions; at sf10 the
@@ -230,7 +240,7 @@ def fuzzy_pairs_deletion(
         F.col(block_col).alias("_blk0"),
         F.explode(
             F.transform(
-                deletion_keys(name, max_dist), lambda s: F.xxhash64(s)
+                deletion_keys(name), lambda s: F.xxhash64(s)
             )
         ).alias("_kh"),
     )
@@ -309,10 +319,11 @@ def link_best_match(
             "(expected 'block' or 'deletion')"
         )
     if blocking == "deletion":
+        _check_deletion_dist(max_dist, "link_best_match")
         n_par = left.sparkSession.sparkContext.defaultParallelism
         kh = lambda name: F.explode(  # noqa: E731
             F.transform(
-                deletion_keys(F.col(name), max_dist),
+                deletion_keys(F.col(name)),
                 lambda s: F.xxhash64(s),
             )
         ).alias("_kh")

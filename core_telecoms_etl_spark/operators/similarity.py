@@ -24,7 +24,7 @@ place of the top-k loop.
 
 from __future__ import annotations
 
-from typing import NamedTuple
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -614,8 +614,8 @@ def cosine_pairs_arrow_rounded6(
 
 
 def _centroids(df: DataFrame, id_col: str, vec_col: str, n: int) -> DataFrame:
-    """Deterministic coarse quantizer: the n lowest-id vectors act as
-    centroids (stand-in for k-means; swappable)."""
+    """The n lowest-id vectors as (centroid_id, centroid): what
+    `kmeans_centroids` returns for an empty corpus."""
     return (
         df.orderBy(id_col)
         .limit(n)
@@ -634,15 +634,15 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    kmeans_iters: int = 0,
     max_collect_rows: int = MAX_COLLECT_ROWS_DEFAULT,
     q_chunk: int = Q_CHUNK,
 ) -> DataFrame:
     """IVF approximate top-k: probe the n_probe nearest centroid buckets
     per query, brute-force only inside them. Recall rises with n_probe;
-    n_probe == n_centroids degenerates to exact. kmeans_iters > 0 refines
-    the coarse quantizer with deterministic Lloyd iterations (better-
-    balanced buckets => better recall at the same n_probe).
+    n_probe == n_centroids degenerates to exact. The coarse quantizer
+    is `kmeans_centroids` (KMEANS_ITERS deterministic Lloyd iterations:
+    better-balanced buckets than raw seeds => better recall at the same
+    n_probe).
 
     Single Arrow pass (r11): centroids (≤ n_centroids rows) and the
     query matrix (bounded, enforced) ship in the task closure; per
@@ -664,13 +664,8 @@ def ivf_topk(
     centroid (at call time) or corpus vector (when scored)."""
     import numpy as np
 
-    cents_df = (
-        kmeans_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, k=n_centroids,
-            iters=kmeans_iters,
-        )
-        if kmeans_iters > 0
-        else _centroids(corpus, id_col, vec_col, n_centroids)
+    cents_df = kmeans_centroids(
+        corpus, id_col=id_col, vec_col=vec_col, k=n_centroids
     )
     cent_rows = cents_df.orderBy("centroid_id").collect()  # ≤ n_centroids
     q = _collect_side(
@@ -850,15 +845,19 @@ KMEANS_GRID_BITS = 30
 _KMEANS_MAX_ABS = 1e4
 
 
+# Lloyd iterations of every kmeans quantizer (IVF buckets, cluster
+# blocking): two already balance the buckets on the testdata corpora
+KMEANS_ITERS = 2
+
+
 def kmeans_centroids(
     df: DataFrame,
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 16,
-    iters: int = 3,
 ) -> DataFrame:
-    """Deterministic Lloyd iterations with an ORDER-FIXED centroid
+    """KMEANS_ITERS deterministic Lloyd iterations with an ORDER-FIXED centroid
     update (VERDICT r11 ask #2): init from the k lowest-id vectors,
     then repeat [assign to nearest centroid by cosine → per-cluster
     mean on a fixed-point grid]. No MLlib, no RNG, and — unlike a
@@ -904,7 +903,7 @@ def kmeans_centroids(
     # yields empty results instead of raising (r8 empty-facts
     # differential)
     row = df.select(F.size(F.col(vec_col)).alias("d")).first()
-    if row is None or iters < 1:
+    if row is None:
         return _centroids(df, id_col, vec_col, k)
     dim = row.d
     seed_rows = (
@@ -918,7 +917,7 @@ def kmeans_centroids(
     out_schema = (
         "cid long, cnt long, qsum array<long>, nmask array<long>"
     )
-    for _ in range(iters):
+    for _ in range(KMEANS_ITERS):
         cm = cent_mat  # rebind for closure capture per iteration
         c_ids = np.array(cent_ids, dtype=np.int64)
         # per-centroid inverse norm, dim-ascending fold — deterministic
@@ -1033,13 +1032,13 @@ def cluster_assign_topn(
     n_assign: int = 1,
 ) -> DataFrame:
     """(id, centroid_id) with each vector assigned to its `n_assign`
-    nearest centroids (deterministic quantizer refined by 2 kmeans
-    iterations).
+    nearest centroids (deterministic quantizer refined by KMEANS_ITERS
+    kmeans iterations).
     Multi-assignment is the blocking-recall lever: a pair is compared if
     the two vectors share ANY assigned cluster, so n_assign > 1 plays
     the same role as LSH's multiple tables."""
     cents = kmeans_centroids(
-        df, id_col=id_col, vec_col=vec_col, k=n_clusters, iters=2
+        df, id_col=id_col, vec_col=vec_col, k=n_clusters
     )
     cn = cents.withColumn("cent_n2", norm2_expr("centroid"))
     scored = df.select(
@@ -1179,19 +1178,19 @@ AUTO_TOPK_MIN_IVF_ROWS = 200_000
 
 
 def _auto_topk_routes_ivf(
-    probe: dict, gap_ratio: float, n_rows: int,
+    probe: dict, gap_ratio: float, count_rows: Callable[[], int],
     min_ivf_rows: int = AUTO_TOPK_MIN_IVF_ROWS,
 ) -> bool:
     """The routing predicate, shared by auto_topk and its tests:
-    route IVF ⇔ the corpus is big enough to amortize IVF's fixed
-    overheads (n_rows ≥ min_ivf_rows) AND clustered — the measured
-    mean-NN cosine closes ≥ (1 - gap_ratio) of the (null_bound, 1.0]
-    concentration gap."""
-    if n_rows < min_ivf_rows:
-        return False
+    route IVF ⇔ the corpus is clustered — the measured mean-NN cosine
+    closes ≥ (1 - gap_ratio) of the (null_bound, 1.0] concentration
+    gap — AND big enough to amortize IVF's fixed overheads
+    (count_rows() ≥ min_ivf_rows). The shape test is free, so the
+    row count (a corpus scan) runs only when it passes."""
     remaining = 1.0 - probe["stat"]
     budget = gap_ratio * (1.0 - probe["null_bound"])
-    return budget > 0 and remaining <= budget
+    clustered = budget > 0 and remaining <= budget
+    return clustered and count_rows() >= min_ivf_rows
 
 
 def clusteredness_probe(
@@ -1271,11 +1270,10 @@ def auto_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 6,
-    kmeans_iters: int = 2,
     sample_rows: int = 2048,
     gap_ratio: float = AUTO_TOPK_GAP_RATIO,
     min_ivf_rows: int = AUTO_TOPK_MIN_IVF_ROWS,
-) -> DataFrame:
+) -> tuple[DataFrame, DataFrame]:
     """Top-k with the exact-vs-IVF choice made BY THE OPERATOR from a
     measured corpus statistic, not documentation (VERDICT r11 ask #4:
     the r11 decision matrix showed the right scorer is corpus-shape-
@@ -1299,7 +1297,7 @@ def auto_topk(
 
     The corpus-size term is an exact `corpus.count()` — one narrow
     columnar scan, deterministic, negligible next to the scoring
-    pass it steers.
+    pass it steers — run only for a corpus whose shape passes.
 
     The decision is REPORTED, not hidden: every output row carries
     `route` ('ivf' | 'exact') and `probe_stat` (the 6dp statistic),
@@ -1307,13 +1305,22 @@ def auto_topk(
     strategy produced the neighbors. Deterministic: the probe is
     deterministic (see clusteredness_probe), so the route — and hence
     the result — is a pure function of the corpus content.
-    Returns (query_id, neighbor_id, cosine, rank, route, probe_stat).
+
+    Returns (routed, exact): routed is (query_id, neighbor_id, cosine,
+    rank, route, probe_stat); exact is the `brute_force_topk` frame a
+    recall check holds it to. On the exact route the two are one
+    scoring pass (exact reads routed less the two columns), so the
+    query side is collected once and a cache on routed serves both; on
+    the IVF route exact costs one more (bounded) query-side collect and
+    scores nothing unless it is run.
     """
     probe = clusteredness_probe(
         corpus, id_col=id_col, vec_col=vec_col, sample_rows=sample_rows
     )
-    n_rows = corpus.count()
-    if _auto_topk_routes_ivf(probe, gap_ratio, n_rows, min_ivf_rows):
+    exact = brute_force_topk(
+        corpus, queries, id_col=id_col, vec_col=vec_col, k=k
+    )
+    if _auto_topk_routes_ivf(probe, gap_ratio, corpus.count, min_ivf_rows):
         route, top = "ivf", ivf_topk(
             corpus,
             queries,
@@ -1322,12 +1329,14 @@ def auto_topk(
             k=k,
             n_centroids=n_centroids,
             n_probe=n_probe,
-            kmeans_iters=kmeans_iters,
         )
     else:
-        route, top = "exact", brute_force_topk(
-            corpus, queries, id_col=id_col, vec_col=vec_col, k=k
-        )
-    return top.withColumn("route", F.lit(route)).withColumn(
+        route, top = "exact", exact
+    routed = top.withColumn("route", F.lit(route)).withColumn(
         "probe_stat", F.lit(probe["stat"])
     )
+    if route == "exact":
+        # the same rows, read through routed: a cache the caller pins
+        # on routed then serves both, and the corpus is scored once
+        exact = routed.drop("route", "probe_stat")
+    return routed, exact

@@ -191,7 +191,7 @@ def vector_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _load_conformant(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERY_VECS)
     approx = sim.ivf_topk(
-        e, q, k=10, n_centroids=16, n_probe=6, kmeans_iters=2
+        e, q, k=10, n_centroids=16, n_probe=6
     )
     exact = sim.brute_force_topk(e, q, k=10)
     return _recall_vs_exact(exact, approx, floor=0.8)
@@ -221,10 +221,8 @@ def auto_topk_route(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _load_conformant(spark, sf_dir)
     q = e.filter(F.col("vec_id") < N_QUERY_VECS)
-    routed = cache_scoped(
-        "vector.auto_route", sim.auto_topk(e, q, k=10)
-    )
-    exact = sim.brute_force_topk(e, q, k=10)
+    routed, exact = sim.auto_topk(e, q, k=10)
+    routed = cache_scoped("vector.auto_route", routed)
     rec = _recall_vs_exact(exact, routed, floor=0.8)
     # the route literal is constant across rows; a 1-row broadcast
     # cross join attaches it without a per-row shuffle
@@ -547,7 +545,7 @@ def knn_classify_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are bounded at |Q|·k rows — pin them so the scorers run once
     approx = cache_scoped(
         "vector.knn_ivf.approx",
-        sim.ivf_topk(c, q, k=10, n_centroids=16, n_probe=12, kmeans_iters=2),
+        sim.ivf_topk(c, q, k=10, n_centroids=16, n_probe=12),
     )
     exact = cache_scoped(
         "vector.knn_ivf.exact", sim.brute_force_topk(c, q, k=10)

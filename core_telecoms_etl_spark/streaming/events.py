@@ -198,7 +198,6 @@ def stateful_user_totals(
     stream: DataFrame,
     *,
     user_col: str = "user_id",
-    idle_timeout_ms: int | None = None,
 ) -> DataFrame:
     """Custom stateful operator: per-user running event count + value sum
     maintained in explicit group state via applyInPandasWithState (the
@@ -211,37 +210,19 @@ def stateful_user_totals(
     per-user totals, which is what the batch oracle checks.
 
     STATE BOUND (r13): per-key state is 16 bytes, but the KEY SPACE is
-    every user ever seen — with the default `idle_timeout_ms=None`
-    (NoTimeout) state grows O(distinct users) for the stream's
-    LIFETIME, which on a continuous 100 TB/day feed is the slow-OOM
-    shape the dedup operator's watermark explicitly avoids. Production
-    posture: pass `idle_timeout_ms` (e.g. 30 days) — keys idle past the
-    TTL are EVICTED after emitting a final-totals row (flagged
-    `evicted=true`, so a downstream compaction can fold resurrected
-    users' partial totals: count/sum re-merge losslessly by addition).
-    The default stays NoTimeout because the declared oracle gate runs
-    one finite batch where lifetime == horizon. To make the unbounded
-    default LOUD instead of a slow OOM, run through
-    `run_stream_stateful(..., max_state_rows=...)`: the runner checks
-    numRowsTotal from every micro-batch's progress and raises at the
-    first over-cap batch naming this TTL as the escalation path."""
+    every user ever seen — state (NoTimeout) grows O(distinct users)
+    for the stream's LIFETIME, which on a continuous 100 TB/day feed is
+    the slow-OOM shape the dedup operator's watermark explicitly
+    avoids. Every caller runs one finite batch, where lifetime ==
+    horizon. To make the unbounded growth LOUD instead of a slow OOM,
+    run through `run_stream_stateful(..., max_state_rows=...)`: the
+    runner checks numRowsTotal from every micro-batch's progress and
+    raises at the first over-cap batch."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            n, s = state.get if state.exists else (0, 0.0)
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "value_sum": [round(s, 2)],
-                    "evicted": [True],
-                }
-            )
-            return
         n, s = state.get if state.exists else (0, 0.0)
         for pdf in pdfs:
             n += int(len(pdf))
@@ -252,37 +233,21 @@ def stateful_user_totals(
             v = pdf["value"]
             s += float(v[np.isfinite(v)].sum())
         state.update((n, s))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
         yield pd.DataFrame(
             {
                 "user_id": [key[0]],
                 "n_events": [n],
                 "value_sum": [round(s, 2)],
-                "evicted": [False],
             }
         )
 
-    out_type = (
-        "user_id long, n_events long, value_sum double, evicted boolean"
-    )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    res = stream.groupBy(user_col).applyInPandasWithState(
+    return stream.groupBy(user_col).applyInPandasWithState(
         update,
-        outputStructType=out_type,
+        outputStructType="user_id long, n_events long, value_sum double",
         stateStructType="n long, s double",
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    # the declared query's contract predates the eviction flag; keep
-    # its 3-column shape on the default path
-    if idle_timeout_ms is None:
-        res = res.drop("evicted")
-    return res
 
 
 def first_state_bound_violation(q, max_state_rows: int):
@@ -293,7 +258,7 @@ def first_state_bound_violation(q, max_state_rows: int):
 
     RETENTION CAVEAT (r14 ADVICE): `recentProgress` keeps only the
     last `spark.sql.streaming.numRecentProgressUpdates` payloads
-    (default 100). On a long run where state can SHRINK (idle_timeout
+    (default 100). On a long run where state can SHRINK (watermark
     eviction), a transient early violation can age out of this buffer
     and be missed here. `run_stream_stateful` therefore supplements
     this scan with `_StateBoundListener`, which observes EVERY
@@ -374,11 +339,9 @@ def _raise_state_bound(
 
 
 _STATEFUL_HINT = (
-    "per-user state under idle_timeout_ms=None grows O(distinct users) "
-    "for the stream's LIFETIME (measured saturating at exactly the user "
-    "count at sf10). Pass idle_timeout_ms (e.g. 30 days) so keys idle "
-    "past the TTL are evicted after a final flagged emit, or raise "
-    "max_state_rows."
+    "per-user state grows O(distinct users) for the stream's LIFETIME "
+    "(measured saturating at exactly the user count at sf10); raise "
+    "max_state_rows for a wider user base."
 )
 
 
@@ -510,7 +473,6 @@ def run_stream_stateful(
     path: str,
     *,
     query_name: str = "stream_stateful_out",
-    idle_timeout_ms: int | None = None,
     max_state_rows: int | None = None,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
@@ -524,13 +486,12 @@ def run_stream_stateful(
     estimated BEFORE launch the way a join mass can, so the guard checks
     `numRowsTotal` from each micro-batch's StreamingQueryProgress as it
     lands, STOPS the query at the first violation, and raises naming the
-    batch, the measured state rows, and `idle_timeout_ms` as the
-    escalation path — a diagnosis at the first over-cap batch instead of
-    a slow OOM gigabatches later."""
+    batch and the measured state rows — a diagnosis at the first
+    over-cap batch instead of a slow OOM gigabatches later."""
     stream = events_file_stream(
         spark, path, max_files_per_trigger=max_files_per_trigger
     )
-    out = stateful_user_totals(stream, idle_timeout_ms=idle_timeout_ms)
+    out = stateful_user_totals(stream)
     guard = StateBoundGuard(
         spark, max_state_rows,
         what="stateful_user_totals", hint=_STATEFUL_HINT,

@@ -227,17 +227,17 @@ def ivf_topk_fold(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    kmeans_iters: int = 0,
+    kmeans: bool = False,
 ) -> DataFrame:
     """Reference for `ivf_topk`: fold-join assignment, a per-query probe
     window over the centroids, then the probed buckets joined against
-    the broadcast probes and fold-scored."""
+    the broadcast probes and fold-scored. The quantizer is the lowest-id
+    vectors, or with `kmeans` the engine's `kmeans_centroids`."""
     cents_in = (
         kmeans_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, k=n_centroids,
-            iters=kmeans_iters,
+            corpus, id_col=id_col, vec_col=vec_col, k=n_centroids
         )
-        if kmeans_iters > 0
+        if kmeans
         else None
     )
     assign, cents = ivf_assign(

@@ -458,6 +458,10 @@ _KEPT_OPTIONS = {
         "router floor: tests lower it to reach the IVF route on a "
         "small corpus"
     ),
+    ("events_file_stream", "max_files_per_trigger"): (
+        "test seam: one-file micro-batches are how tests reach a later "
+        "micro-batch to trip run_stream_stateful's max_state_rows bound"
+    ),
     ("ensure_session_confs", "nanos_as_long"): (
         "off is the safe default on a real lake (see its docstring)"
     ),
@@ -488,20 +492,48 @@ def test_every_engine_option_has_two_live_values():
 
     Callers are the same non-test code as the reachability guard's.
     At each call a literal argument counts as its value and an omitted
-    argument as the default; any other expression, `*args` or
-    `**kwargs` counts as varying. A function referenced as a value
-    (`_FORMATS = {"csv": read_csv}`) has varying positional parameters.
-    A call `f(...)` or `module.f(...)` reaches the top-level `f`, a call
-    `Cls(...)` reaches `Cls.__init__`, and any other `x.f(...)` reaches
-    every method named `f`. The `_KEPT_UNCALLED` entry points have no
-    live caller at all, so their options are not checked."""
+    argument as the default. A parameter of the enclosing engine
+    function passed on unchanged (`f(x=x)`, `x` never reassigned)
+    counts as every value that function's callers give `x`, resolved
+    to a fixed point; passed on from a function no live code calls, it
+    varies. Any other expression, `*args` or `**kwargs` counts as
+    varying. A function referenced as a value (`_FORMATS = {"csv":
+    read_csv}`) has varying positional parameters. A call `f(...)` or
+    `module.f(...)` reaches the top-level `f`, a call `Cls(...)`
+    reaches `Cls.__init__`, and any other `x.f(...)` reaches every
+    method named `f`. The `_KEPT_UNCALLED` entry points have no live
+    caller at all, so their options are not checked."""
     varies = object()
 
-    def value(node):
+    def value(node, scope=()):
+        """A literal's repr; `(qual, name)` for a parameter of the
+        enclosing engine function `qual` passed on unchanged; else
+        varies. `scope` holds the enclosing (function node, qual or
+        None) pairs, innermost last."""
         try:
             return repr(ast.literal_eval(node))
         except ValueError:
-            return varies
+            pass
+        if isinstance(node, ast.Name):
+            for fn, qual in reversed(scope):
+                a = fn.args
+                bound = {
+                    p.arg
+                    for p in a.posonlyargs + a.args + a.kwonlyargs
+                    + [a.vararg, a.kwarg]
+                    if p is not None
+                }
+                stored = {
+                    x.id
+                    for x in ast.walk(fn)
+                    if isinstance(x, ast.Name)
+                    and isinstance(x.ctx, ast.Store)
+                }
+                if node.id in stored:
+                    return varies
+                if node.id in bound:
+                    return varies if qual is None else (qual, node.id)
+        return varies
 
     def default(node):
         v = value(node)
@@ -532,11 +564,14 @@ def test_every_engine_option_has_two_live_values():
                 }
         return out
 
+    trees = {p: _parse(p) for p in _engine_paths() + _caller_paths()}
     params = {}  # qualname -> (positional parameters, all parameters)
     funcs, methods = {}, {}  # name -> qualname, method name -> qualnames
     options = {}  # (qualname, parameter) -> default value
+    defaults_of = {}  # (qualname, parameter) -> default, every parameter
+    quals = {}  # id(function node) -> qualname
     for path in _engine_paths():
-        for stmt in _parse(path).body:
+        for stmt in trees[path].body:
             if getattr(stmt, "name", None) in _KEPT_UNCALLED:
                 continue  # no live caller: its options are reference API
             if isinstance(stmt, ast.ClassDef):
@@ -552,6 +587,7 @@ def test_every_engine_option_has_two_live_values():
             else:
                 continue
             for qual, fn in members:
+                quals[id(fn)] = qual
                 a = fn.args
                 positional = [p.arg for p in a.posonlyargs + a.args]
                 if qual != fn.name:
@@ -571,6 +607,9 @@ def test_every_engine_option_has_two_live_values():
                     for p, d in zip(a.kwonlyargs, a.kw_defaults)
                     if d is not None
                 )
+                defaults_of.update(
+                    ((qual, p), default(d)) for p, d in defaults.items()
+                )
                 tested = branched(fn)
                 options.update(
                     ((qual, p), default(d))
@@ -578,14 +617,15 @@ def test_every_engine_option_has_two_live_values():
                     if p in tested
                 )
 
-    seen = {opt: set() for opt in options}
+    seen = {}  # (qualname, parameter) -> values its live calls give it
 
     def record(qual, given):
-        for (q, p), vals in seen.items():
-            if q == qual:
-                vals.add(given.get(p, options[(q, p)]))
+        for p in params[qual][1]:
+            seen.setdefault((qual, p), set()).add(
+                given.get(p, defaults_of.get((qual, p), varies))
+            )
 
-    def bind(qual, call):
+    def bind(qual, call, scope):
         positional, every = params[qual]
         given = {}
         for i, arg in enumerate(call.args):
@@ -593,35 +633,43 @@ def test_every_engine_option_has_two_live_values():
                 given.update((p, varies) for p in positional[i:])
                 break
             if i < len(positional):
-                given[positional[i]] = value(arg)
+                given[positional[i]] = value(arg, scope)
         for k in call.keywords:
             if k.arg is None:
                 given.update((p, varies) for p in every if p not in given)
             else:
-                given[k.arg] = value(k.value)
+                given[k.arg] = value(k.value, scope)
         return given
 
     def targets(func, modules):
         if isinstance(func, ast.Attribute) and not (
             isinstance(func.value, ast.Name) and func.value.id in modules
         ):
-            quals = methods.get(func.attr, [])
+            names = methods.get(func.attr, [])
         elif isinstance(func, (ast.Name, ast.Attribute)):
             name = func.id if isinstance(func, ast.Name) else func.attr
-            quals = [funcs[name]] if name in funcs else []
+            names = [funcs[name]] if name in funcs else []
         else:
-            quals = []
-        return [q for q in quals if q in params]
+            names = []
+        return [q for q in names if q in params]
+
+    def visit(node, scope, modules, called):
+        if isinstance(
+            node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+        ):
+            scope = scope + ((node, quals.get(id(node))),)
+        if isinstance(node, ast.Call):
+            called.add(id(node.func))
+            for qual in targets(node.func, modules):
+                record(qual, bind(qual, node, scope))
+        for child in ast.iter_child_nodes(node):
+            visit(child, scope, modules, called)
 
     for path in _engine_paths() + _caller_paths():
-        tree = _parse(path)
+        tree = trees[path]
         modules = _module_names(tree)
         called = set()
-        for n in ast.walk(tree):
-            if isinstance(n, ast.Call):
-                called.add(id(n.func))
-                for qual in targets(n.func, modules):
-                    record(qual, bind(qual, n))
+        visit(tree, (), modules, called)
         for n in ast.walk(tree):
             if (
                 isinstance(n, (ast.Name, ast.Attribute))
@@ -631,11 +679,32 @@ def test_every_engine_option_has_two_live_values():
                 for qual in targets(n, modules):
                     record(qual, dict.fromkeys(params[qual][0], varies))
 
+    # resolve passed-on parameters to a fixed point: each takes every
+    # value its enclosing function's parameter takes
+    values, passed_on = {}, {}
+    for key, vs in seen.items():
+        values[key] = {v for v in vs if not isinstance(v, tuple)}
+        passed_on[key] = {v for v in vs if isinstance(v, tuple)}
+    for key, sources in passed_on.items():
+        if any(src not in seen for src in sources):
+            values[key].add(varies)
+    grown = True
+    while grown:
+        grown = False
+        for key, sources in passed_on.items():
+            for src in sources:
+                new = values.get(src, set()) - values[key]
+                if new:
+                    values[key] |= new
+                    grown = True
+
     stale = sorted(set(_KEPT_OPTIONS) - set(options))
     assert not stale, f"_KEPT_OPTIONS names no engine option: {stale}"
     single = sorted(
         f"{qual}.{param} = {next(iter(vals), options[(qual, param)])}"
-        for (qual, param), vals in seen.items()
+        for (qual, param), vals in (
+            (opt, values.get(opt, set())) for opt in options
+        )
         if varies not in vals
         and len(vals) < 2
         and (qual, param) not in _KEPT_OPTIONS

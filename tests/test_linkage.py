@@ -114,7 +114,7 @@ def test_deletion_keys_count_and_membership(spark):
 
     df = spark.createDataFrame([("abcde",), (None,)], "name string")
     rows = df.select(
-        deletion_keys(F.col("name"), 2).alias("ks")
+        deletion_keys(F.col("name")).alias("ks")
     ).collect()
     ks = rows[0].ks
     assert len(ks) == 1 + 5 + 10  # 0-del + 1-del + 2-del, all distinct

@@ -1,11 +1,14 @@
 """The engine's session set-up: the Python worker daemon
-(`core_telecoms_etl_spark._pydaemon`) and its reach from a driver that
-runs outside the repository."""
+(`core_telecoms_etl_spark._pydaemon`), its reach from a driver that
+runs outside the repository, and the driver JVM's class-data-sharing
+archive."""
 
 from __future__ import annotations
 
 import importlib
+import json
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
@@ -166,3 +169,177 @@ def test_driver_outside_the_repo_runs_python_workers(tmp_path):
     assert run.returncode == 0, run.stderr[-3000:]
     # the daemon runs as __main__; the stock method lives in zipimport
     assert run.stdout.splitlines()[-1] == "['__main__.invalidate_caches']"
+
+
+# --- the driver's class-data-sharing archive ---------------------------------
+
+_CDS_DRIVER = """
+import json, os, sys, time
+sys.path.insert(0, {root!r})
+from pyspark import SparkContext
+from core_telecoms_etl_spark import get_spark
+
+spark = get_spark("cds", shuffle_partitions=2, extra_conf={conf!r})
+spark.range(1000).selectExpr("id % 7 AS k").groupBy("k").count().collect()
+mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+out = {{
+    "args": [str(a) for a in mx.getRuntimeMXBean().getInputArguments()],
+    "conf_dir": os.environ.get("SPARK_CONF_DIR"),
+}}
+if {kill_dump!r}:
+    # kill the JVM once its exit-time dump starts writing the file
+    dump = [a for a in out["args"] if "ArchiveClassesAtExit" in a][0]
+    dump = dump.split("=", 1)[1]
+    proc = SparkContext._gateway.proc
+    proc.stdin.close()
+    written = 0
+    while not written and proc.poll() is None:
+        time.sleep(0.005)
+        written = os.path.exists(dump) and os.path.getsize(dump)
+    proc.kill()
+    out["written_at_kill"] = written
+print(json.dumps(out))
+"""
+
+
+def _drive(tmp_path, cache, *, conf=None, conf_dir=None, kill_dump=False):
+    """Run a driver in a fresh process with `cache` as XDG_CACHE_HOME;
+    returns its one stdout line, parsed. The process has exited, and
+    its exit handler has published (or dropped) any dump, on return."""
+    script = tmp_path / "cds_driver.py"
+    script.write_text(
+        textwrap.dedent(
+            _CDS_DRIVER.format(root=str(ROOT), conf=conf or {}, kill_dump=kill_dump)
+        )
+    )
+    env = {
+        k: v
+        for k, v in os.environ.items()
+        if k not in ("SPARK_MASTER", "PYSPARK_SUBMIT_ARGS", "SPARK_CONF_DIR")
+    }
+    env.update(XDG_CACHE_HOME=str(cache), SPARK_GRAFT_CPUS="2", SPARK_DRIVER_MEM="1g")
+    if conf_dir is not None:
+        env["SPARK_CONF_DIR"] = str(conf_dir)
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=400,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    # no JVM line ([warning][cds] ...) reaches the caller's stdout
+    lines = run.stdout.splitlines()
+    assert len(lines) == 1, run.stdout[:3000]
+    return json.loads(lines[0])
+
+
+def _flag(out, name):
+    """The value of the JVM's `-XX:<name>=` input argument, or None."""
+    got = [a.split("=", 1)[1] for a in out["args"] if a.startswith(f"-XX:{name}=")]
+    assert len(got) <= 1, out["args"]
+    return got[0] if got else None
+
+
+def _cds_files(cache):
+    d = Path(cache) / "core_telecoms_etl_spark" / "cds"
+    return sorted(p.name for p in d.iterdir()) if d.is_dir() else []
+
+
+@pytest.fixture(scope="module")
+def published(tmp_path_factory):
+    """A cache whose archive the first start dumped and published:
+    (cache, archive path, that start's output)."""
+    tmp = tmp_path_factory.mktemp("cds")
+    cache = tmp / "cache"
+    first = _drive(tmp, cache)
+    assert _flag(first, "SharedArchiveFile") is None
+    dump = Path(_flag(first, "ArchiveClassesAtExit"))
+    stamp = dump.name.split(".")[0]
+    assert _cds_files(cache) == [f"{stamp}.jsa"]  # the dump file was promoted
+    yield cache, dump.with_name(f"{stamp}.jsa"), first
+    shutil.rmtree(tmp)  # pytest keeps old temp dirs; archives are 166 MB
+
+
+@pytest.fixture
+def cache(tmp_path):
+    """A cache directory for one test, removed after it."""
+    yield tmp_path / "cache"
+    shutil.rmtree(tmp_path / "cache", ignore_errors=True)
+
+
+def _copy_cache(src, to):
+    shutil.copytree(src, to, copy_function=os.link)
+    return to
+
+
+def test_first_start_dumps_the_archive_and_the_next_maps_it(tmp_path, published):
+    cache, archive, first = published
+    second = _drive(tmp_path, cache)
+    assert _flag(second, "SharedArchiveFile") == str(archive)
+    assert _flag(second, "ArchiveClassesAtExit") is None
+    assert first["conf_dir"] is second["conf_dir"] is None  # env restored
+    assert _cds_files(cache) == [archive.name]  # dumped once per stamp
+
+
+def test_changed_stamp_starts_without_the_archive_and_dumps_again(
+    tmp_path, published, cache
+):
+    _copy_cache(published[0], cache)
+    old = published[1].name
+    jar = tmp_path / "extra.jar"  # a classpath change is a stamp change
+    with zipfile.ZipFile(jar, "w") as zf:
+        zf.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+    out = _drive(tmp_path, cache, conf={"spark.driver.extraClassPath": str(jar)})
+    assert _flag(out, "SharedArchiveFile") is None
+    new = Path(_flag(out, "ArchiveClassesAtExit")).name.split(".")[0] + ".jsa"
+    assert new != old
+    assert _cds_files(cache) == sorted([old, new])
+
+
+def test_killed_dump_and_truncated_file_are_never_mapped(
+    tmp_path, published, cache
+):
+    """A truncated archive crashes the JVM that maps it (SIGBUS while
+    relocating pointers), so only a dump whose JVM exited cleanly is
+    published, and leftovers of dead processes are removed."""
+    killed = _drive(tmp_path, cache, kill_dump=True)
+    stamp = Path(_flag(killed, "ArchiveClassesAtExit")).name.split(".")[0]
+    assert killed["written_at_kill"] > 0  # killed part-way through the file
+    assert _cds_files(cache) == []
+
+    # a dump file a dead process left behind: its first 4 KiB
+    gone = subprocess.Popen(["true"])
+    gone.wait()
+    stray = cache / "core_telecoms_etl_spark" / "cds" / f"{stamp}.{gone.pid}.x.tmp"
+    with open(published[1], "rb") as f:
+        stray.write_bytes(f.read(4096))
+    out = _drive(tmp_path, cache)
+    assert _flag(out, "SharedArchiveFile") is None
+    assert _cds_files(cache) == [f"{stamp}.jsa"]
+
+
+def test_real_conf_directory_gets_no_archive_and_is_left_alone(
+    tmp_path, published, cache
+):
+    _copy_cache(published[0], cache)
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text(
+        "spark.ui.showConsoleProgress false\n"
+    )
+    (conf_dir / "spark-env.sh.template").write_text("# template\n")
+
+    def snapshot():
+        return {
+            p.name: (p.read_bytes(), p.stat().st_mtime_ns)
+            for p in conf_dir.iterdir()
+        }
+
+    before = snapshot()
+    out = _drive(tmp_path, cache, conf_dir=conf_dir)
+    assert not [a for a in out["args"] if "Archive" in a], out["args"]
+    assert out["conf_dir"] == str(conf_dir)
+    assert snapshot() == before
+    assert _cds_files(cache) == [published[1].name]

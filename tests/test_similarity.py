@@ -118,28 +118,24 @@ def test_ivf_full_probe_is_exact(spark, sf_dir):
 def test_ivf_arrow_bit_identical_to_fold(spark, sf_dir):
     """The r11 single-pass Arrow IVF must return the EXACT rows of the
     retained declarative fold form — same (query_id, neighbor_id,
-    rank) and bit-identical cosine doubles — for both the naive
-    lowest-id quantizer and the kmeans-refined one (different centroid
-    geometry → different bucket boundaries exercise the assignment
-    tie discipline)."""
+    rank) and bit-identical cosine doubles — on the kmeans-refined
+    quantizer, whose bucket boundaries exercise the assignment tie
+    discipline."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 8)
-    for iters in (0, 2):
-        fold = {
-            (r.query_id, r.neighbor_id, r.rank): r.cosine
-            for r in refs.ivf_topk_fold(
-                e, q, k=10, n_centroids=16, n_probe=4, kmeans_iters=iters
-            ).collect()
-        }
-        arrow = {
-            (r.query_id, r.neighbor_id, r.rank): r.cosine
-            for r in sim.ivf_topk(
-                e, q, k=10, n_centroids=16, n_probe=4, kmeans_iters=iters
-            ).collect()
-        }
-        assert set(fold) == set(arrow), iters
-        for key, c in fold.items():
-            assert arrow[key] == c, (iters, key, arrow[key], c)
+    fold = {
+        (r.query_id, r.neighbor_id, r.rank): r.cosine
+        for r in refs.ivf_topk_fold(
+            e, q, k=10, n_centroids=16, n_probe=4, kmeans=True
+        ).collect()
+    }
+    arrow = {
+        (r.query_id, r.neighbor_id, r.rank): r.cosine
+        for r in sim.ivf_topk(e, q, k=10, n_centroids=16, n_probe=4).collect()
+    }
+    assert set(fold) == set(arrow)
+    for key, c in fold.items():
+        assert arrow[key] == c, (key, arrow[key], c)
 
 
 def test_ivf_arrow_chunked_queries_bit_identical(spark, sf_dir):
@@ -236,8 +232,9 @@ def test_multi_table_lsh_recall_at_least_single(spark, sf_dir):
 
 def test_kmeans_ivf_recall_at_least_naive(spark, sf_dir):
     """Deterministic Lloyd refinement must not hurt recall vs the naive
-    lowest-id quantizer at the same n_probe (both fully deterministic, so
-    this is an exact, non-flaky comparison)."""
+    lowest-id quantizer (kept in the fold reference) at the same n_probe
+    (both fully deterministic, so this is an exact, non-flaky
+    comparison)."""
     e = load_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 4)
     exact = {
@@ -245,17 +242,13 @@ def test_kmeans_ivf_recall_at_least_naive(spark, sf_dir):
         for r in sim.brute_force_topk(e, q, k=10).collect()
     }
 
-    def recall(kmeans_iters):
-        approx = {
-            (r.query_id, r.neighbor_id)
-            for r in sim.ivf_topk(
-                e, q, k=10, n_centroids=16, n_probe=4,
-                kmeans_iters=kmeans_iters,
-            ).collect()
-        }
+    def recall(top):
+        approx = {(r.query_id, r.neighbor_id) for r in top.collect()}
         return len(exact & approx) / len(exact)
 
-    assert recall(3) >= recall(0)
+    kmeans = sim.ivf_topk(e, q, k=10, n_centroids=16, n_probe=4)
+    naive = refs.ivf_topk_fold(e, q, k=10, n_centroids=16, n_probe=4)
+    assert recall(kmeans) >= recall(naive)
 
 
 def test_cluster_assign_topn_copies_share_clusters(spark, sf_dir):
@@ -287,8 +280,8 @@ def test_cluster_assign_topn_copies_share_clusters(spark, sf_dir):
 
 def test_kmeans_centroids_deterministic(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").limit(200)
-    a = sim.kmeans_centroids(e, k=8, iters=2).collect()
-    b = sim.kmeans_centroids(e, k=8, iters=2).collect()
+    a = sim.kmeans_centroids(e, k=8).collect()
+    b = sim.kmeans_centroids(e, k=8).collect()
     assert sorted(r.centroid_id for r in a) == sorted(
         r.centroid_id for r in b
     )
@@ -321,10 +314,10 @@ def test_auto_topk_routes_exact_on_uniform(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     probe = sim.clusteredness_probe(e)
     assert not sim._auto_topk_routes_ivf(
-        probe, sim.AUTO_TOPK_GAP_RATIO, e.count(), min_ivf_rows=0
+        probe, sim.AUTO_TOPK_GAP_RATIO, e.count, min_ivf_rows=0
     ), probe  # shape alone rejects IVF here, before the size floor
     q = e.filter(F.col("vec_id") < 4)
-    routed = sim.auto_topk(e, q, k=5)
+    routed, _ = sim.auto_topk(e, q, k=5)
     assert routed.select("route").distinct().collect()[0].route == "exact"
     got = {
         (r.query_id, r.neighbor_id, r.rank)
@@ -345,12 +338,12 @@ def test_auto_topk_routes_ivf_on_clustered(spark):
     d = _clustered_corpus(spark)
     probe = sim.clusteredness_probe(d)
     assert sim._auto_topk_routes_ivf(
-        probe, sim.AUTO_TOPK_GAP_RATIO, d.count(), min_ivf_rows=0
+        probe, sim.AUTO_TOPK_GAP_RATIO, d.count, min_ivf_rows=0
     ), probe
     q = d.filter(F.col("vec_id") < 4)
     # min_ivf_rows=0: the synthetic corpus is tiny, and this test pins
     # the SHAPE arm; the size floor has its own routing-matrix test
-    routed = sim.auto_topk(
+    routed, _ = sim.auto_topk(
         d, q, k=5, n_centroids=8, n_probe=4, min_ivf_rows=0
     )
     rows = routed.collect()
@@ -380,15 +373,15 @@ def test_auto_topk_routing_matrix_size_and_shape(spark):
     gr = sim.AUTO_TOPK_GAP_RATIO
     small, large = 50_000, 1_000_000
     assert sim.AUTO_TOPK_MIN_IVF_ROWS == 200_000
-    assert sim._auto_topk_routes_ivf(clustered, gr, large)
-    assert not sim._auto_topk_routes_ivf(clustered, gr, small)
-    assert not sim._auto_topk_routes_ivf(uniform, gr, large)
-    assert not sim._auto_topk_routes_ivf(uniform, gr, small)
+    assert sim._auto_topk_routes_ivf(clustered, gr, lambda: large)
+    assert not sim._auto_topk_routes_ivf(clustered, gr, lambda: small)
+    assert not sim._auto_topk_routes_ivf(uniform, gr, lambda: large)
+    assert not sim._auto_topk_routes_ivf(uniform, gr, lambda: small)
     # behavioral: a tiny clustered corpus through the DEFAULT floor
     # routes exact — and exact-route results ARE brute force
     d = _clustered_corpus(spark)
     q = d.filter(F.col("vec_id") < 2)
-    routed = sim.auto_topk(d, q, k=3)
+    routed, _ = sim.auto_topk(d, q, k=3)
     rows = routed.collect()
     assert {r.route for r in rows} == {"exact"}
     want = {
@@ -417,7 +410,7 @@ def test_kmeans_centroids_bit_stable_across_partitionings(spark, sf_dir):
     outs = [
         {
             r.centroid_id: r.centroid
-            for r in sim.kmeans_centroids(d, k=8, iters=2).collect()
+            for r in sim.kmeans_centroids(d, k=8).collect()
         }
         for d in (e, e.repartition(1), e.repartition(17, "vec_id"))
     ]
@@ -435,7 +428,7 @@ def test_kmeans_centroids_agrees_with_fold_reference(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings").limit(500)
     fast = {
         r.centroid_id: np.array(r.centroid)
-        for r in sim.kmeans_centroids(e, k=8, iters=2).collect()
+        for r in sim.kmeans_centroids(e, k=8).collect()
     }
     ref = {
         r.centroid_id: np.array(r.centroid)

@@ -116,66 +116,6 @@ def test_stateful_totals_match_batch(spark, sf_dir):
     assert got == want
 
 
-def test_stateful_totals_ttl_evicts_idle_keys(spark, sf_dir):
-    """r13 state-bound posture: with `idle_timeout_ms` set the operator
-    runs under ProcessingTimeTimeout and EVICTS idle keys — state is
-    O(users active within the TTL), not O(users ever seen). With a
-    100 ms TTL over one finite batch every user goes idle, so the
-    stream must emit a live-totals row AND an evicted=true final-totals
-    row per user, both matching the batch aggregate. The query is
-    stopped by observation, not termination: a processing-time-timeout
-    stream never self-terminates (the engine keeps scheduling
-    state-cleanup batches — measured: 'No new data but cleaning up
-    state' forever under availableNow too)."""
-    import time
-
-    from pyspark.sql import functions as F
-
-    from core_telecoms_etl_spark.sources.readers import load_table
-    from core_telecoms_etl_spark.streaming.events import (
-        events_file_stream,
-        stateful_user_totals,
-    )
-
-    want = {
-        r.user_id: (r.n_events, r.value_sum)
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("value_sum"),
-        )
-        .collect()
-    }
-    out = stateful_user_totals(
-        events_file_stream(spark, f"{sf_dir}/events.parquet"),
-        idle_timeout_ms=100,
-    )
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("t_stateful_ttl")
-        .start()
-    )
-    try:
-        deadline = time.time() + 120
-        while time.time() < deadline:
-            rows = spark.table("t_stateful_ttl").collect()
-            if sum(r.evicted for r in rows) >= len(want):
-                break
-            time.sleep(1)
-    finally:
-        q.stop()
-    live = {
-        r.user_id: (r.n_events, r.value_sum) for r in rows if not r.evicted
-    }
-    evicted = {
-        r.user_id: (r.n_events, r.value_sum) for r in rows if r.evicted
-    }
-    assert live == want  # update-mode totals
-    assert evicted == want  # final totals re-emitted at eviction
-
-
 def test_stateful_max_state_rows_trips_on_second_batch(spark, tmp_path):
     """r14 loud posture: every other unbounded-growth mode in the engine
     raises with a measured estimate (incremental_dedup max_candidates,
@@ -183,7 +123,7 @@ def test_stateful_max_state_rows_trips_on_second_batch(spark, tmp_path):
     operator's O(distinct-users) default only documented it. With
     max_state_rows set, the runner checks numRowsTotal from each
     micro-batch's StreamingQueryProgress and raises at the FIRST
-    over-cap batch naming idle_timeout_ms as the escalation path.
+    over-cap batch, naming the cap as the escalation path.
     Two single-file micro-batches of 3 disjoint users each: batch 0
     holds 3 state rows (under a cap of 4), batch 1 accumulates 6 —
     the trip must name batch 1."""
@@ -235,7 +175,7 @@ def test_stateful_max_state_rows_trips_on_second_batch(spark, tmp_path):
         )
     msg = str(exc.value)
     assert "micro-batch 1" in msg and "6" in msg, msg
-    assert "idle_timeout_ms" in msg, msg
+    assert "raise max_state_rows" in msg, msg
     # a cap above the lifetime key count passes through untouched
     out = run_stream_stateful(
         spark,
